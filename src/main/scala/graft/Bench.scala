@@ -134,13 +134,6 @@ object Bench {
       runs.size - ok.size)
   }
 
-  /** Back-compat shim for the original median-only stat (kept spec'd so the
-    * failure arithmetic stays pinned under both names). */
-  private[graft] def medianOverSuccesses(runs: Seq[Option[Double]]): (Option[Double], Int) = {
-    val (_, med, _, failed) = statsOverSuccesses(runs)
-    (med, failed)
-  }
-
   /** (name, min, median, trimmed, failedRuns, nRuns) rows → the metric
     * JSON line. `value`/`queries` carry the min (see scaladoc above); the
     * median and trimmed-mean twins ride alongside (`total_trimmed` is the

@@ -541,7 +541,7 @@ object Dedup {
     * build entries (≈ 10 MB hashed) and the SHUFFLE_HASH build always
     * fits. That turns the round-14 sort-merge join — which sorted BOTH
     * corpus-scale sides, ~17 GB of q60's 79 GB fourth-decade spill
-    * (`tools.ProfileSpillMap`, SCALE.md §Round 15) — into a sort-free
+    * (SCALE.md §Round 15, the per-node spill map) — into a sort-free
     * streaming probe (adopted round 15; the full-df seam retired with
     * its verdict — the A/B table and the order-identity argument above
     * remain the record).
@@ -756,8 +756,8 @@ object Dedup {
     * collapses a Θ(clique²) EDGE relation before the CC consumer; here
     * the pair list IS the output, the PPJoin's candidates are already
     * pair-bounded with or without collapse, and the array-keyed rep
-    * groupBy is pure added cost. Kept (with [[crossJaccardPairsDirectPath]]
-    * and `tools.ProfileCrossCascade`) as the substrate that established
+    * groupBy is pure added cost. Kept (with [[crossJaccardPairsDirectPath]];
+    * SCALE.md §Round 13 cross cascade) as the substrate that established
     * the negative result; DedupSpec asserts the branches emit identical
     * pairs, which is what makes the A/B valid. */
   private[graft] def crossJaccardPairsCascadePath(left: DataFrame,
@@ -881,7 +881,7 @@ object Dedup {
     * injectively-hashed shingles; spec-asserted on the real corpus), so a
     * string-shingle SQL oracle still verifies the output.
     *
-    * WHEN to prefer which (measured, `tools.ProfileShingleBuild`): the
+    * WHEN to prefer which (measured round 9, SCALE.md §Dedup family): the
     * window path pays one shuffle+sort on the doc id but O(1) work per
     * gram; the interpreted string builder pays no shuffle but n
     * `element_at` calls + a concat per gram. At n=3 over short docs the
@@ -971,14 +971,6 @@ object Dedup {
     Seq.fill(k)((rnd.nextLong() | 1L, rnd.nextLong()))
   }
 
-  /** MinHash signature (array of k longs) of a token-array column. */
-  def minHashSignature(tokenSet: Column, k: Int = 16): Column = {
-    val sig = hashFamily(k).map { case (a, b) =>
-      array_min(transform(tokenSet, t => xxhash64(t) * a + b))
-    }
-    array(sig: _*)
-  }
-
   /** LSH candidate pairs over a hashed-set relation (`hs_id`, `hs`).
     *
     * Scale shape: signatures come from explode → groupBy(id) with k
@@ -1058,17 +1050,10 @@ object Dedup {
   private[graft] def shingleHashedSetsBlocked(df: DataFrame, id: String,
                                               tokens: String, n: Int,
                                               carry: Seq[String]): DataFrame = {
-    // codegen'd posexplode + get(tk, pos+j) shingle build (see
-    // [[graft.operators.TextAnalysis.tfidfCosinePairsTokens]]): the
-    // window-lead shape paid an exchange + per-doc sort of the token
-    // stream to read values the retained array already holds; the set
-    // reduce below now plans its own hash aggregate, whose map-side
-    // partial collect_set dedups shingles BEFORE its exchange (A/B'd in
-    // OPTIMIZATION_r20.md). Past-the-end positions hash as 0L, exactly
-    // the old coalesce(lead(h0, j), 0L).
-    // window-lead build KEPT here (round-20 A/B, ProfileSeamAB, 2
-    // sessions over q24/q25/q60/q62): the posexplode+get rewrite that won
-    // on the ExactSubstr/tfidf/bigram sites read a wash-to-loss on the
+    // window-lead build KEPT here (round-20 A/B, 2 sessions over
+    // q24/q25/q60/q62, OPTIMIZATION_r20.md §Second measurement pass): the
+    // posexplode+get rewrite that won on the ExactSubstr/tfidf/bigram
+    // sites read a wash-to-loss on the
     // shingle consumers — the set reduce below rides the window's hash
     // exchange for free (one exchange total), where the rewrite paid its
     // own aggregate exchange and re-hashed every token n times.

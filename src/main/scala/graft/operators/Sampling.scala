@@ -863,7 +863,7 @@ object Sampling {
       s"input columns collide with reserved names: ${reserved.mkString(", ")}")
     // Persisted BELOW the null/NaN filter, for the same two measured
     // reasons as keepByGroupTokenBudget's scored relation (see the
-    // comment there; ProfileQ98Attrib): the histogram job and the
+    // comment there; SCALE.md §Round 17): the histogram job and the
     // selection pass both read it, and a filter pushed beneath the cache
     // re-substitutes the caller's score expression into every reference.
     // The histogram collect() doubles as the sequential materializer.
@@ -939,7 +939,7 @@ object Sampling {
       s"input columns collide with reserved names: ${reserved.mkString(", ")}")
     // Persisted below the filter — same double-read /
     // expression-re-substitution rationale as topKByScore and
-    // keepByGroupTokenBudget (ProfileQ98Attrib); the histogram collect()
+    // keepByGroupTokenBudget (SCALE.md §Round 17); the histogram collect()
     // is the sequential materializer.
     // Lifecycle owner: GraftSession.releaseCaches.
     val s = df
@@ -1035,7 +1035,7 @@ object Sampling {
     require(reserved.isEmpty,
       s"input columns collide with reserved names: ${reserved.mkString(", ")}")
     // The scored projection is PERSISTED, and the persist sits BELOW the
-    // degenerate-row filter — both halves matter (ProfileQ98Attrib, sf10,
+    // degenerate-row filter — both halves matter (SCALE.md §Round 17, sf10,
     // one bare scoring pass = 25.8 s):
     //   - no persist at all: the lineage references the projection on both
     //     selection sides (level aggregate + join) and Catalyst inlines

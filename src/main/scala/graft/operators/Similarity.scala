@@ -224,7 +224,8 @@ object Similarity {
       // expressions (ExtractGenerator), so the inlined k-way argmax would
       // re-run once per EXPLODED row — ×dim work, the same no-CSE trap
       // [[pqTrain]] documents (measured here: build k64 81→4 s at 2k rows,
-      // 393 s→… at 20k, with the per-row marginal ~17 ms — ProfileAnnScale)
+      // 393 s→… at 20k, with the per-row marginal ~17 ms — SCALE.md
+      // §Round 16, the coarse quantizer)
       val means = corpus
         .select(nearestCentroid(col(vecCol), cents).as("cluster"),
           col(vecCol).as("iv_v"))
@@ -1796,7 +1797,7 @@ object Similarity {
   /** RADIUS variant of [[semanticDecontaminateIndexed]] — the shape the
     * decontamination job actually wants: a radius gate has no natural k,
     * so the top-k shortlist the serving tier imposes is a pure recall
-    * sink (`ProfileDecontamRecall` measured it costing 0.289 of recall at
+    * sink (SCALE.md §Round 18 measured it costing 0.289 of recall at
     * full probes on the bench corpus). This variant exact-scores EVERY
     * row of the probed clusters against each suite query — no ADC, no
     * shortlist, no `hitsPerSuiteRow`/`rerank` knobs — so its recall is
@@ -1881,7 +1882,7 @@ object Similarity {
     * driver-side state is sample-scale (|sample|·k truth pairs). The
     * sample should be representative of production queries; recall on a
     * different query distribution is the caller's risk (hold out a
-    * validation sample — `ProfileProbeTune` shows the pattern).
+    * validation sample — SCALE.md §Round 17, tuneProbe, shows the pattern).
     * Deterministic end-to-end. Requires an index written
     * `withVectors = true` (the truth set and the refine tier both read
     * stored vectors). Each evaluated cell leaves the refine tier's
@@ -2030,7 +2031,7 @@ object Similarity {
     * decontamination batch), the witnesses' centroid probe order is
     * replicated driver-side ([[kernelRankPositions]] — bit-exact vs the
     * CentroidTopN kernel), and recall(np) counts truth DOCS covered
-    * (ProfileDecontamRecall's doc-grain definition, the banked curve).
+    * (the doc-grain definition of the curve banked in SCALE.md §Round 18).
     * The identity "predicted recall ≡ measured gate recall at every
     * level" is spec-asserted on the fixture.
     *

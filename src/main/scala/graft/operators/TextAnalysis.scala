@@ -43,9 +43,6 @@ object TextAnalysis {
     (length(text) - length(regexp_replace(text, "[^a-zA-Z0-9 ]", "")))
       .cast("double") / greatest(length(text).cast("double"), lit(1.0))
 
-  def meanTokenLength(text: Column): Column =
-    (length(text) - tokenCount(text) + 1).cast("double") / tokenCount(text)
-
   /** Composite quality score in [0,1]: penalizes very short docs, low token
     * diversity, and punctuation soup. Deterministic, tune-able weights. */
   def qualityScore(text: Column, stopwords: Seq[String]): Column = {
@@ -354,11 +351,12 @@ object TextAnalysis {
     * corpus-scale stream as one (w1,w2) shuffle join plus two BROADCASTS
     * (ctx/back are ≤ |vocab| rows) — per-row hash probes, not exchanges.
     * A score-per-TYPE-then-one-join rewrite was A/B-measured
-    * (ProfileKnAB: 6.87 vs 8.86 s at sf10) and REJECTED — the broadcasts
-    * were never the cost; an initial ladder read of 62.7 s at sf10 was a
-    * first-touch artifact of the corpus-build session, not a plan defect
-    * (the same shape re-measures 6.9 s clean). round(…,6) on the averaged
-    * NLL squashes fold-order ulp noise per the repo convention. */
+    * (SCALE.md §Round 19b: 6.87 vs 8.86 s at sf10) and REJECTED — the
+    * broadcasts were never the cost; an initial ladder read of 62.7 s at
+    * sf10 was a first-touch artifact of the corpus-build session, not a
+    * plan defect (the same shape re-measures 6.9 s clean). round(…,6) on
+    * the averaged NLL squashes fold-order ulp noise per the repo
+    * convention. */
   def kneserNeyLogProb(df: org.apache.spark.sql.DataFrame, id: String,
                        textCol: String,
                        discount: Double = 0.75): org.apache.spark.sql.DataFrame = {
@@ -659,10 +657,10 @@ object TextAnalysis {
     * table; this shape shuffles grams once by g and once,
     * map-side-combined to doc-scale, by doc, and is join-free
     * (plan-asserted). Measured same-session vs the join shape
-    * (ProfileScaleCurve, min over runs): 1.48→1.20 s at sf0.01,
-    * 1.70→1.42 s at sf0.1, 8.50→6.76 s at the synthetic 10× corpus — ~20%
-    * at every decade, growing at scale with the retired hash table; at
-    * sf0.1 in isolation the two are within session noise, so the shape
+    * (SCALE.md §Measured scale curve, min over runs): 1.48→1.20 s at
+    * sf0.01, 1.70→1.42 s at sf0.1, 8.50→6.76 s at the synthetic 10× corpus
+    * — ~20% at every decade, growing at scale with the retired hash table;
+    * at sf0.1 in isolation the two are within session noise, so the shape
     * argument, not the bench line, is the reason this wins at 100 TB.
     * Per-doc novelty is an exact quotient of counts
     * (bit-identical everywhere, no rounding needed). Short docs (< n
@@ -685,7 +683,7 @@ object TextAnalysis {
     * A/B'd the widening and called it a WASH — but its "zero agg spill
     * either way" evidence came from the vacuous probe that read a
     * never-executed plan (ADVICE r14). The round-15 re-run with the
-    * fixed probe (ProfileCalibrated novelty_ab, interleaved,
+    * fixed probe (interleaved,
     * calm-bracketed, SCALE.md §Round 15) reversed it: at the fourth
     * synthetic decade the static session width spills 105-107 GB in the
     * per-gram hash maps vs 44.5 GB widened, and the widened shape runs
@@ -697,16 +695,10 @@ object TextAnalysis {
     require(n > 0, s"gram order must be positive, got $n")
     import org.apache.spark.sql.expressions.Window
     val tok = df.select(col(id).as("nv_id"), tokens(col(textCol)).as("tk"))
-    // codegen'd posexplode + get(tk, pos+j) build (see
-    // [[tfidfCosinePairsTokens]]): the window-lead shape paid an exchange +
-    // per-doc sort of the token stream; the per-doc dedup below now plans
-    // its own hash aggregate instead of riding the window's partitioning —
-    // its map-side partial dedup shrinks the gram stream BEFORE that
-    // exchange, which the window shape could not (A/B'd in
-    // OPTIMIZATION_r20.md).
-    // window-lead build KEPT here (round-20 A/B, ProfileSeamAB, 2
-    // sessions): the posexplode+get rewrite that won everywhere else
-    // LOSES on this operator (q76 read old-minus-new −0.19/−0.29 s) —
+    // window-lead build KEPT here (round-20 A/B, 2 sessions,
+    // OPTIMIZATION_r20.md §Second measurement pass): the posexplode+get
+    // rewrite that won everywhere else LOSES on this operator (q76 read
+    // old-minus-new −0.19/−0.29 s) —
     // the per-doc dedup below rides the window's hash exchange for free,
     // where the rewrite made it pay its own aggregate exchange over a
     // gram stream its map-side partial barely shrinks.
@@ -1151,8 +1143,8 @@ object TextAnalysis {
     * bound), this one is MEASURED: at the fourth synthetic decade the
     * static session width packs ~8 M gram rows per task hash map and
     * spills 105-107 GB; ~1 M rows/partition spills 44.5 GB and runs
-    * 1.17-1.65× faster (ProfileCalibrated novelty_ab with the fixed
-    * spill probe, SCALE.md §Round 15). */
+    * 1.17-1.65× faster (measured with the fixed spill probe, SCALE.md
+    * §Round 15). */
   private[operators] val GramReduceTargetBytesPerPartition: Long = 3L << 20
 
   /** Data-aware width for gram-reduce exchanges: never narrower than the

@@ -16,11 +16,6 @@ object Ingest {
   def csvAllStrings(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("escape", "\"").csv(path)
 
-  /** S2: type-inferring CSV read (reference elt.py:9-11 pandas dtypes). */
-  def csvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("escape", "\"")
-      .option("inferSchema", "true").csv(path)
-
   /** S5: JSON payload string → DataFrame (reference
     * pull_data_glue_job_lambda.py:45-47 `pd.read_json`). */
   def jsonPayload(spark: SparkSession, json: String): DataFrame = {

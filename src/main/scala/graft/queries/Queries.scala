@@ -821,7 +821,7 @@ object Queries {
     // BEFORE the shingle lambda reads it — an inline split() as the HOF's
     // array arg is re-evaluated inside every element_at (no CSE inside
     // lambdas; see the q52/q49 fix), re-splitting text 3× per shingle.
-    // MEASURED (ProfileShingleBuild, round 9): at n=3 over these short
+    // MEASURED (round 9, SCALE.md §Dedup family): at n=3 over these short
     // docs the interpreted string-shingle build (~0.4 s warm at sf0.1)
     // BEATS the window-lead hashed build (~0.8 s — its shuffle+sort costs
     // more than the 3-element_at interpretation), so unlike q76 (n=8,

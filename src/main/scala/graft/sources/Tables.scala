@@ -18,33 +18,14 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Natural hash-distribution keys for [[parallel]] (unique or near-unique,
-    * so 32-way hash partitioning is balanced and deterministic by VALUE —
-    * no round-robin, no sort-before-repartition pass). */
-  private val distKeys: Map[String, Seq[String]] = Map(
-    "lineitem" -> Seq("l_orderkey", "l_linenumber"),
-    "orders" -> Seq("o_orderkey"),
-    "customer" -> Seq("c_custkey"),
-    "events" -> Seq("event_id"),
-    "documents" -> Seq("doc_id"),
-    "embeddings" -> Seq("vec_id"))
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df0 = spark.read.parquet(s"$sfDir/$name.parquet")
     // Integer division (`div`), not `/`: at 2024-era nanos (~1.7e18) a double's
     // ulp is 256 ns, so double division + cast truncates one micro low on some
     // rows, diverging from DuckDB's exact integer truncation.
-    val df =
-      if (name == "events" && df0.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else df0
-    // measurement seam (dev A/B only — see graft.tools.ProfileTablesAB):
-    // parallelize EVERY keyed table when the conf is set, so any declared
-    // query can be timed with/without the unsplittable-scan fix by flipping
-    // one session conf. Production wiring is per-query via [[parallel]].
-    if (spark.conf.getOption("graft.scan.parallel").contains("true")
-        && distKeys.contains(name)) parallel(df, distKeys(name).map(col): _*)
-    else df
+    if (name == "events" && df0.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else df0
   }
 
   /** Unsplittable-scan guard (optimization guide §2.5 "input skew: one
@@ -58,8 +39,9 @@ object Tables {
     * (scan parallelism ≥ cores) passes through untouched, so the extra
     * exchange never exists at 100 TB. Filter pushdown and column pruning
     * pass through the repartition (verified: PushedFilters on the scan are
-    * unchanged — ProfileScanParallel), and hash-by-key is deterministic by
-    * value, so retries and re-runs see identical partition contents. */
+    * unchanged — OPTIMIZATION_r19.md, Finding 1), and hash-by-key is
+    * deterministic by value, so retries and re-runs see identical
+    * partition contents. */
   def parallel(df: DataFrame, key: org.apache.spark.sql.Column*): DataFrame = {
     val cpus = df.sparkSession.sparkContext.defaultParallelism
     // metadata-only probe (file listing + split arithmetic, no job)

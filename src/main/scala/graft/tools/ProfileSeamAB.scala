@@ -1,26 +1,32 @@
 package graft.tools
 
-/** Generic boolean-seam A/B (dev tool): run the given queries with a
-  * single `spark.graft.*` conf seam off (the default shape) and on,
-  * interleaved + rotated + calibration-bracketed per the round-14
-  * protocol, spill from the executed plan. Exists so each new
-  * measure-first lever doesn't need its own one-shot tool
-  * (the retired round-15 one-shot tools are the pattern this generalizes).
+/** Generic conf A/B (dev tool): run the given queries with one
+  * runtime-settable session conf at its session value ("off") and at a
+  * candidate value ("on"), interleaved + rotated + calibration-bracketed
+  * per the round-14 protocol, spill from the executed plan. Serves both
+  * a `spark.graft.*` seam (`<key> true`) and any Spark conf, so each new
+  * measure-first lever doesn't need its own one-shot tool.
   *
-  * Usage: `runMain graft.tools.ProfileSeamAB <seamConf> <dir> [reps] [queries…]` */
+  * Usage: `runMain graft.tools.ProfileSeamAB <confKey> <onValue> <dir> [reps] [queries…]` */
 object ProfileSeamAB {
   def main(args: Array[String]): Unit = {
-    val seam = args(0)
-    val dir = args(1)
-    val reps = if (args.length > 2) args(2).toInt else 2
-    val queries = if (args.length > 3) args.drop(3).toSeq
+    val key = args(0)
+    val onValue = args(1)
+    val dir = args(2)
+    val reps = if (args.length > 3) args(3).toInt else 2
+    val queries = if (args.length > 4) args.drop(4).toSeq
       else Seq("q60_containment")
     val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
+    val offValue = spark.conf.getOption(key)
 
-    val variants: Seq[(String, Map[String, String])] = Seq(
-      "off" -> Map.empty,
-      "on" -> Map(seam -> "true"))
+    val variants: Seq[(String, Option[String])] = Seq(
+      "off" -> offValue,
+      "on" -> Some(onValue))
+    def set(value: Option[String]): Unit = value match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
 
     def release(): Unit = {
       graft.GraftSession.releaseCaches(spark, blocking = true)
@@ -32,16 +38,17 @@ object ProfileSeamAB {
       val qe = df.queryExecution
       qe.toRdd.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      val spill = ProfileUtil.sumMetric(qe.executedPlan, "spillSize")
+      val spill = ProfileUtil.executedNodes(qe.executedPlan)
+        .flatMap(_._1.metrics.get("spillSize")).map(_.value).sum
       release()
       (dt, spill)
     }
 
     queries.foreach { q =>
-      variants.foreach { case (_, confs) =>
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      variants.foreach { case (_, value) =>
+        set(value)
         try { graft.queries.Queries.all(q)(spark, "/root/testdata/sf0.01").count() }
-        finally spark.conf.unset(seam)
+        finally set(offValue)
         release()
       }
     }
@@ -56,13 +63,13 @@ object ProfileSeamAB {
       val rotated = variants.drop((rep - 1) % variants.size) ++
         variants.take((rep - 1) % variants.size)
       queries.foreach { q =>
-        rotated.foreach { case (name, confs) =>
+        rotated.foreach { case (name, value) =>
           val (c, io) = ProfileUtil.calibBoth(spark)
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
-          val (t, spill) = try run(q) finally spark.conf.unset(seam)
+          set(value)
+          val (t, spill) = try run(q) finally set(offValue)
           val (c2, io2) = ProfileUtil.calibBoth(spark)
           val cw = math.max(c, c2); val iow = math.max(io, io2)
-          println(f"[seamab] $seam $q $dir rep$rep variant=$name%-4s " +
+          println(f"[seamab] $key=$onValue $q $dir rep$rep variant=$name%-4s " +
             f"cpu=$c%.3f/$c2%.3f io=$io%.3f/$io2%.3f t=$t%8.2f s " +
             f"spill=${spill >> 20}%6d MB")
           Console.flush()

@@ -1,14 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 /** Shared substrate for the profiling tools (dev-only, not part of the
-  * driver contract): the executed-plan metric walk, the timed runner the
-  * calibration-bracketed A/Bs use, and the scaled-corpus builder with
+  * driver contract): the executed-plan walk, the CPU and I/O calibration
+  * sentinels every banked leg carries, and the scaled-corpus builder with
   * construction-parameter-encoded completion markers.
   *
   * The metric walk exists because the obvious readout is silently wrong
@@ -22,69 +22,22 @@ import org.apache.spark.sql.functions._
   * misses every exchange (and every spill) that ran inside them. */
 object ProfileUtil {
 
-  /** Sum a named SQL metric (e.g. `"spillSize"`) over every node of an
-    * EXECUTED plan, visiting each node exactly once: recurses through
-    * children, subqueries, finalized adaptive plans, materialized query
-    * stages, and cached-relation interiors (each distinct cache counted
-    * once via its `cacheBuilder` identity — two scans of one persisted
-    * relation share one materialization, and its spill must not double). */
-  def sumMetric(root: SparkPlan, metric: String): Long = {
+  /** Every node of an EXECUTED plan, each visited exactly once, in
+    * pre-order with its depth: recurses through children, subqueries,
+    * finalized adaptive plans, materialized query stages, and
+    * cached-relation interiors (each distinct cache entered once via its
+    * `cacheBuilder` identity — two scans of one persisted relation share
+    * one materialization, and its metrics must not double). Sum a metric
+    * over it for a plan total (`p.metrics.get("spillSize")`), or keep
+    * the nodes for a per-node attribution. Read it from the QueryExecution that
+    * actually ran (`qe.toRdd.count()`, or a QueryExecutionListener's
+    * `qe`), never after a `df.count()`. */
+  def executedNodes(root: SparkPlan): Seq[(SparkPlan, Int)] = {
     val seenCaches = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-    def walk(p: SparkPlan): Long = {
-      val here = p.metrics.get(metric).map(_.value).getOrElse(0L)
-      val kids: Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case c: InMemoryTableScanExec =>
-          if (seenCaches.add(c.relation.cacheBuilder)) Seq(c.relation.cachedPlan)
-          else Nil
-        case other => other.children
-      }
-      here + kids.map(walk).sum + p.subqueries.map(walk).sum
-    }
-    walk(root)
-  }
-
-  /** Per-node spill map over an EXECUTED plan — same walk as
-    * [[sumMetric]] but keeps (nodeName#id, bytes) for every node with a
-    * nonzero `spillSize`, so a multi-stage plan's aggregate spill number
-    * can be ATTRIBUTED to the operator that paid it (the sum alone cannot
-    * distinguish a sort-merge join's input sorts from an aggregate's
-    * hash-map overflow — and the fix differs). */
-  def spillByNode(root: SparkPlan): Seq[(String, Long)] = {
-    val seenCaches = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-    val out = collection.mutable.ArrayBuffer.empty[(String, Long)]
-    def walk(p: SparkPlan): Unit = {
-      p.metrics.get("spillSize").map(_.value).filter(_ > 0).foreach(v =>
-        out += s"${p.nodeName}#${p.id}" -> v)
-      val kids: Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case c: InMemoryTableScanExec =>
-          if (seenCaches.add(c.relation.cacheBuilder)) Seq(c.relation.cachedPlan)
-          else Nil
-        case other => other.children
-      }
-      kids.foreach(walk); p.subqueries.foreach(walk)
-    }
-    walk(root)
-    out.sortBy(-_._2).toSeq
-  }
-
-  /** Indented one-line-per-node outline of an EXECUTED plan (same walk as
-    * [[spillByNode]], same node ids) with each node's expressions
-    * truncated — enough context to tell WHICH aggregate or sort a spill
-    * id belongs to (grouping keys vs join keys vs sort order) without the
-    * full formatted explain. */
-  def planOutline(root: SparkPlan, maxWidth: Int = 140): Seq[String] = {
-    val seenCaches = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-    val out = collection.mutable.ArrayBuffer.empty[String]
+    val out = collection.mutable.ArrayBuffer.empty[(SparkPlan, Int)]
     def walk(p: SparkPlan, depth: Int): Unit = {
-      val detail = p.simpleString(8).replaceAll("\\s+", " ")
-      out += ("  " * depth + s"#${p.id} " + detail).take(maxWidth)
+      out += p -> depth
       val kids: Seq[SparkPlan] = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
         case q: QueryStageExec => Seq(q.plan)
@@ -93,32 +46,10 @@ object ProfileUtil {
           else Nil
         case other => other.children
       }
-      kids.foreach(walk(_, depth + 1)); p.subqueries.foreach(walk(_, depth + 1))
+      (kids ++ p.subqueries).foreach(walk(_, depth + 1))
     }
     walk(root, 0)
     out.toSeq
-  }
-
-  /** Build `df`'s plan, execute it, and report (wall seconds, spill bytes)
-    * — both from the SAME QueryExecution. Execution goes through
-    * `queryExecution.toRdd.count()`: that runs the exact physical plan the
-    * metric walk then inspects (under AQE, `executedPlan` re-read after
-    * execution is the finalized plan with live counters), where a
-    * `df.count()` would execute a different, wrapped QueryExecution and
-    * leave this one's counters at zero. The `build` thunk runs INSIDE the
-    * clock — several pair-family operators run an eager construction job
-    * (prefix build + cache materialization) at plan-construction time, and
-    * timing only the action would miss it (SCALE.md §Round 14). */
-  def runWithSpill(spark: SparkSession)(build: => DataFrame): (Double, Long) = {
-    val t0 = System.nanoTime()
-    val df = build
-    val qe = df.queryExecution
-    qe.toRdd.count()
-    val dt = (System.nanoTime() - t0) / 1e9
-    val spill = sumMetric(qe.executedPlan, "spillSize")
-    graft.GraftSession.releaseCaches(spark, blocking = true)
-    System.gc()
-    (dt, spill)
   }
 
   /** The calibration bracket every banked leg carries: one warm-up rep
@@ -147,22 +78,6 @@ object ProfileUtil {
     * shape that left round-15's seam A/B ambiguous. */
   def calibBoth(spark: SparkSession): (Double, Double) =
     (calib(spark), ioCalib())
-
-  /** The recall-measurement pair-set collector every ANN profiling tool
-    * shares: (query_id, neighbor_id) of a top-k result, as a driver set.
-    * ONE definition so the recall numbers banked in SCALE.md are computed
-    * identically across tools (five copies had grown before round 17). */
-  def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-    df.select(org.apache.spark.sql.functions.col("query_id"),
-        org.apache.spark.sql.functions.col("neighbor_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-
-  /** (memory bytes, disk bytes) currently held by persisted RDD blocks —
-    * the cache-residency readout for the pair-family storage A/Bs. */
-  def cacheBytes(spark: SparkSession): (Long, Long) = {
-    val infos = spark.sparkContext.getRDDStorageInfo
-    (infos.map(_.memSize).sum, infos.map(_.diskSize).sum)
-  }
 
   /** Synthetic scaled documents corpus: `copies` disjoint-token copies of
     * `srcDir/documents.parquet` (per-copy token prefixes keep shingle sets

@@ -14,8 +14,6 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.statsOverSuccesses(Nil) === (None, None, None, 0))
     // one successful run: the trimmed mean IS that run (nothing to trim)
     assert(Bench.statsOverSuccesses(Seq(Some(4.0), None, None)) === (Some(4.0), Some(4.0), Some(4.0), 2))
-    // the back-compat shim keeps the original median contract
-    assert(Bench.medianOverSuccesses(Seq(Some(1.0), None, Some(3.0))) === (Some(3.0), 1))
   }
 
   test("min is the headline; a mode-swung run inflates the median but not the min") {

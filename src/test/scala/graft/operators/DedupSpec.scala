@@ -637,7 +637,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("cross cascade experiment: collapsed-representative branch emits exactly the direct branch's pairs") {
-    // the equivalence that makes ProfileCrossCascade's A/B valid (the
+    // the equivalence that makes the SCALE.md §Round 13 A/B valid (the
     // cascade is deliberately NOT wired into crossJaccardPairs — measured
     // a net loss on both corpus shapes, see the seam's scaladoc).
     // Exact duplicates planted on BOTH sides (the mass the cascade
