@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import ExchangeWidth.widenForJoin
 
 /** Deduplication operators for 100 TB-scale corpora.
   *
@@ -86,44 +87,6 @@ object Dedup {
     inter / (size(a) + size(b) - size(array_intersect(a, b)))
   }
 
-  /** Storage level for the pair family's CORPUS-SCALE persists (the
-    * hashed-set input relation and the ordered-prefix cache — Θ(Σ tokens)
-    * bytes each). Conf seam `spark.graft.pair.persistLevel`, default
-    * `MEMORY_AND_DISK`: at the measured fourth decade (SCALE.md §Round 15)
-    * the deserialized on-heap form of the prefix cache crosses the local
-    * cache-fit boundary and q24/q60 pay a disk-backed materialization —
-    * `MEMORY_AND_DISK_SER` trades heap for codec CPU and is the banked
-    * lever, adopted or rejected per the A/B banked there. */
-  private def pairPersistLevel(spark: org.apache.spark.sql.SparkSession): StorageLevel =
-    StorageLevel.fromString(
-      spark.conf.get("spark.graft.pair.persistLevel", "MEMORY_AND_DISK"))
-
-  /** Seam retention policy (round 16). An A/B seam lives exactly as long
-    * as its experiment: once the A/B is banked in SCALE.md and DECIDED,
-    * the losing branch is deleted and its conf retired — git history at
-    * the banking commit keeps the losing shape reproducible, and a kept
-    * seam is an untested code path that every later restructuring must
-    * drag along (round 15 ended with five of them in this file).
-    * Deployment overrides are NOT experiments and stay:
-    * `spark.graft.pair.persistLevel` ([[pairPersistLevel]]) and
-    * `spark.graft.pair.maxShuffleWidth` ([[pairWidthCap]]) encode
-    * regime boundaries a 100 TB deployment tunes per cluster, each with
-    * its negative A/B recorded at the definition site.
-    *
-    * Retired this round (verdict in, losing branch deleted):
-    * `carryPrefixInCache` (trimmed ord-only cache won, SCALE.md §R15),
-    * `keepInputCache` (release-after-materialize won, §R15),
-    * `legacyOrderJoin` (df≥2 shuffled-hash attach won, §R15),
-    * `legacyPairDistinct` (widened grouping-only distinct won, §R15),
-    * `candidateHashJoin` (round 15's AMBIGUOUS containment-join lever,
-    * re-run with the I/O sentinel: two sessions' minima disagree in
-    * DIRECTION, effect below session noise — REJECTED, §R16),
-    * `delete1HashJoin` (built and REJECTED this round — the delete-1
-    * candidate joins' hash build measured ~1.2× slower on calm
-    * both-sentinel legs, §R16; sort-merge stays). */
-
-
-
   /** id + distinct xxhash64'd token set. NOT persisted here: callers
     * persist at their own layering (block rename + set size) so the
     * cached plan IS the one their downstream paths reference — which is
@@ -152,52 +115,16 @@ object Dedup {
     * exchange is the final single-row aggregate. */
   private val VocabSampleTokens = 1 << 20
 
-  /** Posting rows per shuffle partition the candidate joins aim for. The
-    * anchor is the sf10 knob replay (SCALE.md §Third decade): q60 ran
-    * 72/36/41 s and q62 57/35/66 s at 32/128/512 shuffle partitions over
-    * a ~10⁸-occurrence corpus — best near 10⁸/128 ≈ 0.8 M rows per
-    * partition, with 512 already over-split. A session-global width
-    * (`initialPartitionNum=512`) costs +26 s at bench scale, so the width
-    * must come from the data, not the conf. */
-  private val PairJoinTargetOccPerPartition = 768L * 1024
-
-  /** Data-aware shuffle width for the pair family's occ-scale posting
-    * joins: enough partitions to hold ~[[PairJoinTargetOccPerPartition]]
-    * slim posting rows each, never below the session's configured width
-    * (a cluster session sized for its executors already starts higher —
-    * this knob only ever WIDENS a bench-sized default), capped at 1024
-    * within the measured regime. `occ` is the total token-occurrence
-    * count the routing aggregate (or a one-row sum over the persisted
-    * prefix relation) already has — no extra corpus pass. */
-  private[operators] def pairShuffleWidth(occ: Long, sessionWidth: Int,
-                                          cap: Long = 1024L): Int =
-    math.max(sessionWidth,
-      math.min(cap, occ / PairJoinTargetOccPerPartition).toInt)
-
-  /** Upper bound on the self-sized pair widths
-    * (`spark.graft.pair.maxShuffleWidth`, default 1024 — the measured
-    * regime through the third decade). The fourth-decade corpora want
-    * more: q60's full-posting volume at the 1000× corpus computes to
-    * ~3600 partitions before the cap, so the cap — not the 0.75 M-row
-    * target — decides its per-task memory there. Runtime conf so the
-    * regime boundary is a deployment decision, A/B-measurable without a
-    * rebuild ([[pairShuffleWidth]] still never narrows below the
-    * session width). */
-  private def pairWidthCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("spark.graft.pair.maxShuffleWidth", "1024").toLong
-
-  /** Repartition `df` on the posting-join keys at `width` — but ONLY when
-    * that widens the plan past the session default: at bench scale the
-    * computed width IS the session default, and inserting an explicit
-    * repartition there would pin an exchange AQE could otherwise coalesce.
-    * When it applies, the exchange it inserts is the SAME hash exchange
-    * the downstream equi-join would have inserted anyway (same keys), just
-    * wider — the join's distribution requirement is satisfied, so no
-    * second exchange appears (spec-asserted). */
-  private[operators] def widenForJoin(df: DataFrame, width: Int, keys: Column*): DataFrame =
-    if (width > df.sparkSession.sessionState.conf.numShufflePartitions)
-      df.repartition(width, keys: _*)
-    else df
+  /** Posting rows per shuffle partition the candidate joins aim for
+    * ([[ExchangeWidth]]'s target for the pair family's occ-scale posting
+    * joins; `occ` is the total token-occurrence count [[totalOcc]] already
+    * has — no extra corpus pass). The anchor is the sf10 knob replay
+    * (SCALE.md §Third decade): q60 ran 72/36/41 s and q62 57/35/66 s at
+    * 32/128/512 shuffle partitions over a ~10⁸-occurrence corpus — best
+    * near 10⁸/128 ≈ 0.8 M rows per partition, with 512 already over-split.
+    * A session-global width (`initialPartitionNum=512`) costs +26 s at
+    * bench scale, so the width must come from the data, not the conf. */
+  private[operators] val PairJoinTargetOccPerPartition = 768L * 1024
 
   /** The verification fetch every pair path shares: candidates joined to
     * the left-side arrays then the right-side arrays, each byte-heavy
@@ -215,10 +142,11 @@ object Dedup {
         Seq("blk", "right_id"))
 
   /** Total posting volume (Σ n) of a persisted hashed/prefix relation —
-    * the width driver for [[pairShuffleWidth]]. One single-row aggregate
-    * over a relation the caller persists anyway; running it eagerly here
-    * doubles as the cache materializer, so downstream stages reuse the
-    * bytes instead of recomputing the prefix build. */
+    * the volume [[ExchangeWidth]] sizes the pair joins from. One
+    * single-row aggregate over a relation the caller persists anyway;
+    * running it eagerly here doubles as the cache materializer, so
+    * downstream stages reuse the bytes instead of recomputing the prefix
+    * build. */
   private def totalOcc(rel: DataFrame): Long = {
     val r = rel.agg(sum(col("n"))).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -263,7 +191,7 @@ object Dedup {
     *
     * NOT fully lazy: constructing the returned DataFrame runs one eager
     * Spark job on the prefix path — the posting-volume aggregate that
-    * sizes the pair shuffle ([[pairShuffleWidth]]) and doubles as the
+    * sizes the pair shuffle ([[ExchangeWidth]]) and doubles as the
     * materializer of the persisted prefix cache every downstream stage
     * reuses (at which point the hashed-set INPUT cache, consumer-less
     * from then on, is released). Build the plan
@@ -274,7 +202,7 @@ object Dedup {
     val hs = hashedSets(df, id, tokenSet, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     jaccardPairsFromHashed(hs, threshold, vocabHint)
   }
 
@@ -367,7 +295,7 @@ object Dedup {
     val hs = hashedSets(df, id, tokenSet, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nMax = hs.agg(max(col("n"))).head() match {
       case r if r.isNullAt(0) => 0
       case r => r.getInt(0)
@@ -400,12 +328,11 @@ object Dedup {
     val base = hs.where(col("n") > 0)
       .select(col("blk"), col("hs_id"), col("n"), col("hs"))
       .withColumn("fp", aggregate(col("hs"), lit(0L), (a, x) => a + x))
-      .persist(pairPersistLevel(hs.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // this path triggers precisely on big corpora (occ > SmallCorpusOccMax)
     // — size the Θ(Σn) delete-fingerprint join from the data
-    val width = pairShuffleWidth(totalOcc(base),
-      hs.sparkSession.sessionState.conf.numShufflePartitions,
-      pairWidthCap(hs.sparkSession))
+    val width = ExchangeWidth.width(hs.sparkSession, totalOcc(base),
+      PairJoinTargetOccPerPartition)
     // `base` is materialized (MEMORY_AND_DISK: its blocks can spill but
     // never vanish), and every downstream stage reads it — the input
     // cache has no consumer left; at corpus scale holding it doubles the
@@ -451,7 +378,7 @@ object Dedup {
     // (SCALE.md §Round 15) — where grouping-only distinct stays a hash
     // aggregate, and the exchange is width-sized instead of riding the
     // session default (adopted round 15; the dropDuplicates seam retired
-    // with its verdict — see the seam retention policy above).
+    // with its verdict).
     val candidates = widenForJoin(eq.unionByName(sub), width,
       col("blk"), col("left_id"), col("right_id")).distinct()
     widenedVerifyJoin(candidates, width,
@@ -537,9 +464,9 @@ object Dedup {
     * the synthetic scaled corpora, and every corpus's hapax tail) to one
     * row per repeated token — bounded above by postings/2, since df ≥ 2
     * charges every build row at least two stream rows, so a ~0.75 M-row
-    * posting partition ([[pairShuffleWidth]]) carries at most ~0.37 M
-    * build entries (≈ 10 MB hashed) and the SHUFFLE_HASH build always
-    * fits. That turns the round-14 sort-merge join — which sorted BOTH
+    * posting partition ([[PairJoinTargetOccPerPartition]]) carries at
+    * most ~0.37 M build entries (≈ 10 MB hashed) and the SHUFFLE_HASH
+    * build always fits. That turns the round-14 sort-merge join — which sorted BOTH
     * corpus-scale sides, ~17 GB of q60's 79 GB fourth-decade spill
     * (SCALE.md §Round 15, the per-node spill map) — into a sort-free
     * streaming probe (adopted round 15; the full-df seam retired with
@@ -547,7 +474,7 @@ object Dedup {
     * remain the record).
     *
     * Every exchange in the build is sized by `width` — the same
-    * data-driven [[pairShuffleWidth]] the candidate joins already use
+    * data-driven [[ExchangeWidth]] the candidate joins already use
     * (computed from the INPUT relation's posting volume, so it exists
     * before the build runs). The round-14 build ran its aggregates at
     * the SESSION width: at the fourth decade that is ~84 M posting rows
@@ -597,26 +524,24 @@ object Dedup {
       (col("n") - ceil(lit(threshold) * col("n")) + 1).cast("int"))
 
   /** Persist the ordered-arrays relation for a τ-thresholded pair path
-    * and hand back (cache, prefixed view): the cache carries `ord` only
-    * — the prefix is sliced per read; the view exposes both. Two eager
-    * bounded aggregates run here: [[totalOcc]] over the INPUT relation
-    * first — materializing the hashed-set cache and yielding the posting
-    * volume that sizes every exchange of the ord BUILD itself, not just
-    * the downstream pair shuffles ([[orderedArrays]]) — then a count
+    * and hand back (cache, prefixed view, pair width): the cache carries
+    * `ord` only — the prefix is sliced per read; the view exposes both.
+    * Two eager bounded aggregates run here: [[totalOcc]] over the INPUT
+    * relation first — materializing the hashed-set cache and yielding the
+    * posting volume that sizes every exchange of the ord BUILD itself, not
+    * just the downstream pair shuffles ([[orderedArrays]]) — then a count
     * that materializes the prefix cache, after which the input cache,
     * consumer-less from then on, is released. Release must not precede
     * materialization: an evicted input under a lazy prefix cache would
     * silently re-run the whole token hash/shingle build. */
   private def prefixCache(hs: DataFrame, threshold: Double,
-                          carry: Seq[String] = Nil): (DataFrame, DataFrame, Long) = {
-    val spark = hs.sparkSession
-    val occ = totalOcc(hs)
-    val width = pairShuffleWidth(occ,
-      spark.sessionState.conf.numShufflePartitions, pairWidthCap(spark))
-    val pre = orderedArrays(hs, width, carry).persist(pairPersistLevel(spark))
+                          carry: Seq[String] = Nil): (DataFrame, DataFrame, Int) = {
+    val width = ExchangeWidth.width(hs.sparkSession, totalOcc(hs),
+      PairJoinTargetOccPerPartition)
+    val pre = orderedArrays(hs, width, carry).persist(StorageLevel.MEMORY_AND_DISK)
     pre.count()
     hs.unpersist(blocking = false)
-    (pre, pre.withColumn("prefix", prefixExpr(threshold)), occ)
+    (pre, pre.withColumn("prefix", prefixExpr(threshold)), width)
   }
 
   /** Large-dictionary path: PPJoin prefix filtering (τ > 0) or the full
@@ -637,10 +562,7 @@ object Dedup {
       // data-aware width for the occ-scale posting join (the sf10 spill
       // term; the aggregate doubles as the persist materializer — after
       // which the hashed-set input cache is released inside prefixCache)
-      val (pre, prefixed, occ) = prefixCache(hs, threshold)
-      val width = pairShuffleWidth(occ,
-        hs.sparkSession.sessionState.conf.numShufflePartitions,
-        pairWidthCap(hs.sparkSession))
+      val (pre, prefixed, width) = prefixCache(hs, threshold)
       val l = widenForJoin(prefixed.select(col("blk"), col("hs_id").as("left_id"),
         col("n").as("nl"), posexplode(col("prefix")).as(Seq("lp", "h"))),
         width, col("blk"), col("h"))
@@ -711,7 +633,7 @@ object Dedup {
     val hs = hashedSets(both, id, tokenSet, Seq(block, "side"))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(left.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     crossJaccardFromHashed(hs, threshold)
   }
 
@@ -742,7 +664,7 @@ object Dedup {
     val hs = shingleHashedSetsBlocked(both, id, tokens, shingleN, Seq(block, "side"))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(left.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     crossJaccardFromHashed(hs, threshold)
   }
 
@@ -770,7 +692,7 @@ object Dedup {
     val hs = hashedSets(both, id, tokenSet, Seq(block, "side"))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(left.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val withRep = hs.withColumn("skey", array_sort(col("hs")))
       .join(hs.withColumn("skey", array_sort(col("hs")))
         .groupBy(col("blk"), col("side"), col("skey"))
@@ -799,7 +721,7 @@ object Dedup {
     crossJaccardFromHashed(hashedSets(both, id, tokenSet, Seq(block, "side"))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(left.sparkSession)), threshold)
+      .persist(StorageLevel.MEMORY_AND_DISK), threshold)
   }
 
   /** Shared R×S candidate/verify core: the same SLIM-posting PPJoin split
@@ -809,10 +731,7 @@ object Dedup {
     * UNION makes the positional bound valid across relations exactly as
     * in the self-join case. */
   private def crossJaccardFromHashed(hs: DataFrame, threshold: Double): DataFrame = {
-    val (pre, prefixed, occ) = prefixCache(hs, threshold, carry = Seq("side"))
-    val width = pairShuffleWidth(occ,
-      hs.sparkSession.sessionState.conf.numShufflePartitions,
-      pairWidthCap(hs.sparkSession))
+    val (pre, prefixed, width) = prefixCache(hs, threshold, carry = Seq("side"))
     val l = widenForJoin(prefixed.where(col("side") === 0).select(col("blk"),
       col("hs_id").as("left_id"), col("n").as("nl"),
       posexplode(col("prefix")).as(Seq("lp", "h"))),
@@ -869,7 +788,7 @@ object Dedup {
     val hs = hashedSets(df, id, tokenSet, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     containmentFromHashed(hs, threshold)
   }
 
@@ -904,7 +823,7 @@ object Dedup {
     val hs = shingleHashedSetsBlocked(df, id, tokens, shingleN, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     containmentFromHashed(hs, threshold)
   }
 
@@ -915,12 +834,9 @@ object Dedup {
     // posting makes the candidate shuffle Θ(Σ n·|doc|) bytes — measured
     // super-linear wall time at the 100× synthetic decade (spill-bound;
     // SCALE.md §third decade) — where the slim shape is Θ(Σ n).
-    val (pre, prefixed, occ) = prefixCache(hs, threshold)
+    val (pre, prefixed, width) = prefixCache(hs, threshold)
     // the r side explodes FULL ordered arrays, so Σn is exactly this
     // join's posting volume — size its shuffle from the data
-    val width = pairShuffleWidth(occ,
-      hs.sparkSession.sessionState.conf.numShufflePartitions,
-      pairWidthCap(hs.sparkSession))
     val l = widenForJoin(prefixed.select(col("blk"), col("hs_id").as("left_id"),
       col("n").as("nl"), posexplode(col("prefix")).as(Seq("lp", "h"))),
       width, col("blk"), col("h"))
@@ -1007,14 +923,6 @@ object Dedup {
       .where(firstMatch)
       .select("left_id", "right_id")
   }
-
-  /** LSH candidate pairs: band the signature, bucket-join, dedup pairs.
-    * `bands` bands of `k/bands` rows each; a pair is a candidate if any band
-    * hashes identically. Returns (left_id, right_id) distinct. */
-  def minHashPairs(df: DataFrame, id: String, tokenSet: String,
-                   k: Int = 16, bands: Int = 4): DataFrame =
-    minHashPairsHashed(hashedSets(df, id, tokenSet, Nil)
-      .persist(StorageLevel.MEMORY_AND_DISK), k, bands)
 
   /** Hashed n-token shingle sets built without materializing shingle strings:
     * posexplode the token array, hash each token once, window-`lead` the next
@@ -1468,7 +1376,7 @@ object Dedup {
     val hsRaw = hashedSets(df, id, tokenSet, Seq(block))
       .withColumnRenamed(block, "blk")
       .withColumn("n", size(col("hs")))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // ONE stats job serves both the occurrence gate here and (below the
     // gate) the pair stage's representation routing — the round-19 shape
     // paid a separate sum(n) job for the gate and then re-derived occ
@@ -1495,7 +1403,7 @@ object Dedup {
     // own derived cache has materialized
     val repHs = withRep.where(col("hs_id") === col("rep"))
       .select(col("blk"), col("hs_id"), col("n"), col("hs"))
-      .persist(pairPersistLevel(df.sparkSession))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val repPairs = jaccardPairsFromHashed(repHs, threshold, vocabHint = None)
       .select("left_id", "right_id")
     // the pair stage's eager routing aggregate materialized repHs — and
@@ -1584,23 +1492,6 @@ object Dedup {
   }
 
   // -------------------------------------------------------------- simhash --
-
-  /** 64-bit SimHash of a token array as a single Column expression: per-bit
-    * majority vote of token hashes. Fine for ad-hoc use on small arrays; the
-    * distributed path is [[simHashSignatures]], which turns the vote into a
-    * codegen'd hash-aggregate instead of 64 interpreted array folds.
-    *
-    * Token hash is the cross-engine [[TextAnalysis.md5Long]] (60 effective
-    * bits; the top 4 signature bits are constant 0), so a SQL oracle can
-    * recompute signatures — and therefore pairs — exactly. */
-  def simHash64(tokenSet: Column): Column = {
-    val hashes = transform(tokenSet, t => TextAnalysis.md5Long(t))
-    (0 until 64).map { i =>
-      val vote = aggregate(hashes, lit(0),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
-      when(vote > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** (id, sh) SimHash signatures via explode → groupBy with 64 conditional
     * sums — one map-side-combinable shuffle, fully codegen'd (higher-order

@@ -2314,9 +2314,8 @@ object Similarity {
     // would insert, just not coalescible — at the data-aware stream
     // width (≥ session width: a cluster session keeps or widens its
     // parallelism, never narrows at scale).
-    val tileWidth = TextAnalysis.scanStreamWidth(
-      TextAnalysis.leafScanBytes(corpus),
-      spark.sessionState.conf.numShufflePartitions)
+    val tileWidth = ExchangeWidth.forScan(corpus,
+      TextAnalysis.ScanStreamTargetBytesPerPartition)
     val l = blocked.select(col(idCol).as("left_id"), col(vecCol).as("va"),
         col("g").as("bl"))
       .join(broadcast(tiles), Seq("bl"))

@@ -20,6 +20,11 @@ object TextAnalysis {
   /** Whitespace tokenizer (reference documents are space-separated). */
   def tokens(text: Column): Column = split(text, " ")
 
+  /** The token array a null text or token column stands for: the gram
+    * builders `coalesce` to it so a null doc takes the short-doc branch
+    * under every ANSI setting (`size(null)` is NULL with ANSI on, −1 off). */
+  private val EmptyTokens: Column = typedLit(Array.empty[String])
+
   /** BPE-ish subword splitter: lowercase word pieces, digits, punctuation as
     * separate tokens — a regex approximation of byte-pair pretokenization. */
   def subwordTokens(text: Column): Column =
@@ -473,13 +478,14 @@ object TextAnalysis {
     * Measured at sf0.1 (BenchOne, warm, same session): 11.0 → 2.7 s vs
     * the array path at n = 5. Hash-grouping is exact for the gate: the
     * oracle replays the same md5 arithmetic, and a 60-bit collision would
-    * merge two grams in BOTH engines identically. */
+    * merge two grams in BOTH engines identically. A null token array is
+    * an empty one (the short side) under every ANSI setting. */
   def tfidfCosinePairsTokens(df: org.apache.spark.sql.DataFrame, id: String,
                              tokensCol: String, n: Int, blockCol: String,
                              minCosine: Double): org.apache.spark.sql.DataFrame = {
     require(n > 0, s"gram order must be positive, got $n")
     val tok = df.select(col(id).as("tc_id"), col(blockCol).as("blk"),
-      col(tokensCol).as("tk"))
+      coalesce(col(tokensCol), EmptyTokens).as("tk"))
     // gram build on the codegen'd posexplode + get(tk, pos+j) path: the
     // window-lead build this replaces paid a full exchange + per-doc sort
     // of the exploded token stream just to read tk[pos+j] — values the
@@ -516,12 +522,12 @@ object TextAnalysis {
       .groupBy("tc_id", "blk", "t").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // `nDocsHint` lets a caller that KNOWS every input doc contributes a
-    // term (the tokens builder — even an empty doc yields its short-side
-    // whole-array term) count docs on the column-pruned DOC-grain scan
-    // instead of a distinct over the corpus-scale tf relation (guide §1;
-    // A/B'd in OPTIMIZATION_r20.md). The value is identical by
-    // construction; the generic terms-stream entry keeps the exact
-    // distinct (docs with empty term arrays must not count there).
+    // term (the tokens builder — even an empty or null doc yields its
+    // short-side whole-array term) count docs on the column-pruned
+    // DOC-grain scan instead of a distinct over the corpus-scale tf
+    // relation (guide §1; A/B'd in OPTIMIZATION_r20.md). The value is
+    // identical by construction; the generic terms-stream entry keeps the
+    // exact distinct (docs with empty term arrays must not count there).
     val nDocs = nDocsHint.getOrElse(
       tf.select(col("tc_id")).distinct().count()) // one scalar action
     val dfreq = tf.groupBy("t").agg(count(lit(1)).as("df"))
@@ -676,10 +682,10 @@ object TextAnalysis {
     * if the input may carry repeated ids.
     *
     * The per-gram reduce's exchange SELF-SIZES from the leaf scan bytes
-    * ([[gramReduceWidth]], ~3 MB compressed per partition ≈ 1 M gram
-    * rows; never narrower than the session conf, so it is a no-op at
-    * bench scale and on a cluster session already sized wider).
-    * `shuffleWidth` overrides it when a deployment knows better. Round 14
+    * ([[ExchangeWidth]] at [[GramReduceTargetBytesPerPartition]], ~3 MB
+    * compressed per partition ≈ 1 M gram rows; never narrower than the
+    * session conf, so it is a no-op at bench scale and on a cluster
+    * session already sized wider). Round 14
     * A/B'd the widening and called it a WASH — but its "zero agg spill
     * either way" evidence came from the vacuous probe that read a
     * never-executed plan (ADVICE r14). The round-15 re-run with the
@@ -688,13 +694,24 @@ object TextAnalysis {
     * synthetic decade the static session width spills 105-107 GB in the
     * per-gram hash maps vs 44.5 GB widened, and the widened shape runs
     * 1.17-1.65× faster — so the width is now WIRED as the default, not
-    * left as opt-in surface. */
+    * left as opt-in surface.
+    *
+    * A null text is an empty token array: it lands on the short side as
+    * the one empty-string gram under every ANSI setting. */
   def ngramNovelty(df: org.apache.spark.sql.DataFrame, id: String,
-                   textCol: String, n: Int = 8,
-                   shuffleWidth: Option[Int] = None): org.apache.spark.sql.DataFrame = {
+                   textCol: String, n: Int = 8): org.apache.spark.sql.DataFrame =
+    ngramNoveltyAt(df, id, textCol, n,
+      ExchangeWidth.forScan(df, GramReduceTargetBytesPerPartition))
+
+  /** [[ngramNovelty]] with the per-gram reduce at an explicit `width`
+    * (test seam: a widened plan at spec scale). */
+  private[operators] def ngramNoveltyAt(df: org.apache.spark.sql.DataFrame,
+      id: String, textCol: String, n: Int,
+      width: Int): org.apache.spark.sql.DataFrame = {
     require(n > 0, s"gram order must be positive, got $n")
     import org.apache.spark.sql.expressions.Window
-    val tok = df.select(col(id).as("nv_id"), tokens(col(textCol)).as("tk"))
+    val tok = df.select(col(id).as("nv_id"),
+      coalesce(tokens(col(textCol)), EmptyTokens).as("tk"))
     // window-lead build KEPT here (round-20 A/B, 2 sessions,
     // OPTIMIZATION_r20.md §Second measurement pass): the posexplode+get
     // rewrite that won everywhere else LOSES on this operator (q76 read
@@ -713,15 +730,12 @@ object TextAnalysis {
     val shortSide = tok.where(size(col("tk")) < n)
       .select(col("nv_id"), md5Long(concat_ws(" ", col("tk"))).as("g"))
     // the per-gram reduce's exchange carries the FULL gram stream into
-    // per-task hash maps — width self-sized from the scan bytes
-    // (gramReduceWidth; a no-op at bench scale, 105→44 GB less spill and
-    // 1.2-1.7× at the fourth decade), `shuffleWidth` overriding. Applied
-    // before the persist, so the cache stores at that width and the
-    // groupBy("g") below reuses the partitioning instead of adding a
-    // second exchange.
-    val grams = Dedup.widenForJoin(longSide.union(shortSide),
-        shuffleWidth.getOrElse(gramReduceWidth(leafScanBytes(df),
-          df.sparkSession.sessionState.conf.numShufflePartitions)), col("g"))
+    // per-task hash maps — width self-sized from the scan bytes (a no-op
+    // at bench scale, 105→44 GB less spill and 1.2-1.7× at the fourth
+    // decade). Applied before the persist, so the cache stores at that
+    // width and the groupBy("g") below reuses the partitioning instead of
+    // adding a second exchange.
+    val grams = ExchangeWidth.widenForJoin(longSide.union(shortSide), width, col("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // grams is persisted because it feeds BOTH the per-gram reduce and the
     // per-doc reduce (Catalyst never reuses the exchange — measured, see
@@ -760,7 +774,7 @@ object TextAnalysis {
     *
     * Scale shape: grams ride the same posexplode + window-lead build as
     * [[ngramNovelty]] (one exchange on the doc id), then ONE exchange on
-    * the gram hash — self-sized by [[gramReduceWidth]], persisted at that
+    * the gram hash — self-sized like [[ngramNovelty]]'s, persisted at that
     * width because it feeds both the occurrence reduce and the dup-site
     * semi-join; the reduce output stays partitioned on `g`, so the
     * semi-join back (the step q76 avoids but removal fundamentally needs:
@@ -794,7 +808,6 @@ object TextAnalysis {
     * data is spec-asserted). */
   def exactSubstrRemove(df: org.apache.spark.sql.DataFrame, id: String,
                         textCol: String, n: Int = 8,
-                        shuffleWidth: Option[Int] = None,
                         hashGrams: Boolean = true): org.apache.spark.sql.DataFrame = {
     require(n > 0, s"window length must be positive, got $n")
     val tok = df.select(col(id).as("es_id"), tokens(col(textCol)).as("tk"))
@@ -802,9 +815,8 @@ object TextAnalysis {
     // preserves HashPartitioning(g), so the semi-join back is
     // exchange-free on both sides (the persisted cache holds the
     // partitioning; Catalyst never reuses the exchange otherwise).
-    val sites = Dedup.widenForJoin(esGramSites(tok, n, hashGrams),
-        shuffleWidth.getOrElse(gramReduceWidth(leafScanBytes(df),
-          df.sparkSession.sessionState.conf.numShufflePartitions)), col("g"))
+    val sites = ExchangeWidth.widenForJoin(esGramSites(tok, n, hashGrams),
+        ExchangeWidth.forScan(df, GramReduceTargetBytesPerPartition), col("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // lifecycle owner: GraftSession.releaseCaches
     val dupGrams = sites.groupBy("g").agg(count(lit(1)).as("occ"))
@@ -854,10 +866,9 @@ object TextAnalysis {
   def exactSubstrRemoveAgainst(batch: org.apache.spark.sql.DataFrame,
                                corpus: org.apache.spark.sql.DataFrame,
                                id: String, textCol: String, n: Int = 8,
-                               shuffleWidth: Option[Int] = None,
                                hashGrams: Boolean = true): org.apache.spark.sql.DataFrame =
     exactSubstrRemoveAgainstGrams(batch,
-      corpusGramHashes(corpus, id, textCol, n, shuffleWidth, hashGrams),
+      corpusGramHashes(corpus, id, textCol, n, hashGrams),
       id, textCol, n, hashGrams)
 
   /** The frozen corpus's DISTINCT gram keys — the reusable half of
@@ -871,13 +882,11 @@ object TextAnalysis {
     * spilling node) — is silently repaid every micro-batch. */
   def corpusGramHashes(corpus: org.apache.spark.sql.DataFrame,
                        id: String, textCol: String, n: Int = 8,
-                       shuffleWidth: Option[Int] = None,
                        hashGrams: Boolean = true): org.apache.spark.sql.DataFrame = {
     require(n > 0, s"window length must be positive, got $n")
     val corpusTok = corpus.select(col(id).as("es_id"), tokens(col(textCol)).as("tk"))
-    Dedup.widenForJoin(esGramSites(corpusTok, n, hashGrams).select("g"),
-        shuffleWidth.getOrElse(gramReduceWidth(leafScanBytes(corpus),
-          corpus.sparkSession.sessionState.conf.numShufflePartitions)), col("g"))
+    ExchangeWidth.widenForJoin(esGramSites(corpusTok, n, hashGrams).select("g"),
+        ExchangeWidth.forScan(corpus, GramReduceTargetBytesPerPartition), col("g"))
       .distinct()
   }
 
@@ -940,10 +949,9 @@ object TextAnalysis {
   def contaminationReport(heldOut: org.apache.spark.sql.DataFrame,
                           corpus: org.apache.spark.sql.DataFrame,
                           id: String, textCol: String, n: Int = 8,
-                          shuffleWidth: Option[Int] = None,
                           hashGrams: Boolean = true): org.apache.spark.sql.DataFrame =
     contaminationReportAgainstGrams(heldOut,
-      corpusGramHashes(corpus, id, textCol, n, shuffleWidth, hashGrams),
+      corpusGramHashes(corpus, id, textCol, n, hashGrams),
       id, textCol, n, hashGrams)
 
   /** [[contaminationReport]] with the corpus side pre-reduced by
@@ -1098,17 +1106,6 @@ object TextAnalysis {
   def collapseRepeats(tokens: Column): Column =
     filter(tokens, (t, i) => i === 0 || t =!= element_at(tokens, i))
 
-  /** Exact byte size of the leaf relations under `df`'s optimized plan —
-    * the width driver for [[scanStreamWidth]]. For a file scan this is the
-    * file index's byte sum (metadata the session already holds — no data
-    * pass, unlike [[Dedup]]'s posting-volume driver which rides an
-    * aggregate the pair family needs anyway), NOT the projection estimate
-    * above it, which guesses array/string column widths. In-memory test
-    * relations report their row estimate — small, landing at the session
-    * floor. */
-  private[operators] def leafScanBytes(df: org.apache.spark.sql.DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
-
   /** ~32 MB of compressed scan bytes per partition for exchanges that
     * carry the full token stream — the arithmetic spill boundary, NOT a
     * measured optimum. The measured result is a NEGATIVE one, re-confirmed
@@ -1124,21 +1121,14 @@ object TextAnalysis {
     * engage in any regime measured so far; it exists for the regime the
     * arithmetic says the sort volume itself explodes — exploded bytes ≈
     * 13× compressed (snappy ~3× × UnsafeRow ~4×), so 32 MB compressed ≈
-    * 420 MB in the sort per task. */
+    * 420 MB in the sort per task. The [[ExchangeWidth]] target for
+    * [[winnowedFingerprints]] and the tiled cosine self-join. */
   private[operators] val ScanStreamTargetBytesPerPartition: Long = 32L << 20
-
-  /** Data-aware width for token-stream exchanges — the scan-shaped twin of
-    * [[Dedup.pairShuffleWidth]]: never narrower than the session conf (a
-    * cluster session sized for its executors keeps its width), capped at
-    * 1024 inside the measured regime. Pure arithmetic; spec-covered. */
-  private[operators] def scanStreamWidth(scanBytes: BigInt, sessionWidth: Int): Int =
-    math.max(sessionWidth,
-      (scanBytes / ScanStreamTargetBytesPerPartition).min(1024).toInt)
 
   /** ~3 MB of compressed scan bytes per partition for the PER-GRAM REDUCE
     * exchange (≈ 1 M gram rows at the corpus's measured ~3 B/token
     * compressed) — [[ngramNovelty]]'s width driver, the fitted twin of
-    * [[Dedup.pairShuffleWidth]]'s 0.75 M-rows target. Unlike
+    * [[Dedup.PairJoinTargetOccPerPartition]]'s 0.75 M-rows target. Unlike
     * [[ScanStreamTargetBytesPerPartition]] (an arithmetic insurance
     * bound), this one is MEASURED: at the fourth synthetic decade the
     * static session width packs ~8 M gram rows per task hash map and
@@ -1146,12 +1136,6 @@ object TextAnalysis {
     * 1.17-1.65× faster (measured with the fixed spill probe, SCALE.md
     * §Round 15). */
   private[operators] val GramReduceTargetBytesPerPartition: Long = 3L << 20
-
-  /** Data-aware width for gram-reduce exchanges: never narrower than the
-    * session conf, capped at 1024 inside the measured regime. */
-  private[operators] def gramReduceWidth(scanBytes: BigInt, sessionWidth: Int): Int =
-    math.max(sessionWidth,
-      (scanBytes / GramReduceTargetBytesPerPartition).min(1024).toInt)
 
   /** Content fingerprint for exact dedup: md5 of the normalized body. */
   def fingerprintMd5(text: Column): Column = md5(lower(trim(text)))
@@ -1193,31 +1177,36 @@ object TextAnalysis {
     * Scale shape: one exchange on the doc id + a per-doc sort (the window);
     * output is O(n/w) of the k-gram stream — the standard plagiarism/near-
     * dup index build. The exchange carries the FULL token stream; its
-    * width comes from the scan bytes ([[scanStreamWidth]] — insurance
-    * against the regime where the sort volume itself explodes,
+    * width comes from the scan bytes
+    * ([[ScanStreamTargetBytesPerPartition]] — insurance against the
+    * regime where the sort volume itself explodes,
     * deliberately a no-op at every scale measured so far; the per-doc
     * sort DOES spill ~8.7 GB at the fourth decade but identically in
     * both A/B shapes and at a wall-time wash — see its scaladoc for the
     * round-15 re-measurement and the round-14 A/B that REJECTED an eager
-    * 4 MB/partition target), or from `shuffleWidth` when a deployment
-    * knows better. Either way the widening exchange IS
+    * 4 MB/partition target). When it widens, the widening exchange IS
     * the window's own hash exchange and the final distinct reuses it —
     * one exchange total, spec-asserted, never narrower than the session
     * conf. */
   def winnowedFingerprints(df: org.apache.spark.sql.DataFrame, id: String,
-                           tokensCol: String, k: Int = 3, w: Int = 4,
-                           shuffleWidth: Option[Int] = None)
-  : org.apache.spark.sql.DataFrame = {
+                           tokensCol: String, k: Int = 3, w: Int = 4)
+  : org.apache.spark.sql.DataFrame =
+    winnowedFingerprintsAt(df, id, tokensCol, k, w,
+      ExchangeWidth.forScan(df, ScanStreamTargetBytesPerPartition))
+
+  /** [[winnowedFingerprints]] with the doc-grain exchange at an explicit
+    * `width` (test seam: a widened plan at spec scale). */
+  private[operators] def winnowedFingerprintsAt(df: org.apache.spark.sql.DataFrame,
+      id: String, tokensCol: String, k: Int, w: Int,
+      width: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val width = shuffleWidth.getOrElse(scanStreamWidth(leafScanBytes(df),
-      df.sparkSession.sessionState.conf.numShufflePartitions))
     // gram build on the codegen'd posexplode + get(tk, pos+j) path (see
     // [[tfidfCosinePairsTokens]]): drops the k−1 lead window functions the
     // old shape computed over the sorted stream, and moves the widening
     // exchange to DOC grain — each token array crosses once instead of one
     // row per token, and the rolling-min window's own exchange/sort sees
     // only slim (wf_id, pos, gh) rows (A/B'd in OPTIMIZATION_r20.md).
-    val grams = Dedup.widenForJoin(
+    val grams = ExchangeWidth.widenForJoin(
         df.select(col(id).as("wf_id"), col(tokensCol).as("tk")),
         width, col("wf_id"))
       .select(col("wf_id"), col("tk"), posexplode(col("tk")).as(Seq("pos", "tok")))

@@ -3,9 +3,9 @@ package graft.tools
 /** Generic conf A/B (dev tool): run the given queries with one
   * runtime-settable session conf at its session value ("off") and at a
   * candidate value ("on"), interleaved + rotated + calibration-bracketed
-  * per the round-14 protocol, spill from the executed plan. Serves both
-  * a `spark.graft.*` seam (`<key> true`) and any Spark conf, so each new
-  * measure-first lever doesn't need its own one-shot tool.
+  * per the round-14 protocol, spill from the executed plan. Any Spark
+  * conf works, so each new measure-first lever doesn't need its own
+  * one-shot tool.
   *
   * Usage: `runMain graft.tools.ProfileSeamAB <confKey> <onValue> <dir> [reps] [queries…]` */
 object ProfileSeamAB {

@@ -198,14 +198,14 @@ class DedupSpec extends SparkSpec {
     assert(bitmap === prefix)
   }
 
-  test("prefix cache trims to ord-only, releases the input cache, and honors the persist-level conf") {
+  test("prefix cache trims to ord-only, releases the input cache, and stays MEMORY_AND_DISK") {
     // the round-15 cache-fit work (SCALE.md §Round 14: at sf100 the pair
     // family's persisted bytes cross the local cache-fit boundary): the
     // corpus-scale cache must hold each token hash ONCE (ord only — the
     // prefix column is a slice computed on cache read), and the hashed-set
     // INPUT cache must be released the moment the prefix cache
-    // materializes. The persist-level deployment conf switches the
-    // storage level and must emit identical pairs.
+    // materializes. It persists at the one storage level every other
+    // operator cache uses.
     val d = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("lang"),
         array_distinct(split(col("text"), " ")).as("tok"))
@@ -227,6 +227,8 @@ class DedupSpec extends SparkSpec {
       // consumer-less input cache: exactly one corpus-scale RDD stays
       val cached = spark.sparkContext.getRDDStorageInfo
       assert(cached.length === 1, cached.map(_.name).mkString(" | "))
+      assert(cached.head.storageLevel ===
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val schemas = cachedSchemas(pairs)
       assert(schemas.exists(_.contains("ord")), schemas.toString)
       assert(!schemas.exists(_.contains("prefix")),
@@ -234,18 +236,6 @@ class DedupSpec extends SparkSpec {
       collectPairs(pairs)
     } finally release()
     assert(expected.nonEmpty)
-    // storage-level deployment conf: serialized cache, identical pairs
-    spark.conf.set("spark.graft.pair.persistLevel", "MEMORY_AND_DISK_SER")
-    try {
-      val pairs = build()
-      val info = spark.sparkContext.getRDDStorageInfo
-      assert(info.nonEmpty && info.forall(i => !i.storageLevel.deserialized),
-        info.map(i => s"${i.name}:${i.storageLevel}").mkString(" | "))
-      assert(collectPairs(pairs) === expected)
-    } finally {
-      spark.conf.unset("spark.graft.pair.persistLevel")
-      release()
-    }
   }
 
   test("ordered-arrays df attach is hash-joined and sort-free on the real corpus") {
@@ -721,29 +711,13 @@ class DedupSpec extends SparkSpec {
     graft.GraftSession.releaseCaches(spark, blocking = true)
   }
 
-  test("pair shuffle width: data-driven above the session default, clamped, never narrower") {
-    // bench-scale corpora (≤ target×session occurrences) keep the session
-    // width — plans there must stay byte-identical to the unwidened shape
-    assert(Dedup.pairShuffleWidth(0L, 32) === 32)
-    assert(Dedup.pairShuffleWidth(1L << 20, 32) === 32)
-    assert(Dedup.pairShuffleWidth(24L << 20, 32) === 32)
-    // the sf10 knob-replay regime: ~1e8 occurrences land near the
-    // measured-best 128, far from the over-split 512
-    val sf10 = Dedup.pairShuffleWidth(100L * 1000 * 1000, 32)
-    assert(sf10 >= 96 && sf10 <= 160, s"~1e8 occ should widen to ~128, got $sf10")
-    // a cluster session sized for its executors is never narrowed
-    assert(Dedup.pairShuffleWidth(100L * 1000 * 1000, 2000) === 2000)
-    // runaway corpora clamp at the measured regime's cap
-    assert(Dedup.pairShuffleWidth(Long.MaxValue / 4, 32) === 1024)
-  }
-
   test("widened posting join: one exchange per side at the custom width, none added by the join") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val l = Dedup.widenForJoin(
+    val l = ExchangeWidth.widenForJoin(
       docs.select(col("doc_id").as("left_id"), col("lang").as("blk"),
         explode(col("tok")).as("h")), 7, col("blk"), col("h"))
-    val r = Dedup.widenForJoin(
+    val r = ExchangeWidth.widenForJoin(
       docs.select(col("doc_id").as("right_id"), col("lang").as("blk"),
         explode(col("tok")).as("h")), 7, col("blk"), col("h"))
     val joined = l.join(r, Seq("blk", "h")).where(col("left_id") < col("right_id"))

@@ -302,6 +302,44 @@ class TextAnalysisSpec extends SparkSpec {
     graft.GraftSession.releaseCaches(spark)
   }
 
+  test("null token arrays: novelty and tfidf token pairs agree under ANSI on and off") {
+    import spark.implicits._
+    // under ANSI on, size(null) is NULL: a null doc used to fall on neither
+    // side of the long/short gram split while nDocsHint still counted it
+    val docs = Seq[(Long, String, String)](
+      (1L, "en", "a b c d e f g h i j"),
+      (2L, "en", "a b c d e f g h i j"),
+      (3L, "en", null),
+      (4L, "en", ""),
+      (5L, "en", "q r s")).toDF("doc_id", "lang", "text")
+    def run(ansi: Boolean) = {
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try {
+        val nv = TextAnalysis.ngramNovelty(docs, "doc_id", "text", n = 8)
+          .as[(Long, Long, Long, Double)].collect().toSet
+        val tf = TextAnalysis.tfidfCosinePairsTokens(
+            docs.select(col("doc_id"), col("lang"), split(col("text"), " ").as("tok")),
+            "doc_id", "tok", 5, "lang", 0.5)
+          .as[(Long, Long, Double)].collect().toSet
+        (nv, tf)
+      } finally {
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+        // the gram caches are keyed by plan: drop them so the other
+        // setting recomputes instead of reading this one's rows
+        graft.GraftSession.releaseCaches(spark, blocking = true)
+      }
+    }
+    val (nvOff, tfOff) = run(ansi = false)
+    val (nvOn, tfOn) = run(ansi = true)
+    // the null doc reports as one gram, shared with the blank doc
+    assert(nvOff.map(_._1) === Set(1L, 2L, 3L, 4L, 5L))
+    assert(nvOff.find(_._1 == 3L).map(r => (r._2, r._4)) === Some((1L, 0.0)))
+    assert(tfOff.exists(p => p._1 == 3L && p._2 == 4L && p._3 == 1.0), tfOff)
+    assert(nvOn === nvOff)
+    assert(tfOn === tfOff)
+  }
+
   test("ngram novelty plan: exactly 3 shuffles and no join — window, per-gram, per-doc") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -328,12 +366,11 @@ class TextAnalysisSpec extends SparkSpec {
     val joins = nodes.flatMap(_.collect { case j: JoinExec => j })
     assert(joins.isEmpty,
       s"novelty must reduce, never join back to the gram relation: $joins")
-    // the gram-reduce width override (deployment surface; the round-14
-    // A/B at the fourth decade measured it a wash — see scaladoc): same
-    // exchange count (the widening IS the per-gram reduce's exchange, at
-    // the requested width) and identical output
-    val wideOut = TextAnalysis.ngramNovelty(df, "doc_id", "text", n = 8,
-      shuffleWidth = Some(64))
+    // a widened gram reduce (what the data-sized width computes past the
+    // session conf at corpus scale): same exchange count (the widening IS
+    // the per-gram reduce's exchange, at the requested width) and
+    // identical output
+    val wideOut = TextAnalysis.ngramNoveltyAt(df, "doc_id", "text", 8, width = 64)
     wideOut.count()
     // materialized AQE stages are leaves in the final plan — recurse into
     // them, or widened exchanges executed in earlier stages are invisible
@@ -406,30 +443,13 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
-  test("scan-stream width: session floor through the measured no-spill regime, engages at the arithmetic spill boundary, clamped") {
-    // every regime measured so far keeps the session width — including the
-    // 817 MB fourth-decade corpus, where the interleaved A/B measured the
-    // widened shape indistinguishable and the sort spill-free (the
-    // round-14 negative result; see scanStreamWidth's scaladoc)
-    assert(TextAnalysis.scanStreamWidth(BigInt(0), 32) === 32)
-    assert(TextAnalysis.scanStreamWidth(BigInt(60L << 20), 32) === 32)
-    assert(TextAnalysis.scanStreamWidth(BigInt(817L << 20), 32) === 32)
-    // past the arithmetic boundary (~32 MB compressed ≈ 420 MB in-sort per
-    // partition) the width scales with the data
-    assert(TextAnalysis.scanStreamWidth(BigInt(2L) << 31, 32) === 128)
-    // a cluster session sized for its executors is never narrowed
-    assert(TextAnalysis.scanStreamWidth(BigInt(2L) << 31, 2000) === 2000)
-    // runaway corpora clamp at the cap
-    assert(TextAnalysis.scanStreamWidth(BigInt(Long.MaxValue / 4), 32) === 1024)
-  }
-
   test("leafScanBytes reads the file index's exact parquet byte sum through a projection") {
     val dir = java.nio.file.Files.createTempDirectory("graft_scanbytes").toString
     try {
       spark.read.parquet(s"$sf/documents.parquet").write.mode("overwrite").parquet(dir)
       val onDisk = new java.io.File(dir).listFiles()
         .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-      val est = TextAnalysis.leafScanBytes(spark.read.parquet(dir)
+      val est = ExchangeWidth.leafScanBytes(spark.read.parquet(dir)
         .select(col("doc_id"), split(col("text"), " ").as("tok")))
       assert(est === BigInt(onDisk),
         s"leaf bytes must be the FILE bytes ($onDisk), not a projection estimate, got $est")
@@ -457,13 +477,13 @@ class TextAnalysisSpec extends SparkSpec {
     assert(bench.head.outputPartitioning.numPartitions ===
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
-    // a widened plan (deployment override past the session width): the
+    // a widened plan (a data-sized width past the session width): the
     // widening exchange IS the window's own hash exchange — still exactly
     // one, at the requested width, and the same fingerprint set
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("tok"))
-    val wideDf = TextAnalysis.winnowedFingerprints(docs, "doc_id", "tok",
-      shuffleWidth = Some(64))
+    val wideDf = TextAnalysis.winnowedFingerprintsAt(docs, "doc_id", "tok", 3, 4,
+      width = 64)
     val wide = shufflesOf(wideDf)
     assert(wide.length === 1,
       s"widening must ride the window's own exchange, got ${wide.length}")
@@ -471,11 +491,11 @@ class TextAnalysisSpec extends SparkSpec {
       s"widened exchange must keep the requested width 64, got " +
         wide.head.outputPartitioning.numPartitions)
     // width below the session conf is never narrowed: identical plan shape
-    val narrow = shufflesOf(TextAnalysis.winnowedFingerprints(docs, "doc_id", "tok",
-      shuffleWidth = Some(2)))
+    val narrow = shufflesOf(TextAnalysis.winnowedFingerprintsAt(docs, "doc_id", "tok", 3, 4,
+      width = 2))
     assert(narrow.head.outputPartitioning.numPartitions ===
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      "an override below the session width must not narrow the exchange")
+      "a width below the session width must not narrow the exchange")
     // partitioning never changes the fingerprint set
     assert(wideDf.collect().toSet ===
       TextAnalysis.winnowedFingerprints(docs, "doc_id", "tok").collect().toSet)

@@ -3,14 +3,19 @@ package graft.pipeline
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Golden end-to-end run on the reference's own fixture extracts
-  * (/root/reference/rewards.csv + transactions.csv, read-only), asserting
-  * the invariants from FIXTURES.md §A3.
+/** Golden end-to-end run on a compact reference-shaped extract pair
+  * (`golden/rewards.csv` + `golden/transactions.csv` test resources, 60
+  * rewards / 100 transactions written from the FIXTURES.md §A1–A2 column
+  * profile by `tools/golden_fixture.py`, which also derives every count
+  * asserted here with DuckDB), asserting the invariants from FIXTURES.md
+  * §A3.
   */
 class GoldenPipelineSpec extends SparkSpec {
 
-  private val rewardsCsv = "/root/reference/rewards.csv"
-  private val transactionsCsv = "/root/reference/transactions.csv"
+  private def resource(name: String): String =
+    new java.io.File(getClass.getResource(s"/golden/$name").toURI).getPath
+  private val rewardsCsv = resource("rewards.csv")
+  private val transactionsCsv = resource("transactions.csv")
 
   private lazy val cashback = {
     val rewards = Ingest.normalizeRewards(Ingest.csvAllStrings(spark, rewardsCsv))
@@ -18,8 +23,10 @@ class GoldenPipelineSpec extends SparkSpec {
     CashbackTransform.transform(rewards, tx).cache()
   }
 
-  test("row count preserved by left join: 1753 rewards in, 1753 cashback rows out") {
-    assert(cashback.count() === 1753L)
+  test("row count preserved by left join: 60 rewards in, 60 cashback rows out") {
+    assert(cashback.count() === 60L)
+    // 2 null reference_ids and 1 dangling one match no transaction
+    assert(cashback.where(col("transaction_id").isNull).count() === 3L)
   }
 
   test("transaction_amount = abs(amount)/100 for all matched rows") {
@@ -28,17 +35,17 @@ class GoldenPipelineSpec extends SparkSpec {
     assert(bad === 0L)
   }
 
-  test("null-safe rejected filter keeps null reasons (P4, 57 null-reason rows)") {
+  test("null-safe rejected filter keeps null reasons (P4, 4 null-reason rows)") {
     val kept = MonthlyRewards.monthlyCount(
       Ingest.normalizeRewards(Ingest.csvAllStrings(spark, rewardsCsv))
         .withColumn("plu_amount", col("plu_amount").cast("double"))
         .withColumn("plu_price", lit(1.0)))
-    // fixture: 1753 total, 140 'Rejected by admin' → 1613 rows survive,
-    // including all 57 null-reason rows
+    // fixture: 60 total, 6 'Rejected by admin' → 54 rows survive,
+    // including all 4 null-reason rows
     val raw = Ingest.normalizeRewards(Ingest.csvAllStrings(spark, rewardsCsv))
     val surviving = raw.where(col("reason").isNull || col("reason") =!= "Rejected by admin")
-    assert(surviving.count() === 1613L)
-    assert(surviving.where(col("reason").isNull).count() === 57L)
+    assert(surviving.count() === 54L)
+    assert(surviving.where(col("reason").isNull).count() === 4L)
     assert(kept.count() >= 1)
   }
 
@@ -49,9 +56,9 @@ class GoldenPipelineSpec extends SparkSpec {
       Some("transaction_date"))
     val second = IncrementalLoad.appendNew(spark, cashback, table, "reward_id",
       Some("transaction_date"))
-    assert(first === 1753L)
+    assert(first === 60L)
     assert(second === 0L)
-    assert(spark.table(table).count() === 1753L)
+    assert(spark.table(table).count() === 60L)
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
@@ -148,11 +155,11 @@ class GoldenPipelineSpec extends SparkSpec {
     }
     val (tx, rw) = ApiIngest.fetchData(spark, Some(failing), transactionsCsv, rewardsCsv,
       retry = Retry.Policy(sleep = _ => ()))
-    assert(rw.count() === 1753L, "fallback must read the rewards fixture")
+    assert(rw.count() === 60L, "fallback must read the rewards fixture")
     assert(tx.columns.contains("transaction_id"))
     // no client at all (missing credentials) is the same fixture path
     val (tx2, rw2) = ApiIngest.fetchData(spark, None, transactionsCsv, rewardsCsv)
-    assert(rw2.count() === 1753L && tx2.count() === tx.count())
+    assert(rw2.count() === 60L && tx2.count() === tx.count())
   }
 
   test("Pipeline.run with a failing client still completes on fixtures (fallback seam)") {
@@ -164,7 +171,7 @@ class GoldenPipelineSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val res = Pipeline.run(spark, rewardsCsv, transactionsCsv, table, Some(failing),
       retry = Retry.Policy(sleep = _ => ()))
-    assert(res.cashbackRows === 1753L)
+    assert(res.cashbackRows === 60L)
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 }
