@@ -711,6 +711,25 @@ class DedupSpec extends SparkSpec {
     graft.GraftSession.releaseCaches(spark, blocking = true)
   }
 
+  test("pair shuffle width: data-driven above the session default, clamped, never narrower") {
+    // the pair family's width is the shared rule at its posting target
+    def pairWidth(occ: Long, session: Int) =
+      ExchangeWidth.width(occ, Dedup.PairJoinTargetOccPerPartition, session)
+    // bench-scale corpora (≤ target×session occurrences) keep the session
+    // width — plans there must stay byte-identical to the unwidened shape
+    assert(pairWidth(0L, 32) === 32)
+    assert(pairWidth(1L << 20, 32) === 32)
+    assert(pairWidth(24L << 20, 32) === 32)
+    // the sf10 knob-replay regime: ~1e8 occurrences land near the
+    // measured-best 128, far from the over-split 512
+    val sf10 = pairWidth(100L * 1000 * 1000, 32)
+    assert(sf10 >= 96 && sf10 <= 160, s"~1e8 occ should widen to ~128, got $sf10")
+    // a cluster session sized for its executors is never narrowed
+    assert(pairWidth(100L * 1000 * 1000, 2000) === 2000)
+    // runaway corpora clamp at the measured regime's cap
+    assert(pairWidth(Long.MaxValue / 4, 32) === 1024)
+  }
+
   test("widened posting join: one exchange per side at the custom width, none added by the join") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

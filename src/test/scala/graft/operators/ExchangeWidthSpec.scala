@@ -2,43 +2,23 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The shared rule itself; each family's target is pinned in its own spec
+  * (DedupSpec "pair shuffle width", TextAnalysisSpec "scan-stream width"). */
 class ExchangeWidthSpec extends AnyFunSuite {
 
   test("width: volume over the family target, floored at the session width, capped") {
-    val pair = Dedup.PairJoinTargetOccPerPartition
-    val scan = TextAnalysis.ScanStreamTargetBytesPerPartition
     val gram = TextAnalysis.GramReduceTargetBytesPerPartition
-    // (case, volume, per-partition target, session width, expected widths)
-    val cases = Seq[(String, BigInt, Long, Int, Range)](
-      // bench-scale corpora (≤ target × session) keep the session width —
-      // plans there must stay byte-identical to the unwidened shape
-      ("pair: empty", 0L, pair, 32, 32 to 32),
-      ("pair: 1 M occurrences", 1L << 20, pair, 32, 32 to 32),
-      ("pair: 24 M occurrences", 24L << 20, pair, 32, 32 to 32),
-      // the sf10 knob-replay regime: ~1e8 occurrences land near the
-      // measured-best 128, far from the over-split 512
-      ("pair: sf10 knob replay", 100L * 1000 * 1000, pair, 32, 96 to 160),
-      // a cluster session sized for its executors is never narrowed
-      ("pair: wide session", 100L * 1000 * 1000, pair, 2000, 2000 to 2000),
-      // runaway corpora clamp at the measured regime's cap
-      ("pair: runaway", Long.MaxValue / 4, pair, 32, 1024 to 1024),
-      // every token-stream regime measured so far keeps the session width —
-      // including the 817 MB fourth-decade corpus, where the interleaved
-      // A/B measured the widened shape indistinguishable (the round-14
-      // negative result; see ScanStreamTargetBytesPerPartition)
-      ("scan: empty", 0L, scan, 32, 32 to 32),
-      ("scan: 60 MB", 60L << 20, scan, 32, 32 to 32),
-      ("scan: fourth decade", 817L << 20, scan, 32, 32 to 32),
-      // past the arithmetic boundary (~32 MB compressed ≈ 420 MB in-sort
-      // per partition) the width scales with the data
-      ("scan: 4 GB", BigInt(2L) << 31, scan, 32, 128 to 128),
-      ("scan: wide session", BigInt(2L) << 31, scan, 2000, 2000 to 2000),
-      ("scan: runaway", Long.MaxValue / 4, scan, 32, 1024 to 1024),
+    // (case, volume, per-partition target, session width, expected width)
+    val cases = Seq[(String, BigInt, Long, Int, Int)](
+      ("exact division", BigInt(640), 10L, 32, 64),
+      ("floored at the session", BigInt(100), 10L, 32, 32),
+      ("capped", BigInt(1L) << 40, 1L, 32, 1024),
+      ("wide session above the cap", BigInt(1L) << 40, 1L, 2000, 2000),
       // the gram reduce's measured ~3 MB target widens the fourth decade
-      ("gram: fourth decade", 817L << 20, gram, 32, 272 to 272))
+      ("gram: fourth decade", 817L << 20, gram, 32, 272))
     for ((name, volume, target, session, expected) <- cases) {
       val got = ExchangeWidth.width(volume, target, session)
-      assert(expected.contains(got), s"$name: expected $expected, got $got")
+      assert(got === expected, s"$name: expected $expected, got $got")
     }
   }
 }

@@ -443,6 +443,26 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
+  test("scan-stream width: session floor through the measured no-spill regime, engages at the arithmetic spill boundary, clamped") {
+    // the token-stream exchanges' width is the shared rule at the scan target
+    def scanWidth(bytes: BigInt, session: Int) =
+      ExchangeWidth.width(bytes, TextAnalysis.ScanStreamTargetBytesPerPartition, session)
+    // every regime measured so far keeps the session width — including the
+    // 817 MB fourth-decade corpus, where the interleaved A/B measured the
+    // widened shape indistinguishable and the sort spill-free (the
+    // round-14 negative result; see ScanStreamTargetBytesPerPartition)
+    assert(scanWidth(BigInt(0), 32) === 32)
+    assert(scanWidth(BigInt(60L << 20), 32) === 32)
+    assert(scanWidth(BigInt(817L << 20), 32) === 32)
+    // past the arithmetic boundary (~32 MB compressed ≈ 420 MB in-sort per
+    // partition) the width scales with the data
+    assert(scanWidth(BigInt(2L) << 31, 32) === 128)
+    // a cluster session sized for its executors is never narrowed
+    assert(scanWidth(BigInt(2L) << 31, 2000) === 2000)
+    // runaway corpora clamp at the cap
+    assert(scanWidth(BigInt(Long.MaxValue / 4), 32) === 1024)
+  }
+
   test("leafScanBytes reads the file index's exact parquet byte sum through a projection") {
     val dir = java.nio.file.Files.createTempDirectory("graft_scanbytes").toString
     try {
