@@ -73,12 +73,6 @@ object Dedup {
         sum(col("sz")).cast("long").as("n_docs"),
         sum(col("sz") - 1).cast("long").as("n_redundant"))
 
-  /** Anti-join incremental load (reference J2): rows of `incoming` whose key
-    * is absent from `existing`. Catalyst broadcasts `existing`'s key set when
-    * small; at 100 TB it becomes a shuffled join on the key — still one pass. */
-  def antiJoin(incoming: DataFrame, existing: DataFrame, key: String): DataFrame =
-    incoming.join(existing.select(key).distinct(), Seq(key), "left_anti")
-
   // -------------------------------------------------------------- jaccard --
 
   /** |A ∩ B| / |A ∪ B| over two pre-distinct token arrays. */

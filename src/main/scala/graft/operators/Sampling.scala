@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions._
   * Scale: pure per-row expressions, no shuffle, no state.
   */
 object Sampling {
+  import graft.storage.StoreProtocol
 
   /** Stable bucket in [0, buckets) from the md5 of the key column. */
   def hashBucket(key: Column, buckets: Int = 100): Column =
@@ -778,7 +779,10 @@ object Sampling {
     * newline count of those same bytes, so all three come from ONE
     * streamed pass over the export (never a re-pass over the corpus),
     * distributed one task per shard. The manifest itself is |shards|
-    * lines — metadata scale — assembled on the driver. */
+    * lines — metadata scale — assembled on the driver and published by
+    * tmp-write + rename ([[graft.storage.StoreProtocol]]): a crash
+    * mid-write leaves no manifest, never a truncated one whose lines
+    * still parse. */
   def writeExportManifest(spark: org.apache.spark.sql.SparkSession,
                           path: String): Unit = {
     import org.apache.hadoop.fs.Path
@@ -792,39 +796,11 @@ object Sampling {
         require(files.length == 1,
           s"expected exactly one JSONL file in ${d.getPath} (the " +
             s"maxRecordsPerFile=0 single-file contract), found ${files.length}")
-        (d.getPath.getName.stripPrefix("shard=").toInt,
-          files.head.getPath.toString)
-      }.sortBy(_._1).toSeq
-    val bc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val stats = spark.sparkContext
-      .parallelize(shardFiles, math.max(1, shardFiles.length))
-      .map { case (shard, file) =>
-        val p = new Path(file)
-        val pfs = p.getFileSystem(bc.value.value)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val in = pfs.open(p)
-        var rows = 0L; var bytes = 0L
-        val buf = new Array[Byte](1 << 20)
-        try {
-          var n = in.read(buf)
-          while (n > 0) {
-            md.update(buf, 0, n); bytes += n
-            var i = 0
-            while (i < n) { if (buf(i) == '\n') rows += 1; i += 1 }
-            n = in.read(buf)
-          }
-        } finally in.close()
-        (shard, p.getName, rows, bytes,
-          md.digest().map("%02x".format(_)).mkString)
-      }.collect().sortBy(_._1)
-    val out = fs.create(new Path(root, "_manifest.jsonl"), true)
-    try stats.foreach { case (shard, name, rows, bytes, digest) =>
-      out.write((s"""{"shard":$shard,"file":"shard=$shard/$name",""" +
-        s""""rows":$rows,"bytes":$bytes,"md5":"$digest"}""" + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
+        (d.getPath.getName, files.head.getPath.toString)
+      }.sortBy(_._1.stripPrefix("shard=").toInt).toSeq
+    val lines = StoreProtocol.digest(spark, shardFiles, StoreProtocol.NewlineRows)
+      .map(d => StoreProtocol.manifestLine(s""""shard":${d.dir.stripPrefix("shard=")}""", d))
+    StoreProtocol.publish(fs, new Path(root, StoreProtocol.ManifestName), lines)
   }
 
   /** EXACTLY-k budgeted selection by score — the quality-filter step that

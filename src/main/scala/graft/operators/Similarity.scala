@@ -23,6 +23,7 @@ import org.apache.spark.sql.expressions.Window
   */
 object Similarity {
   import graft.functions.VectorFunctions
+  import graft.storage.StoreProtocol
 
   def dot(a: Column, b: Column): Column = VectorFunctions.vectorDot(a, b)
 
@@ -769,19 +770,17 @@ object Similarity {
     val spark = batch.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same mutual-exclusion protocol as [[ivfPqIndexAppendOnce]]: raise a
-    // lease, THEN look for a compaction staging — anonymous files landed
-    // mid-swap would be destroyed by the crash-heal's retired-copy restore
-    // with no replay to heal them, so this path needs the guard even more
-    // than the idempotent one
-    val lease = acquireAppendLease(fs, root)
-    try {
-      failIfCompacting(fs, root)
+    // same mutual-exclusion protocol as [[ivfPqIndexAppendOnce]]: anonymous
+    // files landed mid-swap would be destroyed by the crash-heal's
+    // retired-copy restore with no replay to heal them, so this path needs
+    // the guard even more than the idempotent one
+    StoreProtocol.withAppendLease(fs, root, compacting(root)) {
       // a stamped manifest must follow EVERY mutation path, not just the
       // idempotent one: snapshot the listing, land the batch, merge rows for
       // exactly the files the write added (Spark's append names them
       // anonymously, so the delta comes from the listing, not a prefix)
-      val stamped = fs.exists(new Path(root, ManifestName))
+      val manifest = new Path(root, StoreProtocol.ManifestName)
+      val stamped = fs.exists(manifest)
       val before: Set[String] =
         if (stamped) indexDataFiles(fs, root).map(_._2).toSet else Set.empty
       clusteredLayout(
@@ -790,13 +789,10 @@ object Similarity {
         .write.mode("append").partitionBy("cluster").parquet(path)
       if (stamped) {
         val added = indexDataFiles(fs, root).filterNot(f => before(f._2))
-        val in = fs.open(new Path(root, ManifestName))
-        val old = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList finally in.close()
-        writeIndexManifest(spark, root,
-          (old ++ manifestRows(spark, added)).sorted)
+        StoreProtocol.publish(fs, manifest,
+          (StoreProtocol.readLines(fs, manifest) ++ manifestRows(spark, added)).sorted)
       }
-    } finally fs.delete(lease, false)
+    }
   }
 
   /** IDEMPOTENT append for replayable writers (the streaming sink,
@@ -873,81 +869,47 @@ object Similarity {
     // crashed) compaction staging means cluster dirs are mid-swap — files
     // landed now could sit in a dir the heal is about to delete and
     // restore from its retired copy, while this batch's commit marker
-    // would survive and suppress the replay: permanent silent row loss.
-    // LEASE FIRST, then the staging check (scaladoc above): compaction
-    // does the reverse (staging first, then the lease scan), so whatever
-    // the interleaving at least one side sees the other and fails fast —
-    // there is no window between this check and the renames below in
-    // which a compaction can proceed.
-    val lease = acquireAppendLease(fs, root)
-    try {
-      failIfCompacting(fs, root)
-      // staging sibling derives from the NORMALIZED root, matching the
-      // compact/guard normalization — raw `path + "_batch<id>"` on a
-      // trailing-slash path would stage at `dir/_batch<id>` INSIDE the
-      // index root and leave permanent residue there after a crash
-      val staging = new Path(root.toString + s"_batch$batchId")
+    // would survive and suppress the replay: permanent silent row loss
+    StoreProtocol.withAppendLease(fs, root, compacting(root)) {
+      val staging = StoreProtocol.sibling(root, s"_batch$batchId")
       clusteredLayout(
         ivfPqEncode(batch, coarse, codebooks, idCol, vecCol, keepVec = withVectors),
         coarse.length)
         .write.mode("overwrite").partitionBy("cluster").parquet(staging.toString)
       val prefix = s"b${batchId}_"
-      if (fs.exists(root))
-        fs.listStatus(root)
-          .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster="))
-          .foreach(d => fs.listStatus(d.getPath).map(_.getPath)
-            .filter(p => p.getName.startsWith(prefix) ||
-              p.getName.startsWith(s"_$prefix"))
-            // checked: a residue file the delete silently failed to remove
-            // would later double-count rows next to the fresh landing
-            .foreach(p => require(fs.delete(p, false),
-              s"scrub of crash residue $p failed; aborting the landing — " +
-                "replaying the batch heals")))
-      fs.listStatus(staging)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster="))
-        .foreach { d =>
-          val live = new Path(root, d.getPath.getName)
-          fs.mkdirs(live)
-          fs.listStatus(d.getPath).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet"))
-            .zipWithIndex.foreach { case (f, i) =>
-              // two-phase landing: the cross-directory rename is where the
-              // bytes move (copy+delete on object stores), so it targets an
-              // underscore-prefixed in-progress name Spark's listing never
-              // surfaces; the final in-directory rename just flips the name
-              val tmp = new Path(live, s"_$prefix$i.parquet.inprogress")
-              require(fs.rename(f, tmp),
-                s"batch-append rename of $f to $tmp failed; " +
-                  "staging preserved — replaying the batch heals")
-              require(fs.rename(tmp, new Path(live, s"$prefix$i.parquet")),
-                s"batch-append publish of $tmp failed; " +
-                  "replaying the batch heals")
-            }
+      clusterFiles(fs, root).map(_._2)
+        .filter(p => p.getName.startsWith(prefix) || p.getName.startsWith(s"_$prefix"))
+        // checked: a residue file the delete silently failed to remove
+        // would later double-count rows next to the fresh landing
+        .foreach(p => require(fs.delete(p, false),
+          s"scrub of crash residue $p failed; aborting the landing — " +
+            "replaying the batch heals"))
+      clusterFiles(fs, staging).filter(_._2.getName.endsWith(".parquet")).groupBy(_._1)
+        .foreach { case (cluster, files) =>
+          files.zipWithIndex.foreach { case ((_, f), i) =>
+            // two-phase: in flight as `_b<id>_<n>.parquet.inprogress`
+            StoreProtocol.land(fs, f, new Path(new Path(root, cluster), s"$prefix$i.parquet"))
+          }
         }
       // maintain a stamped manifest BEFORE the commit marker: batch-keyed
       // file names make the merge idempotent (drop this batch's rows, add
       // the fresh ones), and marker-after-manifest means a crash between
       // them replays the whole landing INCLUDING the re-merge — the marker
       // never vouches for files the manifest doesn't describe
-      if (fs.exists(new Path(root, ManifestName))) {
-        val landed = fs.listStatus(root)
-          .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster="))
-          .flatMap(d => fs.listStatus(d.getPath).map(_.getPath)
-            .filter(_.getName.startsWith(prefix))
-            .map(p => (d.getPath.getName, p.toString)))
-          .toSeq
-        val in = fs.open(new Path(root, ManifestName))
-        val old = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList finally in.close()
-        val kept = old.filterNot(manifestLineInBatch(_, batchId))
-        writeIndexManifest(spark, root,
+      val manifest = new Path(root, StoreProtocol.ManifestName)
+      if (fs.exists(manifest)) {
+        val landed = indexDataFiles(fs, root)
+          .filter(f => new Path(f._2).getName.startsWith(prefix))
+        val kept = StoreProtocol.readLines(fs, manifest)
+          .filterNot(manifestLineInBatch(_, batchId))
+        StoreProtocol.publish(fs, manifest,
           (kept ++ manifestRows(spark, landed)).sorted)
       }
       fs.mkdirs(marker.getParent)
       fs.create(marker, true).close()
       fs.delete(staging, true)
       true
-    } finally fs.delete(lease, false)
+    }
   }
 
   /** COMPACT a grown index: every append ([[ivfPqIndexAppend]], streaming
@@ -989,136 +951,20 @@ object Similarity {
     * nothing dirty; idempotent). */
   def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession, path: String,
                         maxFilesPerCluster: Int = 4,
-                        leaseStaleMs: Long = 60L * 60 * 1000): Seq[Int] = {
+                        leaseStaleMs: Long = StoreProtocol.StaleMs): Seq[Int] = {
     import org.apache.hadoop.fs.Path
     require(maxFilesPerCluster >= 1, s"need maxFilesPerCluster ≥ 1, got $maxFilesPerCluster")
     require(leaseStaleMs >= 0, s"need leaseStaleMs ≥ 0, got $leaseStaleMs")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
-    // derive the staging sibling from the NORMALIZED root (trailing
-    // slashes stripped), exactly as assertNotCompacting and the append
-    // guard do — raw `path + "_compacting"` on a trailing-slash path
-    // would stage at `dir/_compacting` (inside the root), where neither
-    // guard ever looks
-    val staging = new Path(root.toString + "_compacting")
-    // heal a crashed previous run BEFORE discarding its staging dir: any
-    // retired cluster still in staging is the authoritative pre-compaction
-    // copy of its rows, and it ALWAYS wins. When its live twin exists the
-    // live dir may be a PARTIAL swap — on object stores rename is
-    // copy+delete, so a crash mid fresh→live can leave a half-copied live
-    // cluster; trusting it and deleting staging would destroy the only
-    // complete copy (silent row loss). Rolling back a swap that actually
-    // completed merely discards a redundant rewrite of the same rows —
-    // the next compaction redoes it — so restore-unconditionally is safe
-    // on every filesystem, not just ones with atomic rename.
-    val mutex = new Path(staging, CompactMutexName)
-    if (fs.exists(staging)) {
-      // LIVE-vs-CRASHED: a staging carrying a mutex file younger than
-      // `leaseStaleMs` (against STORE time — [[storeNow]]) belongs to a
-      // compaction still running; "healing" it would roll back its swaps
-      // mid-run. Fail fast instead — totalling the compact↔compact
-      // exclusion the same way compact↔append already is. A mutex-less
-      // staging (pre-mutex writer, or a partial acquisition) or a stale
-      // one is a crashed run: heal and retake. Recovery latency for a
-      // killed compactor is therefore bounded by `leaseStaleMs` — size it
-      // above the longest expected maintenance run, as for appends.
-      // every probe here races the OWNING compaction's own completion,
-      // which deletes mutex and staging out from under us (exists → true,
-      // then the file vanishes before getFileStatus/listStatus — observed
-      // as a FileNotFoundException under the fleet-shaped concurrency
-      // test). A vanished artifact means the other run just finished or
-      // was healed: refuse retryably, exactly as if its mutex were live —
-      // the retry sees the settled state.
-      def refuseLive(): Nothing = throw new IllegalStateException(
-        s"index at $root is being compacted by another caller " +
-          s"($mutex is live): two concurrent compactions would race the " +
-          "same staging tree. Retry after it finishes; a mutex older " +
-          s"than leaseStaleMs=$leaseStaleMs ms is treated as crashed " +
-          "and healed automatically.")
-      val mutexLive =
-        try fs.exists(mutex) &&
-          storeNow(fs, root) - fs.getFileStatus(mutex).getModificationTime < leaseStaleMs
-        catch { case _: java.io.FileNotFoundException => refuseLive() }
-      if (mutexLive) refuseLive()
-      val retired =
-        try fs.listStatus(staging).filter(_.getPath.getName.startsWith("retired_cluster="))
-        catch { case _: java.io.FileNotFoundException => refuseLive() }
-      retired.foreach { r =>
-          val live = new Path(root, r.getPath.getName.stripPrefix("retired_"))
-          if (fs.exists(live)) fs.delete(live, true)
-          // Hadoop rename reports most failures as `false`, not an
-          // exception — an unchecked result here followed by the recursive
-          // staging delete would destroy the only copy of the cluster
-          require(fs.rename(r.getPath, live),
-            s"crash-heal rename of ${r.getPath} to $live failed; " +
-              "staging dir preserved — resolve manually before compacting")
-        }
-      fs.delete(staging, true)
-    }
-    // ACQUIRE the maintenance mutex: raise the staging dir FIRST, then
-    // scan for append leases — the mirror image of the append protocol
-    // (lease first, then staging check), so in every interleaving at
-    // least one side observes the other's artifact and fails fast. This
-    // closes the round-13 TOCTTOU window mechanically: an append whose
-    // guard check passed has its lease on disk before any of its renames,
-    // and this scan runs strictly after the staging flag those renames
-    // would have refused on. A lease older than `leaseStaleMs` belongs to
-    // a KILLED appender (live ones drop theirs on every exit, including
-    // failure) and is scrubbed — its un-markered files fall to the orphan
-    // scrub below, and the batch replays cleanly afterwards.
-    //
-    // The acquisition: `create(overwrite = false)` on the mutex file
-    // (creating the staging dir implicitly) throws for every caller but
-    // one — ATOMIC on HDFS and local filesystems (the same caveat as the
-    // rename commit points below; on S3A-style object stores existence is
-    // checked at create() and the object lands at close(), so two racers
-    // can both "win" — run maintenance single-writer there, as the store
-    // docs themselves require for rename-based committers). The round-14
-    // `mkdirs` flag succeeded for both callers on EVERY filesystem.
-    try fs.create(mutex, false).close()
-    catch { case e: java.io.IOException =>
-      throw new IllegalStateException(
-        s"index at $root: a concurrent compaction won the mutex race " +
-          s"($mutex already exists). Retry after it finishes.", e)
-    }
-    // Narrow the create-window race (ADVICE r15): the staging dir becomes
-    // visible a beat before the mutex file inside it, and a concurrent
-    // caller's heal block reads that window as a CRASHED run — deleting
-    // the live winner's staging (mutex included). Re-checking our own
-    // mutex after acquisition catches a healer that already ran over us
-    // and fails loudly instead of compacting unguarded. Not a total fix:
-    // a healer whose exists(mutex) probe ran inside the create window but
-    // whose staging delete lands after this re-check removes the mutex
-    // unobserved (nothing else is in staging yet, so no data moves) and
-    // leaves THIS run unguarded against a third compactor — the residual
-    // exposure is three concurrent compactions on one index, microseconds
-    // wide against a mutex that lives for the whole run.
-    if (!fs.exists(mutex))
-      throw new IllegalStateException(
-        s"index at $root: compaction mutex $mutex vanished after " +
-          "acquisition — a concurrent caller's crash-heal raced the " +
-          "acquisition window. Retry.")
-    val leasesDir = new Path(root, LeasesDirName)
-    if (fs.exists(leasesDir)) {
-      // staleness is judged against the STORE's clock, not the client's:
-      // System.currentTimeMillis() on a skewed client could scrub a live
-      // lease early or hold a dead one past the bound (VERDICT r14 #2)
-      val now = storeNow(fs, root)
-      val (stale, live) = fs.listStatus(leasesDir)
-        .filter(_.getPath.getName.startsWith("lease-"))
-        .partition(l => now - l.getModificationTime >= leaseStaleMs)
-      stale.foreach(l => fs.delete(l.getPath, false))
-      if (live.nonEmpty) {
-        fs.delete(staging, true)
-        throw new IllegalStateException(
-          s"index at $root has ${live.length} append lease(s) in flight " +
-            s"(${leasesDir}): compacting now could destroy files the append " +
-            "is landing. Retry after the appends finish; a lease older than " +
-            s"leaseStaleMs=$leaseStaleMs ms is treated as a crashed appender " +
-            "and scrubbed automatically.")
-      }
-    }
+    // heal a crashed previous run, then take the maintenance mutex — the
+    // staging dir — and back off from live append leases
+    // ([[graft.storage.StoreProtocol]]): probes and appends fail fast from
+    // here until the staging delete below
+    val staging = compacting(root)
+    StoreProtocol.heal(fs, root, staging, leaseStaleMs)
+    StoreProtocol.acquireMutex(fs, root, staging, leaseStaleMs)
     // scrub ORPHANED batch landings before anything is rewritten: a
     // b<id>_ file (final or in-progress name) whose commit marker is
     // absent is a crashed append's partial landing — that batch WILL
@@ -1133,26 +979,23 @@ object Similarity {
         fs.listStatus(batchesDir).map(_.getPath.getName.stripPrefix("batch-")).toSet
       else Set.empty
     val BatchFile = "^_?b(\\d+)_.*".r
-    fs.listStatus(root)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster="))
-      .foreach(d => fs.listStatus(d.getPath).map(_.getPath).foreach { p =>
-        p.getName match {
-          case BatchFile(id) if !committed.contains(id) =>
-            // checked: a silently-surviving orphan would be folded into
-            // anonymous part files below, blinding the replay's prefix
-            // scrub — the exact double-landing this scrub exists to prevent
-            require(fs.delete(p, false),
-              s"orphan-batch scrub of $p failed; aborting compaction with " +
-                "staging preserved — resolve before retrying")
-          case _ => ()
-        }
-      })
-    val manifestPath = new Path(root, ManifestName)
-    val dirty = fs.listStatus(root).filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("cluster="))
-      .filter(d => fs.listStatus(d.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerCluster)
-      .map(_.getPath.getName.stripPrefix("cluster=").toInt).sorted.toSeq
+    clusterFiles(fs, root).map(_._2).foreach { p =>
+      p.getName match {
+        case BatchFile(id) if !committed.contains(id) =>
+          // checked: a silently-surviving orphan would be folded into
+          // anonymous part files below, blinding the replay's prefix
+          // scrub — the exact double-landing this scrub exists to prevent
+          require(fs.delete(p, false),
+            s"orphan-batch scrub of $p failed; aborting compaction with " +
+              "staging preserved — resolve before retrying")
+        case _ => ()
+      }
+    }
+    val manifestPath = new Path(root, StoreProtocol.ManifestName)
+    val dirty = clusterFiles(fs, root).filter(_._2.getName.endsWith(".parquet"))
+      .groupBy(_._1).collect {
+        case (c, files) if files.length > maxFilesPerCluster => c.stripPrefix("cluster=").toInt
+      }.toSeq.sorted
     if (dirty.isEmpty) {
       // a crash that separated a prior mutation's commit point from its
       // manifest update leaves a stale stamp with no staging left to
@@ -1180,18 +1023,8 @@ object Similarity {
       // refine tier's pushed-id row-group skipping
       .sortWithinPartitions(col("cluster"), col("neighbor_id"))
       .write.mode("overwrite").partitionBy("cluster").parquet(freshRoot.toString)
-    dirty.foreach { c =>
-      val live = new Path(root, s"cluster=$c")
-      val fresh = new Path(freshRoot, s"cluster=$c")
-      // both renames CHECKED: Hadoop reports most failures as `false`, and
-      // proceeding to the staging delete after a failed swap would destroy
-      // the only copies (same hazard as the heal path above); aborting
-      // leaves the staging dir in place, which the next call heals
-      require(fs.rename(live, new Path(staging, s"retired_cluster=$c")),
-        s"compaction retire rename of $live failed; staging preserved for heal")
-      require(fs.rename(fresh, live),
-        s"compaction swap rename to $live failed; staging preserved for heal")
-    }
+    dirty.foreach(c => StoreProtocol.swap(
+      fs, root, staging, s"cluster=$c", new Path(freshRoot, s"cluster=$c")))
     // a stamped manifest follows the rewrite with |dirty|-proportional
     // work (compaction's own cost contract): drop the rewritten clusters'
     // lines, stream only their fresh files. The merge runs BEFORE the
@@ -1203,74 +1036,21 @@ object Similarity {
     // update), the listing compare on the merged result catches it and a
     // full rebuild repairs.
     if (fs.exists(manifestPath)) {
-      val in = fs.open(manifestPath)
-      val old = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      val kept = old.filterNot(l => manifestLineCluster(l).exists(dirty.contains))
+      val kept = StoreProtocol.readLines(fs, manifestPath)
+        .filterNot(l => manifestLineCluster(l).exists(dirty.contains))
       val fresh = indexDataFiles(fs, root)
         .filter { case (c, _) => dirty.contains(c.stripPrefix("cluster=").toInt) }
-      writeIndexManifest(spark, root, (kept ++ manifestRows(spark, fresh)).sorted)
+      StoreProtocol.publish(fs, manifestPath, (kept ++ manifestRows(spark, fresh)).sorted)
       if (manifestStale(fs, root)) ivfPqIndexManifest(spark, path)
     }
     fs.delete(staging, true)
     dirty
   }
 
-  private val ManifestName = "_manifest.jsonl"
-  private val LeasesDirName = "_leases"
-  private val CompactMutexName = "_mutex"
-
-  /** Read the STORE's clock: write a probe file, take its modification
-    * time, delete it. Lease/mutex staleness classification compares two
-    * store-assigned modification times this way, so a client whose clock
-    * skews from the object store can neither scrub a live lease early
-    * nor hold a dead one past the bound — `System.currentTimeMillis()`
-    * against store mtimes would do both (VERDICT r14). The probe is
-    * `_`-prefixed (invisible to Spark readers) and removed immediately;
-    * store mtime granularity (seconds on some object stores) is dwarfed
-    * by the hour-scale staleness bounds it feeds. */
-  private def storeNow(fs: org.apache.hadoop.fs.FileSystem,
-                       root: org.apache.hadoop.fs.Path): Long = {
-    val probe = new org.apache.hadoop.fs.Path(
-      root, s"_clockprobe-${java.util.UUID.randomUUID()}")
-    fs.create(probe, true).close()
-    // the delete rides a finally: a getFileStatus failure (or a kill
-    // between create and delete) must not leak probe files at the index
-    // root — they are reader-invisible but nothing else ever scrubs them
-    try fs.getFileStatus(probe).getModificationTime
-    finally fs.delete(probe, false)
-  }
-
-  /** Raise an append lease — one `_leases/lease-<uuid>` file per in-flight
-    * append (`_`-prefixed: invisible to Spark readers). One half of the
-    * two-flag exclusion protocol with [[ivfPqIndexCompact]]: the appender
-    * raises its lease BEFORE looking for the compaction staging, the
-    * compactor raises its staging BEFORE scanning leases, so at least one
-    * side always observes the other (see [[ivfPqIndexAppendOnce]]). */
-  private def acquireAppendLease(fs: org.apache.hadoop.fs.FileSystem,
-                                 root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path = {
-    val lease = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, LeasesDirName),
-      s"lease-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(lease.getParent)
-    fs.create(lease, true).close()
-    lease
-  }
-
-  /** The append-side half of the exclusion protocol: fail fast while a
-    * compaction staging dir exists (live run or crashed one awaiting
-    * heal). Must run AFTER the caller's lease is on disk — the ordering
-    * IS the protocol. */
-  private def failIfCompacting(fs: org.apache.hadoop.fs.FileSystem,
-                               root: org.apache.hadoop.fs.Path): Unit = {
-    val compacting = new org.apache.hadoop.fs.Path(root.toString + "_compacting")
-    if (fs.exists(compacting))
-      throw new IllegalStateException(
-        s"index at $root is being compacted ($compacting exists): appending " +
-          "mid-swap can lose the batch to the crash-heal. Retry after " +
-          "ivfPqIndexCompact returns; if a compaction crashed, calling it " +
-          "again heals the index first.")
-  }
+  /** The index's maintenance staging sibling — compaction's mutex, which
+    * appends and probes refuse to run under. */
+  private def compacting(root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
+    StoreProtocol.sibling(root, "_compacting")
 
   /** TRANSFER MANIFEST for a stored clustered index: one JSON line per
     * data file — `{"cluster","file","rows","bytes","md5"}` — written as
@@ -1311,13 +1091,15 @@ object Similarity {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    writeIndexManifest(spark, root, manifestRows(spark, indexDataFiles(fs, root)))
+    StoreProtocol.publish(fs, new Path(root, StoreProtocol.ManifestName),
+      manifestRows(spark, indexDataFiles(fs, root)))
   }
 
   /** RECEIVER-SIDE verification of a transferred index against its
     * stamped `_manifest.jsonl`: re-derives every data file's md5, byte
     * count (streamed) and footer row count — the same distributed
-    * one-task-per-file pass that stamps the manifest ([[fileStats]]) —
+    * one-task-per-file pass that stamps the manifest
+    * ([[graft.storage.StoreProtocol.digest]]) —
     * and compares field-by-field. Returns one human-readable discrepancy
     * per problem, naming the exact file; empty = the copy is
     * byte-faithful. Catches everything a transport can break:
@@ -1343,30 +1125,15 @@ object Similarity {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifestPath = new Path(root, ManifestName)
+    val manifestPath = new Path(root, StoreProtocol.ManifestName)
     if (!fs.exists(manifestPath))
       return Seq(s"NO MANIFEST at $root: stamp the SENDER with " +
         "ivfPqIndexManifest before transferring, then copy _manifest.jsonl " +
         "along with the data")
-    val in = fs.open(manifestPath)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList finally in.close()
-    case class Expect(rows: Long, bytes: Long, md5: String)
-    val parsed: Seq[(String, Expect)] = lines.flatMap { l =>
-      for {
-        f <- ManifestFileField.findFirstMatchIn(l).map(_.group(1))
-        r <- ManifestRowsField.findFirstMatchIn(l).map(_.group(1).toLong)
-        b <- ManifestBytesField.findFirstMatchIn(l).map(_.group(1).toLong)
-        m <- ManifestMd5Field.findFirstMatchIn(l).map(_.group(1))
-      } yield f -> Expect(r, b, m)
-    }
-    val malformed = lines.filter(l =>
-        ManifestFileField.findFirstMatchIn(l).isEmpty ||
-        ManifestRowsField.findFirstMatchIn(l).isEmpty ||
-        ManifestBytesField.findFirstMatchIn(l).isEmpty ||
-        ManifestMd5Field.findFirstMatchIn(l).isEmpty)
+    val lines = StoreProtocol.readLines(fs, manifestPath).filter(_.nonEmpty)
+    val malformed = lines.filter(StoreProtocol.parseManifestLine(_).isEmpty)
       .map(l => s"MALFORMED manifest line: $l")
-    val expected = parsed.toMap
+    val expected = lines.flatMap(StoreProtocol.parseManifestLine).map(e => e.file -> e).toMap
     val live: Map[String, (String, String)] = indexDataFiles(fs, root)
       .map { case (c, p) => s"$c/${new Path(p).getName}" -> (c, p) }.toMap
     val missing = (expected.keySet -- live.keySet).toSeq.sorted
@@ -1375,50 +1142,50 @@ object Similarity {
       .map(f => s"EXTRA $f: data file on disk that the manifest never " +
         "described — a reader WOULD scan it; remove it or re-stamp deliberately")
     val common = (expected.keySet intersect live.keySet).toSeq.sorted
-    val corrupt = fileStats(spark, common.map(live)).flatMap {
-      case (cluster, name, rows, bytes, md5) =>
-        val f = s"$cluster/$name"
-        val e = expected(f)
+    val corrupt = StoreProtocol.digest(spark, common.map(live), StoreProtocol.FooterRows)
+      .flatMap { d =>
+        val e = expected(d.file)
         val faults =
-          (if (bytes != e.bytes) Seq(s"bytes $bytes != manifest ${e.bytes}" +
-            (if (bytes < e.bytes) " (truncated)" else "")) else Nil) ++
-          (if (md5 != e.md5) Seq(s"md5 $md5 != manifest ${e.md5}") else Nil) ++
-          (rows match {
+          (if (d.bytes != e.bytes) Seq(s"bytes ${d.bytes} != manifest ${e.bytes}" +
+            (if (d.bytes < e.bytes) " (truncated)" else "")) else Nil) ++
+          (if (d.md5 != e.md5) Seq(s"md5 ${d.md5} != manifest ${e.md5}") else Nil) ++
+          (d.rows match {
             case Left(reason) => Seq(reason)
             case Right(n) if n != e.rows => Seq(s"footer rows $n != manifest ${e.rows}")
             case _ => Nil
           })
-        if (faults.isEmpty) None else Some(s"CORRUPT $f: ${faults.mkString("; ")}")
-    }
+        if (faults.isEmpty) None else Some(s"CORRUPT ${d.file}: ${faults.mkString("; ")}")
+      }
     malformed ++ missing ++ extra ++ corrupt
   }
 
-  /** (cluster dir name, absolute path) of every live data file — the
-    * listing both the manifest and its staleness check derive from. */
+  /** (cluster dir name, file) of every file in `dir`'s `cluster=N`
+    * directories, sorted by cluster then name. */
+  private def clusterFiles(fs: org.apache.hadoop.fs.FileSystem,
+                           dir: org.apache.hadoop.fs.Path): Seq[(String, org.apache.hadoop.fs.Path)] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster="))
+      .flatMap(d => fs.listStatus(d.getPath).map(f => (d.getPath.getName, f.getPath)))
+      .toSeq.sortBy { case (c, p) => (c, p.getName) }
+
+  /** (cluster dir name, absolute path) of every live data file, sorted —
+    * the listing both the manifest and its staleness check derive from. */
   private def indexDataFiles(fs: org.apache.hadoop.fs.FileSystem,
                              root: org.apache.hadoop.fs.Path): Seq[(String, String)] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster="))
-      .flatMap(d => fs.listStatus(d.getPath).map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-        .map(p => (d.getPath.getName, p.toString)))
-      .toSeq
+    clusterFiles(fs, root)
+      .filter { case (_, p) => p.getName.endsWith(".parquet") && !p.getName.startsWith("_") }
+      .map { case (c, p) => (c, p.toString) }
 
-  private val ManifestFileField = """"file":"([^"]+)"""".r
-  private val ManifestClusterField = """"cluster":"cluster=(\d+)"""".r
-  private val ManifestRowsField = """"rows":(\d+)""".r
-  private val ManifestBytesField = """"bytes":(\d+)""".r
-  private val ManifestMd5Field = """"md5":"([0-9a-f]{32})"""".r
-
-  /** Cluster id a manifest line describes, parsed from its `cluster`
-    * field — None on a line that fails to parse, which merge filters
-    * treat as "keep": a kept-but-wrong line disagrees with the live
-    * listing and the [[manifestStale]] compare triggers a full rebuild,
-    * so the conservative default self-heals instead of silently dropping
-    * a row another file still needs. */
+  /** Cluster id a manifest line describes, parsed from the `cluster=N`
+    * directory of its `file` field — None on a line that fails to parse,
+    * which merge filters treat as "keep": a kept-but-wrong line disagrees
+    * with the live listing and the [[manifestStale]] compare triggers a full
+    * rebuild, so the conservative default self-heals instead of silently
+    * dropping a row another file still needs. */
   private def manifestLineCluster(line: String): Option[Int] =
-    ManifestClusterField.findFirstMatchIn(line).map(_.group(1).toInt)
+    StoreProtocol.manifestFile(line).map(_.split('/').head)
+      .filter(_.startsWith("cluster=")).flatMap(_.stripPrefix("cluster=").toIntOption)
 
   /** Does this manifest line describe a file landed by `batchId`? Parsed
     * field, not substring: the file NAME comes out of the `file` field
@@ -1428,9 +1195,7 @@ object Similarity {
     * unparseable line is kept, and the staleness rebuild repairs any
     * disagreement). */
   private def manifestLineInBatch(line: String, batchId: Long): Boolean =
-    ManifestFileField.findFirstMatchIn(line).exists { m =>
-      m.group(1).split('/').last.startsWith(s"b${batchId}_")
-    }
+    StoreProtocol.manifestFile(line).exists(_.split('/').last.startsWith(s"b${batchId}_"))
 
   /** Does the stamped manifest's file list disagree with the live
     * listing? Metadata-scale (names only, no bytes) — the repair signal
@@ -1441,81 +1206,17 @@ object Similarity {
     import org.apache.hadoop.fs.Path
     val live = indexDataFiles(fs, root)
       .map { case (c, p) => s"$c/${new Path(p).getName}" }.toSet
-    val in = fs.open(new Path(root, ManifestName))
-    val listed = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .flatMap(l => ManifestFileField.findFirstMatchIn(l).map(_.group(1))).toSet
-      finally in.close()
+    val listed = StoreProtocol.readLines(fs, new Path(root, StoreProtocol.ManifestName))
+      .flatMap(StoreProtocol.manifestFile).toSet
     live != listed
   }
 
-  /** (cluster dir name, absolute file) → one distributed task per file:
-    * streamed (md5, byte count) plus the parquet footer row count —
-    * `Left(reason)` for the rows when the footer is unreadable (a
-    * truncated or corrupted file), so callers decide whether that is
-    * fatal (stamping) or a finding (verification). */
-  private def fileStats(spark: org.apache.spark.sql.SparkSession,
-                        files: Seq[(String, String)])
-      : Seq[(String, String, Either[String, Long], Long, String)] = {
-    import org.apache.hadoop.fs.Path
-    if (files.isEmpty) return Nil
-    val bc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext.parallelize(files, files.length)
-      .map { case (cluster, file) =>
-        val p = new Path(file)
-        val pfs = p.getFileSystem(bc.value.value)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        var bytes = 0L
-        val in = pfs.open(p)
-        val buf = new Array[Byte](1 << 20)
-        try {
-          var n = in.read(buf)
-          while (n > 0) { md.update(buf, 0, n); bytes += n; n = in.read(buf) }
-        } finally in.close()
-        val rows: Either[String, Long] =
-          try {
-            val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, bc.value.value))
-            try Right(rdr.getRecordCount) finally rdr.close()
-          } catch { case e: Exception => Left(s"unreadable parquet footer (${e.getMessage})") }
-        (cluster, p.getName, rows, bytes, md.digest().map("%02x".format(_)).mkString)
-      }.collect().sortBy(r => (r._1, r._2)).toSeq
-  }
-
-  /** (cluster dir name, absolute file) → sorted manifest lines, one
-    * distributed pass ([[fileStats]]). Stamping requires every footer
-    * readable — a corrupt live file must fail the stamp, not be recorded
-    * as truth. */
+  /** (cluster dir name, absolute file) → manifest lines, one distributed
+    * pass ([[graft.storage.StoreProtocol.digest]]). */
   private def manifestRows(spark: org.apache.spark.sql.SparkSession,
                            files: Seq[(String, String)]): Seq[String] =
-    fileStats(spark, files).map { case (cluster, name, rows, bytes, digest) =>
-      val n = rows.fold(
-        reason => throw new IllegalStateException(
-          s"cannot stamp manifest: $cluster/$name has $reason"),
-        identity)
-      s"""{"cluster":"$cluster","file":"$cluster/$name",""" +
-        s""""rows":$n,"bytes":$bytes,"md5":"$digest"}"""
-    }
-
-  /** Replace the manifest via tmp-write + rename (the `_`-prefixed tmp is
-    * reader-invisible; a crash between delete and rename leaves NO
-    * manifest rather than a wrong one — absent means re-stamp). */
-  private def writeIndexManifest(spark: org.apache.spark.sql.SparkSession,
-                                 root: org.apache.hadoop.fs.Path,
-                                 lines: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(root, ManifestName + ".tmp")
-    val out = fs.create(tmp, true)
-    try lines.foreach(l =>
-      out.write((l + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    finally out.close()
-    val live = new Path(root, ManifestName)
-    if (fs.exists(live)) fs.delete(live, false)
-    require(fs.rename(tmp, live),
-      s"manifest publish rename to $live failed; tmp preserved")
-  }
+    StoreProtocol.digest(spark, files, StoreProtocol.FooterRows)
+      .map(d => StoreProtocol.manifestLine(s""""cluster":"${d.dir}"""", d))
 
   /** IVF+PQ top-k over a MATERIALIZED index (read back from
     * [[ivfPqIndexWrite]]'s layout): the probed cluster ids are computed
@@ -2103,16 +1804,6 @@ object Similarity {
     }
   }
 
-  /** Restrict a stored clustered index to the probed clusters with a
-    * STATIC partition-pruning predicate. The pruning literals are typed
-    * from the index's actual cluster column: parquet partition-column
-    * inference yields int at default config, but with inference disabled
-    * the column arrives as string (and a pre-clustered relation may carry
-    * long) — a mistyped isin would cast the PARTITION COLUMN instead,
-    * defeating static pruning or silently matching nothing. The join key is
-    * normalized to int ABOVE the filter, so the scan still sees the typed
-    * isin on the raw partition column while every downstream equi-join
-    * meets int = int with no implicit cast. */
   /** Fail-fast guard enforcing [[ivfPqIndexCompact]]'s maintenance-window
     * contract: a probe racing a compaction could read a cluster mid-swap
     * (its directory momentarily retired into staging), silently missing
@@ -2156,13 +1847,7 @@ object Similarity {
       }.toSet
       roots.foreach { root =>
         val fs = root.getFileSystem(conf)
-        val staging = new org.apache.hadoop.fs.Path(root.toString + "_compacting")
-        if (fs.exists(staging))
-          throw new IllegalStateException(
-            s"index at $root is being compacted ($staging exists): a probe " +
-              "during the swap can read a mid-swap cluster. Retry after " +
-              "ivfPqIndexCompact returns; if a compaction crashed, calling " +
-              "it again heals the index first.")
+        StoreProtocol.failIfStaging(fs, root, compacting(root))
         val missing = indexDataFiles(fs, root).map(_._1).toSet -- listedClusters
         if (missing.nonEmpty)
           throw new IllegalStateException(
@@ -2181,6 +1866,16 @@ object Similarity {
           "FileNotFoundException, never as silently skipped files.")
   }
 
+  /** Restrict a stored clustered index to the probed clusters with a
+    * STATIC partition-pruning predicate. The pruning literals are typed
+    * from the index's actual cluster column: parquet partition-column
+    * inference yields int at default config, but with inference disabled
+    * the column arrives as string (and a pre-clustered relation may carry
+    * long) — a mistyped isin would cast the PARTITION COLUMN instead,
+    * defeating static pruning or silently matching nothing. The join key is
+    * normalized to int ABOVE the filter, so the scan still sees the typed
+    * isin on the raw partition column while every downstream equi-join
+    * meets int = int with no implicit cast. */
   private def pruneToProbed(index: DataFrame, probed: Array[Int]): DataFrame = {
     val lits: Array[Any] = index.schema("cluster").dataType match {
       case org.apache.spark.sql.types.IntegerType => probed.map(Int.box)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.operators.{Dedup, Sampling, TextAnalysis}
+import graft.storage.StoreProtocol
 
 /** The full training-data curation chain as ONE restartable driver:
   *
@@ -307,10 +308,7 @@ object CurationPipeline {
     val p = new Path(stagePath, StageMarkerName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-                finally in.close()
-    lines match {
+    StoreProtocol.readLines(fs, p) match {
       case fp :: rows :: Nil if rows.startsWith("rows:") =>
         rows.stripPrefix("rows:").toLongOption.map(n => (fp, n))
       case _ => None // malformed marker = no marker: the stage recomputes
@@ -466,24 +464,15 @@ object CurationPipeline {
 
   /** Sum of the manifest's per-shard `rows` fields, read through the
     * export root's own filesystem (works on HDFS/S3A paths, not just
-    * local disk). The `"rows":N` field is written by
-    * [[graft.operators.Sampling.writeExportManifest]] with fixed
-    * formatting, so a targeted extract beats dragging in a JSON parser. */
+    * local disk) with the shared manifest field parse. */
   private[pipeline] def readManifestRowTotal(spark: SparkSession,
                                              exportPath: String): Long = {
     import org.apache.hadoop.fs.Path
-    val p = new Path(exportPath, "_manifest.jsonl")
+    val p = new Path(exportPath, StoreProtocol.ManifestName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-                finally in.close()
-    val RowsField = """"rows":(\d+)""".r
-    lines.map { line =>
-      RowsField.findFirstMatchIn(line) match {
-        case Some(m) => m.group(1).toLong
-        case None => throw new IllegalStateException(
-          s"manifest line without a rows field: $line")
-      }
+    StoreProtocol.readLines(fs, p).map { line =>
+      StoreProtocol.parseManifestLine(line).map(_.rows).getOrElse(
+        throw new IllegalStateException(s"malformed manifest line: $line"))
     }.sum
   }
 }

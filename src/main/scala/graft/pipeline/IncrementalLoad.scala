@@ -12,22 +12,33 @@ object IncrementalLoad {
     * (reference load_to_redshift_lambda.py:88-96). Loading twice is a no-op
     * (property-tested). At 100 TB both sides shuffle on the key — one
     * exchange each, no driver-side key set. Returns rows actually appended
-    * (A3: the reference reports cursor.rowcount, :99-100). */
+    * (A3: the reference reports cursor.rowcount, :99-100); an empty load
+    * writes nothing, so it never creates a missing table. */
   def appendNew(spark: SparkSession, incoming: DataFrame, table: String,
                 key: String, partitionCol: Option[String] = None): Long = {
-    val fresh =
-      if (!spark.catalog.tableExists(table)) incoming
-      else incoming.join(spark.table(table).select(key), Seq(key), "left_anti")
+    val existing = if (spark.catalog.tableExists(table)) Some(spark.table(table)) else None
+    loadNew(incoming, existing, key) { fresh =>
+      val writer = fresh.write.mode("append").format("parquet")
+      partitionCol.fold(writer)(c => writer.partitionBy(c)).saveAsTable(table)
+    }
+  }
+
+  /** The load step both warehouse sinks share ([[appendNew]],
+    * [[JdbcSink.appendNew]]): anti-join `incoming` against `existing`'s
+    * key column (none = every row is new), count the survivors, and hand
+    * them to `write` only when there are any. `left_anti` already yields
+    * each incoming row once however often its key repeats on the right, so
+    * the key side is not deduplicated. Returns the count. */
+  private[pipeline] def loadNew(incoming: DataFrame, existing: Option[DataFrame], key: String)
+                               (write: DataFrame => Unit): Long = {
+    val fresh = existing.fold(incoming)(e => incoming.join(e.select(key), Seq(key), "left_anti"))
     // one computation of the anti-join for BOTH the count and the write:
     // without the scoped persist the plan executes twice (a full extra pass
     // over incoming at warehouse scale) with a consistency window between
     fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = fresh.count()
-      if (n > 0) {
-        val writer = fresh.write.mode("append").format("parquet")
-        partitionCol.fold(writer)(c => writer.partitionBy(c)).saveAsTable(table)
-      }
+      if (n > 0) write(fresh)
       n
     } finally fresh.unpersist()
   }

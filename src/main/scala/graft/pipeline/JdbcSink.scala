@@ -52,16 +52,10 @@ object JdbcSink {
                 key: String,
                 existingKeys: Option[DataFrame] = None): Long = {
     val existing = existingKeys.getOrElse(
-      spark.read.format("jdbc").options(jdbcOptions(target)).load().select(key))
-    val fresh = incoming.join(existing.select(key).distinct(), Seq(key), "left_anti")
-    // scoped persist: count and write see the same rows, and the warehouse
-    // key set goes over the wire once instead of once per action
-    fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = fresh.count()
-      if (n > 0) write(fresh, target)
-      n
-    } finally fresh.unpersist()
+      spark.read.format("jdbc").options(jdbcOptions(target)).load())
+    // the scoped persist inside loadNew also means the warehouse key set
+    // goes over the wire once instead of once per action
+    IncrementalLoad.loadNew(incoming, Some(existing), key)(write(_, target))
   }
 
   /** Plain append. Spark creates the table on first write; pass

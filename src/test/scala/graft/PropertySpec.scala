@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.operators.{AsOf, Dedup, Packing, TextAnalysis}
+import graft.pipeline.IncrementalLoad
 
 /** Property-based checks (SURVEY §5.2): scalacheck generators drive the
   * inputs; each property evaluates one batched Spark job against a
@@ -20,10 +21,16 @@ class PropertySpec extends SparkSpec {
       val existing = sample(Gen.listOf(Gen.chooseNum(0L, 50L)), seed).distinct
       val incoming = sample(Gen.listOf(Gen.chooseNum(0L, 50L)), seed + 100).distinct
       val e = existing.toDF("k"); val i = incoming.toDF("k")
-      val fresh = Dedup.antiJoin(i, e, "k").as[Long].collect().toSet
-      assert(fresh === incoming.toSet.diff(existing.toSet), s"seed=$seed")
-      val after = e.select("k").union(fresh.toSeq.toDF("k"))
-      assert(Dedup.antiJoin(fresh.toSeq.toDF("k"), after, "k").count() === 0, s"seed=$seed")
+      val table = s"j2_property_load_$seed"
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      try {
+        e.write.saveAsTable(table)
+        IncrementalLoad.appendNew(spark, i, table, "k")
+        val fresh = spark.table(table).except(e).as[Long].collect().toSet
+        assert(fresh === incoming.toSet.diff(existing.toSet), s"seed=$seed")
+        assert(IncrementalLoad.appendNew(spark, fresh.toSeq.toDF("k"), table, "k") === 0,
+          s"seed=$seed")
+      } finally spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.pipeline.IncrementalLoad
 import org.apache.spark.sql.functions._
 
 /** Validates the LSH front-ends against exact Jaccard ground truth on the
@@ -513,11 +514,17 @@ class DedupSpec extends SparkSpec {
   }
 
   test("anti-join load is idempotent (property: J2)") {
-    val existing = Seq(1L, 2L).toDF("k")
-    val incoming = Seq(1L, 2L, 3L).toDF("k")
-    val fresh = Dedup.antiJoin(incoming, existing, "k")
-    assert(fresh.as[Long].collect().toSet === Set(3L))
-    assert(Dedup.antiJoin(fresh, existing.union(fresh), "k").count() === 0)
+    val table = "j2_dedup_load"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    try {
+      val existing = Seq(1L, 2L).toDF("k")
+      existing.write.saveAsTable(table)
+      val incoming = Seq(1L, 2L, 3L).toDF("k")
+      IncrementalLoad.appendNew(spark, incoming, table, "k")
+      val fresh = spark.table(table).except(existing).as[Long].collect().toSeq.toDF("k")
+      assert(fresh.as[Long].collect().toSet === Set(3L))
+      assert(IncrementalLoad.appendNew(spark, fresh, table, "k") === 0)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("withCaches bracket structurally releases operator persists, even on failure") {

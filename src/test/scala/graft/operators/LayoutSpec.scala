@@ -160,4 +160,51 @@ class LayoutSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
+
+  test("optimizeZordered fails fast under a live maintenance mutex and leaves the table untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-opt-mutex").toString
+    try {
+      spark.range(200).select(col("id"), pmod(col("id"), lit(256)).as("x"),
+        pmod(col("id") * 7, lit(256)).as("y")).write.parquet(s"$dir/t")
+      def files = new java.io.File(s"$dir/t").list().sorted.toSeq
+      val before = files
+      // another optimizer mid-run: its staging holds a FRESH mutex
+      val staging = new java.io.File(s"$dir/t_optimizing")
+      assert(staging.mkdirs())
+      val mutex = new java.io.File(staging, "_mutex")
+      assert(mutex.createNewFile())
+      val ex = intercept[IllegalStateException](
+        Layout.optimizeZordered(spark, s"$dir/t", Seq(col("x"), col("y")), 8, numFiles = 4))
+      assert(ex.getMessage.contains("another caller"), ex.getMessage)
+      assert(staging.exists() && mutex.exists(),
+        "the losing call must leave the winner's staging and mutex untouched")
+      assert(files === before, "the losing call must not touch the table")
+      assert(spark.read.parquet(s"$dir/t").count() === 200L)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("writeZordered is deterministic: two writes of one input split at the same z-keys") {
+    val li = spark.read.parquet(s"$sf/lineitem.parquet")
+      .select(
+        pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(256)).as("x"),
+        pmod(xxhash64(col("l_partkey")), lit(256)).as("y"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-layout-det").toString
+    try {
+      def extents(path: String) = spark.read.parquet(path)
+        .withColumn("f", input_file_name())
+        .groupBy("f")
+        .agg(min(Layout.zorderKey(Seq(col("x"), col("y")), 8)).as("lo"),
+          max(Layout.zorderKey(Seq(col("x"), col("y")), 8)).as("hi"))
+        .select("lo", "hi").as[(Long, Long)].collect().sorted.toSeq
+      Layout.writeZordered(li, Seq(col("x"), col("y")), 8, s"$dir/a", numFiles = 16)
+      Layout.writeZordered(li, Seq(col("x"), col("y")), 8, s"$dir/b", numFiles = 16)
+      val (a, b) = (extents(s"$dir/a"), extents(s"$dir/b"))
+      assert(a.length >= 2)
+      assert(a === b, "per-file (min z, max z) must not depend on the run")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
 }

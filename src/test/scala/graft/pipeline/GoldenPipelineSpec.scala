@@ -62,6 +62,28 @@ class GoldenPipelineSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
+  test("empty load appends nothing: a missing table stays missing, an existing one gains no files") {
+    val table = "cashback_golden_empty"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    try {
+      val empty = cashback.limit(0)
+      assert(IncrementalLoad.appendNew(spark, empty, table, "reward_id",
+        Some("transaction_date")) === 0L)
+      assert(!spark.catalog.tableExists(table), "an empty load must not create the table")
+      IncrementalLoad.appendNew(spark, cashback, table, "reward_id", Some("transaction_date"))
+      val location = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+      def files = org.apache.commons.io.FileUtils.listFiles(location, null, true)
+        .toArray.map(_.toString).toSet
+      val before = files
+      assert(before.nonEmpty)
+      assert(IncrementalLoad.appendNew(spark, empty, table, "reward_id",
+        Some("transaction_date")) === 0L)
+      assert(files === before, "an empty load must add no files")
+      assert(spark.table(table).count() === 60L)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
   test("nested fiat_transaction dict-literal parses to a 3-level struct (E10)") {
     val raw = Ingest.normalizeRewards(Ingest.csvAllStrings(spark, rewardsCsv))
     val parsed = raw.where(col("fiat_transaction").isNotNull)
