@@ -14,9 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * response unwrapping of `data.transactions_view` is the client's job,
   * mirroring `response.json()['data']['transactions_view']`). Payload →
   * DataFrame goes through [[Ingest.jsonPayload]] (S5), fixtures through
-  * [[Ingest.csvAllStrings]] (S1); both paths then share the ingest
-  * normalization (P2/P3), as in the reference where `fetch_data` applies
-  * the same drops/renames to either source.
+  * [[Ingest.csvAllStrings]] (S1); both land all-string columns and then
+  * share the ingest normalization (P2/P3), as in the reference where
+  * `fetch_data` applies the same drops/renames to either source.
   */
 object ApiIngest {
 
@@ -35,7 +35,9 @@ object ApiIngest {
     * fixture CSVs when not, or when any API call fails mid-flight. Each API
     * pull is retried per `retry` (reference Step Functions policy,
     * infra/lambda.tf:161-173) BEFORE the fixture fallback engages. Returns
-    * ingest-normalized (transactions, rewards). */
+    * ingest-normalized (transactions, rewards). The payloads parse lazily:
+    * one that was fetched but is malformed fails the load that reads it
+    * ([[Ingest.jsonPayload]] is FAILFAST), it does not fall back. */
   def fetchData(spark: SparkSession, client: Option[Client],
                 transactionsCsv: String, rewardsCsv: String,
                 retry: Retry.Policy = Retry.Policy()): (DataFrame, DataFrame) = {
@@ -44,7 +46,8 @@ object ApiIngest {
         // pull both payloads BEFORE building either frame: the reference
         // falls back for the pair, never half-API half-fixture
         val (t, r) = Retry(retry) { (c.getTransactions(), c.getRewards()) }
-        Some((Ingest.jsonPayload(spark, t), Ingest.jsonPayload(spark, r)))
+        Some((Ingest.jsonPayload(spark, t, Ingest.transactionKeys),
+          Ingest.jsonPayload(spark, r, Ingest.rewardKeys)))
       } catch { case NonFatal(_) => None }
     }.getOrElse(
       (Ingest.csvAllStrings(spark, transactionsCsv), Ingest.csvAllStrings(spark, rewardsCsv)))

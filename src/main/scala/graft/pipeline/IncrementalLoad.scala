@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
 
 /** Warehouse-load stage: idempotent anti-join append + DDL generation
@@ -12,36 +13,60 @@ object IncrementalLoad {
     * (reference load_to_redshift_lambda.py:88-96). Loading twice is a no-op
     * (property-tested). At 100 TB both sides shuffle on the key — one
     * exchange each, no driver-side key set. Returns rows actually appended
-    * (A3: the reference reports cursor.rowcount, :99-100); an empty load
-    * writes nothing, so it never creates a missing table. */
+    * (A3: the reference reports cursor.rowcount, :99-100), observed on the
+    * write itself ([[load]]). */
   def appendNew(spark: SparkSession, incoming: DataFrame, table: String,
-                key: String, partitionCol: Option[String] = None): Long = {
-    val existing = if (spark.catalog.tableExists(table)) Some(spark.table(table)) else None
-    loadNew(incoming, existing, key) { fresh =>
-      val writer = fresh.write.mode("append").format("parquet")
-      partitionCol.fold(writer)(c => writer.partitionBy(c)).saveAsTable(table)
-    }
+                key: String, partitionCol: Option[String] = None): Long =
+    load(spark, incoming, table, key, partitionCol).appended
+
+  /** Rows one [[load]] saw arrive and appended. */
+  private[pipeline] final case class Counts(incoming: Long, appended: Long)
+
+  /** The append behind [[appendNew]] and `Pipeline.run`, as ONE plan: no
+    * persist and no count job ahead of the write. Both counts are
+    * `Dataset.observe` metrics on the write's own plan. With a
+    * `partitionCol`, rows are hash-clustered on it first, so each load
+    * writes one file per partition value it touches; the exchange's width
+    * is AQE's, sized from the shuffled bytes.
+    *
+    * Where the observers sit matters. AQE replaces a materialized shuffle
+    * stage that produced no rows with an empty relation, and every
+    * `CollectMetrics` under it drops out of the final plan, so its
+    * Observation reports no metric at all. The incoming observer therefore
+    * sits under the clustering exchange, whose input IS the incoming rows,
+    * and the anti-join runs after it (an all-duplicate rerun then still
+    * reports its incoming rows, under a broadcast or a sort-merge
+    * anti-join). An observer can thus only go missing when what it counts
+    * is provably empty, so a missing metric reads 0.
+    *
+    * An empty load adds no file to an existing partitioned table (the
+    * dynamic-partition writer opens files per row; an unpartitioned table
+    * gets the one empty file Spark writes to keep the schema). Into a missing table
+    * the write has created it by the time the count is known, so a load
+    * that appended nothing drops it again: a missing table stays missing. */
+  private[pipeline] def load(spark: SparkSession, incoming: DataFrame, table: String,
+                             key: String, partitionCol: Option[String]): Counts = {
+    val existed = spark.catalog.tableExists(table)
+    val (seen, kept) = (Observation(), Observation())
+    val observed = incoming.observe(seen, count(lit(1)).as("rows"))
+    val clustered = partitionCol.fold(observed)(c => observed.repartition(col(c)))
+    val fresh = if (existed) newRows(clustered, spark.table(table), key) else clustered
+    val writer = fresh.observe(kept, count(lit(1)).as("rows"))
+      .write.mode("append").format("parquet")
+    partitionCol.fold(writer)(c => writer.partitionBy(c)).saveAsTable(table)
+    val counts = Counts(rows(seen), rows(kept))
+    if (!existed && counts.appended == 0) spark.sql(s"DROP TABLE IF EXISTS $table")
+    counts
   }
 
-  /** The load step both warehouse sinks share ([[appendNew]],
-    * [[JdbcSink.appendNew]]): anti-join `incoming` against `existing`'s
-    * key column (none = every row is new), count the survivors, and hand
-    * them to `write` only when there are any. `left_anti` already yields
-    * each incoming row once however often its key repeats on the right, so
-    * the key side is not deduplicated. Returns the count. */
-  private[pipeline] def loadNew(incoming: DataFrame, existing: Option[DataFrame], key: String)
-                               (write: DataFrame => Unit): Long = {
-    val fresh = existing.fold(incoming)(e => incoming.join(e.select(key), Seq(key), "left_anti"))
-    // one computation of the anti-join for BOTH the count and the write:
-    // without the scoped persist the plan executes twice (a full extra pass
-    // over incoming at warehouse scale) with a consistency window between
-    fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = fresh.count()
-      if (n > 0) write(fresh)
-      n
-    } finally fresh.unpersist()
-  }
+  private def rows(o: Observation): Long = o.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+
+  /** J2's one expression, shared by both warehouse sinks ([[appendNew]],
+    * [[JdbcSink.appendNew]]): the `incoming` rows whose `key` is absent from
+    * `existing`. `left_anti` yields each incoming row once however often its
+    * key repeats on the right, so the key side is not deduplicated. */
+  private[pipeline] def newRows(incoming: DataFrame, existing: DataFrame, key: String): DataFrame =
+    incoming.join(existing.select(key), Seq(key), "left_anti")
 
   /** S11: schema → warehouse DDL with the reference's type-mapping table
     * (load_to_redshift_lambda.py:24-31: int→INTEGER, bigint→BIGINT,

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Source readers replicating the reference's three schema-acquisition modes
   * (SURVEY §1.4) plus the ingest-time renames/drops.
@@ -16,24 +17,48 @@ object Ingest {
   def csvAllStrings(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("escape", "\"").csv(path)
 
+  /** P3 ingest rename for transactions, raw API key → warehouse name
+    * (reference pull_data_glue_job_lambda.py:57). */
+  private val transactionRenames = Map("id" -> "transaction_id")
+
+  /** P2 ingest renames for rewards (reference pull_data_glue_job_lambda.py:60-61). */
+  private val rewardRenames =
+    Map("amount" -> "plu_amount", "type" -> "reward_type", "id" -> "reward_id")
+
+  /** The raw keys of a transactions / rewards API payload: [[Schemas]]'
+    * column names mapped back through the ingest renames. The one column
+    * list both [[jsonPayload]] and the renames read. */
+  val transactionKeys: Seq[String] = rawKeys(Schemas.transactions, transactionRenames)
+  val rewardKeys: Seq[String] = rawKeys(Schemas.rewards, rewardRenames)
+
+  private def rawKeys(schema: StructType, renames: Map[String, String]): Seq[String] = {
+    val raw = renames.map(_.swap)
+    schema.fieldNames.toSeq.map(c => raw.getOrElse(c, c))
+  }
+
   /** S5: JSON payload string → DataFrame (reference
-    * pull_data_glue_job_lambda.py:45-47 `pd.read_json`). */
-  def jsonPayload(spark: SparkSession, json: String): DataFrame = {
+    * pull_data_glue_job_lambda.py:45-47 `pd.read_json`) over the declared
+    * `keys`, every column a string — the same all-string frame
+    * [[csvAllStrings]] lands, so the transform's casts apply unchanged and
+    * no inference pass parses the payload ahead of the load. A number,
+    * boolean or nested object lands as its JSON text; a key missing from a
+    * record (or from every record) reads as null, like an empty CSV field;
+    * keys outside `keys` are ignored. FAILFAST: a malformed payload fails
+    * the job that reads it instead of landing an all-null row. */
+  def jsonPayload(spark: SparkSession, json: String, keys: Seq[String]): DataFrame = {
     import spark.implicits._
-    spark.read.json(Seq(json).toDS())
+    spark.read.schema(StructType(keys.map(StructField(_, StringType))))
+      .option("mode", "FAILFAST").json(Seq(json).toDS())
   }
 
   /** P2/P3 ingest normalization for transactions: drop `is_debit`/`__typename`,
     * rename `id→transaction_id` (reference pull_data_glue_job_lambda.py:56-57). */
   def normalizeTransactions(raw: DataFrame): DataFrame =
-    raw.drop("is_debit", "__typename").withColumnRenamed("id", "transaction_id")
+    raw.drop("is_debit", "__typename").withColumnsRenamed(transactionRenames)
 
   /** P2 ingest renames for rewards: `amount→plu_amount`, `type→reward_type`,
     * `id→reward_id` (reference pull_data_glue_job_lambda.py:60-61). */
-  def normalizeRewards(raw: DataFrame): DataFrame =
-    raw.withColumnRenamed("amount", "plu_amount")
-      .withColumnRenamed("type", "reward_type")
-      .withColumnRenamed("id", "reward_id")
+  def normalizeRewards(raw: DataFrame): DataFrame = raw.withColumnsRenamed(rewardRenames)
 
   /** E10: parse the python-dict-literal nested payload columns. The reference
     * stores Python-repr dicts (not valid JSON): single-quoted strings for most

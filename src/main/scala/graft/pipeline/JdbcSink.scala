@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** S12: JDBC warehouse sink — the Spark-native form of the reference's
   * Redshift load lambda (reference load_to_redshift_lambda.py:110-135:
@@ -44,18 +45,27 @@ object JdbcSink {
     "isolationLevel" -> "READ_COMMITTED")
 
   /** Idempotent warehouse append: anti-join `incoming` against the target's
-    * existing key set, append the rest, return the appended count (the
-    * lambda reports cursor.rowcount, :99-100). `existingKeys` defaults to
-    * reading the key column back over JDBC; specs inject a DataFrame to
-    * exercise the logic without a live warehouse. */
+    * existing key set ([[IncrementalLoad.newRows]]), count the survivors and
+    * append them only when there are any, returning the count (the lambda
+    * reports cursor.rowcount, :99-100). Unlike the table sink this counts
+    * BEFORE writing: a JDBC append of an empty frame still connects and can
+    * create the target. The scoped persist makes the count and the write
+    * share one anti-join, so the warehouse key set goes over the wire once.
+    * `existingKeys` defaults to reading the key column back over JDBC;
+    * specs inject a DataFrame to exercise the logic without a live
+    * warehouse. */
   def appendNew(spark: SparkSession, incoming: DataFrame, target: Target,
                 key: String,
                 existingKeys: Option[DataFrame] = None): Long = {
     val existing = existingKeys.getOrElse(
       spark.read.format("jdbc").options(jdbcOptions(target)).load())
-    // the scoped persist inside loadNew also means the warehouse key set
-    // goes over the wire once instead of once per action
-    IncrementalLoad.loadNew(incoming, Some(existing), key)(write(_, target))
+    val fresh = IncrementalLoad.newRows(incoming, existing, key)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = fresh.count()
+      if (n > 0) write(fresh, target)
+      n
+    } finally fresh.unpersist()
   }
 
   /** Plain append. Spark creates the table on first write; pass

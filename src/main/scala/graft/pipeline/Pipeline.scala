@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** §2.11 orchestration: the Step-Functions DAG (extract → transform → load,
-  * reference infra/lambda.tf:148-240) collapsed into one driver with
-  * materialized-table stage boundaries.
+  * reference infra/lambda.tf:148-240) collapsed into one driver call and one
+  * Spark plan: the stages are lazy frames composed into the load's write,
+  * with no materialized boundary between them.
   *
   * Differences from the reference, by design (SURVEY §8.7): the
   * clear-then-rewrite-then-crawl sequence (S8/S9) becomes one atomic
@@ -17,7 +17,9 @@ object Pipeline {
   final case class Result(cashbackRows: Long, appendedRows: Long)
 
   /** Run extract(API or fixture CSVs) → transform → partitioned write →
-    * idempotent warehouse append. `rewardsCsv`/`transactionsCsv` point at
+    * idempotent warehouse append, as one plan. The result's counts are the
+    * transformed rows that reached the load and the rows it appended, both
+    * observed on the write. `rewardsCsv`/`transactionsCsv` point at
     * reference-shaped extracts (header CSV); `warehouseTable` is the managed
     * target; `apiClient` is the optional S3/S4 fetch adapter — when present
     * the extracts come from the API with the CSVs as the failure fallback
@@ -29,20 +31,18 @@ object Pipeline {
 
     // Extract (S1 header-only strings — casts happen inside the transform,
     // matching glue_script.py:19-20; or S3/S4 API payloads via the injected
-    // client, retried per the Step-Functions policy) + ingest renames (P2/P3).
+    // client, retried per the Step-Functions policy and read as strings over
+    // the declared keys) + ingest renames (P2/P3).
     val (transactions, rewards) =
       ApiIngest.fetchData(spark, apiClient, transactionsCsv, rewardsCsv, retry)
 
-    // Transform (J1 + E1–E6 + P1/P2 + E4). Persisted for the run's scope:
-    // the anti-join append and the row-count report both consume it, and
-    // re-deriving it means a second full extract+transform pass.
+    // Transform (J1 + E1–E6 + P1/P2 + E4) and load (idempotent anti-join
+    // append on reward_id, J2) run as ONE plan, from the extract scan to the
+    // partitioned write: nothing is persisted, and both counts are observed
+    // on the write's own jobs.
     val cashback = CashbackTransform.transform(rewards, transactions)
-    cashback.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Load: idempotent anti-join append on reward_id (J2).
-      val appended = IncrementalLoad.appendNew(
-        spark, cashback, warehouseTable, "reward_id", Some("transaction_date"))
-      Result(cashback.count(), appended)
-    } finally cashback.unpersist()
+    val counts = IncrementalLoad.load(
+      spark, cashback, warehouseTable, "reward_id", Some("transaction_date"))
+    Result(counts.incoming, counts.appended)
   }
 }

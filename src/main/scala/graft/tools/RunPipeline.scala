@@ -17,11 +17,15 @@ object RunPipeline {
       sys.exit(2)
     }
     val Array(rewardsCsv, transactionsCsv) = args
+    // a warehouse of its own per run, deleted at exit: the in-memory catalog
+    // forgets the table between runs, a shared directory would not
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(warehouse.toFile)))
     val spark = GraftSession.builder()
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sql("DROP TABLE IF EXISTS cashback")
 
     val r1 = Pipeline.run(spark, rewardsCsv, transactionsCsv)
     println(s"run1: transformed=${r1.cashbackRows} appended=${r1.appendedRows}")

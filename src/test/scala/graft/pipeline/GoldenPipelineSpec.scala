@@ -196,4 +196,191 @@ class GoldenPipelineSpec extends SparkSpec {
     assert(res.cashbackRows === 60L)
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
+
+  // --- the one-plan load: counts observed on the write, one file per date ---
+
+  private def withTable(name: String)(body: String => Unit): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    try body(name) finally spark.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
+  private def run(table: String, api: Option[ApiIngest.Client] = None): (Long, Long) = {
+    val r = Pipeline.run(spark, rewardsCsv, transactionsCsv, table, api)
+    (r.cashbackRows, r.appendedRows)
+  }
+
+  /** Parquet file names under `table`'s location, by partition directory. */
+  private def parquetByPartition(table: String): Map[String, Set[String]] = {
+    val location = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+    org.apache.commons.io.FileUtils.listFiles(location, Array("parquet"), true)
+      .toArray.toSeq.map(_.asInstanceOf[java.io.File])
+      .groupBy(_.getParentFile.getName).map { case (d, fs) => d -> fs.map(_.getName).toSet }
+  }
+
+  /** A golden extract's records as (column, value) pairs; null = empty field. */
+  private def records(csv: String): Seq[Seq[(String, String)]] = {
+    val df = Ingest.csvAllStrings(spark, csv)
+    df.collect().toSeq.map(r => df.columns.toSeq.zip(r.toSeq.map(v => if (v == null) null else v.toString)))
+  }
+
+  private def jsonString(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  /** Records as an API payload in the shapes a live API sends and a CSV
+    * cannot: a value `unquoted` accepts goes out as a bare JSON number,
+    * Python booleans as JSON booleans, and a null field as an explicit
+    * `null` in odd records but a left-out key in even ones. `extra` adds
+    * keys to the first record. */
+  private def payload(recs: Seq[Seq[(String, String)]], unquoted: (String, String) => Boolean,
+                      extra: Seq[(String, String)] = Nil): String =
+    recs.zipWithIndex.map { case (rec, i) =>
+      val fields = rec.flatMap {
+        case (k, null) => if (i % 2 == 0) None else Some(s"${jsonString(k)}:null")
+        case (k, v) =>
+          val json = v match {
+            case "True" => "true"
+            case "False" => "false"
+            case _ if unquoted(k, v) => v
+            case _ => jsonString(v)
+          }
+          Some(s"${jsonString(k)}:$json")
+      }
+      val extras = if (i == 0) extra.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" } else Nil
+      (fields ++ extras).mkString("{", ",", "}")
+    }.mkString("[", ",", "]")
+
+  private def client(tx: String, rw: String): ApiIngest.Client = new ApiIngest.Client {
+    def getTransactions(): String = tx
+    def getRewards(): String = rw
+  }
+
+  /** The golden extracts as API payloads: unquoted amounts and rates, the
+    * transactions' numeric `type` codes unquoted next to their enum names,
+    * JSON booleans, left-out keys and one extra key; plus `newRewards`
+    * copies of golden rewards under fresh ids. */
+  private def goldenClient(newRewards: Int = 0): ApiIngest.Client = {
+    val txJson = payload(records(transactionsCsv),
+      (k, v) => k == "amount" || (k == "type" && v.forall(_.isDigit)))
+    val rw = records(rewardsCsv)
+    val fresh = rw.take(newRewards).zipWithIndex.map { case (rec, i) =>
+      rec.map { case ("id", _) => ("id", s"new-reward-$i"); case kv => kv }
+    }
+    val numeric = Set("amount", "rebate_rate", "base_rate", "staking_rate", "fiat_amount_rewarded")
+    client(txJson, payload(rw ++ fresh, (k, _) => numeric(k), extra = Seq("promo_code" -> "SPRING24")))
+  }
+
+  test("Pipeline.run counts come from the write: (60, 60) on the first load, (60, 0) on a rerun") {
+    withTable("cashback_golden_counts") { t =>
+      assert(run(t) === ((60L, 60L)))
+      assert(run(t) === ((60L, 0L)), "an all-duplicate rerun still reports its incoming rows")
+      assert(spark.table(t).count() === 60L)
+    }
+  }
+
+  test("Pipeline.run counts hold under a sort-merge anti-join") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try withTable("cashback_golden_counts_smj") { t =>
+      assert(run(t) === ((60L, 60L)))
+      val plan = IncrementalLoad.newRows(spark.table(t), spark.table(t), "reward_id")
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin"), plan)
+      assert(run(t) === ((60L, 0L)))
+      assert(spark.table(t).count() === 60L)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("Pipeline.run on the API path: a daily load appends the delta, its rerun nothing") {
+    withTable("cashback_golden_api_counts") { t =>
+      assert(run(t) === ((60L, 60L)))
+      val daily = goldenClient(newRewards = 5)
+      assert(run(t, Some(daily)) === ((65L, 5L)))
+      assert(run(t, Some(daily)) === ((65L, 0L)))
+      assert(spark.table(t).count() === 65L)
+    }
+  }
+
+  test("API payloads load a table identical to the CSV extracts'") {
+    withTable("cashback_golden_from_csv") { fromCsv =>
+      withTable("cashback_golden_from_api") { fromApi =>
+        assert(run(fromCsv) === ((60L, 60L)))
+        assert(run(fromApi, Some(goldenClient())) === ((60L, 60L)))
+        val (c, a) = (spark.table(fromCsv), spark.table(fromApi))
+        assert(c.schema === a.schema)
+        assert(c.exceptAll(a).isEmpty && a.exceptAll(c).isEmpty)
+      }
+    }
+    // a key absent from every record reads as null, as an empty CSV field does
+    val sparse = Ingest.jsonPayload(spark, """[{"id":"r1"},{"id":"r2","amount":1.5}]""",
+      Ingest.rewardKeys)
+    assert(sparse.columns.toSeq === Ingest.rewardKeys)
+    assert(sparse.where(col("reason").isNull).count() === 2L)
+  }
+
+  test("a truncated API payload fails Pipeline.run and loads no rows") {
+    val good = goldenClient()
+    val truncated = client(good.getTransactions(), good.getRewards().dropRight(40))
+    withTable("cashback_golden_truncated") { t =>
+      intercept[Exception](run(t, Some(truncated)))
+      assert(!spark.catalog.tableExists(t) || spark.table(t).isEmpty)
+      assert(run(t) === ((60L, 60L)))
+      intercept[Exception](run(t, Some(truncated)))
+      assert(spark.table(t).count() === 60L)
+      assert(spark.table(t).where(col("reward_id").isNull).isEmpty)
+    }
+  }
+
+  test("each load writes one file per date partition it touches") {
+    withTable("cashback_golden_layout") { t =>
+      assert(run(t) === ((60L, 60L)))
+      val initial = parquetByPartition(t)
+      val dates = cashback.select("transaction_date").distinct().count()
+      assert(initial.size === dates, initial.keys)
+      assert(initial.values.forall(_.size == 1), initial)
+      // a second load of new rows on a few dates
+      val delta = cashback.where(col("transaction_date") < "2024-03-01")
+        .withColumn("reward_id", concat(col("reward_id"), lit("-daily")))
+      val touched = delta.select("transaction_date").distinct().count()
+      assert(touched > 1)
+      val n = IncrementalLoad.appendNew(spark, delta, t, "reward_id", Some("transaction_date"))
+      assert(n === delta.count())
+      val after = parquetByPartition(t)
+      val added = after.map { case (d, fs) => d -> (fs -- initial.getOrElse(d, Set.empty)).size }
+      assert(added.values.forall(_ <= 1), added)
+      assert(added.values.sum === touched)
+    }
+  }
+
+  test("Spark jobs per Pipeline.run: initial CSV, daily JSON and rerun JSON") {
+    // counted on this spec's session (local[4], 4 shuffle partitions); the
+    // persisted transform and the count-then-write load ran 12 / 16 / 15
+    val sc = spark.sparkContext
+    val tag = "graft.test.pipelineJobs"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(op => jobs.merge(op, 1, (a, b) => a + b))
+    }
+    def counted(op: String)(body: => Unit): Int = {
+      sc.setLocalProperty(tag, op)
+      try body finally sc.setLocalProperty(tag, null)
+      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+      Option(jobs.get(op)).fold(0)(_.intValue)
+    }
+    sc.addSparkListener(listener)
+    try withTable("cashback_golden_jobs") { t =>
+      val daily = goldenClient(newRewards = 5)
+      val initial = counted("initial")(run(t))
+      val dailyJobs = counted("daily")(run(t, Some(daily)))
+      val rerun = counted("rerun")(run(t, Some(daily)))
+      assert((initial, dailyJobs, rerun) === ((6, 9, 9)))
+    } finally sc.removeSparkListener(listener)
+  }
 }
