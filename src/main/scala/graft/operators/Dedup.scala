@@ -14,7 +14,8 @@ import ExchangeWidth.widenForJoin
   *  - exact:   hash-groupBy on a content fingerprint (one shuffle on the
   *             fingerprint; representative = min id, deterministic).
   *  - MinHash: (Broder, SEQUENCES'97) shingle → k min-hashes → LSH banding →
-  *             bucket self-join.
+  *             bucket self-join, every hash an md5Long so an external
+  *             engine replays it exactly.
   *             Candidate generation never compares all O(n²) pairs; the only
   *             shuffles are the explode-on-(band,bucket) exchange and the
   *             bucket join, both key-partitioned and skew-safe (bucket sizes
@@ -30,9 +31,10 @@ import ExchangeWidth.widenForJoin
   *             blocks. Lossless (no false negatives), and the prefix length
   *             shrinks as τ grows — at τ=0.95 it is ~3 tokens per doc.
   *
-  * Token sets are hashed to 64-bit longs (`xxhash64`) once up front and the
-  * hashed relation is persisted: every downstream stage (signatures, candidate
-  * join, exact verification) reuses it instead of re-deriving string arrays.
+  * For the pair operators, token sets are hashed to 64-bit longs (`xxhash64`)
+  * once up front and the hashed relation is persisted: every downstream stage
+  * (candidate join, exact verification) reuses it instead of re-deriving
+  * string arrays.
   * Intersection counts over the hashed sets equal those over the raw sets
   * unless two distinct tokens of a compared pair collide in 64 bits
   * (P < 1e-11 for realistic vocabularies), so verified Jaccard values are
@@ -631,93 +633,6 @@ object Dedup {
     crossJaccardFromHashed(hs, threshold)
   }
 
-  /** [[crossJaccardPairs]] straight from TOKEN-array columns: shingle sets
-    * build and hash on the codegen'd window-lead path instead of the
-    * interpreted string-shingle builder — same crossover guidance as
-    * [[containmentPairsTokens]] (prefer for long grams/docs).
-    * The union happens BEFORE shingling so the shared rarest-first order —
-    * which the R×S prefix theorem needs — is computed over both relations
-    * at once, exactly as in the string path. Pair set and Jaccard values
-    * are spec-asserted identical to the string variant.
-    *
-    * Precondition: ids must be unique WITHIN each side (the shingle window
-    * partitions by (id, block, side), so the same id may appear on both
-    * sides — the common re-ingest case — but two rows sharing an id on one
-    * side would interleave token streams; the string path tolerates that,
-    * this one requires per-side uniqueness).
-    *
-    * NOT fully lazy: construction runs one eager Spark job — see
-    * [[jaccardPairs]]. */
-  def crossJaccardPairsTokens(left: DataFrame, right: DataFrame, id: String,
-                              tokens: String, block: String,
-                              threshold: Double, shingleN: Int = 3): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"cross-jaccard threshold must be in (0, 1], got $threshold")
-    val both = left.select(lit(0).as("side"), col(id), col(block), col(tokens))
-      .unionByName(right.select(lit(1).as("side"), col(id), col(block), col(tokens)))
-    val hs = shingleHashedSetsBlocked(both, id, tokens, shingleN, Seq(block, "side"))
-      .withColumnRenamed(block, "blk")
-      .withColumn("n", size(col("hs")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    crossJaccardFromHashed(hs, threshold)
-  }
-
-  /** Experiment seam: the exact-first cascade applied to the R×S family —
-    * measured and deliberately NOT wired into [[crossJaccardPairs]]
-    * (SCALE.md §Round 13 cross cascade: a decisive 3× LOSS on the
-    * disjoint-token 100× corpus — 51.7 s vs 15.7 s direct — and parity
-    * within session noise on the verbatim-duplicates shape it was
-    * hypothesized FOR). The structural reason the self-join cascade
-    * wins ([[canonicalIdsCascadeAt]]) does not transfer: there it
-    * collapses a Θ(clique²) EDGE relation before the CC consumer; here
-    * the pair list IS the output, the PPJoin's candidates are already
-    * pair-bounded with or without collapse, and the array-keyed rep
-    * groupBy is pure added cost. Kept (with [[crossJaccardPairsDirectPath]];
-    * SCALE.md §Round 13 cross cascade) as the substrate that established
-    * the negative result; DedupSpec asserts the branches emit identical
-    * pairs, which is what makes the A/B valid. */
-  private[graft] def crossJaccardPairsCascadePath(left: DataFrame,
-      right: DataFrame, id: String, tokenSet: String, block: String,
-      threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"cross-jaccard threshold must be in (0, 1], got $threshold")
-    val both = left.select(lit(0).as("side"), col(id), col(block), col(tokenSet))
-      .unionByName(right.select(lit(1).as("side"), col(id), col(block), col(tokenSet)))
-    val hs = hashedSets(both, id, tokenSet, Seq(block, "side"))
-      .withColumnRenamed(block, "blk")
-      .withColumn("n", size(col("hs")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val withRep = hs.withColumn("skey", array_sort(col("hs")))
-      .join(hs.withColumn("skey", array_sort(col("hs")))
-        .groupBy(col("blk"), col("side"), col("skey"))
-        .agg(min(col("hs_id")).as("rep")), Seq("blk", "side", "skey"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val reps = withRep.where(col("hs_id") === col("rep"))
-      .select(col("blk"), col("side"), col("hs_id"), col("n"), col("hs"))
-    val members = (s: Int) => withRep.where(col("side") === s)
-      .select(col("rep"), col("hs_id"))
-    crossJaccardFromHashed(reps, threshold)
-      .withColumnRenamed("left_id", "lrep").withColumnRenamed("right_id", "rrep")
-      .join(members(0).select(col("rep").as("lrep"), col("hs_id").as("left_id")), "lrep")
-      .join(members(1).select(col("rep").as("rrep"), col("hs_id").as("right_id")), "rrep")
-      .select(col("left_id"), col("right_id"), col("jaccard"))
-  }
-
-  /** Profiling seam: force the DIRECT R×S path past every gate, so the
-    * cascade's effect is measurable A/B on the same corpus. */
-  private[graft] def crossJaccardPairsDirectPath(left: DataFrame,
-      right: DataFrame, id: String, tokenSet: String, block: String,
-      threshold: Double): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"cross-jaccard threshold must be in (0, 1], got $threshold")
-    val both = left.select(lit(0).as("side"), col(id), col(block), col(tokenSet))
-      .unionByName(right.select(lit(1).as("side"), col(id), col(block), col(tokenSet)))
-    crossJaccardFromHashed(hashedSets(both, id, tokenSet, Seq(block, "side"))
-      .withColumnRenamed(block, "blk")
-      .withColumn("n", size(col("hs")))
-      .persist(StorageLevel.MEMORY_AND_DISK), threshold)
-  }
-
   /** Shared R×S candidate/verify core: the same SLIM-posting PPJoin split
     * as [[jaccardPairsPrefix]] (positions and sizes through the candidate
     * shuffle, first-match min-aggregate, positional filter, arrays fetched
@@ -786,41 +701,6 @@ object Dedup {
     containmentFromHashed(hs, threshold)
   }
 
-  /** [[containmentPairs]] straight from a TOKEN-array column: shingle sets
-    * are built and hashed on the codegen'd posexplode + window-lead path
-    * ([[shingleHashedSetsBlocked]]) — no shingle string is ever
-    * materialized. Pair set and containment values are identical to
-    * `containmentPairs` over string shingles (set ops over
-    * injectively-hashed shingles; spec-asserted on the real corpus), so a
-    * string-shingle SQL oracle still verifies the output.
-    *
-    * WHEN to prefer which (measured round 9, SCALE.md §Dedup family): the
-    * window path pays one shuffle+sort on the doc id but O(1) work per
-    * gram; the interpreted string builder pays no shuffle but n
-    * `element_at` calls + a concat per gram. At n=3 over short docs the
-    * string path wins ~2×; at n=8 the window path won 4× (the q76
-    * rebuild). Crossover is at modest n — prefer this variant for long
-    * grams or long docs.
-    *
-    * Precondition: (id, block) must identify one physical row — duplicate
-    * ids within a block would interleave token streams in the shingle
-    * window (see [[shingleHashedSetsBlocked]]); use the string-path
-    * `containmentPairs` if the input may carry repeated ids.
-    *
-    * NOT fully lazy: construction runs one eager Spark job — see
-    * [[jaccardPairs]]. */
-  def containmentPairsTokens(df: DataFrame, id: String, tokens: String,
-                             block: String, threshold: Double,
-                             shingleN: Int = 3): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"containment threshold must be in (0, 1], got $threshold")
-    val hs = shingleHashedSetsBlocked(df, id, tokens, shingleN, Seq(block))
-      .withColumnRenamed(block, "blk")
-      .withColumn("n", size(col("hs")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    containmentFromHashed(hs, threshold)
-  }
-
   private def containmentFromHashed(hs: DataFrame, threshold: Double): DataFrame = {
     // Candidate generation rides SLIM postings — (block, token, id, set
     // size, position) only. The previous shape carried each document's
@@ -874,112 +754,6 @@ object Dedup {
 
   // -------------------------------------------------------------- minhash --
 
-  /** Deterministic affine hash family over a base xxhash64: h_i(t) = a_i*H(t)+b_i
-    * (wrapping Long arithmetic — this is hashing, overflow is the point). */
-  private def hashFamily(k: Int): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(0x5EED5EEDL)
-    Seq.fill(k)((rnd.nextLong() | 1L, rnd.nextLong()))
-  }
-
-  /** LSH candidate pairs over a hashed-set relation (`hs_id`, `hs`).
-    *
-    * Scale shape: signatures come from explode → groupBy(id) with k
-    * min-aggregates — one map-side-combinable shuffle on id; tokens are never
-    * re-hashed per hash function. Banding explodes `bands` rows per doc and
-    * joins on (band,bucket) — both exchanges are key-partitioned. */
-  private def minHashPairsHashed(hs: DataFrame, k: Int, bands: Int): DataFrame = {
-    require(bands >= 1 && k >= 1, s"k and bands must be >= 1, got k=$k bands=$bands")
-    require(k % bands == 0,
-      s"k must be a multiple of bands (rows = k/bands would silently drop " +
-        s"signature rows), got k=$k bands=$bands")
-    val rows = k / bands
-    val fam = hashFamily(k)
-    val tokenHashes = hs.select(col("hs_id").as("mh_id"), explode(col("hs")).as("h"))
-    val sig = tokenHashes.groupBy("mh_id")
-      .agg(min(col("h") * fam.head._1 + fam.head._2).as("m0"),
-        fam.toSeq.tail.zipWithIndex.map { case ((a, b), i) =>
-          min(col("h") * a + b).as(s"m${i + 1}") }: _*)
-    // each doc carries its full band→bucket array so a pair colliding in
-    // several bands can be kept only at the FIRST colliding band (a codegen'd
-    // filter) instead of distinct()-shuffling the candidate set again
-    val banded = sig.select(col("mh_id"),
-      array((0 until bands).map(bnd =>
-        xxhash64(lit(bnd) +: (0 until rows).map(r => col(s"m${bnd * rows + r}")): _*)): _*).as("bks"))
-      .select(col("mh_id"), col("bks"), posexplode(col("bks")).as(Seq("band", "bucket")))
-    val l = banded.select(col("band"), col("bucket"), col("mh_id").as("left_id"), col("bks").as("lbks"))
-    val r = banded.select(col("band"), col("bucket"), col("mh_id").as("right_id"), col("bks").as("rbks"))
-    // foldLeft, not reduce: bands = 1 has no earlier bands to exclude, so
-    // the predicate sequence is empty and the filter is just `true`
-    val firstMatch = (0 until bands - 1).map(b =>
-        col("band") <= b || element_at(col("lbks"), b + 1) =!= element_at(col("rbks"), b + 1))
-      .foldLeft(lit(true))(_ && _)
-    l.join(r, Seq("band", "bucket")).where(col("left_id") < col("right_id"))
-      .where(firstMatch)
-      .select("left_id", "right_id")
-  }
-
-  /** Hashed n-token shingle sets built without materializing shingle strings:
-    * posexplode the token array, hash each token once, window-`lead` the next
-    * n−1 hashes per doc, and combine with one more xxhash64. Every step is a
-    * codegen'd window/aggregate (the higher-order `transform`+`element_at`
-    * shingle builder is CodegenFallback and ~3× slower). Docs shorter than n
-    * tokens contribute their single zero-padded shingle, mirroring
-    * [[TextAnalysis.shingles]]'s whole-doc fallback. */
-  def shingleHashedSets(df: DataFrame, id: String, tokens: String,
-                        n: Int = 3): DataFrame =
-    shingleHashedSetsBlocked(df, id, tokens, n, Nil)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-  /** [[shingleHashedSets]] with carried block columns (language, source,
-    * batch side): the carries ride the posexplode and the per-doc
-    * collect_set — they are functionally dependent on the doc id, so the
-    * groupBy keys add no grouping work, and the aggregate reuses the
-    * window's HashPartitioning(id) (no second exchange). Output shape is
-    * exactly [[hashedSets]]'s (hs_id, carries…, hs), so the PPJoin prefix
-    * machinery downstream cannot tell the two apart. Docs with EMPTY token
-    * arrays are dropped by the posexplode (a tokenizer always yields ≥ 1
-    * token, so this is unreachable from text; callers feeding synthetic
-    * arrays should filter empties first).
-    *
-    * The window partitions by (hs_id, carries…) — the same key set the
-    * groupBy uses — so a doc id that legitimately recurs across carry
-    * values (e.g. the same id on both `side`s of a cross-corpus dedup)
-    * keeps its token streams separate. Within ONE (id, carries) group the
-    * id must be unique: two physical rows sharing it would tie on
-    * (hs_id, pos) and `lead` would interleave their tokens
-    * nondeterministically, unlike the row-local string path
-    * ([[hashedSets]]) which never mixes rows. */
-  private[graft] def shingleHashedSetsBlocked(df: DataFrame, id: String,
-                                              tokens: String, n: Int,
-                                              carry: Seq[String]): DataFrame = {
-    // window-lead build KEPT here (round-20 A/B, 2 sessions over
-    // q24/q25/q60/q62, OPTIMIZATION_r20.md §Second measurement pass): the
-    // posexplode+get rewrite that won on the ExactSubstr/tfidf/bigram
-    // sites read a wash-to-loss on the
-    // shingle consumers — the set reduce below rides the window's hash
-    // exchange for free (one exchange total), where the rewrite paid its
-    // own aggregate exchange and re-hashed every token n times.
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("hs_id") +: carry.map(col): _*).orderBy("pos")
-    var th = df.select(col(id).as("hs_id") +: carry.map(col) :+
-        posexplode(col(tokens)).as(Seq("pos", "tok")): _*)
-      .select(col("hs_id") +: carry.map(col) :+ col("pos") :+
-        xxhash64(col("tok")).as("h0"): _*)
-    (1 until n).foreach { j => th = th.withColumn(s"h$j", lead(col("h0"), j).over(w)) }
-    th.where(col(s"h${n - 1}").isNotNull || col("pos") === 0)
-      .select(col("hs_id") +: carry.map(col) :+
-        xxhash64((0 until n).map(j => coalesce(col(s"h$j"), lit(0L))): _*).as("sh"): _*)
-      .groupBy(col("hs_id") +: carry.map(col): _*).agg(collect_set(col("sh")).as("hs"))
-  }
-
-  /** MinHash-LSH near-dup detection straight from a token-array column:
-    * hashed shingle sets via [[shingleHashedSets]], then LSH + exact-Jaccard
-    * verification, all over the one persisted hashed relation. */
-  def minHashDedupTokens(df: DataFrame, id: String, tokens: String,
-                         shingleN: Int, threshold: Double,
-                         k: Int = 16, bands: Int = 4): DataFrame =
-    minHashDedupHashed(shingleHashedSets(df, id, tokens, shingleN), threshold, k, bands)
-
   /** CROSS-ENGINE-DETERMINISTIC MinHash-LSH — every hash is
     * [[TextAnalysis.md5Long]] (md5 is md5 in any engine), so an external
     * replay computes the identical signatures, band buckets, candidate
@@ -988,7 +762,7 @@ object Dedup {
     * p≈1.4% — measured: 2 of 256 exact pairs at sf0.1); an oracle that
     * verifies against the exact-Jaccard pair set silently depends on
     * recall being 1 on the gated corpus, which stops holding as the corpus
-    * grows. This variant moves q25's contract from "recall happened to be
+    * grows. This operator moves q25's contract from "recall happened to be
     * 1" to "oracled by construction" — the repo-wide standard the SimHash
     * (q26) and SRP (q31) tiers already meet:
     *
@@ -996,15 +770,13 @@ object Dedup {
     *    min over a doc's shingles is signature row m_i;
     *  - band bucket: md5Long("b:" ++ m concatenated with ':') — colon
     *    joins over decimal renderings, identical in SQL;
-    *  - candidates: distinct bucket-join pairs (first-match filtering is
-    *    an engine-side optimization that yields the same distinct set);
+    *  - candidates: distinct bucket-join pairs;
     *  - verification: exact Jaccard over the distinct shingle-STRING sets
     *    (never hashes — injective by construction).
     *
-    * The [[minHashDedup]]/[[minHashDedupTokens]] twins remain the
-    * production-speed path (xxhash64 is codegen'd and ~an order cheaper
-    * than md5 per gram); same algorithm, same S-curve, independently
-    * seeded hash family. */
+    * It is the engine's one MinHash. An xxhash64 family would be cheaper
+    * per gram (codegen'd, where md5 is not), but no external engine could
+    * replay its recall misses. */
   def minHashDedupPortable(df: DataFrame, id: String, tokens: String,
                            shingleN: Int, threshold: Double,
                            k: Int = 16, bands: Int = 4): DataFrame = {
@@ -1036,28 +808,6 @@ object Dedup {
     cands
       .join(sh.select(col("mh_id").as("left_id"), col("sh").as("ls")), Seq("left_id"))
       .join(sh.select(col("mh_id").as("right_id"), col("sh").as("rs")), Seq("right_id"))
-      .withColumn("inter", size(array_intersect(col("ls"), col("rs"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (size(col("ls")) + size(col("rs")) - col("inter")))
-      .where(col("jaccard") >= threshold)
-      .select(col("left_id"), col("right_id"), col("jaccard"))
-  }
-
-  /** Full MinHash-LSH near-dup detection: LSH candidates, then exact Jaccard
-    * verification ≥ threshold. The hashed token sets are computed once and
-    * persisted; signature generation and both verification joins reuse them,
-    * so the corpus text is tokenized exactly once per run. */
-  def minHashDedup(df: DataFrame, id: String, tokenSet: String,
-                   threshold: Double, k: Int = 16, bands: Int = 4): DataFrame =
-    minHashDedupHashed(hashedSets(df, id, tokenSet, Nil)
-      .persist(StorageLevel.MEMORY_AND_DISK), threshold, k, bands)
-
-  private def minHashDedupHashed(hs: DataFrame, threshold: Double,
-                                 k: Int, bands: Int): DataFrame = {
-    val cands = minHashPairsHashed(hs, k, bands)
-    cands
-      .join(hs.select(col("hs_id").as("left_id"), col("hs").as("ls")), Seq("left_id"))
-      .join(hs.select(col("hs_id").as("right_id"), col("hs").as("rs")), Seq("right_id"))
       .withColumn("inter", size(array_intersect(col("ls"), col("rs"))))
       .withColumn("jaccard",
         col("inter").cast("double") / (size(col("ls")) + size(col("rs")) - col("inter")))

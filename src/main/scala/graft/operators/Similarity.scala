@@ -1232,18 +1232,9 @@ object Similarity {
                        coarse: Array[Array[Double]],
                        codebooks: Array[Array[Array[Double]]], nprobe: Int = 2,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    assertNotCompacting(index)
-    val q = prepProbedQueries(queries, coarse, codebooks, nprobe, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val probed = q.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    // project to exactly the ADC columns BEFORE scoring: an index written
-    // withVectors must not pay vector I/O on the code path — the parquet
-    // scan's ReadSchema excludes `embedding` (spec-asserted)
-    val pruned = pruneToProbed(index, probed)
-      .select(col("neighbor_id") +: col("cluster") +:
-        codebooks.indices.map(s => col(s"code_$s")): _*)
-    adcScoreClustered(q, pruned, codebooks, k)
+    val (q, _, codes) = probedCodes(queries, index, coarse, codebooks, nprobe,
+      allow = None, idCol, vecCol)
+    adcScoreClustered(q, codes, codebooks, k)
   }
 
   /** FILTERED ANN probe over the stored index — the vector-DB "filtered
@@ -1273,17 +1264,35 @@ object Similarity {
                                allow: DataFrame, nprobe: Int = 2,
                                idCol: String = "vec_id",
                                vecCol: String = "embedding"): DataFrame = {
+    val (q, _, codes) = probedCodes(queries, index, coarse, codebooks, nprobe,
+      allow = Some(allow), idCol, vecCol)
+    adcScoreClustered(q, codes, codebooks, k)
+  }
+
+  /** The prelude every stored-index probe shares: the query batch probed
+    * and persisted, its probed cluster ids (collected, sorted), and the
+    * code relation of those clusters, cut to `allow`'s ids when given.
+    * Returns (probed queries, probed cluster ids, codes). */
+  private def probedCodes(queries: DataFrame, index: DataFrame,
+                          coarse: Array[Array[Double]],
+                          codebooks: Array[Array[Array[Double]]], nprobe: Int,
+                          allow: Option[DataFrame], idCol: String,
+                          vecCol: String): (DataFrame, Array[Int], DataFrame) = {
     assertNotCompacting(index)
     val q = prepProbedQueries(queries, coarse, codebooks, nprobe, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probed = q.select(col("cluster")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val allowIds = allow.select(col(idCol).as("neighbor_id")).distinct()
-    val pruned = pruneToProbed(index, probed)
+    // project to exactly the ADC columns BEFORE scoring: an index written
+    // withVectors must not pay vector I/O on the code path — the parquet
+    // scan's ReadSchema excludes `embedding` (spec-asserted)
+    val codes = pruneToProbed(index, probed)
       .select(col("neighbor_id") +: col("cluster") +:
         codebooks.indices.map(s => col(s"code_$s")): _*)
-      .join(allowIds, Seq("neighbor_id"), "left_semi")
-    adcScoreClustered(q, pruned, codebooks, k)
+    // pre-filter semantics: the allow cut lands beneath the ADC ranking, so
+    // every slot the scorer fills is an ALLOWED candidate
+    (q, probed, allow.fold(codes)(a => codes.join(
+      a.select(col(idCol).as("neighbor_id")).distinct(), Seq("neighbor_id"), "left_semi")))
   }
 
   /** Pushed-id fetch cap for [[ivfPqTopKRefined]]: beyond this many
@@ -1365,26 +1374,13 @@ object Similarity {
                           rerank: Int, allow: Option[DataFrame],
                           idCol: String, vecCol: String): DataFrame = {
     require(rerank >= 1, s"need rerank ≥ 1, got $rerank")
-    assertNotCompacting(index)
     require(index.columns.contains("embedding"),
       "ivfPqTopKRefined needs an index written withVectors = true (no embedding column found)")
-    val q = prepProbedQueries(queries, coarse, codebooks, nprobe, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val probed = q.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val codesAll = pruneToProbed(index, probed)
-      .select(col("neighbor_id") +: col("cluster") +:
-        codebooks.indices.map(s => col(s"code_$s")): _*)
-    // pre-filter semantics: the allow cut lands beneath the shortlist so
-    // every shortlist slot is an ALLOWED candidate (same placement as
-    // ivfPqTopKIndexedFiltered's, one tier lower)
-    val codesOnly = allow match {
-      case Some(a) => codesAll.join(
-        a.select(col(idCol).as("neighbor_id")).distinct(),
-        Seq("neighbor_id"), "left_semi")
-      case None => codesAll
-    }
-    val shortlist = adcScoreClustered(q, codesOnly, codebooks, rerank * k)
+    // the allow cut lands beneath the shortlist, so every shortlist slot is
+    // an ALLOWED candidate
+    val (q, probed, codes) = probedCodes(queries, index, coarse, codebooks,
+      nprobe, allow, idCol, vecCol)
+    val shortlist = adcScoreClustered(q, codes, codebooks, rerank * k)
       .select(col("query_id"), col("neighbor_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the id list is shortlist-sized (≤ |queries|·rerank·k — probe-batch

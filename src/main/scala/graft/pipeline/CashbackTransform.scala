@@ -70,15 +70,4 @@ object CashbackTransform {
       col("transaction_amount").cast("double").as("transaction_amount"),
       col("plu_price").cast("double").as("plu_price"))
   }
-
-  /** S7: partitioned snappy-parquet sink, overwrite (glue_script.py:77-78). */
-  def write(cashback: DataFrame, path: String): Unit =
-    cashback.write.mode("overwrite").partitionBy("transaction_date").parquet(path)
-
-  /** S9-analog: register as a partitioned managed table (replaces the
-    * crawler+Spectrum hop, SURVEY S9/S10 — metastore registration is
-    * implicit and atomic). */
-  def saveAsTable(cashback: DataFrame, table: String): Unit =
-    cashback.write.mode("overwrite").partitionBy("transaction_date")
-      .format("parquet").saveAsTable(table)
 }

@@ -825,9 +825,7 @@ object Queries {
     // docs the interpreted string-shingle build (~0.4 s warm at sf0.1)
     // BEATS the window-lead hashed build (~0.8 s — its shuffle+sort costs
     // more than the 3-element_at interpretation), so unlike q76 (n=8,
-    // where window-lead won 4×) this query keeps the string path;
-    // containmentPairsTokens is the n-large alternative, spec-asserted
-    // equivalent.
+    // where window-lead won 4×) this query keeps the string path.
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tok"))
       .select(col("doc_id"), col("lang"),
@@ -848,8 +846,7 @@ object Queries {
   val q62_cross_dedup: Q = (s, dir) => {
     val batchSources = Seq("src1", "src2", "src3")
     // string-shingle path kept deliberately: at n=3 it measures ~2× faster
-    // than the window-lead build (see q60's note); crossJaccardPairsTokens
-    // is the spec-equivalent n-large alternative
+    // than the window-lead build (see q60's note)
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("source"),
         split(col("text"), " ").as("tok"))

@@ -15,12 +15,21 @@ class DedupSpec extends SparkSpec {
       array_distinct(split(col("text"), " ")).as("tok"),
       TextAnalysis.shingles(split(col("text"), " "), 3).as("sh")).cache()
 
+  // MinHash shingles its input, so it takes the words in text order (not
+  // the `array_distinct` token set); its 3-shingles are exactly `sh`
+  private lazy val words = docs.select(col("doc_id"),
+    split(col("text"), " ").as("words"))
+
+  private def minHash(threshold: Double, k: Int = 16, bands: Int = 4) =
+    Dedup.minHashDedupPortable(words, "doc_id", "words", shingleN = 3,
+      threshold = threshold, k = k, bands = bands)
+
   test("minhash LSH over shingles: recall ≥90% of exact Jaccard ≥0.8 pairs") {
     // ground truth: brute-force shingle Jaccard over ALL pairs (unblocked —
     // the planted near-dups cross language labels)
     val exact = Dedup.jaccardPairs(docs, "doc_id", "sh", "all", 0.8)
       .select("left_id", "right_id").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.minHashDedup(docs, "doc_id", "sh", threshold = 0.8)
+    val lsh = minHash(0.8)
       .select("left_id", "right_id").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty)
     val recall = exact.intersect(lsh).size.toDouble / exact.size
@@ -30,7 +39,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash verified jaccard values match the exact operator") {
-    val lsh = Dedup.minHashDedup(docs, "doc_id", "sh", threshold = 0.8)
+    val lsh = minHash(0.8)
       .select("left_id", "right_id", "jaccard").as[(Long, Long, Double)].collect()
     assert(lsh.nonEmpty)
     val byPair = Dedup.jaccardPairs(docs, "doc_id", "sh", "all", 0.8)
@@ -38,19 +47,6 @@ class DedupSpec extends SparkSpec {
       .collect().map(t => (t._1, t._2) -> t._3).toMap
     lsh.foreach { case (l, r, j) =>
       byPair.get((l, r)).foreach(ex => assert(math.abs(ex - j) < 1e-12)) }
-  }
-
-  test("string-free shingle path (minHashDedupTokens) matches exact Jaccard like the string path") {
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "sh", "all", 0.8)
-      .select("left_id", "right_id").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.minHashDedupTokens(
-        docs.select(col("doc_id"), split(col("text"), " ").as("tok")),
-        "doc_id", "tok", shingleN = 3, threshold = 0.8)
-      .select("left_id", "right_id").as[(Long, Long)].collect().toSet
-    assert(exact.nonEmpty)
-    val recall = exact.intersect(lsh).size.toDouble / exact.size
-    assert(recall >= 0.9, s"recall=$recall (${exact.size} truth pairs, ${lsh.size} lsh)")
-    assert(lsh.subsetOf(exact), s"${lsh.diff(exact).size} false positives")
   }
 
   test("simhash pairs are far more similar than the population baseline") {
@@ -139,9 +135,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash with a single band (bands=1) is legal and exact-verified") {
-    // regression: the first-match filter was an empty reduce at bands=1
-    val pairs = Dedup.minHashDedup(docs, "doc_id", "sh", threshold = 0.8,
-        k = 16, bands = 1)
+    // bands = 1 is legal (one k-row band); k must split evenly into bands
+    val pairs = minHash(0.8, k = 16, bands = 1)
       .select("left_id", "right_id").as[(Long, Long)].collect().toSet
     val exact = Dedup.jaccardPairs(docs, "doc_id", "sh", "all", 0.8)
       .select("left_id", "right_id").as[(Long, Long)].collect().toSet
@@ -149,7 +144,7 @@ class DedupSpec extends SparkSpec {
     // returns must still be verified truth pairs
     assert(pairs.subsetOf(exact))
     intercept[IllegalArgumentException] {
-      Dedup.minHashDedup(docs, "doc_id", "sh", threshold = 0.8, k = 16, bands = 5)
+      minHash(0.8, k = 16, bands = 5)
     }
   }
 
@@ -468,7 +463,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("canonicalIds covers singletons and real near-dup clusters") {
-    val pairs = Dedup.minHashDedup(docs, "doc_id", "sh", threshold = 0.8)
+    val pairs = minHash(0.8)
     val canon = Dedup.canonicalIds(docs.select("doc_id"), "doc_id", pairs)
     assert(canon.count() === docs.count())
     // canonical ids are always ≤ the doc id (min-of-cluster convention)
@@ -529,7 +524,7 @@ class DedupSpec extends SparkSpec {
 
   test("withCaches bracket structurally releases operator persists, even on failure") {
     val n = graft.GraftSession.withCaches(spark, blocking = true) {
-      Dedup.minHashDedup(docs, "doc_id", "sh", threshold = 0.8).count()
+      minHash(0.8).count()
     }
     assert(n >= 0)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
@@ -580,31 +575,6 @@ class DedupSpec extends SparkSpec {
     graft.GraftSession.releaseCaches(spark, blocking = true)
   }
 
-  test("Tokens variants ≡ string-shingle variants: identical pairs and values on the real corpus") {
-    // the window-lead hashed-shingle path must reproduce the string-shingle
-    // path exactly — same pair set, bit-identical containment/jaccard (both
-    // are quotients of identical set cardinalities)
-    val toks = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("source"),
-        split(col("text"), " ").as("tok"))
-    val strSh = toks.select(col("doc_id"), col("lang"), col("source"),
-      TextAnalysis.shingles(col("tok"), 3).as("sh"))
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val cTok = sorted(Dedup.containmentPairsTokens(toks, "doc_id", "tok", "lang", 0.8))
-    val cStr = sorted(Dedup.containmentPairs(strSh, "doc_id", "sh", "lang", 0.8))
-    assert(cTok.nonEmpty && cTok === cStr,
-      s"containment: ${cTok.size} tokens-path vs ${cStr.size} string-path pairs")
-    val batch = col("source").isin("src1", "src2", "src3")
-    val xTok = sorted(Dedup.crossJaccardPairsTokens(
-      toks.where(batch), toks.where(!batch), "doc_id", "tok", "lang", 0.8))
-    val xStr = sorted(Dedup.crossJaccardPairs(
-      strSh.where(batch), strSh.where(!batch), "doc_id", "sh", "lang", 0.8))
-    assert(xTok === xStr,
-      s"cross-jaccard: ${xTok.size} tokens-path vs ${xStr.size} string-path pairs")
-    graft.GraftSession.releaseCaches(spark, blocking = true)
-  }
-
   test("portable MinHash: candidates verified exactly, subset of the exact pair set, layout-stable") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("tok"))
@@ -633,13 +603,10 @@ class DedupSpec extends SparkSpec {
     graft.GraftSession.releaseCaches(spark, blocking = true)
   }
 
-  test("cross cascade experiment: collapsed-representative branch emits exactly the direct branch's pairs") {
-    // the equivalence that makes the SCALE.md §Round 13 A/B valid (the
-    // cascade is deliberately NOT wired into crossJaccardPairs — measured
-    // a net loss on both corpus shapes, see the seam's scaladoc).
-    // Exact duplicates planted on BOTH sides (the mass the cascade
-    // collapses), near-dups across reps, a cross-side identical pair, an
-    // in-block empty set, and a second block — every cascade edge case
+  test("crossJaccardPairs: exact duplicates on both sides fan out, empty sets never pair") {
+    // exact duplicates planted on BOTH sides, near-dups across them, a
+    // cross-side identical pair, an in-block empty set on each side, and a
+    // second block
     val batch = Seq(
       (1L, "g", Seq("a", "b", "c")),
       (2L, "g", Seq("a", "b", "c")),   // exact dup of 1 (left side)
@@ -652,47 +619,40 @@ class DedupSpec extends SparkSpec {
       (12L, "g", Seq("a", "b", "e")),
       (13L, "g", Seq.empty[String]),
       (14L, "h", Seq("p", "q", "r"))).toDF("id", "blk", "toks")
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    Seq(0.5, 0.65, 1.0).foreach { tau =>
-      val direct = sorted(Dedup.crossJaccardPairs(
-        batch, corpus, "id", "toks", "blk", tau))
-      val cascade = sorted(Dedup.crossJaccardPairsCascadePath(
-        batch, corpus, "id", "toks", "blk", tau))
-      assert(cascade === direct, s"cascade must be invisible at tau=$tau")
-    }
-    // sanity: the fixture actually exercises expansion (dup×dup fan-out)
-    val atHalf = sorted(Dedup.crossJaccardPairsCascadePath(
-      batch, corpus, "id", "toks", "blk", 0.5))
-    assert(atHalf.count { case (l, r, j) => j == 1.0 && Set(1L, 2L)(l) && Set(10L, 11L)(r) } === 4,
-      "both left dups must pair with both right dups through their reps")
+    def pairs(tau: Double) = Dedup.crossJaccardPairs(
+        batch, corpus, "id", "toks", "blk", tau)
+      .as[(Long, Long, Double)].collect().toSet
+    val dupXdup = for (l <- Set(1L, 2L); r <- Set(10L, 11L)) yield (l, r, 1.0)
+    val half = Set((1L, 12L, 0.5), (2L, 12L, 0.5), (3L, 10L, 0.5),
+      (3L, 11L, 0.5), (3L, 12L, 0.5))
+    val atHalf = pairs(0.5)
+    // both left dups pair with both right dups (the 4-pair fan-out)
+    assert(atHalf === dupXdup ++ half + ((5L, 14L, 2.0 / 3)))
+    assert(pairs(0.65) === dupXdup + ((5L, 14L, 2.0 / 3)))
+    assert(pairs(1.0) === dupXdup)
+    assert(!atHalf.exists { case (l, r, _) => l == 4L || r == 13L },
+      "an empty set must never form a pair")
     graft.GraftSession.releaseCaches(spark, blocking = true)
   }
 
-  test("crossJaccardPairsTokens: an id present on BOTH sides keeps its token streams separate") {
+  test("crossJaccardPairs: an id present on BOTH sides pairs as two separate documents") {
     // the re-ingest case: doc 42 appears in the batch AND the corpus with
-    // different text. The shingle window partitions by (id, block, side),
-    // so the two rows must shingle independently — before the round-10 fix
-    // (partition by id only) their exploded tokens tied on (id, pos) and
-    // lead() interleaved them nondeterministically
+    // different text. Each side's row hashes its own set, so the two id-42
+    // rows must never merge or pair with each other
     val batch = Seq((42L, "en", Seq("a", "b", "c", "d", "e")),
                     (1L,  "en", Seq("a", "b", "c", "d", "x")))
       .toDF("id", "blk", "tok")
     val corpus = Seq((42L, "en", Seq("p", "q", "r", "s", "t")),
                      (2L,  "en", Seq("a", "b", "c", "d", "e")))
       .toDF("id", "blk", "tok")
-    def run() = Dedup.crossJaccardPairsTokens(batch, corpus, "id", "tok", "blk", 0.5)
-      .as[(Long, Long, Double)].collect().toSet
     val strSh = (df: org.apache.spark.sql.DataFrame) => df.select(col("id"), col("blk"),
       TextAnalysis.shingles(col("tok"), 3).as("sh"))
-    val expected = Dedup.crossJaccardPairs(strSh(batch), strSh(corpus), "id", "sh", "blk", 0.5)
+    val got = Dedup.crossJaccardPairs(strSh(batch), strSh(corpus), "id", "sh", "blk", 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    // ground truth from the row-local string path: batch 42 ≡ corpus 2
-    // (J=1.0) and batch 1 ~ corpus 2 (shingles abc,bcd ∩ of 4 ⇒ J=0.5);
-    // batch 42 ≁ corpus 42 (disjoint). Corrupted id-42 streams would lose
-    // the 1.0 pair or fabricate spurious ones
-    assert(expected.map(p => (p._1, p._2)) === Set((42L, 2L), (1L, 2L)))
-    (1 to 3).foreach { _ => assert(run() === expected, "tokens path diverged from row-local string path") }
+    // batch 42 ≡ corpus 2 (J=1.0) and batch 1 ~ corpus 2 (shingles abc,bcd
+    // ∩ of 4 ⇒ J=0.5); batch 42 ≁ corpus 42 (disjoint). Merged id-42 sets
+    // would lose the 1.0 pair or fabricate spurious ones
+    assert(got === Set((42L, 2L, 1.0), (1L, 2L, 0.5)))
     graft.GraftSession.releaseCaches(spark, blocking = true)
   }
 
@@ -764,9 +724,7 @@ class DedupSpec extends SparkSpec {
 
   test("releaseCaches drops every operator-internal persist (session lifecycle)") {
     Dedup.simHashPairs(docs.select(col("doc_id"), col("tok")), "doc_id", "tok").count()
-    Dedup.minHashDedupTokens(
-      docs.select(col("doc_id"), split(col("text"), " ").as("t")),
-      "doc_id", "t", 3, 0.8).count()
+    minHash(0.8).count()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
       "the dedup operators are expected to persist intermediates")
     graft.GraftSession.releaseCaches(spark, blocking = true)

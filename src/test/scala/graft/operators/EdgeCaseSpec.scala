@@ -16,7 +16,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("dedup operators accept empty input") {
     assert(Dedup.jaccardPairs(emptyDocs, "doc_id", "tok", "lang", 0.9).count() === 0)
-    assert(Dedup.minHashDedup(emptyDocs, "doc_id", "tok", 0.8).count() === 0)
+    assert(Dedup.minHashDedupPortable(emptyDocs, "doc_id", "tok", 3, 0.8).count() === 0)
     assert(Dedup.simHashPairs(emptyDocs, "doc_id", "tok").count() === 0)
     assert(Dedup.connectedComponents(
       Seq.empty[(Long, Long)].toDF("left_id", "right_id")).count() === 0)

@@ -1,0 +1,53 @@
+#!/usr/bin/env python3
+"""List the src/main defs that only the specs call.
+
+A def counts when some src/test file names it but no src/main file other
+than its own and no perfbench/src file does. Comments are stripped before
+matching; names are matched as whole identifiers, so a def that shares its
+name with an unrelated method (`find`, `run`) is judged by every use of the
+name. This is a report for deciding what code has no product caller, not a
+gate: it always exits 0.
+
+Usage:
+    python3 tools/test_only_defs.py [repo root]   # default: current directory
+"""
+import os
+import re
+import sys
+
+COMMENT = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*(?:.|\n)*?\*/')
+DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
+IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def sources(root):
+    """{path: comment-stripped text} for every .scala file under root."""
+    out = {}
+    for d, _, fs in os.walk(root):
+        for f in fs:
+            if f.endswith(".scala"):
+                with open(os.path.join(d, f), encoding="utf-8") as h:
+                    out[os.path.join(d, f)] = COMMENT.sub(
+                        lambda m: "" if m.group(0)[0] == "/" else m.group(0), h.read())
+    return out
+
+
+def main(argv):
+    repo = argv[0] if argv else "."
+    main_src = sources(os.path.join(repo, "src", "main"))
+    names = {p: set(IDENT.findall(t)) for p, t in main_src.items()}
+    tested = set().union(*(IDENT.findall(t) for t in
+                           sources(os.path.join(repo, "src", "test")).values()))
+    bench = set().union(*(IDENT.findall(t) for t in
+                          sources(os.path.join(repo, "perfbench", "src")).values()))
+    hits = sorted((os.path.relpath(p, repo), d)
+                  for p, t in main_src.items() for d in set(DEF.findall(t))
+                  if d in tested and d not in bench
+                  and not any(d in ns for q, ns in names.items() if q != p))
+    for path, d in hits:
+        print(f"{path}: {d}")
+    print(f"{len(hits)} test-only defs")
+
+
+if __name__ == "__main__":
+    main(sys.argv[1:])
