@@ -410,12 +410,4 @@ object Multimodal {
       })
       .toDF("media_id", "mime", "width", "height", "duration_ms", "n_bytes")
   }
-
-  /** Frame-sampling shape for video-like payloads: split a payload into
-    * fixed-size chunks ("frames") and keep every `stride`-th — pure column
-    * ops, no UDF. */
-  def sampleFrames(media: DataFrame, frameBytes: Int, stride: Int): DataFrame =
-    media.select(col("media_id"), posexplode(split(base64(col("payload")),
-      s"(?<=\\G.{${frameBytes}})")).as(Seq("frame_no", "frame_b64")))
-      .where(pmod(col("frame_no"), lit(stride)) === 0)
 }

@@ -795,8 +795,8 @@ object Similarity {
     }
   }
 
-  /** IDEMPOTENT append for replayable writers (the streaming sink,
-    * [[graft.streaming.Streams.ivfPqIndexSink]]): the same `batchId`
+  /** IDEMPOTENT append for replayable writers (a Structured Streaming
+    * `foreachBatch` sink, say): the same `batchId`
     * presented twice lands its rows exactly once, which upgrades the
     * sink's delivery from at-least-once to effectively exactly-once —
     * Structured Streaming replays a crashed micro-batch under the SAME id
@@ -912,8 +912,8 @@ object Similarity {
     }
   }
 
-  /** COMPACT a grown index: every append ([[ivfPqIndexAppend]], streaming
-    * [[graft.streaming.Streams.ivfPqIndexSink]]) lands new FILES in the
+  /** COMPACT a grown index: every append ([[ivfPqIndexAppend]],
+    * [[ivfPqIndexAppendOnce]]) lands new FILES in the
     * cluster directories, and at nightly-batch cadence a year of ingest is
     * thousands of small files per cluster — each probe then pays file-open
     * and footer-read overhead per file, the classic small-files tax.

@@ -25,13 +25,6 @@ object TextAnalysis {
     * under every ANSI setting (`size(null)` is NULL with ANSI on, −1 off). */
   private val EmptyTokens: Column = typedLit(Array.empty[String])
 
-  /** BPE-ish subword splitter: lowercase word pieces, digits, punctuation as
-    * separate tokens — a regex approximation of byte-pair pretokenization. */
-  def subwordTokens(text: Column): Column =
-    filter(split(lower(text),
-      "(?=[^a-z0-9])|(?<=[^a-z0-9])|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])"),
-      t => trim(t) =!= "")
-
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
   def distinctTokenCount(text: Column): Column =
@@ -840,7 +833,7 @@ object TextAnalysis {
     * flagging (cut the leaked passage, keep the document), with the same
     * machinery and oracle story. Streams via `foreachBatch`: the frozen
     * corpus makes each doc's result micro-batch-invariant, so per-batch
-    * removal ≡ one batch run over the union (StreamsSpec). Streaming
+    * removal ≡ one batch run over the union (TextAnalysisSpec). Streaming
     * callers should NOT call this per micro-batch — it rebuilds the
     * frozen corpus's full gram reduce (the operator's most expensive
     * stage) every batch; build [[corpusGramHashes]] ONCE, persist it, and

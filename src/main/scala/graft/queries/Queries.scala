@@ -214,7 +214,7 @@ object Queries {
   }
 
   /** Streaming batch-shape: tumbling 1-hour windowed aggregate (the exact
-    * plan Structured Streaming runs incrementally; see graft.streaming). */
+    * plan Structured Streaming would run incrementally). */
   val q13_hourly_rollup: Q = (s, dir) =>
     Tables.events(s, dir)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))

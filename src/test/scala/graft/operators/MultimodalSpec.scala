@@ -166,13 +166,6 @@ class MultimodalSpec extends SparkSpec {
     assert(plain.toSeq === Seq((1L, "text/plain", None, None, None, 11L)))
   }
 
-  test("frame sampling keeps every stride-th fixed-size chunk") {
-    val frames = Multimodal.sampleFrames(media.limit(3), frameBytes = 32, stride = 2)
-    val nos = frames.select("frame_no").collect().map(_.getInt(0))
-    assert(nos.nonEmpty)
-    assert(nos.forall(_ % 2 == 0))
-  }
-
   test("q88 multimodal mix: routing, corrupt-media gate, and metadata join") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val rows = graft.queries.Queries.q88_multimodal_mix(spark, sf).collect()

@@ -440,6 +440,9 @@ class SimilaritySpec extends SparkSpec {
       val mem = rows(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4))
       assert(appended.toSeq === mem.toSeq,
         "a grown index must answer identically to the whole corpus indexed at once")
+      // the exact-cosine tier works off the same appended index too
+      val exact = rows(Similarity.ivfTopKIndexed(q, spark.read.parquet(dir), 3, coarse, nprobe = 4))
+      assert(exact.toSeq === rows(Similarity.ivfTopK(q, e, 3, coarse, nprobe = 4)).toSeq)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       graft.GraftSession.releaseCaches(spark, blocking = true)

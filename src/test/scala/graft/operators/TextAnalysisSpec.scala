@@ -228,13 +228,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(g._2 === Seq("a b", "b a"))
   }
 
-  test("subword tokenizer splits punctuation and digits off words") {
-    val out = Seq("Hello, world! abc123").toDF("t")
-      .select(TextAnalysis.subwordTokens(col("t")).as("tok"))
-      .as[Seq[String]].collect().head
-    assert(out === Seq("hello", ",", "world", "!", "abc", "123"))
-  }
-
   test("quality score is in [0,1] and penalizes degenerate docs") {
     val df = Seq(
       "the quick brown fox jumps over the lazy dog and keeps running for a while longer today",

@@ -1,11 +1,20 @@
 #!/usr/bin/env python3
-"""List the src/main defs that only the specs call.
+"""List the src/main defs that only the specs call, then the src/main files
+that no entry point reaches.
 
 A def counts when some src/test file names it but no src/main file other
 than its own and no perfbench/src file does. Comments are stripped before
 matching; names are matched as whole identifiers, so a def that shares its
 name with an unrelated method (`find`, `run`) is judged by every use of the
-name. This is a report for deciding what code has no product caller, not a
+name.
+
+The def list misses a module whose only caller is itself unreached, so a
+second section walks whole files. The roots are the files with a `def main`
+or `extends App` and the files whose top-level object/class/trait name
+perfbench/src uses; a file is reached when a reached file names one of its
+top-level names, iterated to a fixpoint. Every unreached file is listed.
+
+This is a report for deciding what code has no product caller, not a
 gate: it always exits 0.
 
 Usage:
@@ -18,6 +27,9 @@ import sys
 COMMENT = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*(?:.|\n)*?\*/')
 DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+TOP = re.compile(r"^(?:(?:(?:private|protected)(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*"
+                 r"(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
+ROOT = re.compile(r"\bdef\s+main\s*\(|\bextends\s+App\b")
 
 
 def sources(root):
@@ -47,6 +59,18 @@ def main(argv):
     for path, d in hits:
         print(f"{path}: {d}")
     print(f"{len(hits)} test-only defs")
+
+    tops = {p: set(TOP.findall(t)) for p, t in main_src.items()}
+    reached = {p for p, t in main_src.items() if ROOT.search(t) or tops[p] & bench}
+    frontier = set(reached)
+    while frontier:
+        used = set().union(*(names[p] for p in frontier))
+        frontier = {p for p in main_src if p not in reached and tops[p] & used}
+        reached |= frontier
+    unreached = sorted(os.path.relpath(p, repo) for p in main_src if p not in reached)
+    for path in unreached:
+        print(path)
+    print(f"{len(unreached)} src/main files no entry point reaches")
 
 
 if __name__ == "__main__":
