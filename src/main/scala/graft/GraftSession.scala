@@ -60,18 +60,4 @@ object GraftSession {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
   }
-
-  /** Structural form of the [[releaseCaches]] discipline: run `body` (which
-    * may compose any number of dedup/ANN operators), then release every
-    * persist it left behind — even on failure. The caller decides the
-    * bracket boundary (one logical job), so leak-freedom stops depending on
-    * remembering a manual release call.
-    *
-    * Persisted blocks created BEFORE the bracket are released too — the
-    * engine's persists are session-scoped by design, so nest brackets only
-    * around whole logical jobs, not inside one. `body`'s result must be
-    * materialized (written/collected) before the bracket closes; a lazy
-    * DataFrame that escapes would recompute its unpersisted lineage. */
-  def withCaches[A](spark: SparkSession, blocking: Boolean = false)(body: => A): A =
-    try body finally releaseCaches(spark, blocking)
 }

@@ -125,8 +125,8 @@ object Layout {
     * table written by arrival order (or fragmented by many small appends)
     * is rewritten once so every later scan skips on all `dims`.
     *
-    * The protocol is the stored index's compaction protocol
-    * ([[graft.storage.StoreProtocol]]) at table grain — at every instant
+    * The protocol is [[graft.storage.StoreProtocol]]'s heal / mutex /
+    * swap at table grain — at every instant
     * the table's rows exist in the live tree or the staging tree, never
     * nowhere:
     *

@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
   * Scale: pure per-row expressions, no shuffle, no state.
   */
 object Sampling {
-  import graft.storage.StoreProtocol
 
   /** Stable bucket in [0, buckets) from the md5 of the key column. */
   def hashBucket(key: Column, buckets: Int = 100): Column =
@@ -714,8 +713,8 @@ object Sampling {
     * key value tie on the full (hash, key) sort, so which gets which
     * position is partition-layout-dependent — the duplicates still land
     * deterministically in the SAME shard at an adjacent pair of
-    * positions, but the byte-reproducibility contract of the export
-    * ([[exportShardsJsonl]]) holds only up to that pairwise order. Pass
+    * positions, but the byte-reproducibility of a `partitionBy("shard")`
+    * export holds only up to that pairwise order. Pass
     * a row-unique id (doc id, primary key), not content. Rejects inputs
     * that already carry any of the output/scratch columns (`shard`,
     * `pos`, `ds_*`) instead of silently overwriting them. */
@@ -739,68 +738,6 @@ object Sampling {
       .withColumn("shard", col("ds_shard"))
       .withColumn("pos", col("ds_pos"))
       .drop("ds_key", "ds_h", "ds_shard", "ds_pos")
-  }
-
-  /** Training-export sink: [[deterministicShuffle]] materialized as one
-    * pos-ordered JSONL file per shard directory — the layout a data
-    * loader streams (`shard=K/part-…json`, rows in shuffle order, no
-    * client-side sorting). Each output task holds whole shards
-    * (repartition on the shard key) and sorts by (shard, pos), so a
-    * shard's file is written in position order — Spark's text sinks
-    * preserve partition-iteration order — and the whole export is
-    * reproducible byte-for-byte from (corpus, seed, shards).
-    *
-    * Scale: `shards` output tasks, one sort each of |corpus|/shards rows —
-    * no global sort, no driver materialization; at 100 TB pick shards so
-    * a shard (corpus/shards) fits a loader's streaming budget, exactly the
-    * WebDataset/Megatron sharding contract. */
-  def exportShardsJsonl(df: DataFrame, key: Column, seed: String,
-                        shards: Int, path: String): Unit = {
-    deterministicShuffle(df, key, seed, shards)
-      .repartition(shards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .write.mode("overwrite")
-      // per-write overrides pin the contract against session conf drift:
-      // STATIC overwrite clears the whole export (dynamic would keep stale
-      // shard dirs when the shard count shrinks — a loader globbing
-      // shard=* would mix two exports), and maxRecordsPerFile=0 keeps one
-      // file per shard even if the session sets a split threshold
-      .option("partitionOverwriteMode", "static")
-      .option("maxRecordsPerFile", 0)
-      .partitionBy("shard").json(path)
-    writeExportManifest(df.sparkSession, path)
-  }
-
-  /** Export manifest: one JSON line per shard — `{"shard","file","rows",
-    * "bytes","md5"}` — written as `_manifest.jsonl` at the export root
-    * (`_`-prefixed: invisible to Spark readers of the same directory).
-    * This is the validation contract a loader needs to check a transfer:
-    * byte sizes and md5s are of the EXACT file bytes, and `rows` is the
-    * newline count of those same bytes, so all three come from ONE
-    * streamed pass over the export (never a re-pass over the corpus),
-    * distributed one task per shard. The manifest itself is |shards|
-    * lines — metadata scale — assembled on the driver and published by
-    * tmp-write + rename ([[graft.storage.StoreProtocol]]): a crash
-    * mid-write leaves no manifest, never a truncated one whose lines
-    * still parse. */
-  def writeExportManifest(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val shardFiles = fs.listStatus(root)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("shard="))
-      .map { d =>
-        val files = fs.listStatus(d.getPath)
-          .filter(_.getPath.getName.endsWith(".json"))
-        require(files.length == 1,
-          s"expected exactly one JSONL file in ${d.getPath} (the " +
-            s"maxRecordsPerFile=0 single-file contract), found ${files.length}")
-        (d.getPath.getName, files.head.getPath.toString)
-      }.sortBy(_._1.stripPrefix("shard=").toInt).toSeq
-    val lines = StoreProtocol.digest(spark, shardFiles, StoreProtocol.NewlineRows)
-      .map(d => StoreProtocol.manifestLine(s""""shard":${d.dir.stripPrefix("shard=")}""", d))
-    StoreProtocol.publish(fs, new Path(root, StoreProtocol.ManifestName), lines)
   }
 
   /** EXACTLY-k budgeted selection by score — the quality-filter step that

@@ -456,7 +456,7 @@ object Similarity {
 
   /** SQ-encode the corpus: each vector compresses to one `sq_code`
     * array<int> of 0…255 grid buckets — round((x−mn)·255/(mx−mn)),
-    * clamped so out-of-train-range values (appends after training) still
+    * clamped so out-of-train-range values (vectors encoded later) still
     * encode, constant dimensions (mx == mn) code 0. Pure row-local
     * expressions over dim-sized literal ranges: no shuffle, no join,
     * integer-deterministic. */
@@ -695,32 +695,12 @@ object Similarity {
         col("rk").cast("long").as("rk"))
   }
 
-  /** MATERIALIZE the IVF+PQ index: write [[ivfPqEncode]]'s relation as
-    * parquet `partitionBy("cluster")` — the claim `ivfTopK`/`ivfPqTopK`
-    * make about 100 TB deployments ("the index is *stored* clustered, so
-    * a probe is an I/O bound") as an actual code path. Layout: one
-    * directory per coarse cluster holding (neighbor_id, code_0…code_{m-1})
-    * at m bytes of code per vector; rewritten atomically (overwrite).
-    *
-    * `withVectors = true` (the default) also stores the raw vector as an
-    * `embedding` column — the FAISS-IVFFlat shape, which lets the SAME
-    * clustered layout serve every tier by COLUMN pruning on top of the
-    * partition pruning: the ADC probe ([[ivfPqTopKIndexed]]) reads only
-    * the code columns (spec-asserted: its scan's ReadSchema excludes
-    * `embedding`), the exact-cosine probe ([[ivfTopKIndexed]]) and
-    * [[semanticDedupIndexed]] read the vector and ignore the codes, and an
-    * exact rerank over ADC candidates has the vectors in place. Parquet is
-    * columnar, so the unread columns cost disk, never probe I/O; a
-    * code-only deployment sets `withVectors = false` (appends must then
-    * use the same setting — parquet files in one index must agree on
-    * schema). */
   /** Exchange an encoded relation onto the cluster layout before a
     * partitionBy write. A dynamic-partition write without it emits up to
     * (write tasks × k) files — at k ≥ 1024 on a wide cluster that is
-    * millions of files per rewrite, and every append batch seeds
-    * (tasks × touched clusters) fragments for compaction to clean.
-    * Hash-partitioning on (cluster, salt) bounds the count at k×F total
-    * (each (cluster, salt) combo lands in exactly one task), where
+    * millions of files per rewrite. Hash-partitioning on (cluster, salt)
+    * bounds the count at k×F total (each (cluster, salt) combo lands in
+    * exactly one task), where
     * F = max(1, shuffle width / k) keeps write parallelism ≥ the session
     * width when k is small. The salt is a deterministic id hash — layout
     * only, row content and cluster values are untouched.
@@ -741,6 +721,23 @@ object Similarity {
       .sortWithinPartitions(col("cluster"), col(idCol))
   }
 
+  /** MATERIALIZE the IVF+PQ index: write [[ivfPqEncode]]'s relation as
+    * parquet `partitionBy("cluster")` — the claim `ivfTopK`/`ivfPqTopK`
+    * make about 100 TB deployments ("the index is *stored* clustered, so
+    * a probe is an I/O bound") as an actual code path. Layout: one
+    * directory per coarse cluster holding (neighbor_id, code_0…code_{m-1})
+    * at m bytes of code per vector; rewritten atomically (overwrite).
+    *
+    * `withVectors = true` (the default) also stores the raw vector as an
+    * `embedding` column — the FAISS-IVFFlat shape, which lets the SAME
+    * clustered layout serve every tier by COLUMN pruning on top of the
+    * partition pruning: the ADC probe ([[ivfPqTopKIndexed]]) reads only
+    * the code columns (spec-asserted: its scan's ReadSchema excludes
+    * `embedding`), the exact-cosine probe ([[ivfTopKIndexed]]) and
+    * [[semanticDedupIndexed]] read the vector and ignore the codes, and an
+    * exact rerank over ADC candidates has the vectors in place. Parquet is
+    * columnar, so the unread columns cost disk, never probe I/O; a
+    * code-only deployment sets `withVectors = false`. */
   def ivfPqIndexWrite(corpus: DataFrame, path: String,
                       coarse: Array[Array[Double]],
                       codebooks: Array[Array[Array[Double]]],
@@ -751,348 +748,28 @@ object Similarity {
       coarse.length)
       .write.mode("overwrite").partitionBy("cluster").parquet(path)
 
-  /** APPEND a batch into an existing clustered index: new vectors encode
-    * against the SAME coarse centroids + codebooks and land as extra files
-    * inside their cluster directories — the nightly-ingest shape (no index
-    * rewrite; at 100 TB a rewrite is a full-corpus job, an append is
-    * |batch|). Quantizers are frozen by design: re-training them would
-    * silently re-shape every EXISTING cluster/code, so index growth beyond
-    * the quantizers' training distribution is a rebuild
-    * ([[ivfPqIndexWrite]]), the same contract FAISS add() makes.
-    * Spec-asserted: search over (write A, append B) ≡ search over the
-    * union written at once ≡ the in-memory path. */
-  def ivfPqIndexAppend(batch: DataFrame, path: String,
-                       coarse: Array[Array[Double]],
-                       codebooks: Array[Array[Array[Double]]],
-                       idCol: String = "vec_id", vecCol: String = "embedding",
-                       withVectors: Boolean = true): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same mutual-exclusion protocol as [[ivfPqIndexAppendOnce]]: anonymous
-    // files landed mid-swap would be destroyed by the crash-heal's
-    // retired-copy restore with no replay to heal them, so this path needs
-    // the guard even more than the idempotent one
-    StoreProtocol.withAppendLease(fs, root, compacting(root)) {
-      // a stamped manifest must follow EVERY mutation path, not just the
-      // idempotent one: snapshot the listing, land the batch, merge rows for
-      // exactly the files the write added (Spark's append names them
-      // anonymously, so the delta comes from the listing, not a prefix)
-      val manifest = new Path(root, StoreProtocol.ManifestName)
-      val stamped = fs.exists(manifest)
-      val before: Set[String] =
-        if (stamped) indexDataFiles(fs, root).map(_._2).toSet else Set.empty
-      clusteredLayout(
-        ivfPqEncode(batch, coarse, codebooks, idCol, vecCol, keepVec = withVectors),
-        coarse.length)
-        .write.mode("append").partitionBy("cluster").parquet(path)
-      if (stamped) {
-        val added = indexDataFiles(fs, root).filterNot(f => before(f._2))
-        StoreProtocol.publish(fs, manifest,
-          (StoreProtocol.readLines(fs, manifest) ++ manifestRows(spark, added)).sorted)
-      }
-    }
-  }
-
-  /** IDEMPOTENT append for replayable writers (a Structured Streaming
-    * `foreachBatch` sink, say): the same `batchId`
-    * presented twice lands its rows exactly once, which upgrades the
-    * sink's delivery from at-least-once to effectively exactly-once —
-    * Structured Streaming replays a crashed micro-batch under the SAME id
-    * with the SAME rows, so idempotence here is all that's missing.
-    *
-    * Protocol (all hidden from readers — `_`-prefixed paths are invisible
-    * to Spark's file listing):
-    *   1. if the commit marker `_batches/batch-<id>` exists, the batch
-    *      already landed — skip (the replay fast path);
-    *   2. encode into a private staging dir `<path>_batch<id>` with
-    *      overwrite semantics (a half-written previous attempt is simply
-    *      rewritten);
-    *   3. scrub any residue a crashed attempt left in the live cluster
-    *      dirs (both final `b<id>_*.parquet` names and `_`-prefixed
-    *      in-progress names), then land each staged file in TWO phases:
-    *      first rename it to an invisible in-progress name
-    *      `_b<id>_<n>.parquet.inprogress` INSIDE the live cluster dir —
-    *      on an object store rename is copy+delete, and this is where the
-    *      bytes move, invisibly (Spark's file listing skips `_` paths) —
-    *      then rename in-directory to the final `b<id>_<n>.parquet`;
-    *   4. write the marker, drop staging.
-    * A crash anywhere before 4 replays into the same deterministic names
-    * after the scrub — never a duplicate row, and never a reader-visible
-    * partially-copied file: the cross-directory byte move happens under an
-    * underscore name no probe ever lists. The contract survives a
-    * compaction running BETWEEN the crash and the replay, too:
-    * [[ivfPqIndexCompact]] deletes un-markered batch files before
-    * rewriting anything (folding them into anonymous part files would
-    * blind this scrub and land the replay twice). Markers tie the index to ONE
-    * checkpoint lineage: restarting a stream with a fresh checkpoint
-    * restarts batch ids at 0, so pair a fresh checkpoint with a fresh
-    * index (or a rebuild), exactly as foreachBatch's own idempotence
-    * guidance prescribes. Like the indexed probes, appends refuse to start
-    * while a compaction staging dir exists — landing files mid-swap risks
-    * the crash-heal destroying them while the batch marker survives to
-    * suppress the replay.
-    *
-    * The append↔compaction exclusion is MECHANICAL, not check-time
-    * best-effort: the append raises a lease file (`_leases/lease-<uuid>`,
-    * `_`-prefixed so readers never see it) BEFORE checking for the
-    * compaction staging, and [[ivfPqIndexCompact]] raises its staging dir
-    * BEFORE scanning for leases — the mirror image. Whatever the
-    * interleaving, at least one side observes the other's artifact and
-    * fails fast, so a compaction can no longer slip into the gap between
-    * this append's guard check and its renames (the round-13 TOCTTOU
-    * window). The lease is dropped on every exit, including failure — a
-    * failed landing is un-markered and the replay heals it; only a
-    * KILLED JVM leaves a lease behind, which compaction treats as
-    * crashed once it exceeds its staleness bound and scrubs (the
-    * un-markered files it vouched for are scrubbed by the same call).
-    * Both sides backing off simultaneously is possible (two fail-fast
-    * errors, no progress) — retry; neither ever proceeds unsafely.
-    * Returns false on the skip path. */
-  def ivfPqIndexAppendOnce(batch: DataFrame, path: String, batchId: Long,
-                           coarse: Array[Array[Double]],
-                           codebooks: Array[Array[Array[Double]]],
-                           idCol: String = "vec_id", vecCol: String = "embedding",
-                           withVectors: Boolean = true): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // replay fast path FIRST: an already-landed batch writes nothing, so
-    // a streaming restart that replays it during a (crashed) compaction
-    // window must return false, not throw — the maintenance-window guard
-    // below protects WRITES, and a replay performs none.
-    val marker = new Path(new Path(root, "_batches"), s"batch-$batchId")
-    if (fs.exists(marker)) return false
-    // writes observe the SAME maintenance window as probes: a live (or
-    // crashed) compaction staging means cluster dirs are mid-swap — files
-    // landed now could sit in a dir the heal is about to delete and
-    // restore from its retired copy, while this batch's commit marker
-    // would survive and suppress the replay: permanent silent row loss
-    StoreProtocol.withAppendLease(fs, root, compacting(root)) {
-      val staging = StoreProtocol.sibling(root, s"_batch$batchId")
-      clusteredLayout(
-        ivfPqEncode(batch, coarse, codebooks, idCol, vecCol, keepVec = withVectors),
-        coarse.length)
-        .write.mode("overwrite").partitionBy("cluster").parquet(staging.toString)
-      val prefix = s"b${batchId}_"
-      clusterFiles(fs, root).map(_._2)
-        .filter(p => p.getName.startsWith(prefix) || p.getName.startsWith(s"_$prefix"))
-        // checked: a residue file the delete silently failed to remove
-        // would later double-count rows next to the fresh landing
-        .foreach(p => require(fs.delete(p, false),
-          s"scrub of crash residue $p failed; aborting the landing — " +
-            "replaying the batch heals"))
-      clusterFiles(fs, staging).filter(_._2.getName.endsWith(".parquet")).groupBy(_._1)
-        .foreach { case (cluster, files) =>
-          files.zipWithIndex.foreach { case ((_, f), i) =>
-            // two-phase: in flight as `_b<id>_<n>.parquet.inprogress`
-            StoreProtocol.land(fs, f, new Path(new Path(root, cluster), s"$prefix$i.parquet"))
-          }
-        }
-      // maintain a stamped manifest BEFORE the commit marker: batch-keyed
-      // file names make the merge idempotent (drop this batch's rows, add
-      // the fresh ones), and marker-after-manifest means a crash between
-      // them replays the whole landing INCLUDING the re-merge — the marker
-      // never vouches for files the manifest doesn't describe
-      val manifest = new Path(root, StoreProtocol.ManifestName)
-      if (fs.exists(manifest)) {
-        val landed = indexDataFiles(fs, root)
-          .filter(f => new Path(f._2).getName.startsWith(prefix))
-        val kept = StoreProtocol.readLines(fs, manifest)
-          .filterNot(manifestLineInBatch(_, batchId))
-        StoreProtocol.publish(fs, manifest,
-          (kept ++ manifestRows(spark, landed)).sorted)
-      }
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, true).close()
-      fs.delete(staging, true)
-      true
-    }
-  }
-
-  /** COMPACT a grown index: every append ([[ivfPqIndexAppend]],
-    * [[ivfPqIndexAppendOnce]]) lands new FILES in the
-    * cluster directories, and at nightly-batch cadence a year of ingest is
-    * thousands of small files per cluster — each probe then pays file-open
-    * and footer-read overhead per file, the classic small-files tax.
-    * Compaction rewrites only the cluster directories whose file count
-    * exceeds `maxFilesPerCluster` down to ONE file each (hash-partitioned
-    * by cluster, so each cluster lands in exactly one task's output), with
-    * NO re-encoding — no quantizer passes, pure I/O, |dirty clusters|
-    * work, not |index|.
-    *
-    * The rewrite stages into `<path>_compacting/fresh` and then swaps each
-    * dirty cluster directory by rename, retiring the old copy INTO the
-    * staging dir first — so at every instant each cluster's rows exist in
-    * the live tree or the staging tree (or both), never nowhere. A crashed
-    * run is healed on the next call before anything else happens: every
-    * `retired_cluster=N` still in staging is renamed back over its live
-    * twin (deleting the live dir first if present). The retired copy
-    * always wins because a live twin may be a PARTIAL swap — rename on
-    * object stores is copy+delete, not atomic — while rolling back a swap
-    * that completed merely discards a redundant rewrite of the same rows;
-    * the next compaction redoes it.
-    *
-    * Renames are per-cluster, not index-atomic, so writers and probes are
-    * excluded MECHANICALLY for the duration: the staging dir doubles as
-    * the maintenance mutex. It is raised FIRST, and only then are append
-    * leases scanned — the mirror image of the appenders' lease-then-check
-    * order ([[ivfPqIndexAppendOnce]]) — so whatever the interleaving, an
-    * in-flight append either sees the staging and fails fast or its lease
-    * is seen here and THIS call backs off (releasing the staging; retry
-    * later). A lease older than `leaseStaleMs` is a killed appender's:
-    * scrubbed, along with its un-markered files (the orphan scrub), and
-    * that batch replays cleanly afterwards. Probes fail fast while the
-    * staging exists and validate their listing against the live tree
-    * besides ([[assertNotCompacting]]); re-plan any DataFrame created
-    * before the compaction. Returns the compacted cluster ids (empty =
-    * nothing dirty; idempotent). */
-  def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession, path: String,
-                        maxFilesPerCluster: Int = 4,
-                        leaseStaleMs: Long = StoreProtocol.StaleMs): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
-    require(maxFilesPerCluster >= 1, s"need maxFilesPerCluster ≥ 1, got $maxFilesPerCluster")
-    require(leaseStaleMs >= 0, s"need leaseStaleMs ≥ 0, got $leaseStaleMs")
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    // heal a crashed previous run, then take the maintenance mutex — the
-    // staging dir — and back off from live append leases
-    // ([[graft.storage.StoreProtocol]]): probes and appends fail fast from
-    // here until the staging delete below
-    val staging = compacting(root)
-    StoreProtocol.heal(fs, root, staging, leaseStaleMs)
-    StoreProtocol.acquireMutex(fs, root, staging, leaseStaleMs)
-    // scrub ORPHANED batch landings before anything is rewritten: a
-    // b<id>_ file (final or in-progress name) whose commit marker is
-    // absent is a crashed append's partial landing — that batch WILL
-    // replay (its marker was never written), and folding its rows into
-    // anonymous compacted part files would blind the replay's prefix
-    // scrub, landing the batch twice. Deleting them re-creates exactly
-    // the state the replay's own scrub would have made; appends running
-    // concurrently are already excluded by the maintenance window.
-    val batchesDir = new Path(root, "_batches")
-    val committed: Set[String] =
-      if (fs.exists(batchesDir))
-        fs.listStatus(batchesDir).map(_.getPath.getName.stripPrefix("batch-")).toSet
-      else Set.empty
-    val BatchFile = "^_?b(\\d+)_.*".r
-    clusterFiles(fs, root).map(_._2).foreach { p =>
-      p.getName match {
-        case BatchFile(id) if !committed.contains(id) =>
-          // checked: a silently-surviving orphan would be folded into
-          // anonymous part files below, blinding the replay's prefix
-          // scrub — the exact double-landing this scrub exists to prevent
-          require(fs.delete(p, false),
-            s"orphan-batch scrub of $p failed; aborting compaction with " +
-              "staging preserved — resolve before retrying")
-        case _ => ()
-      }
-    }
-    val manifestPath = new Path(root, StoreProtocol.ManifestName)
-    val dirty = clusterFiles(fs, root).filter(_._2.getName.endsWith(".parquet"))
-      .groupBy(_._1).collect {
-        case (c, files) if files.length > maxFilesPerCluster => c.stripPrefix("cluster=").toInt
-      }.toSeq.sorted
-    if (dirty.isEmpty) {
-      // a crash that separated a prior mutation's commit point from its
-      // manifest update leaves a stale stamp with no staging left to
-      // heal — the listing compare detects it here, on the next
-      // maintenance call, and a rebuild repairs it (under the mutex, so
-      // no append's merge can interleave with the rebuild)
-      if (fs.exists(manifestPath) && manifestStale(fs, root))
-        ivfPqIndexManifest(spark, path)
-      fs.delete(staging, true)
-      return Nil
-    }
-    // the rewrite lands in a SUBDIR of staging, not staging itself:
-    // Spark's overwrite mode deletes its target before writing, and the
-    // staging dir is the maintenance mutex — deleting it even briefly
-    // would reopen the append/probe window this function just closed
-    val freshRoot = new Path(staging, "fresh")
-    // typed pruning literals (pruneToProbed), NOT raw int isin: with
-    // partition-type inference off the cluster column is string and a
-    // mistyped literal would cast the partition column — a full-index scan
-    // instead of |dirty| directories
-    pruneToProbed(spark.read.parquet(path), dirty.toArray)
-      .repartition(dirty.length, col("cluster"))
-      // preserve the id-sorted row groups the original write laid down
-      // ([[clusteredLayout]]): a compacted cluster must keep serving the
-      // refine tier's pushed-id row-group skipping
-      .sortWithinPartitions(col("cluster"), col("neighbor_id"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(freshRoot.toString)
-    dirty.foreach(c => StoreProtocol.swap(
-      fs, root, staging, s"cluster=$c", new Path(freshRoot, s"cluster=$c")))
-    // a stamped manifest follows the rewrite with |dirty|-proportional
-    // work (compaction's own cost contract): drop the rewritten clusters'
-    // lines, stream only their fresh files. The merge runs BEFORE the
-    // staging delete (the commit point), still under the mutex: a crash
-    // here is rolled back by the next call's heal — retired copies
-    // restored, stamp rebuilt if the listing compare disagrees — so no
-    // append's merge can ever interleave with this one. If the stamp
-    // carried damage BEYOND the rewritten clusters (a crashed prior
-    // update), the listing compare on the merged result catches it and a
-    // full rebuild repairs.
-    if (fs.exists(manifestPath)) {
-      val kept = StoreProtocol.readLines(fs, manifestPath)
-        .filterNot(l => manifestLineCluster(l).exists(dirty.contains))
-      val fresh = indexDataFiles(fs, root)
-        .filter { case (c, _) => dirty.contains(c.stripPrefix("cluster=").toInt) }
-      StoreProtocol.publish(fs, manifestPath, (kept ++ manifestRows(spark, fresh)).sorted)
-      if (manifestStale(fs, root)) ivfPqIndexManifest(spark, path)
-    }
-    fs.delete(staging, true)
-    dirty
-  }
-
-  /** The index's maintenance staging sibling — compaction's mutex, which
-    * appends and probes refuse to run under. */
-  private def compacting(root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    StoreProtocol.sibling(root, "_compacting")
-
   /** TRANSFER MANIFEST for a stored clustered index: one JSON line per
     * data file — `{"cluster","file","rows","bytes","md5"}` — written as
     * `_manifest.jsonl` at the index root (`_`-prefixed: invisible to
-    * Spark readers), the same validation contract
-    * [[graft.operators.Sampling.writeExportManifest]] gives the JSONL
-    * export. A receiver checks a copied index without trusting the
+    * Spark readers). A receiver checks a copied index without trusting the
     * transport: byte counts and md5s are of the exact file bytes (one
     * distributed streamed pass, one task per file, never a corpus
     * re-pass); `rows` comes from the parquet footer of the same file —
     * no data decode. Lines are sorted by (cluster, file) so two stamps of
     * the same bytes are byte-identical.
     *
-    * Lifecycle: stamp on demand (this call — typically right before a
-    * transfer, or after [[ivfPqIndexWrite]]); once stamped, EVERY
-    * mutation path keeps it honest — [[ivfPqIndexAppendOnce]] merges its
-    * batch's file rows in BEFORE writing the commit marker (a replay
-    * after a crash re-merges — batch-keyed file names make the merge
-    * idempotent), [[ivfPqIndexAppend]] merges the listing delta its
-    * anonymous-named write added, and [[ivfPqIndexCompact]] merges the
-    * rewritten clusters' rows (|dirty|-proportional, preserving
-    * compaction's cost contract) and — because a crash can separate any
-    * mutation's commit point from its manifest update — repairs a stamp
-    * whose file list disagrees with the live listing (metadata-scale
-    * compare) by a full rebuild on the next maintenance call. An index
-    * never stamped pays zero manifest cost. Consistency matches the
-    * index's own contract: authoritative at quiescence; mid-crash it can
-    * lag exactly as far as the index does, and the crash-heal that rolls
-    * clusters back to their retired copies rolls the manifest's truth
-    * back with them (retired copies ARE the files the manifest
-    * describes). The
-    * streaming `_batches/` markers are deliberately NOT manifest rows —
-    * they are checkpoint-lineage state, not transferable data; a receiver
-    * continuing ingest pairs the copied index with a fresh checkpoint
-    * (see [[ivfPqIndexAppendOnce]]). */
+    * Stamp on demand (this call — typically right before a transfer,
+    * after [[ivfPqIndexWrite]]); an index never stamped pays zero
+    * manifest cost. A rewrite of the index leaves the stamp describing
+    * the old files — re-stamp after it. */
   def ivfPqIndexManifest(spark: org.apache.spark.sql.SparkSession,
                          path: String): Unit = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     StoreProtocol.publish(fs, new Path(root, StoreProtocol.ManifestName),
-      manifestRows(spark, indexDataFiles(fs, root)))
+      StoreProtocol.digest(spark, indexDataFiles(fs, root))
+        .map(d => StoreProtocol.manifestLine(s""""cluster":"${d.dir}"""", d)))
   }
 
   /** RECEIVER-SIDE verification of a transferred index against its
@@ -1116,10 +793,7 @@ object Similarity {
     * Cost: |index| bytes streamed once, distributed; driver work is
     * metadata-scale. Run it on the RECEIVING cluster after the copy —
     * the whole point is to not trust the transport (or the sender's
-    * listing) — then serve probes from the verified tree. The `_batches`
-    * checkpoint markers and `_leases` are deliberately outside the
-    * contract: they are lineage state, not transferable data
-    * ([[ivfPqIndexManifest]]). */
+    * listing) — then serve probes from the verified tree. */
   def ivfPqIndexVerify(spark: org.apache.spark.sql.SparkSession,
                        path: String): Seq[String] = {
     import org.apache.hadoop.fs.Path
@@ -1142,7 +816,7 @@ object Similarity {
       .map(f => s"EXTRA $f: data file on disk that the manifest never " +
         "described — a reader WOULD scan it; remove it or re-stamp deliberately")
     val common = (expected.keySet intersect live.keySet).toSeq.sorted
-    val corrupt = StoreProtocol.digest(spark, common.map(live), StoreProtocol.FooterRows)
+    val corrupt = StoreProtocol.digest(spark, common.map(live))
       .flatMap { d =>
         val e = expected(d.file)
         val faults =
@@ -1159,64 +833,18 @@ object Similarity {
     malformed ++ missing ++ extra ++ corrupt
   }
 
-  /** (cluster dir name, file) of every file in `dir`'s `cluster=N`
-    * directories, sorted by cluster then name. */
-  private def clusterFiles(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: org.apache.hadoop.fs.Path): Seq[(String, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster="))
-      .flatMap(d => fs.listStatus(d.getPath).map(f => (d.getPath.getName, f.getPath)))
-      .toSeq.sortBy { case (c, p) => (c, p.getName) }
-
-  /** (cluster dir name, absolute path) of every live data file, sorted —
-    * the listing both the manifest and its staleness check derive from. */
+  /** (cluster dir name, absolute path) of every live data file in
+    * `root`'s `cluster=N` directories, sorted by cluster then name — the
+    * listing both the manifest and its verification derive from. */
   private def indexDataFiles(fs: org.apache.hadoop.fs.FileSystem,
                              root: org.apache.hadoop.fs.Path): Seq[(String, String)] =
-    clusterFiles(fs, root)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("cluster="))
+      .flatMap(d => fs.listStatus(d.getPath).map(f => (d.getPath.getName, f.getPath)))
       .filter { case (_, p) => p.getName.endsWith(".parquet") && !p.getName.startsWith("_") }
+      .toSeq.sortBy { case (c, p) => (c, p.getName) }
       .map { case (c, p) => (c, p.toString) }
-
-  /** Cluster id a manifest line describes, parsed from the `cluster=N`
-    * directory of its `file` field — None on a line that fails to parse,
-    * which merge filters treat as "keep": a kept-but-wrong line disagrees
-    * with the live listing and the [[manifestStale]] compare triggers a full
-    * rebuild, so the conservative default self-heals instead of silently
-    * dropping a row another file still needs. */
-  private def manifestLineCluster(line: String): Option[Int] =
-    StoreProtocol.manifestFile(line).map(_.split('/').head)
-      .filter(_.startsWith("cluster=")).flatMap(_.stripPrefix("cluster=").toIntOption)
-
-  /** Does this manifest line describe a file landed by `batchId`? Parsed
-    * field, not substring: the file NAME comes out of the `file` field
-    * and is matched against the exact `b<id>_` prefix, underscore
-    * included — so batch 1 can never claim batch 12's files, and the
-    * invariant survives a future file-name or line-format change (an
-    * unparseable line is kept, and the staleness rebuild repairs any
-    * disagreement). */
-  private def manifestLineInBatch(line: String, batchId: Long): Boolean =
-    StoreProtocol.manifestFile(line).exists(_.split('/').last.startsWith(s"b${batchId}_"))
-
-  /** Does the stamped manifest's file list disagree with the live
-    * listing? Metadata-scale (names only, no bytes) — the repair signal
-    * for a stamp orphaned by a crash between an index mutation's commit
-    * point and its manifest update. */
-  private def manifestStale(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val live = indexDataFiles(fs, root)
-      .map { case (c, p) => s"$c/${new Path(p).getName}" }.toSet
-    val listed = StoreProtocol.readLines(fs, new Path(root, StoreProtocol.ManifestName))
-      .flatMap(StoreProtocol.manifestFile).toSet
-    live != listed
-  }
-
-  /** (cluster dir name, absolute file) → manifest lines, one distributed
-    * pass ([[graft.storage.StoreProtocol.digest]]). */
-  private def manifestRows(spark: org.apache.spark.sql.SparkSession,
-                           files: Seq[(String, String)]): Seq[String] =
-    StoreProtocol.digest(spark, files, StoreProtocol.FooterRows)
-      .map(d => StoreProtocol.manifestLine(s""""cluster":"${d.dir}"""", d))
 
   /** IVF+PQ top-k over a MATERIALIZED index (read back from
     * [[ivfPqIndexWrite]]'s layout): the probed cluster ids are computed
@@ -1278,7 +906,6 @@ object Similarity {
                           codebooks: Array[Array[Array[Double]]], nprobe: Int,
                           allow: Option[DataFrame], idCol: String,
                           vecCol: String): (DataFrame, Array[Int], DataFrame) = {
-    assertNotCompacting(index)
     val q = prepProbedQueries(queries, coarse, codebooks, nprobe, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probed = q.select(col("cluster")).distinct()
@@ -1325,11 +952,11 @@ object Similarity {
     * The fetch is a broadcast semi-join of the shortlist against the
     * probed cluster directories, with the shortlist ids also PUSHED into
     * the parquet scan (≤ [[RefineFetchPushdownMax]] ids): index files are
-    * id-sorted within each cluster ([[clusteredLayout]]; compaction
-    * preserves it), so the row-group min/max stats on `neighbor_id` make
-    * the pushed In skip row groups — the columnar analog of FAISS's
-    * in-memory id lookup. Serving-shaped by design (the shortlist and the
-    * query batch ride broadcasts); corpus-scale query batches belong on
+    * id-sorted within each cluster ([[clusteredLayout]]), so the
+    * row-group min/max stats on `neighbor_id` make the pushed In skip row
+    * groups — the columnar analog of FAISS's in-memory id lookup.
+    * Serving-shaped by design (the shortlist and the query batch ride
+    * broadcasts); corpus-scale query batches belong on
     * [[ivfTopKIndexed]]. Output schema matches [[ivfTopKIndexed]]:
     * (query_id, neighbor_id, cosine, rk). */
   def ivfPqTopKRefined(queries: DataFrame, index: DataFrame, k: Int,
@@ -1518,7 +1145,6 @@ object Similarity {
                                          idCol: String = "vec_id",
                                          vecCol: String = "embedding"): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
-    assertNotCompacting(index)
     require(index.columns.contains("embedding"),
       "semanticDecontaminateIndexedRadius needs an index written " +
         "withVectors = true (no embedding column found)")
@@ -1584,8 +1210,8 @@ object Similarity {
     * `withVectors = true` (the truth set and the refine tier both read
     * stored vectors). Each evaluated cell leaves the refine tier's
     * sample-scale persists behind per the repo's session-scoped cache
-    * convention — bracket a tuning session with
-    * [[graft.GraftSession.withCaches]]. */
+    * convention — call [[graft.GraftSession.releaseCaches]] after a
+    * tuning session. */
   def tuneProbe(sample: DataFrame, index: DataFrame, k: Int,
                 coarse: Array[Array[Double]],
                 codebooks: Array[Array[Array[Double]]],
@@ -1749,7 +1375,6 @@ object Similarity {
     require(index.columns.contains("embedding"),
       "tuneRadiusProbe needs an index written withVectors = true " +
         "(no embedding column found)")
-    assertNotCompacting(index)
     requireNonNullIds(suite, idCol, "suite", "tuneRadiusProbe")
     val npCap = math.min(if (maxNprobe > 0) maxNprobe else coarse.length,
       coarse.length)
@@ -1800,68 +1425,6 @@ object Similarity {
     }
   }
 
-  /** Fail-fast guard enforcing [[ivfPqIndexCompact]]'s maintenance-window
-    * contract: a probe racing a compaction could read a cluster mid-swap
-    * (its directory momentarily retired into staging), silently missing
-    * rows. Every indexed probe calls this at plan-build time; three
-    * checks together make every probe↔compaction interleaving fail fast
-    * instead of silently partial:
-    *
-    *   1. no `_compacting` staging sibling may exist for any of the
-    *      index's file-source roots — an in-flight compaction OR a
-    *      crashed one awaiting heal (one fs.exists per root);
-    *   2. the DataFrame's file LISTING must cover every live cluster
-    *      directory that holds data — a listing taken mid-swap (after a
-    *      cluster was retired, before the staging delete was observable)
-    *      is missing that cluster entirely, and once the swap completes
-    *      check 1 alone can no longer see anything wrong. This also
-    *      rejects a pre-append listing once the append lands a NEW
-    *      cluster dir — the index mutated; re-read it (the documented
-    *      contract). Metadata-scale: one listing pass, no bytes;
-    *   3. `spark.sql.files.ignoreMissingFiles` must be false (the
-    *      default) — a compaction that swaps AFTER the listing renames
-    *      the listed files away, and execution must then throw
-    *      FileNotFoundException, not silently skip the vanished files.
-    *
-    * In-memory relations have no file roots and pass through untouched. */
-  private def assertNotCompacting(index: DataFrame): Unit = {
-    val conf = index.sparkSession.sparkContext.hadoopConfiguration
-    val relations = index.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case hfs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            Seq((hfs.location.rootPaths, hfs.location.inputFiles))
-          case _ => Nil
-        }
-    }.flatten
-    relations.foreach { case (roots, listed) =>
-      // cluster dirs named in this relation's (plan-time) listing
-      lazy val listedClusters: Set[String] = listed.iterator.flatMap { f =>
-        val parent = new org.apache.hadoop.fs.Path(f).getParent
-        if (parent != null && parent.getName.startsWith("cluster=")) Some(parent.getName)
-        else None
-      }.toSet
-      roots.foreach { root =>
-        val fs = root.getFileSystem(conf)
-        StoreProtocol.failIfStaging(fs, root, compacting(root))
-        val missing = indexDataFiles(fs, root).map(_._1).toSet -- listedClusters
-        if (missing.nonEmpty)
-          throw new IllegalStateException(
-            s"index DataFrame's file listing at $root is STALE: live cluster " +
-              s"directories ${missing.toSeq.sorted.mkString(", ")} hold data " +
-              "absent from the plan's listing — the listing raced a " +
-              "compaction swap, or the index was mutated after the read. " +
-              "Re-read the index (spark.read.parquet) and retry.")
-      }
-    }
-    if (relations.nonEmpty &&
-        index.sparkSession.conf.get("spark.sql.files.ignoreMissingFiles", "false") == "true")
-      throw new IllegalStateException(
-        "indexed probes require spark.sql.files.ignoreMissingFiles=false: a " +
-          "compaction swapping after the listing must surface as " +
-          "FileNotFoundException, never as silently skipped files.")
-  }
-
   /** Restrict a stored clustered index to the probed clusters with a
     * STATIC partition-pruning predicate. The pruning literals are typed
     * from the index's actual cluster column: parquet partition-column
@@ -1898,7 +1461,6 @@ object Similarity {
   def ivfTopKIndexed(queries: DataFrame, index: DataFrame, k: Int,
                      centroids: Array[Array[Double]], nprobe: Int = 2,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    assertNotCompacting(index)
     require(index.columns.contains("embedding"),
       "ivfTopKIndexed needs an index written withVectors = true (no embedding column found)")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
@@ -1941,7 +1503,6 @@ object Similarity {
     * (neighbor_id, embedding, cluster), never the PQ codes. */
   def semanticDedupIndexed(index: DataFrame, threshold: Double,
                            idCol: String = "vec_id"): DataFrame = {
-    assertNotCompacting(index)
     require(index.columns.contains("embedding"),
       "semanticDedupIndexed needs an index written withVectors = true (no embedding column found)")
     val assigned = index

@@ -831,14 +831,9 @@ object TextAnalysis {
     * Passing a BENCHMARK suite as `corpus` makes this span-level test-set
     * DECONTAMINATION — the removal counterpart of [[contaminationHits]]'s
     * flagging (cut the leaked passage, keep the document), with the same
-    * machinery and oracle story. Streams via `foreachBatch`: the frozen
-    * corpus makes each doc's result micro-batch-invariant, so per-batch
-    * removal ≡ one batch run over the union (TextAnalysisSpec). Streaming
-    * callers should NOT call this per micro-batch — it rebuilds the
-    * frozen corpus's full gram reduce (the operator's most expensive
-    * stage) every batch; build [[corpusGramHashes]] ONCE, persist it, and
-    * run [[exactSubstrRemoveAgainstGrams]] per batch instead (identical
-    * results, spec-asserted — this overload is just the two composed).
+    * machinery and oracle story. The frozen corpus makes each doc's result
+    * batch-invariant: cleaning two halves of a batch ≡ cleaning the whole
+    * batch (TextAnalysisSpec).
     *
     * The 60-bit gram-hash collision tradeoff documented on
     * [[exactSubstrRemove]] applies identically (a colliding batch gram is
@@ -859,47 +854,27 @@ object TextAnalysis {
   def exactSubstrRemoveAgainst(batch: org.apache.spark.sql.DataFrame,
                                corpus: org.apache.spark.sql.DataFrame,
                                id: String, textCol: String, n: Int = 8,
-                               hashGrams: Boolean = true): org.apache.spark.sql.DataFrame =
-    exactSubstrRemoveAgainstGrams(batch,
-      corpusGramHashes(corpus, id, textCol, n, hashGrams),
-      id, textCol, n, hashGrams)
-
-  /** The frozen corpus's DISTINCT gram keys — the reusable half of
-    * [[exactSubstrRemoveAgainst]], exposed so that repeated callers (a
-    * `foreachBatch` stream decontaminating every micro-batch, a nightly
-    * job over many batches) pay the corpus's window build + self-sized
-    * gram reduce ONCE: persist the returned single-column (`g`)
-    * DataFrame and hand it to [[exactSubstrRemoveAgainstGrams]] per
-    * batch. Without this split the corpus reduce — the operator's
-    * dominant stage (SCALE.md §R16: ~83% of the wall, holder of the only
-    * spilling node) — is silently repaid every micro-batch. */
-  def corpusGramHashes(corpus: org.apache.spark.sql.DataFrame,
-                       id: String, textCol: String, n: Int = 8,
-                       hashGrams: Boolean = true): org.apache.spark.sql.DataFrame = {
-    require(n > 0, s"window length must be positive, got $n")
-    val corpusTok = corpus.select(col(id).as("es_id"), tokens(col(textCol)).as("tk"))
-    ExchangeWidth.widenForJoin(esGramSites(corpusTok, n, hashGrams).select("g"),
-        ExchangeWidth.forScan(corpus, GramReduceTargetBytesPerPartition), col("g"))
-      .distinct()
-  }
-
-  /** [[exactSubstrRemoveAgainst]] with the corpus side pre-reduced: cleans
-    * `batch` against a gram-key relation built by [[corpusGramHashes]]
-    * (single column `g`, same `n` and `hashGrams` — the caller owns that
-    * contract and the relation's persistence lifecycle). Per-call work is
-    * batch-sized only: the batch's gram sites, the attach join (AQE
-    * broadcasts the small side at runtime), and the rebuild. */
-  def exactSubstrRemoveAgainstGrams(batch: org.apache.spark.sql.DataFrame,
-                                    corpusGrams: org.apache.spark.sql.DataFrame,
-                                    id: String, textCol: String, n: Int = 8,
-                                    hashGrams: Boolean = true): org.apache.spark.sql.DataFrame = {
-    require(n > 0, s"window length must be positive, got $n")
-    requireGramRelation(corpusGrams, hashGrams)
+                               hashGrams: Boolean = true): org.apache.spark.sql.DataFrame = {
+    val corpusGrams = corpusGramHashes(corpus, id, textCol, n, hashGrams)
     val tok = batch.select(col(id).as("es_id"), tokens(col(textCol)).as("tk"))
     val batchSites = esGramSites(tok, n, hashGrams)
     val starts = batchSites.join(corpusGrams, Seq("g"))
       .groupBy("es_id").agg(sort_array(collect_list(col("pos"))).as("st"))
     esRebuild(tok, starts, n, id)
+  }
+
+  /** The frozen corpus's DISTINCT gram keys (single column `g`) — the
+    * corpus side of [[exactSubstrRemoveAgainst]] and
+    * [[contaminationReport]]: one window build plus one self-sized gram
+    * reduce. */
+  private def corpusGramHashes(corpus: org.apache.spark.sql.DataFrame,
+                               id: String, textCol: String, n: Int,
+                               hashGrams: Boolean): org.apache.spark.sql.DataFrame = {
+    require(n > 0, s"window length must be positive, got $n")
+    val corpusTok = corpus.select(col(id).as("es_id"), tokens(col(textCol)).as("tk"))
+    ExchangeWidth.widenForJoin(esGramSites(corpusTok, n, hashGrams).select("g"),
+        ExchangeWidth.forScan(corpus, GramReduceTargetBytesPerPartition), col("g"))
+      .distinct()
   }
 
   /** Contamination REPORT — the audit twin of [[exactSubstrRemoveAgainst]]
@@ -931,32 +906,17 @@ object TextAnalysis {
     *
     * Scale shape: identical to [[exactSubstrRemoveAgainst]] with the
     * sides swapped — the corpus (the big side) contributes only its
-    * DISTINCT gram keys via [[corpusGramHashes]] (build it once and call
-    * [[contaminationReportAgainstGrams]] directly when auditing many
-    * suites or re-auditing per ingest); the held-out suite is
-    * eval-sized, so its site build, the attach join (AQE broadcasts the
-    * suite side), and the per-doc stats are all answer-scale. All five
+    * DISTINCT gram keys; the held-out suite is eval-sized, so its site
+    * build, the attach join (AQE broadcasts the suite side), and the
+    * per-doc stats are all answer-scale. All five
     * stats are row-local reads of the sorted start array — the
     * interval-merge scan runs inside one higher-order `aggregate`, no
     * second shuffle, no driver action. */
   def contaminationReport(heldOut: org.apache.spark.sql.DataFrame,
                           corpus: org.apache.spark.sql.DataFrame,
                           id: String, textCol: String, n: Int = 8,
-                          hashGrams: Boolean = true): org.apache.spark.sql.DataFrame =
-    contaminationReportAgainstGrams(heldOut,
-      corpusGramHashes(corpus, id, textCol, n, hashGrams),
-      id, textCol, n, hashGrams)
-
-  /** [[contaminationReport]] with the corpus side pre-reduced by
-    * [[corpusGramHashes]] (same single-column `g` contract as
-    * [[exactSubstrRemoveAgainstGrams]], same caller-owned lifecycle):
-    * per-call work is suite-sized only. */
-  def contaminationReportAgainstGrams(heldOut: org.apache.spark.sql.DataFrame,
-                                      corpusGrams: org.apache.spark.sql.DataFrame,
-                                      id: String, textCol: String, n: Int = 8,
-                                      hashGrams: Boolean = true): org.apache.spark.sql.DataFrame = {
-    require(n > 0, s"window length must be positive, got $n")
-    requireGramRelation(corpusGrams, hashGrams)
+                          hashGrams: Boolean = true): org.apache.spark.sql.DataFrame = {
+    val corpusGrams = corpusGramHashes(corpus, id, textCol, n, hashGrams)
     val tok = heldOut.select(col(id).as("es_id"), tokens(col(textCol)).as("tk"))
     val sites = esGramSites(tok, n, hashGrams)
     val starts = sites.join(corpusGrams, Seq("g"))
@@ -989,27 +949,6 @@ object TextAnalysis {
       size(leaked).cast("long").as("leaked_tokens"),
       spans.as("leaked_spans"),
       maxSpan.as("max_span_tokens"))
-  }
-
-  /** Contract check for a corpusGramHashes relation: single column `g`
-    * AND the key type matching the caller's `hashGrams` flag. The type
-    * half matters because a mismatch does not fail — Spark coerces a
-    * bigint↔string equi-join to double, where 60-bit md5Long keys lose
-    * bits past the 53-bit mantissa (innocent spans cut) and string grams
-    * cast to null (nothing cut) — silent wrong output in both directions,
-    * exactly what a fail-fast guard exists to prevent. */
-  private def requireGramRelation(corpusGrams: org.apache.spark.sql.DataFrame,
-                                  hashGrams: Boolean): Unit = {
-    require(corpusGrams.columns.toSeq == Seq("g"),
-      s"corpusGrams must be the single-column (g) relation built by " +
-        s"corpusGramHashes, got columns ${corpusGrams.columns.mkString(", ")}")
-    val gType = corpusGrams.schema("g").dataType
-    val expected = if (hashGrams) org.apache.spark.sql.types.LongType
-      else org.apache.spark.sql.types.StringType
-    require(gType == expected,
-      s"corpusGrams keys are $gType but hashGrams=$hashGrams expects " +
-        s"$expected — build and consume the relation with the SAME " +
-        s"hashGrams flag (a coerced join would corrupt the keys silently)")
   }
 
   /** Shared gram-site build for the ExactSubstr family: (es_id, pos, g)

@@ -5,20 +5,20 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The on-disk commit protocol every mutating writer in this engine shares:
-  * the stored ANN index ([[graft.operators.Similarity]]: appends,
-  * compaction, transfer manifest), the Z-order table rewrite
-  * ([[graft.operators.Layout.optimizeZordered]]) and the JSONL export
-  * manifest ([[graft.operators.Sampling.writeExportManifest]]). Four
-  * pieces, each existing once:
+/** The on-disk commit protocol of this engine's stored artifacts: the
+  * stored ANN index's transfer manifest
+  * ([[graft.operators.Similarity.ivfPqIndexManifest]],
+  * [[graft.operators.Similarity.ivfPqIndexVerify]]) and the Z-order table
+  * rewrite ([[graft.operators.Layout.optimizeZordered]]). Four pieces,
+  * each existing once:
   *
   *   - MANIFESTS — `_`-prefixed line files (invisible to Spark readers):
-  *     [[readLines]], the line format [[manifestLine]] and its field parse
-  *     ([[parseManifestLine]], [[manifestFile]]), and the atomic
+  *     [[readLines]], the line format [[manifestLine]] and its parse
+  *     ([[parseManifestLine]]), and the atomic
   *     tmp-write-then-rename [[publish]];
   *   - the FILE DIGEST — [[digest]]: one distributed streamed md5 +
-  *     byte-count pass, one task per file, with the row count read per
-  *     format (newlines for JSONL, the footer for parquet);
+  *     byte-count pass, one task per file, with the row count read from
+  *     the parquet footer;
   *   - EXCLUSION — the maintenance staging dir is a [[sibling]] of the
   *     normalized root and doubles as the mutex ([[acquireMutex]]); writers
   *     hold an append lease ([[withAppendLease]]). The appender raises its
@@ -78,7 +78,7 @@ object StoreProtocol {
 
   /** One manifest line: `{<lead>,"file","rows","bytes","md5"}`, where `lead`
     * is the caller's already-JSON partition field (`"cluster":"cluster=3"`
-    * for the index, `"shard":3` for the export). Fixed formatting, so two
+    * for the index). Fixed formatting, so two
     * stamps of the same bytes are byte-identical. Stamping requires a
     * readable row count — a corrupt live file must fail the stamp, not be
     * recorded as truth. */
@@ -100,25 +100,13 @@ object StoreProtocol {
     * (a damaged manifest copy). */
   def parseManifestLine(line: String): Option[ManifestEntry] =
     for {
-      f <- manifestFile(line)
+      f <- FileField.findFirstMatchIn(line).map(_.group(1))
       r <- RowsField.findFirstMatchIn(line).map(_.group(1).toLong)
       b <- BytesField.findFirstMatchIn(line).map(_.group(1).toLong)
       m <- Md5Field.findFirstMatchIn(line).map(_.group(1))
     } yield ManifestEntry(f, r, b, m)
 
-  /** The `file` field alone (`<dir>/<name>`) — what merges and the listing
-    * compare key on. */
-  def manifestFile(line: String): Option[String] =
-    FileField.findFirstMatchIn(line).map(_.group(1))
-
   // ---------------------------------------------------------- file digest --
-
-  /** How [[digest]] reads a file's row count. */
-  sealed trait Rows
-  /** Newlines in the streamed bytes (JSONL). */
-  case object NewlineRows extends Rows
-  /** The parquet footer of the same file — no data decode. */
-  case object FooterRows extends Rows
 
   /** `rows` is `Left(reason)` when a parquet footer is unreadable (a
     * truncated or corrupted file), so callers decide whether that is fatal
@@ -129,10 +117,10 @@ object StoreProtocol {
   }
 
   /** (partition dir name, absolute file) → one distributed task per file:
-    * the exact bytes streamed once for md5 and byte count, rows per `rows`.
-    * Results come back in input order; the driver holds metadata only. */
-  def digest(spark: SparkSession, files: Seq[(String, String)],
-             rows: Rows): Seq[FileDigest] = {
+    * the exact bytes streamed once for md5 and byte count, rows from the
+    * parquet footer of the same file (no data decode). Results come back
+    * in input order; the driver holds metadata only. */
+  def digest(spark: SparkSession, files: Seq[(String, String)]): Seq[FileDigest] = {
     if (files.isEmpty) return Nil
     val bc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
@@ -142,25 +130,18 @@ object StoreProtocol {
         val p = new Path(file)
         val conf = bc.value.value
         val md = java.security.MessageDigest.getInstance("MD5")
-        val countLines = rows == NewlineRows
         var bytes = 0L
-        var lines = 0L
         val in = p.getFileSystem(conf).open(p)
         val buf = new Array[Byte](1 << 20)
         try {
           var n = in.read(buf)
           while (n > 0) {
             md.update(buf, 0, n); bytes += n
-            if (countLines) {
-              var i = 0
-              while (i < n) { if (buf(i) == '\n') lines += 1; i += 1 }
-            }
             n = in.read(buf)
           }
         } finally in.close()
         val count: Either[String, Long] =
-          if (countLines) Right(lines)
-          else try {
+          try {
             val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
               org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
             try Right(rdr.getRecordCount) finally rdr.close()
@@ -207,21 +188,14 @@ object StoreProtocol {
     fs.mkdirs(lease.getParent)
     fs.create(lease, true).close()
     try {
-      failIfStaging(fs, root, staging)
+      if (fs.exists(staging))
+        throw new IllegalStateException(
+          s"$root is under maintenance ($staging exists): writing mid-swap " +
+            "can lose rows. Retry after the maintenance call returns; if it " +
+            "crashed, calling it again heals first.")
       body
     } finally fs.delete(lease, false)
   }
-
-  /** The reader/writer side of the maintenance window: fail fast while
-    * `staging` exists — a live run or a crashed one awaiting heal. Files
-    * read mid-swap can be missing; files landed mid-swap can die to the
-    * heal's retired-copy restore. */
-  def failIfStaging(fs: FileSystem, root: Path, staging: Path): Unit =
-    if (fs.exists(staging))
-      throw new IllegalStateException(
-        s"$root is being compacted or optimized ($staging exists): reading or " +
-          "writing mid-swap can miss or lose rows. Retry after the maintenance " +
-          "call returns; if it crashed, calling it again heals first.")
 
   /** Take the maintenance mutex: `create(overwrite = false)` on
     * `staging/_mutex` (raising the staging dir implicitly) throws for every
@@ -326,18 +300,5 @@ object StoreProtocol {
     rename(fs, target, old, s"retire rename $target -> $old failed; staging preserved for heal")
     rename(fs, fresh, target, s"swap rename $fresh -> $target failed; staging " +
       "preserved — the next maintenance call heals it")
-  }
-
-  /** Land a staged file at `target` in two phases: the cross-directory
-    * rename — where the bytes move (copy+delete on object stores) —
-    * targets the reader-invisible `_<name>.inprogress` next to `target`;
-    * the in-directory rename then flips the name. A crash leaves at most an
-    * underscore name no reader lists. */
-  def land(fs: FileSystem, staged: Path, target: Path): Unit = {
-    val tmp = new Path(target.getParent, s"_${target.getName}.inprogress")
-    fs.mkdirs(target.getParent)
-    rename(fs, staged, tmp, s"landing rename of $staged to $tmp failed; staging " +
-      "preserved — replaying the write heals")
-    rename(fs, tmp, target, s"landing publish of $tmp failed; replaying the write heals")
   }
 }

@@ -522,24 +522,6 @@ class DedupSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  test("withCaches bracket structurally releases operator persists, even on failure") {
-    val n = graft.GraftSession.withCaches(spark, blocking = true) {
-      minHash(0.8).count()
-    }
-    assert(n >= 0)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "bracket must leave a clean block manager")
-    intercept[RuntimeException] {
-      graft.GraftSession.withCaches(spark, blocking = true) {
-        Dedup.simHashPairs(docs.select(col("doc_id"), col("tok")), "doc_id", "tok")
-          .count()
-        throw new RuntimeException("job failed mid-composition")
-      }
-    }
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "bracket must release persists on the failure path too")
-  }
-
   test("cluster-size histogram: exact counts, docs conserved, redundancy = docs - families") {
     val assign = Seq(
       (1L, "a"), (2L, "a"), (3L, "a"),      // family of 3

@@ -117,15 +117,13 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("round-10 operators accept degenerate input") {
-    // empty corpus through the shuffle/export pair
+    // empty corpus through the shuffle
     val empty = spark.emptyDataset[Long].toDF("id")
     assert(Sampling.deterministicShuffle(empty, col("id"), "s", 4).count() === 0)
     // single row: shard assigned, pos = 1
     val one = Sampling.deterministicShuffle(Seq(7L).toDF("id"), col("id"), "s", 4)
       .select("shard", "pos").as[(Int, Long)].collect()
     assert(one.length === 1 && one.head._2 === 1L && (0 until 4).contains(one.head._1))
-    // compaction of a nonexistent index path is a no-op, not an error
-    assert(Similarity.ivfPqIndexCompact(spark, "/tmp/graft_no_such_index_dir") === Nil)
     // portable minhash on empty input yields no pairs
     val noDocs = spark.emptyDataset[(Long, Seq[String])].toDF("doc_id", "tok")
     assert(Dedup.minHashDedupPortable(noDocs, "doc_id", "tok", 3, 0.8).count() === 0)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.storage.StoreProtocol
 import org.apache.spark.sql.functions._
 
 /** Z-order layout: bit-exactness of the Morton key against a Scala
@@ -117,6 +118,23 @@ class LayoutSpec extends SparkSpec {
       assert(n2 === want.length)
       assert(spark.read.parquet(s"$dir/t")
         .orderBy("l_orderkey", "l_linenumber", "x", "y").collect().sameElements(want))
+      // crash C, the object-store shape: rename is copy+delete there, so a
+      // PARTIAL live twin (one data file of the table) sits next to the
+      // complete retired copy — the retired copy wins. Called through a
+      // trailing-slash path, whose staging is still the SIBLING
+      // `t_optimizing`, never `t/_optimizing` inside the root
+      fs.mkdirs(new Path(s"$dir/t_optimizing"))
+      assert(fs.rename(new Path(s"$dir/t"), new Path(s"$dir/t_optimizing/retired")))
+      val onePart = new java.io.File(s"$dir/t_optimizing/retired").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      assert(new java.io.File(s"$dir/t").mkdir())
+      java.nio.file.Files.copy(onePart.toPath, new java.io.File(s"$dir/t", onePart.getName).toPath)
+      val n3 = Layout.optimizeZordered(spark, s"$dir/t/",
+        Seq(col("x"), col("y")), 8, numFiles = 4)
+      assert(n3 === want.length, "heal must restore the retired copy, not trust the partial twin")
+      assert(!fs.exists(new Path(s"$dir/t_optimizing")) && !fs.exists(new Path(s"$dir/t/_optimizing")))
+      assert(spark.read.parquet(s"$dir/t")
+        .orderBy("l_orderkey", "l_linenumber", "x", "y").collect().sameElements(want))
       intercept[IllegalArgumentException] {
         Layout.optimizeZordered(spark, s"$dir/absent", Seq(col("x"), col("y")), 8, 4)
       }
@@ -180,6 +198,56 @@ class LayoutSpec extends SparkSpec {
         "the losing call must leave the winner's staging and mutex untouched")
       assert(files === before, "the losing call must not touch the table")
       assert(spark.read.parquet(s"$dir/t").count() === 200L)
+      // the same mutex aged past the staleness bound is a crashed
+      // optimizer's: the next call heals it away and rewrites
+      val longAgo = System.currentTimeMillis() - StoreProtocol.StaleMs - 60000L
+      assert(mutex.setLastModified(longAgo))
+      assert(Layout.optimizeZordered(spark, s"$dir/t", Seq(col("x"), col("y")), 8,
+        numFiles = 4) === 200L)
+      assert(!staging.exists(), "a stale-mutex staging must be healed away")
+      // a live append lease makes the optimizer back off: it releases its
+      // staging and leaves the table untouched
+      val leases = new java.io.File(s"$dir/t/_leases")
+      assert(leases.mkdirs())
+      val lease = new java.io.File(leases, "lease-inflight")
+      assert(lease.createNewFile())
+      val withLease = files
+      val leaseEx = intercept[IllegalStateException](
+        Layout.optimizeZordered(spark, s"$dir/t", Seq(col("x"), col("y")), 8, numFiles = 4))
+      assert(leaseEx.getMessage.contains("lease"), leaseEx.getMessage)
+      assert(!staging.exists(), "a backed-off optimizer must release t_optimizing")
+      assert(files === withLease, "a backed-off optimizer must not touch the table")
+      assert(spark.read.parquet(s"$dir/t").count() === 200L)
+      // the same lease aged past the staleness bound is a killed writer's:
+      // scrubbed, and the rewrite proceeds
+      assert(lease.setLastModified(longAgo))
+      assert(Layout.optimizeZordered(spark, s"$dir/t", Seq(col("x"), col("y")), 8,
+        numFiles = 4) === 200L)
+      assert(!lease.exists(), "the stale lease must be scrubbed")
+      assert(!staging.exists())
+      // the writer side: a lease is raised BEFORE the staging check, and
+      // dropped on every exit
+      val root = new org.apache.hadoop.fs.Path(s"$dir/t")
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val stagingPath = StoreProtocol.sibling(root, "_optimizing")
+      def liveLeases = Option(new java.io.File(s"$dir/t/_leases").listFiles())
+        .getOrElse(Array.empty[java.io.File]).count(_.getName.startsWith("lease-"))
+      assert(staging.mkdirs())
+      var ran = false
+      intercept[IllegalStateException](
+        StoreProtocol.withAppendLease(fs, root, stagingPath) { ran = true })
+      assert(!ran, "a write under a live staging must not run")
+      assert(liveLeases === 0, "a refused write must leave no lease")
+      assert(staging.delete())
+      var during = -1
+      val bodyEx = intercept[RuntimeException](
+        StoreProtocol.withAppendLease(fs, root, stagingPath) {
+          during = liveLeases
+          throw new RuntimeException("write failed")
+        })
+      assert(bodyEx.getMessage === "write failed")
+      assert(during === 1, "exactly one lease is held through the write")
+      assert(liveLeases === 0, "a throwing write must drop its lease")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }

@@ -182,43 +182,6 @@ class SamplingSpec extends SparkSpec {
       "the in-shard rank must never be a global (single-partition) window")
   }
 
-  test("jsonl shard export: one pos-ordered file per shard, loader-replayable") {
-    val rows = (0L until 300L).toDF("id")
-    val dir = java.nio.file.Files.createTempDirectory("shard_export").toString
-    try {
-      Sampling.exportShardsJsonl(rows, col("id"), "s1", shards = 4, dir)
-      val expected = Sampling.deterministicShuffle(rows, col("id"), "s1", 4)
-        .select("id", "shard", "pos").as[(Long, Int, Long)].collect()
-        .groupBy(_._2).map { case (s, rs) => s -> rs.sortBy(_._3).map(_._1).toSeq }
-      val shardDirs = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("shard=")).sortBy(_.getName)
-      assert(shardDirs.map(_.getName.stripPrefix("shard=").toInt).toSet === expected.keySet)
-      shardDirs.foreach { d =>
-        val files = d.listFiles().filter(_.getName.endsWith(".json"))
-        assert(files.length === 1, s"${d.getName} must hold exactly one jsonl file")
-        // the file's PHYSICAL line order must be the shuffle's pos order —
-        // a loader streams it without any client-side sort
-        val ids = java.nio.file.Files.readAllLines(files.head.toPath)
-          .toArray(Array.empty[String]).toSeq
-          .map(l => "\"id\":(\\d+)".r.findFirstMatchIn(l).get.group(1).toLong)
-        assert(ids === expected(d.getName.stripPrefix("shard=").toInt),
-          s"${d.getName} lines must follow shuffle order")
-      }
-      // shrinking the shard count must clear stale shard dirs even when
-      // the SESSION prefers dynamic partition overwrite (the per-write
-      // static option pins the contract)
-      val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      try {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        Sampling.exportShardsJsonl(rows, col("id"), "s1", shards = 2, dir)
-      } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-      val after = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("shard=")).map(_.getName).sorted
-      assert(after.toSeq === Seq("shard=0", "shard=1"),
-        s"a re-export must not leave stale shard dirs, found ${after.mkString(",")}")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("deterministic shuffle: duplicate keys pair in one shard; reserved columns rejected") {
     // the documented precondition: keys must be row-unique. Pinned
     // behavior for violations — duplicates still land deterministically
@@ -245,40 +208,6 @@ class SamplingSpec extends SparkSpec {
         col("id"), "s1", 4)
     }
     assert(clash.getMessage.contains("pos"))
-  }
-
-  test("jsonl shard export writes a _manifest.jsonl that validates the transfer") {
-    val rows = (0L until 300L).toDF("id")
-    val dir = java.nio.file.Files.createTempDirectory("shard_manifest").toString
-    try {
-      Sampling.exportShardsJsonl(rows, col("id"), "s1", shards = 4, dir)
-      val manifest = java.nio.file.Files
-        .readAllLines(new java.io.File(dir, "_manifest.jsonl").toPath)
-        .toArray(Array.empty[String]).toSeq
-      assert(manifest.length === 4, "one manifest line per shard")
-      var totalRows = 0L
-      manifest.foreach { line =>
-        def field(k: String) = s""""$k":([^,}]+)""".r.findFirstMatchIn(line).get.group(1)
-        val file = new java.io.File(dir, field("file").stripPrefix("\"").stripSuffix("\""))
-        assert(file.isFile, s"manifest names a missing file: $file")
-        val bytes = java.nio.file.Files.readAllBytes(file.toPath)
-        assert(bytes.length.toLong === field("bytes").toLong)
-        assert(bytes.count(_ == '\n').toLong === field("rows").toLong)
-        val md5sum = java.security.MessageDigest.getInstance("MD5")
-          .digest(bytes).map("%02x".format(_)).mkString
-        assert(md5sum === field("md5").stripPrefix("\"").stripSuffix("\""))
-        totalRows += field("rows").toLong
-      }
-      assert(totalRows === 300L, "manifest row counts must sum to the corpus")
-      // the manifest is invisible to Spark readers of the export dir
-      assert(spark.read.json(dir).count() === 300L)
-      // a re-export overwrites the manifest consistently with the new layout
-      Sampling.exportShardsJsonl(rows, col("id"), "s1", shards = 2, dir)
-      val again = java.nio.file.Files
-        .readAllLines(new java.io.File(dir, "_manifest.jsonl").toPath)
-        .toArray(Array.empty[String]).toSeq
-      assert(again.length === 2, "re-export must rewrite the manifest")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("topKByScore: exactly k, boundary ties md5-broken, equals the naive sort-limit") {

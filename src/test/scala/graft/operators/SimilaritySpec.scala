@@ -368,18 +368,6 @@ class SimilaritySpec extends SparkSpec {
           fetchScan.get.metadata("PushedFilters"))
       assert(fetchScan.get.partitionFilters.nonEmpty,
         "the fetch scan must keep the probed-cluster partition filter")
-      // append + compact must preserve both the contract and the layout
-      val batch = e.where(col("vec_id") < 10)
-        .withColumn("vec_id", col("vec_id") + lit(100000L))
-      Similarity.ivfPqIndexAppend(batch, dir, coarse, books)
-      assert(Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1).nonEmpty,
-        "the append must have left at least one cluster dirty")
-      assertIdSortedFiles()
-      val index2 = spark.read.parquet(dir)
-      val refined2 = rows(Similarity.ivfPqTopKRefined(q, index2, 3, coarse, books, nprobe = 4, rerank = n + 10))
-      val exact2 = rows(Similarity.ivfTopKIndexed(q, index2, 3, coarse, nprobe = 4))
-      assert(refined2.toSeq === exact2.toSeq,
-        "covering rerank must still equal the exact probe after append + compaction")
       // codes-only index: the refine tier needs the stored vectors
       val bare = java.nio.file.Files.createTempDirectory("refine_bare").toString
       try {
@@ -423,70 +411,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("index append: write half + append half ≡ one full write ≡ in-memory search") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_append").toString
-    try {
-      Similarity.ivfPqIndexWrite(e.where(col("vec_id") % 2 === 0), dir, coarse, books)
-      Similarity.ivfPqIndexAppend(e.where(col("vec_id") % 2 === 1), dir, coarse, books)
-      val q = e.where(col("vec_id") < 5)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-      val appended = rows(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4))
-      val mem = rows(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4))
-      assert(appended.toSeq === mem.toSeq,
-        "a grown index must answer identically to the whole corpus indexed at once")
-      // the exact-cosine tier works off the same appended index too
-      val exact = rows(Similarity.ivfTopKIndexed(q, spark.read.parquet(dir), 3, coarse, nprobe = 4))
-      assert(exact.toSeq === rows(Similarity.ivfTopK(q, e, 3, coarse, nprobe = 4)).toSeq)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("ivfPqIndexAppendOnce: replayed and crash-replayed batches land exactly once") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_once").toString + "/idx"
-    try {
-      val b0 = e.where(col("vec_id") % 2 === 0)
-      val b1 = e.where(col("vec_id") % 2 === 1)
-      assert(Similarity.ivfPqIndexAppendOnce(b0, dir, 0L, coarse, books))
-      assert(Similarity.ivfPqIndexAppendOnce(b1, dir, 1L, coarse, books))
-      val full = spark.read.parquet(dir).count()
-      assert(full === e.count())
-      // replay with the marker in place: skipped outright
-      assert(!Similarity.ivfPqIndexAppendOnce(b1, dir, 1L, coarse, books))
-      assert(spark.read.parquet(dir).count() === full)
-      // crash window: files landed but the marker write never happened —
-      // the replay must scrub the residue and re-land, not duplicate
-      val marker = new java.io.File(s"$dir/_batches/batch-1")
-      assert(marker.exists); assert(marker.delete())
-      assert(Similarity.ivfPqIndexAppendOnce(b1, dir, 1L, coarse, books))
-      assert(spark.read.parquet(dir).count() === full,
-        "a crash-replayed batch must not duplicate its rows")
-      // and the grown index still answers identically to the in-memory path
-      val q = e.where(col("vec_id") < 5)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-      val viaIndex = rows(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4))
-      val mem = rows(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4))
-      assert(viaIndex.toSeq === mem.toSeq)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
   test("indexed probes survive partition-type-inference OFF (cluster arrives as string)") {
     import spark.implicits._
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -521,434 +445,7 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("index compaction: appended small files collapse to one per cluster, search unchanged, idempotent") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("compact_index").toString
-    try {
-      // one write + 5 appends ⇒ every cluster dir accumulates small files
-      Similarity.ivfPqIndexWrite(e.where(col("vec_id") % 6 === 0), dir, coarse, books)
-      (1 to 5).foreach(r =>
-        Similarity.ivfPqIndexAppend(e.where(col("vec_id") % 6 === r), dir, coarse, books))
-      def filesPerCluster: Map[String, Int] =
-        new java.io.File(dir).listFiles().filter(_.isDirectory)
-          .filter(_.getName.startsWith("cluster="))
-          .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-      assert(filesPerCluster.values.exists(_ > 4), "fixture must actually fragment")
-      val q = e.where(col("vec_id") < 5)
-      def top(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-      val before = top(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4))
-      val compacted = Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 4)
-      assert(compacted.nonEmpty, "dirty clusters must be reported")
-      assert(filesPerCluster.values.forall(_ === 1),
-        s"every compacted cluster must hold one file, got $filesPerCluster")
-      assert(!new java.io.File(dir + "_compacting").exists(), "staging dir must be cleaned up")
-      val after = top(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4))
-      assert(after.toSeq === before.toSeq, "compaction must not change a single row")
-      assert(after.toSeq === top(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4)).toSeq)
-      assert(Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 4) === Nil,
-        "a clean index must be a no-op")
-      // crash healing: simulate dying between the two swap renames — the
-      // live cluster dir retired into staging, the fresh copy never swapped
-      // in. The next compact call must restore the retired copy before
-      // touching anything, losing no rows.
-      val someCluster = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster=")).head.getName
-      val staging = new java.io.File(dir + "_compacting")
-      assert(staging.mkdir())
-      assert(new java.io.File(dir, someCluster)
-        .renameTo(new java.io.File(staging, s"retired_$someCluster")))
-      val healed = Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 4)
-      assert(healed === Nil, "healing a crash must not re-compact a clean index")
-      assert(new java.io.File(dir, someCluster).exists(), "retired cluster must be restored")
-      assert(!staging.exists(), "staging must be cleaned after healing")
-      val afterCrash = top(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4))
-      assert(afterCrash.toSeq === before.toSeq, "no rows may be lost across the crash + heal")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("compaction heal restores the retired copy even when a PARTIAL live twin exists; probes fail fast mid-compaction") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("compact_heal").toString
-    try {
-      Similarity.ivfPqIndexWrite(e, dir, coarse, books)
-      val total = spark.read.parquet(dir).count()
-      val q = e.where(col("vec_id") < 5)
-      def top(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-      val before = top(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4))
-      // probe guard: while a staging dir exists (compaction in flight or
-      // crashed), every indexed probe must raise, not answer partially
-      val staging = new java.io.File(dir + "_compacting")
-      assert(staging.mkdir())
-      val idx = spark.read.parquet(dir)
-      Seq(
-        () => Similarity.ivfPqTopKIndexed(q, idx, 5, coarse, books, nprobe = 4),
-        () => Similarity.ivfTopKIndexed(q, idx, 3, coarse, nprobe = 4),
-        () => Similarity.semanticDedupIndexed(idx, 0.35)
-      ).foreach { probe =>
-        val ex = intercept[IllegalStateException](probe())
-        assert(ex.getMessage.contains("compact"), ex.getMessage)
-      }
-      // object-store crash shape: rename is copy+delete there, so a crash
-      // mid fresh->live swap leaves a PARTIAL live cluster dir while the
-      // complete pre-compaction copy sits retired in staging. The heal
-      // must prefer the retired copy — trusting the partial live dir and
-      // deleting staging would silently lose rows.
-      val someCluster = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster=")).head.getName
-      val live = new java.io.File(dir, someCluster)
-      val retired = new java.io.File(staging, s"retired_$someCluster")
-      assert(live.renameTo(retired))
-      // the "partial" live twin: the dir exists but holds no complete data
-      assert(live.mkdir())
-      val healed = Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1000)
-      assert(healed === Nil)
-      assert(!staging.exists(), "staging must be cleaned after healing")
-      assert(spark.read.parquet(dir).count() === total,
-        "the heal must restore the complete retired copy, not trust the partial live dir")
-      val after = top(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4))
-      assert(after.toSeq === before.toSeq)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir + "_compacting"))
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("appends fail fast under a compaction staging; trailing-slash paths heal the SIBLING staging") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("append_guard").toString + "/idx"
-    try {
-      val b0 = e.where(col("vec_id") % 2 === 0)
-      val b1 = e.where(col("vec_id") % 2 === 1)
-      assert(Similarity.ivfPqIndexAppendOnce(b0, dir, 0L, coarse, books))
-      val landed = spark.read.parquet(dir).count()
-      // a live/crashed compaction staging must stop the append BEFORE it
-      // writes anything: files landed mid-swap die to the crash-heal while
-      // the batch marker would survive and suppress the replay
-      val staging = new java.io.File(dir + "_compacting")
-      assert(staging.mkdir())
-      val ex = intercept[IllegalStateException](
-        Similarity.ivfPqIndexAppendOnce(b1, dir, 1L, coarse, books))
-      assert(ex.getMessage.contains("compact"), ex.getMessage)
-      assert(!new java.io.File(s"$dir/_batches/batch-1").exists(),
-        "a refused append must leave no marker")
-      assert(spark.read.parquet(dir).count() === landed,
-        "a refused append must leave no rows")
-      // after the window closes the same batch lands normally
-      assert(staging.delete())
-      assert(Similarity.ivfPqIndexAppendOnce(b1, dir, 1L, coarse, books))
-      assert(spark.read.parquet(dir).count() === e.count())
-      // trailing-slash path: the heal must find the SIBLING staging
-      // (`idx_compacting`), not look inside the root at `idx/_compacting` —
-      // a crashed run's retired cluster would otherwise never be restored
-      val someCluster = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster=")).head.getName
-      assert(staging.mkdir())
-      assert(new java.io.File(dir, someCluster)
-        .renameTo(new java.io.File(staging, s"retired_$someCluster")))
-      val healed = Similarity.ivfPqIndexCompact(spark, dir + "/", maxFilesPerCluster = 1000)
-      assert(healed === Nil)
-      assert(new java.io.File(dir, someCluster).exists(),
-        "heal through a trailing-slash path must restore the retired cluster")
-      assert(!staging.exists(), "sibling staging must be cleaned after healing")
-      assert(spark.read.parquet(dir).count() === e.count())
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("append replay is marker-first; crash residue (final + in-progress names) never reaches readers") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("append_replay").toString + "/idx"
-    try {
-      val b0 = e.where(col("vec_id") % 2 === 0)
-      val b1 = e.where(col("vec_id") % 2 === 1)
-      // trailing-slash path on the WRITE side: staging must be the sibling
-      // `idx_batch0`, never `idx/_batch0` inside the root
-      assert(Similarity.ivfPqIndexAppendOnce(b0, dir + "/", 0L, coarse, books))
-      assert(!new java.io.File(dir, "_batch0").exists(),
-        "append staging must never sit inside the index root")
-      val landed = spark.read.parquet(dir).count()
-      // a replay of an ALREADY-LANDED batch during a (crashed) compaction
-      // window is a no-op and must return false, not throw: the guard
-      // protects writes, and the marker fast path performs none
-      val staging = new java.io.File(dir + "_compacting")
-      assert(staging.mkdir())
-      assert(!Similarity.ivfPqIndexAppendOnce(b0, dir, 0L, coarse, books),
-        "an already-landed batch must replay as a silent skip even mid-window")
-      assert(staging.delete())
-      // object-store crash shape mid-landing: batch 1 died after moving
-      // SOME bytes — a half-copied file under its in-progress name and a
-      // fully-renamed final file both sit in a live cluster dir, marker
-      // never written. Readers must not see the in-progress file at all,
-      // and the replay must scrub BOTH residue shapes, landing once.
-      val cluster = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster=")).head
-      val partial = new java.io.File(cluster, "_b1_0.parquet.inprogress")
-      java.nio.file.Files.write(partial.toPath, Array[Byte](1, 2, 3))
-      assert(spark.read.parquet(dir).count() === landed,
-        "an underscore-prefixed in-progress file must be invisible to readers")
-      // a final-named orphan is NOT reader-safe (that's the point of the
-      // two-phase landing: the long copy happens under the underscore
-      // name); plant it after the visibility check to exercise the scrub
-      val orphan = new java.io.File(cluster, "b1_7.parquet")
-      java.nio.file.Files.write(orphan.toPath, Array[Byte](9, 9))
-      assert(Similarity.ivfPqIndexAppendOnce(b1, dir, 1L, coarse, books))
-      assert(!partial.exists(), "replay must scrub in-progress residue")
-      assert(!orphan.exists(), "replay must scrub final-named residue")
-      assert(spark.read.parquet(dir).count() === e.count(),
-        "the healed index must hold each row exactly once")
-      val q = e.where(col("vec_id") < 5)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-      assert(rows(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4)).toSeq ===
-        rows(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4)).toSeq)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("compaction scrubs un-markered batch landings; the replay still lands exactly once") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("orphan_scrub").toString + "/idx"
-    try {
-      Similarity.ivfPqIndexWrite(e.where(col("vec_id") % 3 === 0), dir, coarse, books)
-      assert(Similarity.ivfPqIndexAppendOnce(e.where(col("vec_id") % 3 === 1),
-        dir, 0L, coarse, books))
-      val b1 = e.where(col("vec_id") % 3 === 2)
-      assert(Similarity.ivfPqIndexAppendOnce(b1, dir, 1L, coarse, books))
-      // the crash shape: batch 1's files landed but its marker never made
-      // it — delete the marker to rewind to exactly that state
-      val marker = new java.io.File(s"$dir/_batches/batch-1")
-      assert(marker.exists() && marker.delete())
-      // a compaction runs while the stream is down; folding the orphaned
-      // b1_ files into anonymous part files would blind the replay scrub
-      Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1)
-      val clusterFiles = new java.io.File(dir).listFiles()
-        .filter(d => d.isDirectory && d.getName.startsWith("cluster="))
-        .flatMap(_.listFiles()).map(_.getName)
-      assert(!clusterFiles.exists(_.matches("_?b1_.*")),
-        "compaction must scrub un-markered batch files, not fold them in")
-      // the replay lands the batch exactly once
-      assert(Similarity.ivfPqIndexAppendOnce(b1, dir, 1L, coarse, books))
-      assert(spark.read.parquet(dir).count() === e.count(),
-        "each row exactly once after scrub + replay")
-      val q = e.where(col("vec_id") < 5)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-      assert(rows(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4)).toSeq ===
-        rows(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4)).toSeq)
-      // committed batch 0's files were NOT scrubbed (marker present):
-      // replaying batch 0 is still a silent skip
-      assert(!Similarity.ivfPqIndexAppendOnce(e.where(col("vec_id") % 3 === 1),
-        dir, 0L, coarse, books))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("append lease blocks compaction mechanically; a stale lease is a crashed appender and is scrubbed") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("lease_mutex").toString + "/idx"
-    try {
-      Similarity.ivfPqIndexWrite(e.where(col("vec_id") % 2 === 0), dir, coarse, books)
-      assert(Similarity.ivfPqIndexAppendOnce(e.where(col("vec_id") % 2 === 1),
-        dir, 0L, coarse, books))
-      val total = spark.read.parquet(dir).count()
-      // the round-13 TOCTTOU shape: an append has passed its guard check
-      // (its lease is on disk) but has not yet renamed anything — a
-      // compaction starting NOW must fail fast, not proceed into the
-      // append's landing
-      val leases = new java.io.File(dir, "_leases")
-      leases.mkdirs() // appendOnce already created it; only lease FILES are dropped
-      assert(leases.isDirectory)
-      val lease = new java.io.File(leases, "lease-inflight")
-      assert(lease.createNewFile())
-      val ex = intercept[IllegalStateException](
-        Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1))
-      assert(ex.getMessage.contains("lease"), ex.getMessage)
-      assert(!new java.io.File(dir + "_compacting").exists(),
-        "a backed-off compaction must release its staging flag")
-      assert(spark.read.parquet(dir).count() === total,
-        "a backed-off compaction must not touch a single file")
-      // the same lease aged past the staleness bound is a KILLED appender:
-      // compaction scrubs it (and any un-markered files it vouched for)
-      // and proceeds
-      val orphanCluster = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster=")).head
-      val orphan = new java.io.File(orphanCluster, "b9_0.parquet")
-      java.nio.file.Files.write(orphan.toPath, Array[Byte](7, 7))
-      val compacted = Similarity.ivfPqIndexCompact(
-        spark, dir, maxFilesPerCluster = 1, leaseStaleMs = 0L)
-      assert(compacted.nonEmpty, "stale lease must not block compaction")
-      assert(!lease.exists(), "the stale lease must be scrubbed")
-      assert(!orphan.exists(), "the crashed appender's un-markered file must be scrubbed")
-      assert(spark.read.parquet(dir).count() === total)
-      // the live index still answers identically to the in-memory path
-      val q = e.where(col("vec_id") < 5)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-      assert(rows(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4)).toSeq ===
-        rows(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4)).toSeq)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("two concurrent compactions exclude each other: the second fails fast on the live mutex") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("compact_mutex").toString + "/idx"
-    try {
-      Similarity.ivfPqIndexWrite(e, dir, coarse, books)
-      val total = spark.read.parquet(dir).count()
-      // simulate compaction A mid-run: staging + a FRESH mutex file (the
-      // atomic acquisition artifact). The round-14 mkdirs flag succeeded
-      // for a second caller too; the mutex must fail it fast instead —
-      // and must NOT be "healed" away (rolling back A's swaps mid-run).
-      val staging = new java.io.File(dir + "_compacting")
-      assert(staging.mkdirs())
-      val mutex = new java.io.File(staging, "_mutex")
-      assert(mutex.createNewFile())
-      val ex = intercept[IllegalStateException](
-        Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1))
-      assert(ex.getMessage.contains("another caller") ||
-        ex.getMessage.contains("mutex"), ex.getMessage)
-      assert(staging.exists() && mutex.exists(),
-        "the losing compaction must leave the winner's staging+mutex untouched")
-      assert(spark.read.parquet(dir).count() === total)
-      // the same staging with its mutex aged past the staleness bound is
-      // a CRASHED compaction: the next call heals it and proceeds
-      val healed = Similarity.ivfPqIndexCompact(
-        spark, dir, maxFilesPerCluster = 1, leaseStaleMs = 0L)
-      assert(!staging.exists(), "a stale-mutex staging must be healed away")
-      assert(spark.read.parquet(dir).count() === total,
-        s"heal+compact must not change rows (compacted: $healed)")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("a refused append leaves no lease behind; both appends hold the lease through their write") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("lease_cleanup").toString + "/idx"
-    try {
-      assert(Similarity.ivfPqIndexAppendOnce(e.where(col("vec_id") % 2 === 0),
-        dir, 0L, coarse, books))
-      val leases = new java.io.File(dir, "_leases")
-      def leaseCount = Option(leases.listFiles()).map(_.length).getOrElse(0)
-      assert(leaseCount === 0, "a completed append must drop its lease")
-      // refused by the compaction staging: the lease raised before the
-      // check must be dropped on the failure path too — a residual lease
-      // would deadlock every future compaction until the staleness bound
-      val staging = new java.io.File(dir + "_compacting")
-      assert(staging.mkdir())
-      intercept[IllegalStateException](Similarity.ivfPqIndexAppendOnce(
-        e.where(col("vec_id") % 2 === 1), dir, 1L, coarse, books))
-      assert(leaseCount === 0, "a refused append must drop its lease")
-      intercept[IllegalStateException](Similarity.ivfPqIndexAppend(
-        e.where(col("vec_id") % 2 === 1), dir, coarse, books))
-      assert(leaseCount === 0,
-        "plain ivfPqIndexAppend must observe the same guard and drop its lease")
-      assert(staging.delete())
-      // plain append now lands under its lease and drops it
-      Similarity.ivfPqIndexAppend(e.where(col("vec_id") % 2 === 1), dir, coarse, books)
-      assert(leaseCount === 0)
-      assert(spark.read.parquet(dir).count() === e.count())
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("probes reject a listing that misses a live cluster (the mid-swap listing race)") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("stale_listing").toString + "/idx"
-    try {
-      Similarity.ivfPqIndexWrite(e, dir, coarse, books)
-      // the silent-loss shape the staging-existence check alone cannot
-      // catch: the listing happened while a cluster dir was retired into
-      // staging (so the plan simply has no files for it), and the swap
-      // COMPLETED before the probe ran — no staging left to observe
-      val cluster = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cluster=")).head
-      val parked = new java.io.File(cluster.getParentFile.getParentFile, cluster.getName)
-      assert(cluster.renameTo(parked))
-      val staleIdx = spark.read.parquet(dir) // listing taken mid-swap
-      assert(parked.renameTo(cluster))       // swap completes
-      val q = e.where(col("vec_id") < 5)
-      Seq(
-        () => Similarity.ivfPqTopKIndexed(q, staleIdx, 5, coarse, books, nprobe = 4),
-        () => Similarity.ivfTopKIndexed(q, staleIdx, 3, coarse, nprobe = 4),
-        () => Similarity.semanticDedupIndexed(staleIdx, 0.35)
-      ).foreach { probe =>
-        val ex = intercept[IllegalStateException](probe())
-        assert(ex.getMessage.contains("STALE"), ex.getMessage)
-      }
-      // a fresh read sees every cluster and answers exactly
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-      assert(rows(Similarity.ivfPqTopKIndexed(
-        q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4)).toSeq ===
-        rows(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4)).toSeq)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("index transfer manifest: stamped, append-maintained, compaction-regenerated, byte-exact") {
+  test("index transfer manifest: stamped, byte-exact, re-stamp identical") {
     import spark.implicits._
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
@@ -984,51 +481,20 @@ class SimilaritySpec extends SparkSpec {
       assert(rowSum === spark.read.parquet(dir).count(), "footer row counts must sum to the index")
     }
     try {
-      Similarity.ivfPqIndexWrite(e.where(col("vec_id") % 3 === 0), dir, coarse, books)
+      Similarity.ivfPqIndexWrite(e, dir, coarse, books)
       Similarity.ivfPqIndexManifest(spark, dir)
-      validate()
-      // append maintains a stamped manifest (merge is batch-keyed)
-      assert(Similarity.ivfPqIndexAppendOnce(e.where(col("vec_id") % 3 === 1),
-        dir, 0L, coarse, books))
-      validate()
-      assert(manifestLines.exists(_.contains("/b0_")), "batch rows must join the manifest")
-      // a replayed batch writes nothing and must not disturb the manifest
-      val before = manifestLines
-      assert(!Similarity.ivfPqIndexAppendOnce(e.where(col("vec_id") % 3 === 1),
-        dir, 0L, coarse, books))
-      assert(manifestLines === before)
-      // compaction rewrites clusters — the manifest follows the new layout
-      assert(Similarity.ivfPqIndexAppendOnce(e.where(col("vec_id") % 3 === 2),
-        dir, 1L, coarse, books))
-      assert(Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1).nonEmpty)
       validate()
       // stamping identical bytes twice is byte-identical (sorted lines)
       val stamped = java.nio.file.Files.readAllBytes(manifest.toPath).toSeq
       Similarity.ivfPqIndexManifest(spark, dir)
       assert(java.nio.file.Files.readAllBytes(manifest.toPath).toSeq === stamped)
-      // the index is still exactly the union it claims to be
+      // the stamped index still answers exactly as the in-memory search
       val q = e.where(col("vec_id") < 5)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
       assert(rows(Similarity.ivfPqTopKIndexed(
         q, spark.read.parquet(dir), 5, coarse, books, nprobe = 4)).toSeq ===
         rows(Similarity.ivfPqTopK(q, e, 5, coarse, books, nprobe = 4)).toSeq)
-      // the PLAIN batch append (anonymous file names) maintains the stamp
-      // too — via its listing delta, not a name prefix
-      Similarity.ivfPqIndexAppend(e.where(col("vec_id") < 3)
-        .withColumn("vec_id", col("vec_id") + 100000), dir, coarse, books)
-      validate()
-      // a stamp orphaned by a crash between a mutation's commit point and
-      // its manifest update is repaired on the next maintenance call via
-      // the listing compare (here: simulate by corrupting the stamp)
-      val lines = manifestLines
-      java.nio.file.Files.write(manifest.toPath,
-        (lines.drop(1).mkString("\n") + "\n").getBytes("UTF-8"))
-      // the out-of-band corruption invalidates Hadoop's local-FS checksum
-      // sidecar; drop it so the simulated stale stamp is readable
-      new java.io.File(dir, "._manifest.jsonl.crc").delete()
-      assert(Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 100).isEmpty)
-      validate()
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(dir).getParentFile)
@@ -1097,61 +563,6 @@ class SimilaritySpec extends SparkSpec {
       assert(Similarity.ivfPqIndexVerify(spark, dir).isEmpty)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("manifest merges are parsed-field: batch 1 never claims batch 12's rows, cluster 1 never claims cluster 12's") {
-    import spark.implicits._
-    // handcrafted quantizers: 13 well-separated unit-circle centroids, so
-    // cluster ASSIGNMENT is chosen by the test (a vector placed AT
-    // centroid c lands in cluster c) and the adversarial ids — 1 vs 12,
-    // where the one's digits prefix the other's — actually exist as
-    // directories and batch names
-    val coarse = Array.tabulate(13)(i =>
-      Array(math.cos(2 * math.Pi * i / 13), math.sin(2 * math.Pi * i / 13)))
-    val books = Array(Array(Array(1.0, 0.0), Array(0.0, 1.0)))
-    def at(c: Int, ids: Seq[Long]) = ids
-      .map(id => (id, Seq(coarse(c)(0).toFloat, coarse(c)(1).toFloat)))
-      .toDF("vec_id", "embedding")
-      .coalesce(1) // one file per cluster per batch — keeps file counts exact
-    val dir = java.nio.file.Files.createTempDirectory("adversarial_ids").toString + "/idx"
-    def manifestLines = java.nio.file.Files
-      .readAllLines(new java.io.File(dir, "_manifest.jsonl").toPath)
-      .toArray.toSeq.map(_.toString)
-    try {
-      Similarity.ivfPqIndexWrite(at(0, Seq(1L, 2L)), dir, coarse, books)
-      Similarity.ivfPqIndexManifest(spark, dir)
-      assert(Similarity.ivfPqIndexAppendOnce(at(12, Seq(10L, 11L)), dir, 12L, coarse, books))
-      assert(Similarity.ivfPqIndexAppendOnce(at(1, Seq(20L, 21L)), dir, 1L, coarse, books))
-      assert(new java.io.File(dir, "cluster=12").isDirectory &&
-        new java.io.File(dir, "cluster=1").isDirectory, "fixture must create both clusters")
-      assert(Similarity.ivfPqIndexVerify(spark, dir).isEmpty)
-      val b12Lines = manifestLines.filter(_.contains("/b12_"))
-      assert(b12Lines.nonEmpty, "batch 12 must be in the manifest")
-      // REPLAY batch 1: its merge drops-and-readds exactly its own lines.
-      // A substring filter keyed on "b1" would also drop batch 12's lines
-      // here — silently un-describing files that stay on disk.
-      assert(new java.io.File(s"$dir/_batches/batch-1").delete())
-      assert(Similarity.ivfPqIndexAppendOnce(at(1, Seq(20L, 21L)), dir, 1L, coarse, books))
-      assert(manifestLines.filter(_.contains("/b12_")) === b12Lines,
-        "batch 12's manifest lines must survive batch 1's re-merge verbatim")
-      assert(Similarity.ivfPqIndexVerify(spark, dir).isEmpty)
-      // COMPACT exactly cluster 1 (batches 2-4 fragment it; cluster 12
-      // stays at one file): the kept-lines filter keyed on a parsed
-      // cluster id must not also drop cluster 12's line
-      (2L to 4L).foreach(b =>
-        assert(Similarity.ivfPqIndexAppendOnce(at(1, Seq(100L + b)), dir, b, coarse, books)))
-      val c12Line = manifestLines.filter(_.contains("\"cluster\":\"cluster=12\""))
-      assert(c12Line.size === 1)
-      val dirty = Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 2)
-      assert(dirty === Seq(1), s"only cluster 1 is dirty, got $dirty")
-      assert(manifestLines.filter(_.contains("\"cluster\":\"cluster=12\"")) === c12Line,
-        "cluster 12's manifest line must survive cluster 1's compaction verbatim")
-      assert(Similarity.ivfPqIndexVerify(spark, dir).isEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
       graft.GraftSession.releaseCaches(spark, blocking = true)
     }
   }
@@ -1742,209 +1153,6 @@ class SimilaritySpec extends SparkSpec {
     val b2 = emb.withColumn("bucket", Similarity.srpBucket(col("embedding"), 64, 6))
       .select("bucket").as[Long].collect()
     assert(b.toSeq === b2.toSeq)
-  }
-
-  test("fleet-shaped maintenance: parallel appenders race live compactions, every batch lands exactly once") {
-    // The exclusion protocol is spec-proven PAIRWISE above (append vs
-    // compaction, compaction vs compaction); what a 100 TB nightly ingest
-    // actually runs is the fleet shape — N appenders and a maintenance
-    // loop hammering ONE index concurrently, every caller retrying its
-    // fail-fast refusals. The invariants that must survive arbitrary
-    // interleaving on a real filesystem: every batch's rows land exactly
-    // once (no loss under compaction swaps, no double-landing under
-    // replays), the manifest stays byte-exact, and the verify pass ends
-    // clean. Threads share the SparkSession — concurrent actions from
-    // multiple threads are a supported Spark pattern (cluster drivers do
-    // exactly this).
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("fleet_maint").toString + "/idx"
-    val nBatches = 6
-    try {
-      // seed the index so the first compaction has something to probe
-      Similarity.ivfPqIndexWrite(e.where(col("vec_id") % 100 === 99), dir, coarse, books)
-      val seeded = spark.read.parquet(dir).count()
-      val batchRows = (0 until nBatches)
-        .map(i => i.toLong -> e.where(col("vec_id") % 100 < 99 &&
-          col("vec_id") % nBatches === i)).toMap
-      // fleetDone flips when every appender thread has EXITED (landed or
-      // failed) — the maintainers' loop condition, so one failed appender
-      // can never leave a maintainer spinning past the join timeout
-      val fleetDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def retrying[A](tag: String)(body: => A): A = {
-        var left = 600
-        while (true) {
-          try return body
-          catch { case _: IllegalStateException =>
-            left -= 1
-            require(left > 0, s"$tag starved: still refused after 600 retries")
-            Thread.sleep(50)
-          }
-        }
-        sys.error("unreachable")
-      }
-      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val compacted = new java.util.concurrent.atomic.AtomicInteger(0)
-      val appenders = (0 until nBatches).map { i =>
-        new Thread(() => {
-          try {
-            val first = retrying(s"append-$i")(
-              Similarity.ivfPqIndexAppendOnce(batchRows(i.toLong), dir, i.toLong,
-                coarse, books))
-            assert(first, s"batch $i: first presentation must land")
-            // immediate replay of the SAME id must be a no-op even while
-            // the rest of the fleet is mid-flight
-            val replay = retrying(s"replay-$i")(
-              Similarity.ivfPqIndexAppendOnce(batchRows(i.toLong), dir, i.toLong,
-                coarse, books))
-            assert(!replay, s"batch $i: replay must skip")
-          } catch { case t: Throwable => failures.add(t) }
-        }, s"appender-$i")
-      }
-      val maintainers = (0 until 2).map { m =>
-        new Thread(() => {
-          try {
-            // keep compacting until the fleet quiesces, racing the appends
-            // — the inter-attempt sleep leaves windows for refused appends
-            // to land (without it two maintainers can hold the staging
-            // flag nearly continuously and starve the fleet)
-            // the second condition keeps trying past quiescence until at
-            // least one compaction completed — on a quiesced index the
-            // attempt succeeds immediately, so the "compaction raced the
-            // fleet and completed" witness below can never flake
-            while (!fleetDone.get() || compacted.get() == 0) {
-              try {
-                Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1)
-                compacted.incrementAndGet()
-              } catch { case _: IllegalStateException => () } // refused: lease or rival compactor
-              Thread.sleep(100)
-            }
-          } catch { case t: Throwable => failures.add(t) }
-        }, s"maintainer-$m")
-      }
-      (appenders ++ maintainers).foreach(_.start())
-      appenders.foreach(_.join(300000))
-      fleetDone.set(true)
-      maintainers.foreach(_.join(300000))
-      assert(failures.isEmpty, failures.toArray.mkString("\n"))
-      assert(compacted.get() > 0, "the maintenance loop never won a compaction")
-      // exactly-once: every batch's rows present once, nothing lost to a
-      // swap, nothing doubled by a replay
-      val end = spark.read.parquet(dir)
-      assert(end.count() === seeded + batchRows.values.map(_.count()).sum)
-      // the stored layout's id column is neighbor_id (ivfPqEncode renames)
-      assert(end.groupBy("neighbor_id").count().where(col("count") > 1).count() === 0,
-        "a row landed twice under the fleet interleaving")
-      // a final compaction + stamp + verify on the quiesced index ends
-      // clean (the fleet ran UNSTAMPED: a manifest is maintained by its
-      // appenders read-modify-write, and the contract feeds appends from
-      // ONE sequential streaming sink — parallel appenders racing one
-      // stamp is out of contract, so the stamp lands after quiescence)
-      Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1)
-      Similarity.ivfPqIndexManifest(spark, dir)
-      assert(Similarity.ivfPqIndexVerify(spark, dir).isEmpty,
-        "post-fleet verify must report no discrepancies")
-      // no maintenance residue: no leases, no staging, no orphan batches
-      assert(!new java.io.File(dir + "_compacting").exists())
-      val leases = Option(new java.io.File(dir, "_leases").listFiles())
-        .map(_.toSeq).getOrElse(Nil)
-      assert(leases.isEmpty, s"leaked leases: $leases")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
-  test("readers under maintenance: probes racing live compaction swaps " +
-      "either refuse retryably or answer bit-exact — never a torn result") {
-    // The second concurrency axis after the fleet test above: there the
-    // WRITERS race each other; here READERS race a compaction's swap
-    // window on a real filesystem. The serving contract under test:
-    // every probe attempt against an index being compacted either (a)
-    // raises a retryable refusal — the assertNotCompacting guard, or a
-    // vanished-file error from a rename landing under the scan — or (b)
-    // returns the bit-exact quiesced answer. A SUCCESSFUL probe with a
-    // wrong (torn, partially-swapped) result is the silent-loss failure
-    // mode the staging flag + STALE-listing validation exist to close;
-    // this soak hammers that window instead of staging it once.
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 4, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("reader_maint").toString + "/idx"
-    val queries = e.where(col("vec_id") < 5)
-    def probeRows(): Seq[String] =
-      Similarity.ivfPqTopKIndexed(queries, spark.read.parquet(dir), 5,
-          coarse, books, nprobe = 4)
-        .collect().map(_.toString).sorted.toSeq
-    def retryable(t: Throwable): Boolean = {
-      var c: Throwable = t
-      while (c != null) {
-        if (c.isInstanceOf[IllegalStateException] ||
-            c.isInstanceOf[java.io.FileNotFoundException] ||
-            (c.getMessage != null && c.getMessage.contains("does not exist")))
-          return true
-        c = c.getCause
-      }
-      false
-    }
-    try {
-      // seed with 3/4 of the corpus; the remaining quarter feeds the
-      // re-fragmentation appends between cycles (appends run QUIESCED —
-      // mid-append visibility is a different, weaker contract)
-      Similarity.ivfPqIndexWrite(e.where(col("vec_id") % 4 =!= 0), dir, coarse, books)
-      val frag = (0 until 3).map(i =>
-        i -> e.where(col("vec_id") % 4 === 0 && col("vec_id") % 3 === i)).toMap
-      val refusals = new java.util.concurrent.atomic.AtomicInteger(0)
-      val wrongs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      (0 until 3).foreach { cycle =>
-        // fragment (quiesced), then take the cycle's truth (quiesced)
-        assert(Similarity.ivfPqIndexAppendOnce(frag(cycle), dir,
-          100L + cycle, coarse, books))
-        val truth = probeRows()
-        val compacting = new java.util.concurrent.atomic.AtomicBoolean(true)
-        val readers = (0 until 2).map { r =>
-          new Thread(() => {
-            try {
-              while (compacting.get()) {
-                try {
-                  val got = probeRows()
-                  if (got != truth)
-                    wrongs.add(s"cycle $cycle reader $r: torn probe result\n" +
-                      s"got:   ${got.mkString("; ")}\nwant:  ${truth.mkString("; ")}")
-                } catch {
-                  case t: Throwable if retryable(t) => refusals.incrementAndGet()
-                }
-              }
-            } catch { case t: Throwable => failures.add(t) }
-          }, s"reader-$cycle-$r")
-        }
-        readers.foreach(_.start())
-        try Similarity.ivfPqIndexCompact(spark, dir, maxFilesPerCluster = 1)
-        finally compacting.set(false)
-        readers.foreach(_.join(300000))
-      }
-      assert(failures.isEmpty, failures.toArray.mkString("\n"))
-      assert(wrongs.isEmpty, wrongs.toArray.mkString("\n\n"))
-      // settle: the quiesced index answers cleanly, content complete
-      assert(probeRows().nonEmpty)
-      assert(spark.read.parquet(dir).count() ===
-        e.where(col("vec_id") % 4 =!= 0).count() +
-          (0 until 3).map(i => frag(i).count()).sum)
-      // the window was actually exercised across the three swap cycles —
-      // with 2 readers looping against multi-second compactions a zero
-      // count means the guard path never ran and the soak proved nothing
-      assert(refusals.get() > 0,
-        "no reader ever hit the compaction window — soak vacuous")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(dir).getParentFile)
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
   }
 
   test("semanticDecontaminate: the embedding-grain gate — threshold " +

@@ -640,6 +640,16 @@ class TextAnalysisSpec extends SparkSpec {
       "the frozen-corpus variant may never cut more than the self variant over the union")
     assert(against.where(col("n_removed") > 0).count() > 0,
       "the 1-in-7 split must produce cross-side hits on the dup-planted corpus")
+    // frozen-corpus batch union: cleaning two halves of the batch against
+    // the same corpus ≡ cleaning the whole batch in one call
+    def cleaned(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Long, String)].collect().toSet
+    val half1 = TextAnalysis.exactSubstrRemoveAgainst(
+      b.where(col("doc_id") % 2 === 0), c, "doc_id", "text", n = 8)
+    val half2 = TextAnalysis.exactSubstrRemoveAgainst(
+      b.where(col("doc_id") % 2 =!= 0), c, "doc_id", "text", n = 8)
+    assert((cleaned(half1) ++ cleaned(half2)) === cleaned(against),
+      "two half-batches against one corpus must clean exactly as the whole batch")
     graft.GraftSession.releaseCaches(spark)
   }
 
@@ -663,39 +673,6 @@ class TextAnalysisSpec extends SparkSpec {
       .exactSubstrRemoveAgainst(b, c, "doc_id", "text", n = 8, hashGrams = false)
       .as[(Long, Long, Long, Long, String)].collect().toSet
     assert(againstByValue === againstHashed)
-    graft.GraftSession.releaseCaches(spark)
-  }
-
-  test("corpusGramHashes + exactSubstrRemoveAgainstGrams: the split API ≡ the fused call") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val b = docs.where(col("doc_id") % 7 === 0)
-    val c = docs.where(col("doc_id") % 7 =!= 0)
-    val fused = TextAnalysis.exactSubstrRemoveAgainst(b, c, "doc_id", "text", n = 8)
-      .as[(Long, Long, Long, Long, String)].collect().toSet
-    // the streaming pattern: build the corpus reduce once, persist, reuse
-    val grams = TextAnalysis.corpusGramHashes(c, "doc_id", "text", n = 8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      assert(grams.columns.toSeq === Seq("g"))
-      val split = TextAnalysis
-        .exactSubstrRemoveAgainstGrams(b, grams, "doc_id", "text", n = 8)
-        .as[(Long, Long, Long, Long, String)].collect().toSet
-      assert(split === fused)
-      // two "micro-batches" against the same persisted grams compose to
-      // the same union (the foreachBatch contract, here without a stream)
-      val split1 = TextAnalysis.exactSubstrRemoveAgainstGrams(
-        b.where(col("doc_id") % 2 === 0), grams, "doc_id", "text", n = 8)
-        .as[(Long, Long, Long, Long, String)].collect().toSet
-      val split2 = TextAnalysis.exactSubstrRemoveAgainstGrams(
-        b.where(col("doc_id") % 2 =!= 0), grams, "doc_id", "text", n = 8)
-        .as[(Long, Long, Long, Long, String)].collect().toSet
-      assert((split1 ++ split2) === fused)
-    } finally grams.unpersist()
-    // the guard: a relation that is not the (g) contract is refused
-    assert(intercept[IllegalArgumentException] {
-      TextAnalysis.exactSubstrRemoveAgainstGrams(b,
-        c.select(col("doc_id"), col("text")), "doc_id", "text", n = 8)
-    }.getMessage.contains("corpusGramHashes"))
     graft.GraftSession.releaseCaches(spark)
   }
 
@@ -799,16 +776,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(j.where(col("max_span_tokens") > col("leaked_tokens")).count() === 0)
     assert(j.where(col("leaked_sites") > 0 && col("max_span_tokens") < 8).count() === 0)
     j.unpersist()
-    // split API ≡ fused, and the corpusGrams contract is guarded
-    val grams = TextAnalysis.corpusGramHashes(c, "doc_id", "text", n = 8)
-      .persist()
-    assert(TextAnalysis.contaminationReportAgainstGrams(h, grams, "doc_id", "text", n = 8)
-      .collect().map(_.toString).sorted.toSeq ===
-      report.collect().map(_.toString).sorted.toSeq)
-    grams.unpersist()
-    assert(intercept[IllegalArgumentException] {
-      TextAnalysis.contaminationReportAgainstGrams(h, c, "doc_id", "text", n = 8)
-    }.getMessage.contains("corpusGrams"))
     graft.GraftSession.releaseCaches(spark)
   }
 }

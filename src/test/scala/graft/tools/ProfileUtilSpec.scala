@@ -18,7 +18,7 @@ class ProfileUtilSpec extends SparkSpec {
     val aqeKey = "spark.sql.adaptive.enabled"
     val aqe = spark.conf.get(aqeKey)
     spark.conf.set(aqeKey, "true")
-    try GraftSession.withCaches(spark, blocking = true) {
+    try {
       val cached = spark.range(0, 1000, 1, 4)
         .select((col("id") % 10).as("k"), col("id")).persist()
       val qe = cached.unionAll(cached).groupBy("k").agg(sum("id")).queryExecution
@@ -40,6 +40,9 @@ class ProfileUtilSpec extends SparkSpec {
 
       val rows = nodes.flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
       assert(rows > 0, "numOutputRows read zero over the executed plan")
-    } finally spark.conf.set(aqeKey, aqe)
+    } finally {
+      GraftSession.releaseCaches(spark, blocking = true)
+      spark.conf.set(aqeKey, aqe)
+    }
   }
 }

@@ -6,7 +6,10 @@ A def counts when some src/test file names it but no src/main file other
 than its own and no perfbench/src file does. Comments are stripped before
 matching; names are matched as whole identifiers, so a def that shares its
 name with an unrelated method (`find`, `run`) is judged by every use of the
-name.
+name. Two rules keep a bare-identifier match from standing in for a call:
+an unqualified `private def` is skipped (no spec can call it), and a spec's
+names exclude the ones that spec declares itself with `val`, `var` or `def`
+(its local `rows` is not a call of a src/main `rows`).
 
 The def list misses a module whose only caller is itself unreached, so a
 second section walks whole files. The roots are the files with a `def main`
@@ -25,7 +28,10 @@ import re
 import sys
 
 COMMENT = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*(?:.|\n)*?\*/')
-DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
+DEF = re.compile(r"((?:\b(?:private|protected|final|override|implicit|inline)(?:\[\w+\])?\s+)*)"
+                 r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
+PRIVATE = re.compile(r"\bprivate\s")
+DECL = re.compile(r"\b(?:val|var|def)\s+([A-Za-z_][A-Za-z0-9_]*)")
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 TOP = re.compile(r"^(?:(?:(?:private|protected)(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*"
                  r"(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
@@ -48,12 +54,13 @@ def main(argv):
     repo = argv[0] if argv else "."
     main_src = sources(os.path.join(repo, "src", "main"))
     names = {p: set(IDENT.findall(t)) for p, t in main_src.items()}
-    tested = set().union(*(IDENT.findall(t) for t in
+    tested = set().union(*(set(IDENT.findall(t)) - set(DECL.findall(t)) for t in
                            sources(os.path.join(repo, "src", "test")).values()))
     bench = set().union(*(IDENT.findall(t) for t in
                           sources(os.path.join(repo, "perfbench", "src")).values()))
     hits = sorted((os.path.relpath(p, repo), d)
-                  for p, t in main_src.items() for d in set(DEF.findall(t))
+                  for p, t in main_src.items()
+                  for d in {n for mods, n in DEF.findall(t) if not PRIVATE.search(mods)}
                   if d in tested and d not in bench
                   and not any(d in ns for q, ns in names.items() if q != p))
     for path, d in hits:
