@@ -2,41 +2,20 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Model-based quality filtering — the fastText-style hashed linear
   * classifier every large pretraining pipeline runs after the heuristic
   * gates (Joulin et al. 2016 "Bag of Tricks for Efficient Text
   * Classification"; the GPT-3/LLaMA-style "quality classifier" data cut):
-  * tokens hash into `dims` feature buckets, a document's feature vector is
-  * the bucket-count distribution, and a logistic model over those buckets
-  * scores every document in one narrow pass.
+  * tokens hash into `dims` feature buckets and a logistic model over those
+  * buckets scores every document in one narrow pass.
   *
-  * Two tiers, deliberately separated:
-  *
-  *  - [[hashedLinearScore]] — SCORING under a fixed published weight
-  *    vector. Pure row-local expression (transform + ordered fold), ZERO
-  *    shuffles, bit-deterministic on any engine: the per-token weight is
-  *    `w[md5_long(token) mod dims]` (the engine's cross-engine 60-bit
-  *    content hash, [[graft.functions.Md5LongFunction.md5Long]]), summed
-  *    in token order. This is the oracle-gated tier (q105).
-  *  - [[trainHashedLogistic]] — full-batch gradient-descent TRAINING of
-  *    those weights on a labeled slice. Deterministic up to double
-  *    aggregation order (like every distributed float sum — the spec
-  *    asserts convergence and separation, not bit equality).
-  *
-  * Scale shape of training: the feature relation (one dense
-  * `array<double>` of length `dims` per row + the label) is built ONCE
-  * from raw text and persisted; each of the `iters` iterations is one
-  * narrow map over it (sigmoid + per-row gradient contribution) feeding a
-  * single map-side-combined typed aggregate
-  * ([[graft.functions.VectorAgg.VectorMeanDouble]]) whose driver-side
-  * result is `dims + 2` doubles — no per-iteration corpus shuffle wider
-  * than `dims × partitions` partial buffers, no driver-side data motion
-  * beyond the gradient itself. Dense rows suit the quality-filter regime
-  * (dims ≲ 4k); a 10M-bucket fastText-sized model would want a sparse
-  * (bucket → count) map column instead — same algebra, same aggregate,
-  * noted here so the dense envelope is explicit.
+  * [[hashedLinearScore]] scores under a fixed published weight vector
+  * ([[fixedWeights]]): a pure row-local expression (transform + ordered
+  * fold), ZERO shuffles, bit-deterministic on any engine: the per-token
+  * weight is `w[md5_long(token) mod dims]` (the engine's cross-engine
+  * 60-bit content hash, [[graft.functions.Md5LongFunction.md5Long]]),
+  * summed in token order. This is the oracle-gated tier (q105).
   *
   * Reference anchor: the reference pipeline scores rows with fixed
   * per-category reward rules (glue_script.py:19-78 equivalents); this
@@ -91,177 +70,5 @@ object QualityModel {
       s"input columns collide with output names: ${clash.mkString(", ")}")
     df.withColumn("model_score", scoreColumn(col(textCol), weights, bias))
       .withColumn("keep", col("model_score") >= threshold)
-  }
-
-  /** Trained model: hashed-bucket weights, intercept, and the per-iteration
-    * training loss trace (mean logistic loss — monotone decrease is the
-    * spec's convergence witness). */
-  final case class TrainedModel(weights: Array[Double], bias: Double,
-                                losses: Seq[Double])
-
-  /** Full-batch logistic regression over hashed bag-of-words features.
-    *
-    * `label` must evaluate to 0/1 (booleans are cast); rows with a null
-    * label or null text are excluded up front. Features are bucket-count
-    * fractions: `x_j = count{t : md5_long(t) mod dims = j} / n_tokens`,
-    * built once (O(n_tokens · dims) per row — the dense-envelope cost
-    * documented above) and persisted for the iteration loop. Each
-    * iteration runs gradient descent with learning rate `lr` and L2
-    * penalty `l2`:
-    * `w ← w(1 − lr·l2) − lr·mean(e·x)`, `b ← b − lr·mean(e)`,
-    * `e = σ(b + w·x) − y`. The returned weights plug straight into
-    * [[hashedLinearScore]] (same hash, same bucket algebra; scoring's
-    * per-token sum and training's per-bucket dot differ only in float
-    * fold order). Dense-envelope contract: dims ≲ 4k — the feature build
-    * is O(tokens·dims) per row and each iteration ships a dims-sized
-    * literal weight array into the plan. Past that,
-    * [[trainHashedLogisticSparse]] is the same algebra at O(nnz). */
-  def trainHashedLogistic(df: DataFrame, textCol: String, label: Column,
-                          dims: Int = DefaultDims, iters: Int = 50,
-                          lr: Double = 1.0, l2: Double = 0.0): TrainedModel = {
-    require(dims > 0, s"need a positive dimension count, got $dims")
-    require(iters > 0, s"need a positive iteration count, got $iters")
-    val toks = split(col(textCol), " ")
-    val toksH = transform(toks, t =>
-      (graft.functions.Md5LongFunction.md5Long(t) % dims).cast("int"))
-    val feats = transform(sequence(lit(0), lit(dims - 1)), j =>
-      size(filter(toksH, h => h === j)).cast("double") / size(toks))
-    val base = df
-      .where(col(textCol).isNotNull && label.isNotNull)
-      .select(feats.as("qm_x"), label.cast("double").as("qm_y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Materializes the persisted feature relation once (sequentially,
-      // the same reason topKByScore's histogram collect does) and
-      // fail-fasts on an empty training set before the iteration loop
-      // would NPE on a null gradient.
-      require(base.count() > 0, "no labeled rows to train on")
-      val gradAgg = graft.functions.VectorAgg.vectorMeanDouble(dims)
-      var w = new Array[Double](dims)
-      var b = 0.0
-      val losses = Seq.newBuilder[Double]
-      var it = 0
-      while (it < iters) {
-        val warr = array(w.toIndexedSeq.map(lit): _*)
-        val z = lit(b) + aggregate(
-          zip_with(col("qm_x"), warr, (x, wj) => x * wj), lit(0.0),
-          (acc, x) => acc + x)
-        val p = lit(1.0) / (lit(1.0) + exp(-z))
-        val scored = base
-          .withColumn("qm_p", p)
-          .withColumn("qm_e", col("qm_p") - col("qm_y"))
-        val row = scored.agg(
-          gradAgg(transform(col("qm_x"), x => x * col("qm_e"))).as("grad"),
-          avg(col("qm_e")).as("bgrad"),
-          avg(-(col("qm_y") * log(greatest(col("qm_p"), lit(1e-12)))
-            + (lit(1.0) - col("qm_y"))
-              * log(greatest(lit(1.0) - col("qm_p"), lit(1e-12))))).as("loss"))
-          .collect()(0)
-        val grad = row.getSeq[Double](0)
-        val bgrad = row.getDouble(1)
-        losses += row.getDouble(2)
-        val wNew = new Array[Double](dims)
-        var j = 0
-        while (j < dims) { wNew(j) = w(j) * (1.0 - lr * l2) - lr * grad(j); j += 1 }
-        w = wNew
-        b -= lr * bgrad
-        it += 1
-      }
-      TrainedModel(w, b, losses.result())
-    } finally base.unpersist()
-  }
-
-  /** SPARSE feature path for [[trainHashedLogistic]] — the large-dims
-    * deployment (fastText-sized models hash into 64k–10M buckets, where
-    * the dense path is infeasible twice over: the O(tokens·dims) per-row
-    * feature build, and the Θ(dims) literal weight array each iteration
-    * ships into the plan). Same algebra, three representation changes:
-    *
-    *  - features are (bucket, fraction) ENTRY ARRAYS built row-locally at
-    *    O(L log L): hash the tokens, `array_sort`, run-length the sorted
-    *    array into `struct(b, x)` entries — zero-count buckets carry no
-    *    entry and contribute exactly 0.0 to every sum they are absent
-    *    from, so the algebra is unchanged;
-    *  - the per-row dot `w·x` is [[graft.functions.SparseDot]] — the
-    *    weight vector rides along as a referenced object (constant plan
-    *    size in dims, Θ(nnz) work per row);
-    *  - the gradient is one `explode → groupBy(bucket) → sum(x·e)`
-    *    aggregate per iteration — shuffle width ≤ dims keys with
-    *    map-side combine (the dense path's dims-sized partial buffers,
-    *    sparser), divided by the TOTAL row count driver-side (absent
-    *    buckets contribute 0 to the mean's numerator by construction).
-    *    Buckets no row touches keep a zero gradient and only L2-shrink,
-    *    exactly as the dense path computes them.
-    *
-    * Determinism matches the dense tier's contract (up to double
-    * aggregation order — the spec asserts weight agreement to float-sum
-    * tolerance and identical round-6 scores, not bit equality). The
-    * returned weights plug straight into [[hashedLinearScore]]. */
-  def trainHashedLogisticSparse(df: DataFrame, textCol: String, label: Column,
-                                dims: Int = DefaultDims, iters: Int = 50,
-                                lr: Double = 1.0, l2: Double = 0.0): TrainedModel = {
-    require(dims > 0, s"need a positive dimension count, got $dims")
-    require(iters > 0, s"need a positive iteration count, got $iters")
-    val toks = split(col(textCol), " ")
-    val toksH = sort_array(transform(toks, t =>
-      (graft.functions.Md5LongFunction.md5Long(t) % dims).cast("int")))
-    // run-length the sorted hash array into (bucket, count/n) entries:
-    // `starts` holds each run's first index, `ends` the next run's
-    // (sentinel size+1 for the last), so x = (end - start) / n_tokens
-    val starts = filter(sequence(lit(1), size(toksH)), i =>
-      (i === 1) || (element_at(toksH, i) =!= element_at(toksH, i - 1)))
-    val feats = {
-      val ends = concat(slice(starts, lit(2), size(starts) - 1),
-        array(size(toksH) + 1))
-      zip_with(starts, ends, (s, e) =>
-        struct(element_at(toksH, s).as("b"),
-          ((e - s).cast("double") / size(toks)).as("x")))
-    }
-    val base = df
-      .where(col(textCol).isNotNull && label.isNotNull)
-      .select(feats.as("qm_x"), label.cast("double").as("qm_y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val total = base.count()
-      require(total > 0, "no labeled rows to train on")
-      var w = new Array[Double](dims)
-      var b = 0.0
-      val losses = Seq.newBuilder[Double]
-      var it = 0
-      while (it < iters) {
-        val z = lit(b) +
-          graft.functions.SparseDotFunction.sparseDot(col("qm_x"), w)
-        val p = lit(1.0) / (lit(1.0) + exp(-z))
-        val scored = base
-          .withColumn("qm_p", p)
-          .withColumn("qm_e", col("qm_p") - col("qm_y"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val row = scored.agg(
-            avg(col("qm_e")).as("bgrad"),
-            avg(-(col("qm_y") * log(greatest(col("qm_p"), lit(1e-12)))
-              + (lit(1.0) - col("qm_y"))
-                * log(greatest(lit(1.0) - col("qm_p"), lit(1e-12))))).as("loss"))
-            .collect()(0)
-          val gradRows = scored
-            .select(explode(col("qm_x")).as("ent"), col("qm_e"))
-            .groupBy(col("ent.b").as("b"))
-            .agg(sum(col("ent.x") * col("qm_e")).as("g"))
-            .collect()
-          val wNew = new Array[Double](dims)
-          var j = 0
-          while (j < dims) { wNew(j) = w(j) * (1.0 - lr * l2); j += 1 }
-          gradRows.foreach { r =>
-            val j2 = r.getInt(0)
-            wNew(j2) -= lr * (r.getDouble(1) / total)
-          }
-          w = wNew
-          b -= lr * row.getDouble(0)
-          losses += row.getDouble(1)
-        } finally scored.unpersist()
-        it += 1
-      }
-      TrainedModel(w, b, losses.result())
-    } finally base.unpersist()
   }
 }

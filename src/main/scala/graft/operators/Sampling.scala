@@ -22,14 +22,9 @@ object Sampling {
     pmod(conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long"),
       lit(buckets.toLong))
 
-  /** Deterministic fraction sample: keeps rows whose bucket < fraction·buckets. */
-  def deterministicSample(df: DataFrame, key: Column, fraction: Double,
-                          buckets: Int = 100): DataFrame =
-    df.where(hashBucket(key, buckets) < lit((fraction * buckets).toLong))
-
   /** Stratified deterministic sample: a per-stratum keep fraction (e.g.
-    * upsample rare languages, downsample English), decided by the same
-    * content-hash bucket as [[deterministicSample]] so the kept set is
+    * upsample rare languages, downsample English), decided by the
+    * content-hash bucket of [[hashBucket]] so the kept set is
     * stable across runs, engines, and data growth — the property a training
     * mixture needs. Rows in strata absent from `fractions` keep
     * `defaultFraction`. Pure per-row expression, no shuffle. */
@@ -48,7 +43,7 @@ object Sampling {
     * population, find the binding stratum (smallest count/weight ratio —
     * the one that runs out first), size every stratum's keep-target off
     * that scale, and keep rows by the same content-hash bucket as
-    * [[deterministicSample]]. Strata not named in `weights` are dropped.
+    * [[stratifiedSample]]. Strata not named in `weights` are dropped.
     *
     * The kept set is as large as the targets allow without upsampling: the
     * binding stratum keeps (almost) everything, the rest downsample to
@@ -278,117 +273,6 @@ object Sampling {
       .select(col(sliceCol), col("kl"),
         round(col("dw_mu").cast("double") / col("dw_tot").cast("double"), 6)
           .as("weight"))
-  }
-
-  /** One iteration's record in [[doremiIterate]]'s trace: the slice's
-    * measured drift against the CURRENT mixture and the weight the
-    * multiplicative update assigned it, in deterministic slice order. */
-  final case class DoremiStep(slice: String, kl: Double, weight: Double)
-
-  /** ITERATED DoReMi (Xie et al. 2023, arXiv:2305.10429) — the
-    * reweight → remix → re-measure loop [[doremiWeights]] is one step of.
-    * The single-step operator measures drift against the FIXED corpus
-    * blend; the full recipe re-measures each domain's excess against the
-    * CURRENT mixture after every update, which is what makes it
-    * self-limiting: upweighting a drifted domain moves the mixture toward
-    * it, shrinking its own excess at the next step (spec-asserted — the
-    * distinct-vocabulary slice's KL decreases across iterations while its
-    * weight rises and plateaus).
-    *
-    * Static-proxy honesty, unchanged: the per-domain unigram
-    * distributions stand in for per-domain proxy losses (the KL identity
-    * documented at [[doremiWeights]]); what iterates here is the MIXTURE,
-    * not the proxy. Remixing never materializes an expanded corpus —
-    * `P_mix,t(tok) = Σ_s w_s · P_s(tok)` is a weighted aggregate over the
-    * SAME (slice, token, count) relation the corpus pass built once, so
-    * each iteration costs one vocab-grain aggregate pair plus a
-    * driver-side softmax over ≤ `maxStrata` slices. Not SQL-expressible
-    * as one query (a driver loop, like the curation pipeline) — gated by
-    * spec, not oracle; the iteration-1 identity IS oracle-adjacent:
-    * seeded with the corpus's own token-share weights, step 1's KLs equal
-    * [[graft.operators.TextAnalysis.unigramDrift]]'s (q63/q113's gated
-    * relation) round-6 exactly, spec-pinned.
-    *
-    * Update rule per iteration: `w ← normalize(w · exp(eta · kl))`, then
-    * optionally smoothed toward uniform by `uniformMix` (DoReMi's c·u
-    * term). Driver-side doubles with a non-finite fail-fast — a KL big
-    * enough to overflow exp means eta is mis-sized, the same contract as
-    * the single-step rail. Weights per iteration always sum to 1 (exact
-    * normalization); determinism end-to-end (round-6 KLs, sorted slice
-    * order, no data-dependent float fold ambiguity driver-side). */
-  def doremiIterate(df: DataFrame, sliceCol: String, textCol: String,
-                    eta: Double, iters: Int, uniformMix: Double = 0.0,
-                    initWeights: Map[String, Double] = Map.empty,
-                    maxStrata: Int = 10000): Seq[Seq[DoremiStep]] = {
-    require(eta > 0.0, s"eta must be positive, got $eta")
-    require(iters > 0, s"need a positive iteration count, got $iters")
-    require(uniformMix >= 0.0 && uniformMix < 1.0,
-      s"uniformMix must be in [0, 1), got $uniformMix")
-    // ONE corpus pass — the same (slice, token, count) relation
-    // unigramDrift builds (same tokenizer, same counting — that sameness
-    // is what the iteration-1 identity rests on; null slices are
-    // excluded here because a mixture weight for a null domain is
-    // meaningless, so the identity is stated on null-slice-free corpora)
-    val gc = df.where(col(sliceCol).isNotNull)
-      .select(col(sliceCol).cast("string").as("g"),
-        explode(graft.operators.TextAnalysis.tokens(col(textCol))).as("t"))
-      .groupBy("g", "t").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val gTot = gc.groupBy("g").agg(sum(col("c")).as("gn"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val slices = try {
-        require(gTot.count() <= maxStrata,
-          s"stratum cardinality exceeds $maxStrata — doremiIterate is for " +
-            "mixture-grain strata (languages, sources), not row-grain keys")
-        gTot.collect().map(r => r.getString(0)).sorted
-      } catch { case e: Throwable => gTot.unpersist(); gc.unpersist(); throw e }
-      require(slices.nonEmpty, "no non-null slices to reweight")
-      initWeights.keys.foreach(k => require(slices.contains(k),
-        s"initWeights names an absent slice: $k"))
-      val spark = df.sparkSession
-      import spark.implicits._
-      var w: Map[String, Double] =
-        if (initWeights.isEmpty) slices.map(_ -> 1.0 / slices.length).toMap
-        else {
-          require(initWeights.keySet == slices.toSet,
-            "initWeights must cover every slice or be empty")
-          val s = initWeights.values.sum
-          require(s > 0 && initWeights.values.forall(v => v >= 0 && !v.isNaN),
-            s"initWeights must be non-negative with a positive sum")
-          initWeights.view.mapValues(_ / s).toMap
-        }
-      val out = Seq.newBuilder[Seq[DoremiStep]]
-      var it = 0
-      while (it < iters) {
-        val wdf = broadcast(w.toSeq.sortBy(_._1).toDF("g", "w"))
-        val mix = gc.join(gTot, "g").join(wdf, "g")
-          .groupBy("t")
-          .agg(sum(col("w") * col("c").cast("double") / col("gn")).as("pm"))
-        val pS = col("c").cast("double") / col("gn")
-        val kls = gc.join(gTot, "g").join(mix, "t")
-          .groupBy("g")
-          .agg(round(sum(pS * log(pS / col("pm"))), 6).as("kl"))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        val raw = slices.map { s =>
-          val f = w(s) * math.exp(eta * kls(s))
-          require(java.lang.Double.isFinite(f),
-            s"doremiIterate: exp(eta*kl) overflows for slice $s " +
-              s"(eta=$eta, kl=${kls(s)}) — lower eta")
-          s -> f
-        }
-        val tot = raw.map(_._2).sum
-        require(tot > 0, "doremiIterate: degenerate update (zero total weight)")
-        val u = 1.0 / slices.length
-        w = raw.map { case (s, f) =>
-          s -> ((1.0 - uniformMix) * (f / tot) + uniformMix * u)
-        }.toMap
-        out += slices.map(s => DoremiStep(s, kls(s), w(s))).toSeq
-        it += 1
-      }
-      gTot.unpersist()
-      out.result()
-    } finally gc.unpersist()
   }
 
   /** Epoch-weighted mixture EXPANSION — the upsampling counterpart of

@@ -982,7 +982,7 @@ object Similarity {
     * exactly that term. The OTHER failure mode — allowed mass
     * concentrated in unprobed clusters (measured recall 0.000 at
     * nprobe=2 on the adversarial fixture) — is coarse COVERAGE, which no
-    * rerank can recover; its lever remains nprobe ([[tuneProbe]] with the
+    * rerank can recover; its lever remains nprobe (sized with the
     * filter's selectivity in mind), exactly as the pre-filter caveat on
     * [[ivfPqTopKIndexedFiltered]] states. */
   def ivfPqTopKRefinedFiltered(queries: DataFrame, index: DataFrame, k: Int,
@@ -1061,7 +1061,7 @@ object Similarity {
     * Approximate where the exact gate is total, in two measurable ways:
     *   - '''coverage''': a leaked corpus row in a cluster the suite row
     *     doesn't probe is missed — nprobe's territory, exactly the
-    *     [[ivfPqTopKIndexed]] recall story ([[tuneProbe]] applies);
+    *     [[ivfPqTopKIndexed]] recall story;
     *   - '''multiplicity''': one suite row can flag at most
     *     `hitsPerSuiteRow` corpus rows; a benchmark question duplicated
     *     more than that many times within probed clusters keeps the
@@ -1166,263 +1166,6 @@ object Similarity {
       .where(!isnan(col("sd_cos")) && col("sd_cos") >= tau)
       .select(col("neighbor_id").as(idCol)).distinct()
     corpus.join(hits, Seq(idCol), "left_anti").select(col(idCol))
-  }
-
-  /** [[tuneProbe]]'s result: the cheapest (nprobe, rerank) meeting the
-    * recall target on the tuning sample, the recall that pair achieved,
-    * whether the target was met at all within the caps (when false, the
-    * pair is the best-achieving one found), and the full evaluation trace
-    * `(nprobe, rerank, recall)` in the order walked — the caller's
-    * record of the measured curve, SCALE.md-bankable as-is. */
-  final case class ProbePlan(nprobe: Int, rerank: Int, recall: Double,
-                             targetMet: Boolean,
-                             trace: Seq[(Int, Int, Double)])
-
-  /** Recall-targeted probe planning: measure, on a small query SAMPLE,
-    * the cheapest `(nprobe, rerank)` whose [[ivfPqTopKRefined]] recall@k
-    * against the exact truth set meets `recallTarget` — turning the two
-    * hand-picked knobs into a stated recall contract. The banked curves
-    * (SCALE.md §R16) say the levers are independent — nprobe lifts the
-    * COARSE miss (true neighbors in unprobed clusters), rerank the
-    * QUANTIZATION miss (ADC mis-ordering inside probed ones) — so the
-    * walk honors the 100 TB cost asymmetry between them: nprobe is
-    * corpus-I/O (a probe reads ~nprobe/k of the codes) while rerank is
-    * answer-I/O (rerank·k vector point-lookups per query). For each
-    * nprobe (doubling from 1) it first computes that level's PROVABLE
-    * recall ceiling — the fraction of truth pairs whose neighbor's
-    * stored cluster the query actually probes — skips levels whose
-    * ceiling cannot reach the target (no probes wasted), and otherwise
-    * exhausts the cheap lever: doubling rerank until the target is met
-    * or the measured recall reaches the ceiling, where only more
-    * clusters can help. (A consecutive-doublings plateau heuristic is
-    * NOT sound here — recall vs rerank is flat-then-rising whenever a
-    * true neighbor sits just past the current shortlist.)
-    *
-    * Tuning cost: ONE exact pass over the index (the brute-force truth
-    * set — the unavoidable ground-truth price, paid once per index
-    * build/tuning session, amortized over every probe batch the plan
-    * then serves) plus a handful of sample-sized refined probes. All
-    * driver-side state is sample-scale (|sample|·k truth pairs). The
-    * sample should be representative of production queries; recall on a
-    * different query distribution is the caller's risk (hold out a
-    * validation sample — SCALE.md §Round 17, tuneProbe, shows the pattern).
-    * Deterministic end-to-end. Requires an index written
-    * `withVectors = true` (the truth set and the refine tier both read
-    * stored vectors). Each evaluated cell leaves the refine tier's
-    * sample-scale persists behind per the repo's session-scoped cache
-    * convention — call [[graft.GraftSession.releaseCaches]] after a
-    * tuning session. */
-  def tuneProbe(sample: DataFrame, index: DataFrame, k: Int,
-                coarse: Array[Array[Double]],
-                codebooks: Array[Array[Array[Double]]],
-                recallTarget: Double,
-                maxNprobe: Int = 0, maxRerank: Int = 16,
-                idCol: String = "vec_id", vecCol: String = "embedding"): ProbePlan = {
-    require(recallTarget > 0.0 && recallTarget <= 1.0,
-      s"recall target must be in (0, 1], got $recallTarget")
-    require(maxRerank >= 1, s"need maxRerank ≥ 1, got $maxRerank")
-    require(index.columns.contains("embedding"),
-      "tuneProbe needs an index written withVectors = true (no embedding column found)")
-    val npCap = math.min(if (maxNprobe > 0) maxNprobe else coarse.length, coarse.length)
-    require(npCap >= 1, s"need maxNprobe ≥ 1, got $maxNprobe")
-    def pairsOf(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("query_id"), col("neighbor_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = pairsOf(bruteForceTopK(sample,
-      index.select(col("neighbor_id").as(idCol), col("embedding").as(vecCol)),
-      k, idCol, vecCol))
-    require(truth.nonEmpty, "tuning sample produced an empty truth set — is the sample empty?")
-    // PROVABLE per-nprobe recall ceiling: a truth pair is reachable at
-    // nprobe np iff its neighbor's stored cluster ranks among the query's
-    // top-np coarse centroids. (The earlier heuristic — exit when recall
-    // stops improving between consecutive rerank doublings — was wrong
-    // for flat-then-rising curves: a neighbor at ADC rank 11–20 makes
-    // rerank 1 and 2 read equal and abandons rerank 4, which would hit.)
-    // Everything here is sample/answer-scale: the sample's vectors and
-    // the truth neighbors' (id, cluster) rows collect driver-side, and
-    // the centroid ranking replicates the CentroidTopN kernel exactly —
-    // cosine descending, NaN above everything, ties to the LARGER id —
-    // so reachability matches what the probe will actually read.
-    val spark2 = sample.sparkSession
-    val truthIdsDf = {
-      import spark2.implicits._
-      truth.map(_._2).toSeq.toDF("neighbor_id")
-    }
-    val clusterOf: Map[Long, Int] = index
-      .join(broadcast(truthIdsDf), Seq("neighbor_id"), "left_semi")
-      .select(col("neighbor_id"), col("cluster")).collect()
-      .map(r => r.getLong(0) -> r.get(1).toString.toInt).toMap
-    // per query: position of each cluster in the kernel's centroid order
-    val rankPos: Map[Long, Array[Int]] =
-      kernelRankPositions(sample, coarse, idCol, vecCol)
-    def ceiling(np: Int): Double = truth.count { case (q, n) =>
-      clusterOf.get(n).exists(c => rankPos(q)(c) < np)
-    }.toDouble / truth.size
-    val trace = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-    var best: (Int, Int, Double) = (0, 0, -1.0)
-    var met: Option[(Int, Int, Double)] = None
-    val nprobes = Iterator.iterate(1)(_ * 2).takeWhile(_ < npCap).toSeq :+ npCap
-    val npIt = nprobes.iterator
-    while (met.isEmpty && npIt.hasNext) {
-      val np = npIt.next()
-      val ceil = ceiling(np)
-      // a level whose ceiling provably cannot reach the target is skipped
-      // outright (no probes wasted) — except the LAST level, which still
-      // runs so a capped-out plan reports its honest best effort
-      if (ceil + 1e-12 >= recallTarget || !npIt.hasNext) {
-        var rerank = 1
-        var exhausted = false
-        while (met.isEmpty && !exhausted && rerank <= maxRerank) {
-          val got = pairsOf(ivfPqTopKRefined(sample, index, k, coarse, codebooks,
-            nprobe = np, rerank = rerank, idCol = idCol, vecCol = vecCol))
-          val recall = got.intersect(truth).size.toDouble / truth.size
-          trace += ((np, rerank, recall))
-          if (recall > best._3) best = (np, rerank, recall)
-          if (recall >= recallTarget) met = Some((np, rerank, recall))
-          // the ceiling is exact: once reached, more rerank cannot recover
-          // neighbors whose clusters were never probed
-          else if (recall >= ceil - 1e-12) exhausted = true
-          rerank *= 2
-        }
-      }
-    }
-    met match {
-      case Some((np, r, rec)) => ProbePlan(np, r, rec, targetMet = true, trace.toSeq)
-      case None => ProbePlan(best._1, best._2, best._3, targetMet = false, trace.toSeq)
-    }
-  }
-
-  /** Driver-side replica of the CentroidTopN ranking (cosine descending
-    * under SQLOrderingUtil doubles, NaN above everything, ties to the
-    * LARGER centroid id) for every row of a SAMPLE-scale relation:
-    * id → array mapping cluster id to its position in that row's probe
-    * order, so "cluster c is probed at nprobe np" is `pos(c) < np` —
-    * exactly what the probe kernel will read. Shared by [[tuneProbe]]
-    * and [[tuneRadiusProbe]]. */
-  private def kernelRankPositions(rows: DataFrame,
-                                  coarse: Array[Array[Double]],
-                                  idCol: String,
-                                  vecCol: String): Map[Long, Array[Int]] = {
-    val kernelOrder = new Ordering[(Double, Int)] {
-      def compare(a: (Double, Int), b: (Double, Int)): Int = {
-        val (an, bn) = (a._1.isNaN, b._1.isNaN)
-        if (an && bn) b._2.compareTo(a._2)
-        else if (an) -1
-        else if (bn) 1
-        else if (a._1 == b._1) b._2.compareTo(a._2)
-        else java.lang.Double.compare(b._1, a._1)
-      }
-    }
-    rows.select(col(idCol), col(vecCol)).collect().map { r =>
-      val q = vecToDoubles(r.getSeq[Any](1))
-      val qn = math.sqrt(q.map(x => x * x).sum)
-      val ranked = coarse.indices.map { j =>
-        val c = coarse(j)
-        val dot = (0 until math.min(q.length, c.length))
-          .foldLeft(0.0)((acc, i) => acc + q(i) * c(i))
-        (dot / (qn * math.sqrt(c.map(x => x * x).sum)), j)
-      }.sorted(kernelOrder).map(_._2)
-      val pos = new Array[Int](coarse.length)
-      ranked.zipWithIndex.foreach { case (cl, p) => pos(cl) = p }
-      r.getLong(0) -> pos
-    }.toMap
-  }
-
-  private def vecToDoubles(v: Seq[Any]): Array[Double] = v.map {
-    case f: Float => f.toDouble
-    case d: Double => d
-    case x => x.toString.toDouble
-  }.toArray
-
-  /** [[tuneRadiusProbe]]'s result: the cheapest nprobe meeting the recall
-    * target, the recall it achieves, whether the target was met within
-    * the cap (when false, nprobe is the best-achieving level), and the
-    * `(nprobe, recall)` curve in the order walked. */
-  final case class RadiusProbePlan(nprobe: Int, recall: Double,
-                                   targetMet: Boolean,
-                                   trace: Seq[(Int, Double)])
-
-  /** Recall-targeted probe planning for
-    * [[semanticDecontaminateIndexedRadius]] — the gate whose only lever
-    * IS nprobe (no shortlist, no rerank), so its recall at every level is
-    * the pure COVERAGE term: a truly-contaminated corpus row is dropped
-    * at nprobe np iff some ≥ τ suite witness probes the cluster the row
-    * is stored in. That makes the curve computable EXACTLY without
-    * running the gate once: one exact radius pass over the index's stored
-    * vectors builds the truth hits (the same ground-truth price
-    * [[tuneProbe]] pays — run once per index/suite, amortized over every
-    * decontamination batch), the witnesses' centroid probe order is
-    * replicated driver-side ([[kernelRankPositions]] — bit-exact vs the
-    * CentroidTopN kernel), and recall(np) counts truth DOCS covered
-    * (the doc-grain definition of the curve banked in SCALE.md §Round 18).
-    * The identity "predicted recall ≡ measured gate recall at every
-    * level" is spec-asserted on the fixture.
-    *
-    * Driver-side state: |suite| probe orders + the truth hit pairs —
-    * suite-sample × contamination scale, NOT corpus scale (a truth set
-    * too large to hold says the suite sample is too big or τ too loose).
-    * `suite` should be the same suite (or a representative sample of it)
-    * the production gate will run; recall against a different suite is
-    * the caller's risk. Needs an index written `withVectors = true`. */
-  def tuneRadiusProbe(suite: DataFrame, index: DataFrame,
-                      coarse: Array[Array[Double]], tau: Double,
-                      recallTarget: Double, maxNprobe: Int = 0,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): RadiusProbePlan = {
-    require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
-    require(recallTarget > 0.0 && recallTarget <= 1.0,
-      s"recall target must be in (0, 1], got $recallTarget")
-    require(index.columns.contains("embedding"),
-      "tuneRadiusProbe needs an index written withVectors = true " +
-        "(no embedding column found)")
-    requireNonNullIds(suite, idCol, "suite", "tuneRadiusProbe")
-    val npCap = math.min(if (maxNprobe > 0) maxNprobe else coarse.length,
-      coarse.length)
-    require(npCap >= 1, s"need maxNprobe ≥ 1, got $maxNprobe")
-    // exact truth pass: every (witness, stored row) pair at ≥ τ, plus the
-    // row's stored cluster — the radius gate's own NaN/self-id contract
-    // declared brute-force truth pass, the bruteForceTopK shape: the
-    // suite sample broadcasts against one full index scan
-    val q = broadcast(suite.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv")))
-    val truth = q.crossJoin(index.select(col("cluster"), col("neighbor_id"),
-        col("embedding").as("nv")))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sd_cos", round(cosine(col("qv"), col("nv")), 6))
-      .where(!isnan(col("sd_cos")) && col("sd_cos") >= tau)
-      .select(col("query_id"), col("neighbor_id"), col("cluster"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.get(2).toString.toInt))
-    if (truth.isEmpty)
-      // nothing to catch: every level has recall 1 by convention — the
-      // cheapest plan is one probe
-      return RadiusProbePlan(1, 1.0, targetMet = true, Seq((1, 1.0)))
-    val rankPos = kernelRankPositions(suite, coarse, idCol, vecCol)
-    val docs = truth.map(_._2).distinct
-    def recallAt(np: Int): Double = {
-      val covered = docs.count { d =>
-        truth.exists { case (qid, nid, cl) =>
-          nid == d && rankPos(qid)(cl) < np
-        }
-      }
-      covered.toDouble / docs.length
-    }
-    val trace = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    val nprobes = Iterator.iterate(1)(_ * 2).takeWhile(_ < npCap).toSeq :+ npCap
-    var best: (Int, Double) = (0, -1.0)
-    var met: Option[(Int, Double)] = None
-    val it = nprobes.iterator
-    while (met.isEmpty && it.hasNext) {
-      val np = it.next()
-      val rec = recallAt(np)
-      trace += ((np, rec))
-      if (rec > best._2) best = (np, rec)
-      if (rec + 1e-12 >= recallTarget) met = Some((np, rec))
-    }
-    met match {
-      case Some((np, rec)) => RadiusProbePlan(np, rec, targetMet = true, trace.toSeq)
-      case None => RadiusProbePlan(best._1, best._2, targetMet = false, trace.toSeq)
-    }
   }
 
   /** Restrict a stored clustered index to the probed clusters with a

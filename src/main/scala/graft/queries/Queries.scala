@@ -984,8 +984,8 @@ object Queries {
     * relation is definitionally [[graft.operators.Similarity.bruteForceTopK]]'s
     * top-5 — so the oracle IS q93's, and any probe/shortlist/vote drift
     * across the storage round trip fails the hash. (Production labels at
-    * small nprobe; that recall trade is [[graft.operators.Similarity.tuneProbe]]'s
-    * territory, spec-measured.) */
+    * small nprobe; that recall trade is the curve SCALE.md §R17
+    * measured.) */
   val q104_knn_label_indexed: Q = (s, dir) => {
     val e = Tables.embeddings(s, dir)
     val (coarse, books, path) = sharedIvfPqIndex(s, dir)
@@ -1576,8 +1576,8 @@ object Queries {
     * surviving ids: the oracle is q102's with the max_sim column
     * dropped, exactly q103's pattern, so any probe/pruning/NaN defect in
     * the radius path fails the hash at every SF. Production runs small
-    * nprobe — that trade is the banked recall curve and
-    * [[graft.operators.Similarity.tuneRadiusProbe]]'s territory. */
+    * nprobe — that trade is the banked recall curve of
+    * SCALE.md §R18. */
   val q116_semantic_decontam_radius: Q = (s, dir) => {
     val e = Tables.embeddings(s, dir)
     val (coarse, _, path) = sharedIvfPqIndex(s, dir)

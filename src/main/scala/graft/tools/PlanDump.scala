@@ -16,14 +16,20 @@ import graft.queries.Queries
 object PlanDump {
 
   /** (pattern, replacement) for each run-dependent token: expression ids,
-    * plan ids, lambda class names, object identity hashes, and the
-    * application id inside shared-index scratch paths. */
+    * plan ids, lambda class names, object identity hashes, the
+    * application id inside shared-index scratch paths, whole-stage codegen
+    * ids, and adaptive query-stage ids (a `*QueryStage` node's
+    * `Arguments: <n>` line). Codegen and stage ids follow the order in
+    * which concurrently materialized subtrees finish, so they swap between
+    * two runs of one plan. */
   private val volatile = Seq(
     "#\\d+" -> "#N",
     "plan_id=\\d+" -> "plan_id=N",
     "\\$Lambda(\\$\\d+)?/0x[0-9a-f]+" -> "\\$Lambda",
     "(?<=[\\w$])@[0-9a-f]+\\b" -> "@N",
-    "_local_\\d+" -> "_local_N")
+    "_local_\\d+" -> "_local_N",
+    "\\[codegen id : \\d+\\]" -> "[codegen id : N]",
+    "(?m)(^\\(\\d+\\) \\w+QueryStage\\n(?:(?!\\(\\d+\\) ).*\\n)*?Arguments: )\\d+$" -> "$1N")
 
   /** `plan` with its run-dependent tokens replaced by fixed ones. */
   def mask(plan: String): String =

@@ -49,21 +49,6 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(diff == 0.0, s"max |native - fold| = $diff")
   }
 
-  test("VectorMean aggregator matches the explode+avg formulation") {
-    val e = spark.read.parquet(s"$sf/embeddings.parquet").limit(100)
-      .withColumn("g", pmod(col("vec_id"), lit(3)))
-    val viaAgg = e.groupBy("g")
-      .agg(VectorAgg.vectorMean(64)(col("embedding")).as("m"))
-      .select(col("g"), round(element_at(col("m"), 1), 9).as("m0"))
-      .as[(Long, Double)].collect().toMap
-    val viaExplode = e.select(col("g"), posexplode(col("embedding")).as(Seq("p", "x")))
-      .where(col("p") === 0).groupBy("g")
-      .agg(round(avg(col("x").cast("double")), 9).as("m0"))
-      .as[(Long, Double)].collect().toMap
-    assert(viaAgg.keySet === viaExplode.keySet)
-    viaAgg.foreach { case (g, m) => assert(math.abs(m - viaExplode(g)) < 1e-9, s"group $g") }
-  }
-
   test("vector_dot / vector_cosine are registered SQL functions (extension)") {
     vecs.createOrReplaceTempView("vt")
     val r = spark.sql(

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.functions.Md5LongKernel
-import org.apache.spark.sql.functions._
 
 class QualityModelSpec extends SparkSpec {
   import spark.implicits._
@@ -46,51 +45,6 @@ class QualityModelSpec extends SparkSpec {
     assert(e.getMessage.contains("model_score"))
   }
 
-  test("training separates a synthetic two-class corpus and plugs into scoring") {
-    // Two disjoint vocabularies whose buckets do not collide at dims=64
-    // (asserted below, so a hash change can never silently weaken this
-    // test into a collision coin-flip).
-    val goodToks = Seq("alpha", "bravo", "carbon", "delta")
-    val badToks = Seq("zulu", "yankee", "xray", "victor")
-    val dims = 64
-    val buckets = (goodToks ++ badToks).map(bucket(_, dims))
-    assert(buckets.distinct.size === buckets.size, "fixture buckets collide")
-    val rnd = new scala.util.Random(7)
-    val docs = (0 until 200).map { i =>
-      val vocab = if (i % 2 == 0) goodToks else badToks
-      val text = Seq.fill(12)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      (i.toLong, text, i % 2 == 0)
-    }.toDF("id", "text", "label")
-    val m = QualityModel.trainHashedLogistic(docs, "text", col("label"),
-      dims = dims, iters = 60, lr = 5.0)
-    assert(m.losses.head > m.losses.last,
-      s"loss must decrease: ${m.losses.head} -> ${m.losses.last}")
-    assert(m.losses.last < 0.05, s"separable fixture must converge, got ${m.losses.last}")
-    // trained weights drop straight into the scoring tier
-    val scored = QualityModel.hashedLinearScore(docs, "text", m.weights, m.bias)
-      .select($"label", $"keep").as[(Boolean, Boolean)].collect()
-    val acc = scored.count { case (y, kp) => y == kp }.toDouble / scored.length
-    assert(acc >= 0.99, s"train accuracy $acc")
-  }
-
-  test("training excludes null-labeled and null-text rows, rejects empty sets") {
-    val df = Seq(
-      (1L, Option("alpha alpha"), Option(true)),
-      (2L, Option("zulu zulu"), Option(false)),
-      (3L, Option.empty[String], Option(true)),
-      (4L, Option("ignored"), Option.empty[Boolean])).toDF("id", "text", "label")
-    // 2 usable rows — must train without NPE and produce finite loss
-    val m = QualityModel.trainHashedLogistic(df, "text", col("label"),
-      dims = 16, iters = 5, lr = 1.0)
-    assert(m.losses.forall(l => !l.isNaN && !l.isInfinite))
-    val empty = df.where(col("id") > 100)
-    val e = intercept[IllegalArgumentException] {
-      QualityModel.trainHashedLogistic(empty, "text", col("label"), dims = 16,
-        iters = 1)
-    }
-    assert(e.getMessage.contains("no labeled rows"))
-  }
-
   test("plan shape: scoring is a pure per-row expression (no join, no exchange)") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val out = QualityModel.hashedLinearScore(docs, "text",
@@ -100,89 +54,5 @@ class QualityModelSpec extends SparkSpec {
     assert(!plan.contains("Join"), s"scoring must not join:\n$plan")
     assert(!plan.contains("Exchange"),
       s"a row-local classifier must not shuffle the corpus:\n$plan")
-  }
-
-  test("sparse training replays the dense path: same weights (float-sum " +
-    "tolerance), identical round-6 scores and keep decisions") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("text"), (col("lang") === "en").as("y"))
-    val dense = QualityModel.trainHashedLogistic(docs, "text", col("y"),
-      dims = 32, iters = 8, lr = 1.0, l2 = 0.1)
-    val sparse = QualityModel.trainHashedLogisticSparse(docs, "text", col("y"),
-      dims = 32, iters = 8, lr = 1.0, l2 = 0.1)
-    assert(math.abs(dense.bias - sparse.bias) < 1e-9,
-      s"bias drift: ${dense.bias} vs ${sparse.bias}")
-    (0 until 32).foreach { j =>
-      assert(math.abs(dense.weights(j) - sparse.weights(j)) < 1e-9,
-        s"weight $j drift: ${dense.weights(j)} vs ${sparse.weights(j)}")
-    }
-    dense.losses.zip(sparse.losses).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(math.abs(a - b) < 1e-9, s"loss drift at iteration $i: $a vs $b")
-    }
-    // the representations meet at the scoring tier: identical round-6
-    // scores and keep bits under either model
-    val sd = QualityModel.hashedLinearScore(docs, "text", dense.weights,
-        dense.bias).select($"doc_id", $"model_score", $"keep")
-      .as[(Long, Double, Boolean)].collect().sortBy(_._1)
-    val ss = QualityModel.hashedLinearScore(docs, "text", sparse.weights,
-        sparse.bias).select($"doc_id", $"model_score", $"keep")
-      .as[(Long, Double, Boolean)].collect().sortBy(_._1)
-    assert(sd === ss)
-  }
-
-  test("sparse training at dims = 65536 — the fastText-sized regime the " +
-    "dense path cannot enter (O(tokens·dims) build + dims-literal plan)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("text"), (col("lang") === "en").as("y"))
-    val m = QualityModel.trainHashedLogisticSparse(docs, "text", col("y"),
-      dims = 65536, iters = 3, lr = 1.0)
-    assert(m.weights.length === 65536)
-    assert(m.losses.forall(l => !l.isNaN && !l.isInfinite))
-    assert(m.losses.head >= m.losses.last,
-      s"loss must not increase on a fixture this small: ${m.losses}")
-    // nnz sanity: at 64k buckets virtually every distinct token gets its
-    // own bucket, so some weights moved while almost all stayed zero
-    val moved = m.weights.count(_ != 0.0)
-    assert(moved > 0 && moved < 65536 / 4,
-      s"expected a sparse gradient footprint, got $moved non-zero weights")
-  }
-
-  test("sparse feature build is exact: run-length entries match a " +
-    "hand-computed bucket histogram") {
-    // white-box via the public path: train 1 iteration with lr=0 so the
-    // returned model is untouched, then verify the SparseDot scoring
-    // algebra by comparing a 1-iteration lr-step against the dense path
-    // on a fixture whose bucket layout is hand-checkable
-    val df = Seq((1L, "ab ab cd", true), (2L, "cd", false))
-      .toDF("id", "text", "label")
-    val d = QualityModel.trainHashedLogistic(df, "text", col("label"),
-      dims = 8, iters = 1, lr = 2.0)
-    val s = QualityModel.trainHashedLogisticSparse(df, "text", col("label"),
-      dims = 8, iters = 1, lr = 2.0)
-    (0 until 8).foreach { j =>
-      assert(math.abs(d.weights(j) - s.weights(j)) < 1e-12,
-        s"bucket $j: dense ${d.weights(j)} vs sparse ${s.weights(j)}")
-    }
-    // hand-check one gradient entry: doc 1 has x[bucket(ab)] = 2/3,
-    // doc 2 has x[bucket(cd)] = 1; at w=0,b=0 every p = 0.5
-    val bAb = bucket("ab", 8); val bCd = bucket("cd", 8)
-    assert(bAb !== bCd, "fixture buckets collide")
-    val eGood = 0.5 - 1.0; val eBad = 0.5 - 0.0
-    val gAb = (2.0 / 3.0 * eGood) / 2.0
-    val gCd = (1.0 / 3.0 * eGood + 1.0 * eBad) / 2.0
-    assert(math.abs(s.weights(bAb) - (-2.0 * gAb)) < 1e-12)
-    assert(math.abs(s.weights(bCd) - (-2.0 * gCd)) < 1e-12)
-  }
-
-  test("L2 penalty shrinks weights relative to unregularized training") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("text"), (col("lang") === "en").as("y"))
-    val free = QualityModel.trainHashedLogistic(docs, "text", col("y"),
-      dims = 32, iters = 10, lr = 1.0, l2 = 0.0)
-    val reg = QualityModel.trainHashedLogistic(docs, "text", col("y"),
-      dims = 32, iters = 10, lr = 1.0, l2 = 0.5)
-    def norm(w: Array[Double]) = math.sqrt(w.map(x => x * x).sum)
-    assert(norm(reg.weights) < norm(free.weights),
-      s"l2 must shrink: ${norm(reg.weights)} vs ${norm(free.weights)}")
   }
 }

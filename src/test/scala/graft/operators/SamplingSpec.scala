@@ -88,8 +88,9 @@ class SamplingSpec extends SparkSpec {
       s"a per-row keep predicate must not shuffle the corpus:\n$plan")
   }
 
-  test("deterministic sample keeps the expected fraction") {
-    val n = Sampling.deterministicSample(ids, col("id"), 0.25).count()
+  test("stratified sample with no strata keeps the default fraction") {
+    val n = Sampling.stratifiedSample(ids, col("id"), lit("x"), Seq.empty,
+      defaultFraction = 0.25).count()
     assert(math.abs(n / 2000.0 - 0.25) < 0.05, s"got $n/2000")
   }
 
@@ -772,87 +773,6 @@ class SamplingSpec extends SparkSpec {
     assert(boom.getMessage.contains("micro-unit") ||
       Option(boom.getCause).exists(_.getMessage.contains("micro-unit")),
       s"expected the overflow fail-fast, got: ${boom.getMessage}")
-  }
-
-  test("doremiIterate: iteration-1 identity with q63's drift under " +
-    "token-share seeding; the loop is self-limiting; uniform stays put") {
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // seed with the corpus's own token shares: P_mix is then exactly the
-    // corpus blend, so step 1's KLs must equal unigramDrift's round-6
-    val shares = docs.select(col("source").as("g"),
-        explode(graft.operators.TextAnalysis.tokens(col("text"))).as("t"))
-      .groupBy("g").agg(count(lit(1)).cast("double").as("n"))
-      .as[(String, Double)].collect().toMap
-    val tot = shares.values.sum
-    val seeded = Sampling.doremiIterate(docs, "source", "text", eta = 50.0,
-      iters = 1, initWeights = shares.view.mapValues(_ / tot).toMap)
-    val drift = graft.operators.TextAnalysis.unigramDrift(docs, "source", "text")
-      .select(col("source"), col("kl")).as[(String, Double)].collect().toMap
-    seeded.head.foreach { s =>
-      assert(s.kl === drift(s.slice),
-        s"iteration-1 KL drift for ${s.slice}: ${s.kl} vs ${drift(s.slice)}")
-    }
-    // self-limiting on a hand-drifted fixture: slice D's vocabulary is
-    // disjoint, so it starts with the max KL; upweighting it moves the
-    // mixture toward it, so its own KL must FALL across iterations while
-    // its weight rises and every iteration's weights stay a distribution
-    val fx = Seq(("A", "x y z x y"), ("B", "x y z z"), ("C", "y x z"),
-      ("D", "q r s q r s q")).toDF("src", "text")
-    val trace = Sampling.doremiIterate(fx, "src", "text", eta = 2.0, iters = 6)
-    trace.foreach { it =>
-      assert(math.abs(it.map(_.weight).sum - 1.0) < 1e-12,
-        "each iteration's weights must sum to 1 exactly (driver normalize)")
-    }
-    val dKls = trace.map(_.find(_.slice == "D").get.kl)
-    val dWs = trace.map(_.find(_.slice == "D").get.weight)
-    assert(trace.head.maxBy(_.kl).slice === "D")
-    assert(dKls.head > dKls.last,
-      s"remixing must shrink the upweighted slice's own excess: $dKls")
-    assert(dWs.head > 0.25 && dWs.forall(_ < 1.0),
-      s"the drifted slice upweights without absorbing the mixture: $dWs")
-    // drift-free corpus: identical slice distributions ⇒ zero KLs ⇒ the
-    // uniform mixture is the fixed point of every iteration
-    val flat = Seq(("A", "x y"), ("B", "x y"), ("C", "x y")).toDF("src", "text")
-    Sampling.doremiIterate(flat, "src", "text", eta = 5.0, iters = 3)
-      .foreach(_.foreach { s =>
-        assert(s.kl === 0.0 && math.abs(s.weight - 1.0 / 3) < 1e-12)
-      })
-    // uniformMix pulls every weight toward 1/k
-    val mixed = Sampling.doremiIterate(fx, "src", "text", eta = 2.0,
-      iters = 1, uniformMix = 0.5).head
-    val pure = Sampling.doremiIterate(fx, "src", "text", eta = 2.0,
-      iters = 1).head
-    mixed.zip(pure).foreach { case (m, p) =>
-      assert(r6(m.weight) === r6(0.5 * p.weight + 0.5 * 0.25),
-        s"uniformMix must interpolate toward uniform: $m vs $p")
-    }
-    // guards
-    intercept[IllegalArgumentException] {
-      Sampling.doremiIterate(fx, "src", "text", eta = 0.0, iters = 1)
-    }
-    intercept[IllegalArgumentException] {
-      Sampling.doremiIterate(fx, "src", "text", eta = 1.0, iters = 0)
-    }
-    intercept[IllegalArgumentException] {
-      Sampling.doremiIterate(fx, "src", "text", eta = 1.0, iters = 1,
-        uniformMix = 1.0)
-    }
-    intercept[IllegalArgumentException] {
-      Sampling.doremiIterate(fx, "src", "text", eta = 1.0, iters = 1,
-        initWeights = Map("NOPE" -> 1.0))
-    }
-    intercept[IllegalArgumentException] {
-      Sampling.doremiIterate(fx, "src", "text", eta = 1.0, iters = 1,
-        maxStrata = 2)
-    }
-    // a KL big enough to overflow exp fails fast (the driver-side twin of
-    // the single-step micro-unit rail)
-    intercept[IllegalArgumentException] {
-      Sampling.doremiIterate(fx, "src", "text", eta = 1e6, iters = 2)
-    }
-    graft.GraftSession.releaseCaches(spark, blocking = true)
   }
 
   test("weightedSample: non-competing rows excluded, guards fire") {

@@ -919,122 +919,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("tuneProbe: cheapest (nprobe, rerank) meeting the recall target; honest when capped out") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val coarse = Similarity.ivfCentroids(e, k = 8, iters = 1)
-    val books = Similarity.pqTrain(e, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("tune_probe_idx").toString
-    try {
-      Similarity.ivfPqIndexWrite(e, dir, coarse, books)
-      val index = spark.read.parquet(dir)
-      val sample = e.where(col("vec_id") < 8)
-      def pairsOf(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      val truth = pairsOf(Similarity.bruteForceTopK(sample, e, k = 5))
-
-      val plan = Similarity.tuneProbe(sample, index, k = 5, coarse, books,
-        recallTarget = 0.6, maxRerank = 64)
-      assert(plan.targetMet && plan.recall >= 0.6, plan.toString)
-      // the chosen pair REPLAYS: an independent probe at those knobs
-      // reproduces exactly the recall the plan reports
-      val replay = pairsOf(Similarity.ivfPqTopKRefined(sample, index, k = 5,
-        coarse, books, nprobe = plan.nprobe, rerank = plan.rerank))
-      assert(replay.intersect(truth).size.toDouble / truth.size === plan.recall)
-      // cheapest-first: the walk stops AT the meeting cell, every earlier
-      // trace cell missed the target
-      assert(plan.trace.last === ((plan.nprobe, plan.rerank, plan.recall)))
-      assert(plan.trace.dropRight(1).forall(_._3 < 0.6), plan.trace.toString)
-
-      // a perfect-recall target is reachable: nprobe can reach k (all
-      // clusters probed) and a covering rerank makes refined ≡ exact
-      val full = Similarity.tuneProbe(sample, index, k = 5, coarse, books,
-        recallTarget = 1.0, maxRerank = 1024)
-      assert(full.targetMet && full.recall === 1.0, full.toString)
-
-      // unreachable under tight caps: reports targetMet=false and the
-      // best-achieving cell it did find, trace preserved
-      val capped = Similarity.tuneProbe(sample, index, k = 5, coarse, books,
-        recallTarget = 0.999, maxNprobe = 1, maxRerank = 1)
-      assert(!capped.targetMet)
-      assert(capped.trace.nonEmpty && capped.recall === capped.trace.map(_._3).max)
-      assert(capped.nprobe === 1 && capped.rerank === 1)
-
-      // guards: malformed target, codes-only index
-      assert(intercept[IllegalArgumentException] {
-        Similarity.tuneProbe(sample, index, 5, coarse, books, recallTarget = 1.5)
-      }.getMessage.contains("recall target"))
-      assert(intercept[IllegalArgumentException] {
-        Similarity.tuneProbe(sample, index.drop("embedding"), 5, coarse, books, 0.5)
-      }.getMessage.contains("withVectors"))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    graft.GraftSession.releaseCaches(spark, blocking = true)
-  }
-
-  test("tuneRadiusProbe: predicted recall ≡ the measured radius-gate " +
-    "recall at every level; cheapest-first; honest when capped") {
-    import spark.implicits._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val corpus = e.where(col("vec_id") % 9 =!= 0)
-    val suite = e.where(col("vec_id") % 9 === 0)
-    val tau = 0.40
-    val coarse = Similarity.ivfCentroids(corpus, k = 4, iters = 1)
-    val books = Similarity.pqTrain(corpus, 4, 16, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("tune_radius_idx").toString
-    try {
-      Similarity.ivfPqIndexWrite(corpus, dir, coarse, books)
-      val index = spark.read.parquet(dir)
-      val all = corpus.select("vec_id").as[Long].collect().toSet
-      val exactDropped = all -- Similarity.semanticDecontaminate(corpus,
-        suite, tau).select("vec_id").as[Long].collect().toSet
-      assert(exactDropped.nonEmpty, "fixture must have contamination to plan against")
-
-      val plan = Similarity.tuneRadiusProbe(suite, index, coarse, tau,
-        recallTarget = 1.0)
-      assert(plan.targetMet && plan.recall === 1.0, plan.toString)
-      // the SOUNDNESS identity: at every walked level, the planner's
-      // predicted (coverage) recall equals the measured gate recall —
-      // the radius gate has no other loss term to predict
-      plan.trace.foreach { case (np, predicted) =>
-        val dropped = all -- Similarity.semanticDecontaminateIndexedRadius(
-          corpus, suite, index, coarse, tau, nprobe = np)
-          .as[Long].collect().toSet
-        val measured = dropped.intersect(exactDropped).size.toDouble /
-          exactDropped.size
-        assert(math.abs(predicted - measured) < 1e-12,
-          s"planner drift at nprobe=$np: predicted $predicted, measured $measured")
-      }
-      // cheapest-first: the walk stops AT the meeting level; every
-      // earlier trace level missed
-      assert(plan.trace.last === ((plan.nprobe, plan.recall)))
-      assert(plan.trace.dropRight(1).forall(_._2 < 1.0), plan.trace.toString)
-
-      // capped out below the target: honest best effort, trace preserved
-      val lowFloor = plan.trace.head._2
-      if (lowFloor < 1.0) {
-        val capped = Similarity.tuneRadiusProbe(suite, index, coarse, tau,
-          recallTarget = 1.0, maxNprobe = 1)
-        assert(!capped.targetMet && capped.nprobe === 1)
-        assert(capped.recall === lowFloor)
-      }
-      // an uncontaminated suite plans the cheapest probe outright
-      val clean = Similarity.tuneRadiusProbe(suite, index, coarse,
-        tau = 0.999999, recallTarget = 0.9)
-      assert(clean.targetMet && clean.nprobe === 1 && clean.recall === 1.0)
-      // guards
-      assert(intercept[IllegalArgumentException] {
-        Similarity.tuneRadiusProbe(suite, index, coarse, tau, recallTarget = 1.5)
-      }.getMessage.contains("recall target"))
-      assert(intercept[IllegalArgumentException] {
-        Similarity.tuneRadiusProbe(suite, index.drop("embedding"), coarse,
-          tau, 0.5)
-      }.getMessage.contains("withVectors"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      graft.GraftSession.releaseCaches(spark, blocking = true)
-    }
-  }
-
   test("brute-force top-k: k rows per query, ranks contiguous, scores descending") {
     val out = Similarity.bruteForceTopK(emb.where(col("vec_id") < 5), emb, k = 4)
       .select("query_id", "rk", "cosine").as[(Long, Long, Double)].collect()

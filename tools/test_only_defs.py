@@ -5,11 +5,15 @@ that no entry point reaches.
 A def counts when some src/test file names it but no src/main file other
 than its own and no perfbench/src file does. Comments are stripped before
 matching; names are matched as whole identifiers, so a def that shares its
-name with an unrelated method (`find`, `run`) is judged by every use of the
-name. Two rules keep a bare-identifier match from standing in for a call:
-an unqualified `private def` is skipped (no spec can call it), and a spec's
-names exclude the ones that spec declares itself with `val`, `var` or `def`
-(its local `rows` is not a call of a src/main `rows`).
+name with an unrelated method (`run`) is judged by every use of the name.
+Three rules keep a bare-identifier match from standing in for a call: an
+unqualified `private def` is skipped (no spec can call it), so is a def
+declared inside another def's body (a local def, told apart by brace
+nesting on the comment- and string-stripped text; a spec calling the
+collections' `.find` is not a call of a local `find`), and a spec's names
+exclude the ones that spec declares itself with `val`, `var` or `def` (its
+local `rows` is not a call of a src/main `rows`). Defs of an object nested
+in an object stay listed.
 
 The def list misses a module whose only caller is itself unreached, so a
 second section walks whole files. The roots are the files with a `def main`
@@ -28,6 +32,7 @@ import re
 import sys
 
 COMMENT = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*(?:.|\n)*?\*/')
+SCOPE = re.compile(r"[{}]|\b(def|val|var|object|class|trait|type)\b")
 DEF = re.compile(r"((?:\b(?:private|protected|final|override|implicit|inline)(?:\[\w+\])?\s+)*)"
                  r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
 PRIVATE = re.compile(r"\bprivate\s")
@@ -50,6 +55,33 @@ def sources(root):
     return out
 
 
+def callable_defs(text):
+    """Names of the non-private defs in `text` that no other def's body holds.
+
+    A `{` opened at a depth whose latest declaration is a `def` starts a def
+    body (braced body, or a block inside a braceless one); a def is local
+    when any enclosing brace is such a body. String literals are blanked
+    first so their braces do not count."""
+    blank = COMMENT.sub(lambda m: " " * len(m.group(0)), text)
+    local = set()
+    frames, latest = [], {}
+    for m in SCOPE.finditer(blank):
+        tok, depth = m.group(0), len(frames)
+        if tok == "{":
+            frames.append(latest.get(depth) == "def")
+        elif tok == "}":
+            if frames:
+                frames.pop()
+            latest.pop(depth, None)
+        else:
+            if tok == "def" and any(frames):
+                local.add(m.start())
+            latest[depth] = tok
+    return {m.group(2) for m in DEF.finditer(blank)
+            if not PRIVATE.search(m.group(1))
+            and m.start() + len(m.group(1)) not in local}
+
+
 def main(argv):
     repo = argv[0] if argv else "."
     main_src = sources(os.path.join(repo, "src", "main"))
@@ -60,7 +92,7 @@ def main(argv):
                           sources(os.path.join(repo, "perfbench", "src")).values()))
     hits = sorted((os.path.relpath(p, repo), d)
                   for p, t in main_src.items()
-                  for d in {n for mods, n in DEF.findall(t) if not PRIVATE.search(mods)}
+                  for d in callable_defs(t)
                   if d in tested and d not in bench
                   and not any(d in ns for q, ns in names.items() if q != p))
     for path, d in hits:
