@@ -34,12 +34,12 @@ object AsOf {
 
   def joinAsOf(left: DataFrame, right: DataFrame, by: Seq[String],
                leftTs: String, rightTs: String,
-               strict: Boolean = true, rightSuffix: String = "_right"): DataFrame = {
+               strict: Boolean = true): DataFrame = {
     require(by.nonEmpty, "as-of join needs at least one `by` key")
     val rightVals = right.schema.fields.filterNot(f => by.contains(f.name)).toSeq
     // output name for a right value column (suffix on collision with left)
     def outName(c: String): String =
-      if (left.columns.contains(c)) c + rightSuffix else c
+      if (left.columns.contains(c)) c + "_right" else c
 
     val leftSide = if (strict) 0 else 1 // at equal ts: strict → right sorts after left
 

@@ -33,10 +33,11 @@ object Bloom {
     * and probe count. */
   final case class Filter(bits: Array[Long], nbits: Long, k: Int)
 
-  /** Build from hashed keys, driver-side. `bitsPerKey = 12` with `k = 6`
+  /** Build from hashed keys, driver-side. 12 bits per key with 6 probes
     * gives ~0.3% false positives — and FPs only cost confirm-join work. */
-  def build(keys: Iterable[Long], bitsPerKey: Int = 12, k: Int = 6): Filter = {
-    require(bitsPerKey > 0 && k > 0, s"need positive sizing, got $bitsPerKey/$k")
+  def build(keys: Iterable[Long]): Filter = {
+    val bitsPerKey = 12
+    val k = 6
     val n = math.max(1, keys.size)
     val nbits = math.max(64L, ((n.toLong * bitsPerKey + 63) / 64) * 64)
     val words = new Array[Long]((nbits / 64).toInt)

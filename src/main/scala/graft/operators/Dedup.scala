@@ -778,10 +778,9 @@ object Dedup {
     * per gram (codegen'd, where md5 is not), but no external engine could
     * replay its recall misses. */
   def minHashDedupPortable(df: DataFrame, id: String, tokens: String,
-                           shingleN: Int, threshold: Double,
-                           k: Int = 16, bands: Int = 4): DataFrame = {
-    require(bands >= 1 && k >= 1, s"need k ≥ 1 and bands ≥ 1, got k=$k bands=$bands")
-    require(k % bands == 0, s"k=$k must split into $bands bands")
+                           shingleN: Int, threshold: Double): DataFrame = {
+    val k = 16 // signature rows
+    val bands = 4
     val rows = k / bands
     val md5Long = graft.functions.Md5LongFunction.md5Long _
     // one distinct-shingle-string relation feeds the signature build AND
@@ -837,25 +836,13 @@ object Dedup {
     * a checkpoint. Near-dup graphs are orders of magnitude smaller than
     * their corpus (pairs, not docs), so this is the common case even at
     * 100 TB; a genuinely huge graph (`maxDriverEdges = 0` forces it) runs
-    * the distributed min-label/pointer-jumping loop below.
-    *
-    * `reliable = true` switches the per-round lineage truncation from
-    * `localCheckpoint` (executor-local blocks — fast, but an executor loss
-    * mid-loop kills the job) to reliable `checkpoint` into
-    * `spark.sparkContext.getCheckpointDir` (HDFS/S3 on a real cluster —
-    * each round's labels survive executor churn). Local default stays
-    * `localCheckpoint`: single-JVM runs have no executor to lose. Callers
-    * must `setCheckpointDir` before passing `reliable = true`. */
-  def connectedComponents(pairs: DataFrame, left: String = "left_id",
-                          right: String = "right_id", maxIter: Int = 25,
-                          reliable: Boolean = false,
+    * the distributed min-label/pointer-jumping loop below, at most 25
+    * rounds, each truncating its lineage with `localCheckpoint`. */
+  def connectedComponents(pairs: DataFrame,
                           maxDriverEdges: Long = 1L << 21): DataFrame = {
-    require(!reliable || pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable=true requires spark.sparkContext.setCheckpointDir(...)")
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val edgesSrc = pairs.select(col(left).as("src"), col(right).as("dst"))
-      .unionByName(pairs.select(col(right).as("src"), col(left).as("dst")))
+    val maxIter = 25
+    val edgesSrc = pairs.select(col("left_id").as("src"), col("right_id").as("dst"))
+      .unionByName(pairs.select(col("right_id").as("src"), col("left_id").as("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     val callerParts = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")
     val nEdges = edgesSrc.count()
@@ -886,12 +873,13 @@ object Dedup {
     // labels only ever decrease, so Σcomp is a monotone convergence witness:
     // fixpoint ⟺ the sum stops changing. Every sum (this one and each
     // round's) rides its checkpoint's materialization job as an observe()
-    // metric — verified to fire for both localCheckpoint and reliable
-    // checkpoint — so convergence detection costs zero extra jobs.
+    // metric — verified to fire for localCheckpoint — so convergence
+    // detection costs zero extra jobs.
     val obs0 = org.apache.spark.sql.Observation("cc_init")
-    var labels = truncate(edges.select(col("src").as("id")).distinct()
+    var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
-      .observe(obs0, coalesce(sum(col("comp")), lit(0L)).as("s")))
+      .observe(obs0, coalesce(sum(col("comp")), lit(0L)).as("s"))
+      .localCheckpoint()
     var prevSum = obs0.get("s").asInstanceOf[Long]
     var i = 0
     var converged = false
@@ -917,12 +905,13 @@ object Dedup {
       // no separate agg job per round.
       val obs = org.apache.spark.sql.Observation(s"cc_round_$i")
       val next =
-        try truncate(stepped.as("x")
+        try stepped.as("x")
           .join(stepped.select(col("id").as("cid"), col("comp").as("ccomp")),
             col("x.comp") === col("cid"), "left")
           .select(col("x.id").as("id"),
             least(col("x.comp"), coalesce(col("ccomp"), col("x.comp"))).as("comp"))
-          .observe(obs, coalesce(sum(col("comp")), lit(0L)).as("s")))
+          .observe(obs, coalesce(sum(col("comp")), lit(0L)).as("s"))
+          .localCheckpoint()
         finally stepped.unpersist(blocking = false)
       labels = next
       i += 1
@@ -1058,9 +1047,8 @@ object Dedup {
   /** Cluster-level dedup decision: every doc in a near-dup component keeps
     * the component minimum as its canonical id (docs in no pair are their
     * own canonical). */
-  def canonicalIds(allIds: DataFrame, idCol: String, pairs: DataFrame,
-                   reliable: Boolean = false): DataFrame = {
-    val comps = connectedComponents(pairs, reliable = reliable)
+  def canonicalIds(allIds: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val comps = connectedComponents(pairs)
     allIds.select(col(idCol).as("id")).distinct()
       .join(comps, Seq("id"), "left")
       .select(col("id").as(idCol), coalesce(col("comp"), col("id")).as("canonical_id"))
@@ -1094,9 +1082,8 @@ object Dedup {
     * there — the same size-driven representation choice the pair stage
     * itself makes). */
   def canonicalIdsCascade(df: DataFrame, id: String, tokenSet: String,
-                          block: String, threshold: Double,
-                          reliable: Boolean = false): DataFrame =
-    canonicalIdsCascadeAt(df, id, tokenSet, block, threshold, reliable,
+                          block: String, threshold: Double): DataFrame =
+    canonicalIdsCascadeAt(df, id, tokenSet, block, threshold,
       occGate = SmallCorpusOccMax)
 
   /** [[canonicalIdsCascade]] with an explicit occurrence gate (test seam:
@@ -1107,7 +1094,7 @@ object Dedup {
     * corpus that threatens the CC driver gate is always far above it. */
   private[operators] def canonicalIdsCascadeAt(df: DataFrame, id: String,
       tokenSet: String, block: String, threshold: Double,
-      reliable: Boolean, occGate: Long): DataFrame = {
+      occGate: Long): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"cascade threshold must be in (0, 1], got $threshold")
     // `n` is computed BEFORE the persist so the cached plan is the exact
@@ -1130,8 +1117,7 @@ object Dedup {
     if (st.occ <= occGate)
       return canonicalIds(df.select(col(id)), id,
         jaccardPairsFromHashed(hsRaw, threshold, vocabHint = None,
-          precomputed = Some(st)),
-        reliable = reliable)
+          precomputed = Some(st)))
     val hs = hsRaw.withColumn("skey", array_sort(col("hs")))
     val withRep = hs.join(
       hs.groupBy(col("blk"), col("skey")).agg(min(col("hs_id")).as("rep")),
@@ -1154,8 +1140,7 @@ object Dedup {
     // therefore withRep's cache blocks — so the raw input has no consumer
     // left (stars reads withRep, not hsRaw)
     hsRaw.unpersist(blocking = false)
-    canonicalIds(df.select(col(id)), id, repPairs.unionByName(stars),
-      reliable = reliable)
+    canonicalIds(df.select(col(id)), id, repPairs.unionByName(stars))
   }
 
   /** Cross-document passage dedup (the C4/CCNet line-dedup step, applied to
@@ -1254,43 +1239,35 @@ object Dedup {
         .reduce((a, b) => a.bitwiseOR(b)).as("sh"))
   }
 
-  /** Near-even split of the 64 signature bits into `blocks` contiguous
-    * blocks (low bits first; the first 64 % blocks blocks get the extra
-    * bit). blocks = 4 reproduces the classic 4×16-bit chunking exactly. */
-  private def simHashBlockWidths(blocks: Int): Seq[Int] = {
-    val base = 64 / blocks
-    val extra = 64 % blocks
-    Seq.tabulate(blocks)(i => base + (if (i < extra) 1 else 0))
-  }
+  /** The block count of [[simHashCandidates]]: the classic 4×16-bit
+    * chunking, low bits first. */
+  private val SimHashBlocks = 4
 
   /** Candidate pairs from a (sh_id, sh) signature relation via Manku-style
     * block-combination tables (Manku, Jain, Das Sarma, WWW'07 §3): split the
-    * 64 bits into `blocks` blocks; a pair with hamming ≤ maxHamming leaves
+    * 64 bits into `blocks` = 4 blocks; a pair with hamming ≤ maxHamming leaves
     * ≥ blocks − maxHamming blocks untouched (pigeonhole), so it MUST agree
     * on at least one of the C(blocks, blocks−maxHamming) block combinations.
     * Each combination is one table, keyed by that combination's bits packed
     * into a long — an equi-join key, so candidate generation is a linear
     * explode (×#tables) + a key-partitioned self-join, never all-pairs.
     *
-    * Sizing (the 100 TB knob — full math in SCALE.md): per-table key width
-    * is ≈ 64·(blocks−maxHamming)/blocks bits, so expected in-bucket
-    * candidate volume is Θ(N²/2^width) per table. blocks=4, h=3 gives 4
-    * tables on 16-bit keys (fine to ~10⁷ docs); blocks=6, h=3 gives 20
-    * tables on ~32-bit keys, keeping buckets O(N/2³²) at web scale — the
-    * Manku trade of bounded replication for sub-quadratic buckets.
+    * Sizing (full math in SCALE.md): per-table key width is
+    * 64·(blocks−maxHamming)/blocks bits, so expected in-bucket candidate
+    * volume is Θ(N²/2^width) per table. blocks=4, h=3 gives 4 tables on
+    * 16-bit keys (fine to ~10⁷ docs).
     *
     * A pair agreeing on several tables would surface once per table; it is
     * kept only where `tbl` is the FIRST agreeing table (some block of every
     * earlier table differs) — a codegen'd filter on bits already in the
     * row, replacing a `distinct()` that would shuffle the whole candidate
     * set again. Exposed within graft so specs can bound candidate counts. */
-  private[graft] def simHashCandidates(sigs: DataFrame, maxHamming: Int,
-                                       blocks: Int): DataFrame = {
-    require(blocks >= 2 && blocks <= 32, s"blocks must be in [2, 32], got $blocks")
+  private[graft] def simHashCandidates(sigs: DataFrame, maxHamming: Int): DataFrame = {
+    val blocks = SimHashBlocks
     require(maxHamming >= 0 && maxHamming < blocks,
       s"pigeonhole completeness needs maxHamming < blocks, got " +
         s"maxHamming=$maxHamming blocks=$blocks")
-    val widths = simHashBlockWidths(blocks)
+    val widths = Seq.fill(blocks)(64 / blocks)
     val offsets = widths.scanLeft(0)(_ + _).init
     def blockOf(sig: Column, b: Int): Column =
       shiftrightunsigned(sig, offsets(b)).bitwiseAND((1L << widths(b)) - 1)
@@ -1315,15 +1292,14 @@ object Dedup {
 
   /** SimHash near-dup pairs with hamming distance ≤ maxHamming.
     * Candidate generation via [[simHashCandidates]] block-combination
-    * tables — `blocks` is the scale knob (default 4 = the classic 16-bit
-    * chunk scheme; raise to 6 for ≥10⁸-doc corpora). The pigeonhole bound
-    * is structural: maxHamming < blocks is required, so no parameterization
+    * tables (the classic 4×16-bit chunk scheme). The pigeonhole bound
+    * is structural: maxHamming < 4 is required, so no parameterization
     * can silently miss pairs. The signature relation is persisted so the
     * self-join's two sides don't recompute it. */
   def simHashPairs(df: DataFrame, id: String, tokenSet: String,
-                   maxHamming: Int = 3, blocks: Int = 4): DataFrame = {
+                   maxHamming: Int = 3): DataFrame = {
     val sigs = simHashSignatures(df, id, tokenSet).persist(StorageLevel.MEMORY_AND_DISK)
-    simHashCandidates(sigs, maxHamming, blocks)
+    simHashCandidates(sigs, maxHamming)
       .withColumn("hamming", bit_count(col("lsh").bitwiseXOR(col("rsh"))))
       .where(col("hamming") <= maxHamming)
       .select("left_id", "right_id", "hamming")
@@ -1336,7 +1312,7 @@ object Dedup {
     * survives is a policy decision, and "first crawled" throws away the
     * cleanest copy whenever a later crawl fixed the boilerplate).
     * `labels` carries (idCol, canonical_id) — any cluster labeling;
-    * `scores` carries (idCol, scoreCol). Ties break to the smallest id.
+    * `scores` carries (idCol, quality). Ties break to the smallest id.
     * Returns every row with its cluster, score, and a `kept` bit, so the
     * caller can filter, audit, or weight.
     *
@@ -1346,13 +1322,12 @@ object Dedup {
     * partitioned BY CLUSTER — partitions are clique-sized, and the exact
     * dup cliques that could concentrate one partition are exactly what
     * [[canonicalIdsCascade]] collapses upstream. */
-  def qualityKeep(labels: DataFrame, scores: DataFrame, idCol: String,
-                  scoreCol: String = "quality"): DataFrame = {
+  def qualityKeep(labels: DataFrame, scores: DataFrame, idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("canonical_id")
-      .orderBy(col(scoreCol).desc, col(idCol))
+      .orderBy(col("quality").desc, col(idCol))
     labels.join(scores, Seq(idCol))
       .withColumn("kept", row_number().over(w) === 1)
-      .select(col(idCol), col("canonical_id"), col(scoreCol), col("kept"))
+      .select(col(idCol), col("canonical_id"), col("quality"), col("kept"))
   }
 }

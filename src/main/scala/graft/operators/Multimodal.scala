@@ -191,7 +191,8 @@ object Multimodal {
       * mvhd and one video trak's tkhd + the bytes as mdat) — the
       * deterministic inverse of [[mp4Info]], analogous to [[wavWrap]]. */
     def mp4Wrap(data: Array[Byte], width: Int, height: Int,
-                durationMs: Long, timescale: Int = 1000): Array[Byte] = {
+                durationMs: Long): Array[Byte] = {
+      val timescale = 1000 // units per second: durations in ms
       val b = java.nio.ByteBuffer.allocate(16 + 216 + 8 + data.length) // big-endian default
       b.putInt(16).put("ftyp".getBytes("US-ASCII"))
         .put("isom".getBytes("US-ASCII")).putInt(0)
@@ -371,17 +372,16 @@ object Multimodal {
   }
 
   /** Wrap every payload as a minimal MP4 (the bytes as mdat, declared
-    * presentation size, duration in ms) — the video-ingest twin of
+    * presentation size, a duration of one ms per payload byte) — the
+    * video-ingest twin of
     * [[wrapPcm]], exercising the ISO BMFF parser on real container
     * bytes. */
-  def wrapMp4(media: DataFrame, width: Int = 640, height: Int = 360,
-              durationFromBytes: Boolean = true): DataFrame = {
+  def wrapMp4(media: DataFrame, width: Int = 640, height: Int = 360): DataFrame = {
     import media.sparkSession.implicits._
     media.select(col("media_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, data) =>
-        val ms = if (durationFromBytes) data.length.toLong else 0L
-        (id, HeaderCodec.mp4Wrap(data, width, height, ms))
+        (id, HeaderCodec.mp4Wrap(data, width, height, data.length.toLong))
       })
       .toDF("media_id", "payload")
       .withColumn("meta", struct(

@@ -23,15 +23,16 @@ import org.apache.spark.sql.functions._
   */
 object QualityModel {
 
-  val DefaultDims = 64
+  /** Feature buckets of the published model. */
+  val Dims = 64
 
   /** Published fixed scoring weights for the oracle-gated query: a pure
     * function of the bucket index (NOT trained), so the engine and the
     * DuckDB oracle embed the IDENTICAL literal vector. Values span
     * [-1, 1] with short decimal expansions that round-trip exactly
     * through `Double.toString` → SQL literal parsing. */
-  def fixedWeights(dims: Int = DefaultDims): Array[Double] =
-    Array.tabulate(dims)(i => ((i * 37 + 11) % 101).toDouble / 50.0 - 1.0)
+  def fixedWeights(): Array[Double] =
+    Array.tabulate(Dims)(i => ((i * 37 + 11) % 101).toDouble / 50.0 - 1.0)
 
   /** Per-row mean bucket weight: `(Σ_t w[md5_long(t) mod dims]) / n_tokens`
     * — transform in token order, ordered fold, divide. The exact shape a
@@ -58,17 +59,16 @@ object QualityModel {
   }
 
   /** Score every document with a fixed hashed-linear model:
-    * [[scoreColumn]] plus the `keep` decision at `threshold` computed
+    * [[scoreColumn]] plus the `keep` decision at 0.5 computed
     * FROM the rounded score so both engines decide identical bits. Null
     * text scores null and is never kept. Adds `model_score` and `keep`;
     * zero shuffles, no state. */
   def hashedLinearScore(df: DataFrame, textCol: String,
-                        weights: Array[Double], bias: Double,
-                        threshold: Double = 0.5): DataFrame = {
+                        weights: Array[Double], bias: Double): DataFrame = {
     val clash = Seq("model_score", "keep").filter(df.columns.contains)
     require(clash.isEmpty,
       s"input columns collide with output names: ${clash.mkString(", ")}")
     df.withColumn("model_score", scoreColumn(col(textCol), weights, bias))
-      .withColumn("keep", col("model_score") >= threshold)
+      .withColumn("keep", col("model_score") >= 0.5)
   }
 }

@@ -33,16 +33,16 @@ object Redaction {
   val SsnPattern = "\\b\\d{3}-\\d{2}-\\d{4}\\b"
 
   /** 3-4 digit local phone groups with a separator (covers the common
-    * 555-0123 tail; fuller national formats are caller-supplied patterns). */
+    * 555-0123 tail). */
   val PhonePattern = "\\b\\d{3}[- ]\\d{4}\\b"
 
   /** Dotted-quad IPv4. */
   val Ipv4Pattern = "\\b\\d{1,3}(?:\\.\\d{1,3}){3}\\b"
 
-  /** Default scrub set, ordered LONGEST/most-specific first so a card
+  /** The scrub set, ordered LONGEST/most-specific first so a card
     * number is never half-eaten by the phone pattern before its own pass
     * (the chain rewrites left to right through this sequence). */
-  val DefaultPatterns: Seq[(String, String)] = Seq(
+  val Patterns: Seq[(String, String)] = Seq(
     "card"  -> CardPattern,
     "ssn"   -> SsnPattern,
     "email" -> EmailPattern,
@@ -52,9 +52,8 @@ object Redaction {
   /** Replace every match of every pattern with its `[name]` placeholder,
     * applied in sequence order. Idempotent: placeholders contain no digits
     * or '@', so no pattern can match inside an earlier replacement. */
-  def redact(text: Column,
-             patterns: Seq[(String, String)] = DefaultPatterns): Column =
-    patterns.foldLeft(text) { case (acc, (name, pat)) =>
+  def redact(text: Column): Column =
+    Patterns.foldLeft(text) { case (acc, (name, pat)) =>
       regexp_replace(acc, pat, s"[$name]")
     }
 

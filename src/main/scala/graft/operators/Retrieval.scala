@@ -78,12 +78,11 @@ object Retrieval {
     * tier emit); ranks beyond k are ignored so a wider candidate list
     * can be re-scored at tighter k without recomputation. Answer-sized
     * relations throughout, exactly as [[recallReport]]. */
-  def ndcgReport(truth: DataFrame, candidate: DataFrame, k: Int,
-                 rankCol: String = "rk"): DataFrame = {
+  def ndcgReport(truth: DataFrame, candidate: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be ≥ 1, got $k")
     val t = truth.select(col("query_id"), col("neighbor_id"))
     val c = candidate.select(col("query_id"), col("neighbor_id"),
-        col(rankCol).cast("long").as("nd_rk"))
+        col("rk").cast("long").as("nd_rk"))
       .where(col("nd_rk") >= 1 && col("nd_rk") <= k)
     val dcg = t.join(c, Seq("query_id", "neighbor_id"))
       .groupBy("query_id")

@@ -17,10 +17,13 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Stable bucket in [0, buckets) from the md5 of the key column. */
-  def hashBucket(key: Column, buckets: Int = 100): Column =
+  /** The bucket count of [[hashBucket]]: fractions resolve to percent. */
+  private val Buckets = 100
+
+  /** Stable bucket in [0, 100) from the md5 of the key column. */
+  def hashBucket(key: Column): Column =
     pmod(conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long"),
-      lit(buckets.toLong))
+      lit(Buckets.toLong))
 
   /** Stratified deterministic sample: a per-stratum keep fraction (e.g.
     * upsample rare languages, downsample English), decided by the
@@ -30,12 +33,11 @@ object Sampling {
     * `defaultFraction`. Pure per-row expression, no shuffle. */
   def stratifiedSample(df: DataFrame, key: Column, stratum: Column,
                        fractions: Seq[(String, Double)],
-                       defaultFraction: Double = 0.0,
-                       buckets: Int = 100): DataFrame = {
-    val cut = fractions.foldLeft(lit((defaultFraction * buckets).toLong)) {
-      case (acc, (s, f)) => when(stratum === s, lit((f * buckets).toLong)).otherwise(acc)
+                       defaultFraction: Double = 0.0): DataFrame = {
+    val cut = fractions.foldLeft(lit((defaultFraction * Buckets).toLong)) {
+      case (acc, (s, f)) => when(stratum === s, lit((f * Buckets).toLong)).otherwise(acc)
     }
-    df.where(hashBucket(key, buckets) < cut)
+    df.where(hashBucket(key) < cut)
   }
 
   /** Mix a corpus to target stratum weights (the pretraining "data mixture"
@@ -61,7 +63,7 @@ object Sampling {
     * config error, not an empty result — and on duplicate stratum names,
     * which would otherwise silently last-win. */
   def mixToWeights(df: DataFrame, key: Column, stratum: Column,
-                   weights: Seq[(String, Double)], buckets: Int = 100): DataFrame = {
+                   weights: Seq[(String, Double)]): DataFrame = {
     require(weights.nonEmpty && weights.forall(_._2 > 0),
       s"weights must be positive, got $weights")
     require(weights.map(_._1).distinct.size == weights.size,
@@ -81,10 +83,10 @@ object Sampling {
       .map(r => r.getLong(1).toDouble / r.getDouble(2)).min
     val cut = counts.foldLeft(lit(0L)) { (acc, r) =>
       when(stratum === r.getString(0),
-        lit(math.floor(r.getDouble(2) * scale / r.getLong(1) * buckets).toLong))
+        lit(math.floor(r.getDouble(2) * scale / r.getLong(1) * Buckets).toLong))
         .otherwise(acc)
     }
-    df.where(hashBucket(key, buckets) < cut)
+    df.where(hashBucket(key) < cut)
   }
 
   /** TEMPERATURE-scaled mixture weights — the multilingual rebalancing
@@ -103,19 +105,22 @@ object Sampling {
     * floor boundary where 1 ulp flips the bucket count).
     *
     * Scale shape: one map-side-combined count per stratum; the collect is
-    * stratum-sized and fail-fasts past `maxStrata` (a corpus-cardinality
+    * stratum-sized and fail-fasts past [[MaxStrata]] (a corpus-cardinality
     * stratum column is a config error — at that grain use
     * [[keepByGroupTokenBudget]]'s distributed thresholds instead). Null
     * strata are excluded (they cannot be named in a mixture). */
-  def temperatureWeights(df: DataFrame, stratum: Column, alpha: Double,
-                         maxStrata: Int = 10000): Seq[(String, Double)] = {
+  def temperatureWeights(df: DataFrame, stratum: Column,
+                         alpha: Double): Seq[(String, Double)] = {
     require(alpha >= 0.0 && alpha <= 1.0, s"alpha must be in [0,1], got $alpha")
-    collectStrata(df, stratum, count(lit(1)), maxStrata, "temperature weights")
+    collectStrata(df, stratum, count(lit(1)), "temperature weights")
       .map { r =>
         r.getString(0) -> BigDecimal(math.pow(r.getLong(1).toDouble, alpha))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       }.sortBy(_._1)
   }
+
+  /** The most strata the mixture-weight planners collect to the driver. */
+  private[operators] val MaxStrata = 10000
 
   /** Shared stratum-aggregation scaffold for the mixture-weight planners
     * ([[temperatureWeights]], [[unimaxWeights]]): non-null strata,
@@ -123,15 +128,14 @@ object Sampling {
     * cardinality fail-fast guarded by a persist so the count and the
     * collect read the same computed relation, bounded collect. */
   private def collectStrata(df: DataFrame, stratum: Column, agg: Column,
-                            maxStrata: Int,
                             what: String): Seq[org.apache.spark.sql.Row] = {
     val counts = df.where(stratum.isNotNull)
       .groupBy(stratum.cast("string").as("st_stratum"))
       .agg(agg.as("st_v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      require(counts.count() <= maxStrata,
-        s"stratum cardinality exceeds $maxStrata — $what are for " +
+      require(counts.count() <= MaxStrata,
+        s"stratum cardinality exceeds $MaxStrata — $what are for " +
           "mixture-grain strata (languages, sources), not row-grain keys")
       counts.collect().toSeq
     } finally counts.unpersist()
@@ -164,18 +168,17 @@ object Sampling {
     * `(epochCap·c)/c` lands 1 ulp off `epochCap`.
     *
     * Scale shape: one map-side-combined LONG sum per stratum; the
-    * collect is stratum-sized with the same `maxStrata` fail-fast as
+    * collect is stratum-sized with the same [[MaxStrata]] fail-fast as
     * [[temperatureWeights]] (mixture-grain strata only); the
     * waterfilling loop is O(strata) on the driver. Null strata are
     * excluded (they cannot be named in a mixture); zero-capacity strata
     * are excluded from the fill (0 epochs of nothing) and never
     * divide-by-zero. */
   def unimaxWeights(df: DataFrame, stratum: Column, size: Column,
-                    budgetFactor: Double, epochCap: Double,
-                    maxStrata: Int = 10000): Seq[(String, Double)] = {
+                    budgetFactor: Double, epochCap: Double): Seq[(String, Double)] = {
     require(budgetFactor > 0.0, s"budgetFactor must be positive, got $budgetFactor")
     require(epochCap > 0.0, s"epochCap must be positive, got $epochCap")
-    val rows = collectStrata(df, stratum, sum(size.cast("long")), maxStrata,
+    val rows = collectStrata(df, stratum, sum(size.cast("long")),
       "UniMax weights").map { r =>
       require(!r.isNullAt(1) && r.getLong(1) >= 0L,
         s"stratum '${r.getString(0)}' has a null/negative size sum — " +
@@ -300,8 +303,8 @@ object Sampling {
     * before shard export — compose with [[corpusShuffle]] keyed on
     * (key, epoch) so repeats land in different shards. */
   def epochExpand(df: DataFrame, key: Column, stratum: Column,
-                  epochs: Seq[(String, Double)], defaultEpochs: Double = 1.0,
-                  buckets: Int = 100): DataFrame = {
+                  epochs: Seq[(String, Double)],
+                  defaultEpochs: Double = 1.0): DataFrame = {
     require(epochs.forall(_._2 >= 0),
       s"epoch factors must be non-negative, got $epochs")
     require(defaultEpochs >= 0,
@@ -322,9 +325,9 @@ object Sampling {
     // intended bucket. (stratifiedSample keeps its own documented floor
     // convention — its fractions are caller-chosen cut points, not a
     // user-facing epoch weight.)
-    val fracBuckets = floor((w - floor(w)) * buckets + 0.5).cast("long")
+    val fracBuckets = floor((w - floor(w)) * Buckets + 0.5).cast("long")
     val copies = whole +
-      when(hashBucket(key, buckets) < fracBuckets, lit(1)).otherwise(lit(0))
+      when(hashBucket(key) < fracBuckets, lit(1)).otherwise(lit(0))
     df.withColumn("epoch",
         explode(when(copies > 0, sequence(lit(0), copies - 1))
           .otherwise(array().cast("array<int>"))))
@@ -435,6 +438,10 @@ object Sampling {
       .drop(reserved: _*)
   }
 
+  /** [[systematicResample]]'s bucket bits: 2^8 bucket totals on the driver,
+    * 256 parallel bucket sorts. */
+  private val ResampleBucketBits = 8
+
   /** WEIGHTED resampling WITH replacement, deterministic — systematic
     * (low-variance / stratified-universal) resampling (Kitagawa 1996,
     * JCGS 5(1); Douc, Cappé & Moulines 2005 compare the schemes): lay
@@ -475,26 +482,20 @@ object Sampling {
     * needed — counts stay |output| ≤ n rows here.
     *
     * Scale shape: NO global window. The prefix sum is bucketed: the top
-    * `bucketBits` bits of the 60-bit draw hash define `2^bucketBits`
+    * [[ResampleBucketBits]] bits of the 60-bit draw hash define 2^bits
     * buckets that are a PREFIX of the line order (hash-ascending), so
     * per-bucket mass totals (one map-side-combined aggregate, 2^bits
     * rows — metadata scale, collected and prefix-summed on the driver)
     * plus a window partitioned BY bucket reconstruct the exact global
     * cumulative sum with per-bucket parallel sorts of |corpus|/2^bits
     * rows each. Two corpus passes (totals + window), one shuffle (the
-    * bucket window). At 100 TB raise `bucketBits` so a bucket fits an
-    * executor's sort budget (16 bits = 65 536 parallel sorts); the
-    * driver-side relation stays 2^bits rows — fail-fasted at 20 bits. */
+    * bucket window). */
   def systematicResample(df: DataFrame, key: Column, weight: Column,
-                         n: Long, seed: String = "",
-                         bucketBits: Int = 8): DataFrame = {
+                         n: Long, seed: String = ""): DataFrame = {
     require(n > 0, s"draw count must be positive, got $n")
     require(n <= 1000000000L,
       s"draw count $n exceeds the 1e9 rail — the count arithmetic's " +
         "decimal(38,0) headroom assumes 2n·W < 1e38 with W ≤ 1e28")
-    require(bucketBits >= 1 && bucketBits <= 20,
-      s"bucketBits must be in [1, 20], got $bucketBits (driver holds " +
-        "2^bucketBits bucket totals)")
     val reserved = Seq("sr_key", "sr_h", "sr_w", "sr_b", "sr_off", "sr_cum", "draws")
     val clash = df.columns.filter(c => reserved.contains(c.toLowerCase))
     require(clash.isEmpty,
@@ -507,8 +508,8 @@ object Sampling {
         col("sr_w").isNotNull && col("sr_w") > 0)
       .withColumn("sr_h",
         graft.functions.Md5LongFunction.md5Long(concat(lit(seed), col("sr_key"))))
-      .withColumn("sr_b", shiftright(col("sr_h"), 60 - bucketBits))
-    // Per-bucket mass totals: 2^bucketBits rows, exact decimal sums.
+      .withColumn("sr_b", shiftright(col("sr_h"), 60 - ResampleBucketBits))
+    // Per-bucket mass totals: 2^ResampleBucketBits rows, exact decimal sums.
     val totals = keyed.groupBy("sr_b")
       .agg(sum(col("sr_w").cast("decimal(38,0)")).as("t"))
       .collect()
@@ -904,14 +905,13 @@ object Sampling {
 
   /** Split assignment by cumulative bucket ranges, e.g.
     * `Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)`. Fractions are
-    * interpreted in bucket units (buckets=100 → percent granularity). */
+    * interpreted in [[hashBucket]] units (percent granularity). */
   def deterministicSplit(df: DataFrame, key: Column,
-                         splits: Seq[(String, Double)],
-                         buckets: Int = 100): DataFrame = {
+                         splits: Seq[(String, Double)]): DataFrame = {
     val bounds = splits.scanLeft(0L) { case (acc, (_, f)) =>
-      acc + math.round(f * buckets)
+      acc + math.round(f * Buckets)
     }.tail
-    val b = hashBucket(key, buckets)
+    val b = hashBucket(key)
     val expr = splits.map(_._1).zip(bounds).reverse
       .foldLeft(lit(null).cast("string")) { case (acc, (name, hi)) =>
         when(b < hi, lit(name)).otherwise(acc)

@@ -25,6 +25,11 @@ object Similarity {
   import graft.functions.VectorFunctions
   import graft.storage.StoreProtocol
 
+  /** The id, vector and label columns every corpus and query relation carries. */
+  private val IdCol = "vec_id"
+  private val VecCol = "embedding"
+  private val LabelCol = "label"
+
   def dot(a: Column, b: Column): Column = VectorFunctions.vectorDot(a, b)
 
   def norm(a: Column): Column = VectorFunctions.vectorNorm(a)
@@ -46,28 +51,25 @@ object Similarity {
     * cosine so both engines (and any executor fold order) agree on the
     * exact centroid bits; the cosine itself runs in the native
     * index-ordered kernel. */
-  def centroidCohesion(df: DataFrame, groupCol: String,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val cent = df.select(col(groupCol).as("g"), posexplode(col(vecCol)).as(Seq("pos", "v")))
+  def centroidCohesion(df: DataFrame, groupCol: String): DataFrame = {
+    val cent = df.select(col(groupCol).as("g"), posexplode(col(VecCol)).as(Seq("pos", "v")))
       .groupBy("g", "pos").agg(round(
         sum(col("v").cast("decimal(30,10)")).cast("double") / count(lit(1)), 6).as("c"))
       .groupBy("g")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         s => s.getField("c")).as("centroid"))
-    df.select(col(idCol), col(groupCol), col(vecCol))
+    df.select(col(IdCol), col(groupCol), col(VecCol))
       .join(broadcast(cent), col(groupCol) === col("g"))
-      .select(col(idCol), col(groupCol),
-        round(cosine(col(vecCol), col("centroid")), 6).as("cos_centroid"))
+      .select(col(IdCol), col(groupCol),
+        round(cosine(col(VecCol), col("centroid")), 6).as("cos_centroid"))
   }
 
   /** Exact top-k cosine neighbors for each row of `queries` against `corpus`.
     * `queries` is expected to be small — Catalyst broadcasts it, so the big
     * corpus is never shuffled; only the per-query window sorts candidates. */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv"))
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("nv"))
     val scored = broadcast(q).crossJoin(c)
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", round(cosine(col("qv"), col("nv")), 6))
@@ -100,15 +102,13 @@ object Similarity {
     * is that stage exposed (the [[voteLabels]] composition pattern),
     * spec-asserted equivalent over an exact-scored relation. */
   def hardNegatives(queries: DataFrame, corpus: DataFrame,
-                    lo: Double, hi: Double, k: Int,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
+                    lo: Double, hi: Double, k: Int): DataFrame = {
     require(lo < hi, s"need lo < hi, got [$lo, $hi)")
     require(hi <= 1.0 && lo >= -1.0, s"cosine band must lie in [-1,1]: [$lo, $hi)")
     require(k > 0, s"k must be positive, got $k")
     bandFilter(
-      broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-        .crossJoin(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv")))
+      broadcast(queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv")))
+        .crossJoin(corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("nv")))
         .where(col("query_id") =!= col("neighbor_id"))
         .withColumn("cosine", round(cosine(col("qv"), col("nv")), 6)),
       lo, hi, k)
@@ -155,24 +155,19 @@ object Similarity {
     * broadcasts); to label against a stored 100 TB index, feed
     * [[ivfPqTopKIndexed]]'s output to [[voteLabels]] — the same vote
     * stage this operator runs (spec-asserted). */
-  def knnLabel(queries: DataFrame, corpus: DataFrame, k: Int,
-               labelCol: String = "label", idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame =
-    voteLabels(bruteForceTopK(queries, corpus, k, idCol, vecCol),
-      corpus, k, labelCol, idCol)
+  def knnLabel(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    voteLabels(bruteForceTopK(queries, corpus, k), corpus, k)
 
   /** The vote stage of [[knnLabel]], exposed so it composes over ANY
     * neighbor relation with (query_id, neighbor_id) columns — in
     * particular [[ivfPqTopKIndexed]]/[[ivfPqTopKRefined]] output, which is
     * how labeling runs against a stored 100 TB index (spec-asserted ≡
-    * [[knnLabel]] at covering knobs). `labels` carries (`idCol`,
-    * `labelCol`); semantics (null labels never vote, smallest-label
+    * [[knnLabel]] at covering knobs). `labels` carries (`vec_id`,
+    * `label`); semantics (null labels never vote, smallest-label
     * tie-break, original label type) are [[knnLabel]]'s. */
-  def voteLabels(nn: DataFrame, labels: DataFrame, k: Int,
-                 labelCol: String = "label",
-                 idCol: String = "vec_id"): DataFrame = {
-    val lbl = labels.where(col(labelCol).isNotNull)
-      .select(col(idCol).as("neighbor_id"), col(labelCol).as("knn_lbl"))
+  def voteLabels(nn: DataFrame, labels: DataFrame, k: Int): DataFrame = {
+    val lbl = labels.where(col(LabelCol).isNotNull)
+      .select(col(IdCol).as("neighbor_id"), col(LabelCol).as("knn_lbl"))
     val votes = lbl.join(nn.select("query_id", "neighbor_id"),
         Seq("neighbor_id"))
       .groupBy("query_id", "knn_lbl")
@@ -215,9 +210,8 @@ object Similarity {
     * literal centroids; means = posexplode + per-(cluster,dim) average); only
     * the k×dim centroid matrix itself ever reaches the driver — metadata
     * scale, like collecting broadcast-join build keys. */
-  def ivfCentroids(corpus: DataFrame, k: Int, iters: Int = 1,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] = {
-    var cents = corpus.orderBy(col(idCol)).limit(k).select(col(vecCol))
+  def ivfCentroids(corpus: DataFrame, k: Int, iters: Int = 1): Array[Array[Double]] = {
+    var cents = corpus.orderBy(col(IdCol)).limit(k).select(col(VecCol))
       .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
     for (_ <- 0 until iters) {
       // two-step projection: assignment → attribute, THEN the explode.
@@ -228,8 +222,8 @@ object Similarity {
       // 393 s→… at 20k, with the per-row marginal ~17 ms — SCALE.md
       // §Round 16, the coarse quantizer)
       val means = corpus
-        .select(nearestCentroid(col(vecCol), cents).as("cluster"),
-          col(vecCol).as("iv_v"))
+        .select(nearestCentroid(col(VecCol), cents).as("cluster"),
+          col(VecCol).as("iv_v"))
         .select(col("cluster"), posexplode(col("iv_v")).as(Seq("pos", "x")))
         // decimal sums are order-independent, so centroids (and therefore
         // bucket assignments) are identical under any partition layout; the
@@ -290,12 +284,11 @@ object Similarity {
     * (partitionBy(cluster)), so a probe reads nprobe/k of the data; recall
     * is tuned by nprobe exactly as in FAISS-style IVF deployments. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              centroids: Array[Array[Double]], nprobe: Int = 2,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
-      nearestCentroid(col(vecCol), centroids).as("cluster"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probeCentroids(col(vecCol), centroids, nprobe)).as("probe"))
+              centroids: Array[Array[Double]], nprobe: Int = 2): DataFrame = {
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("nv"),
+      nearestCentroid(col(VecCol), centroids).as("cluster"))
+    val q = queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv"),
+        explode(probeCentroids(col(VecCol), centroids, nprobe)).as("probe"))
       .select(col("query_id"), col("qv"), col("probe").as("cluster"))
     ivfScoreTopK(q, c, k)
   }
@@ -314,15 +307,14 @@ object Similarity {
     * row-local argmin over literal codes (no shuffle — |c|² − 2x·c, the
     * |x|² term cancels inside an argmin), and ALL subspaces' means ride a
     * single posexplode + groupBy((subspace, code, pos)) — not m passes. */
-  def pqTrain(corpus: DataFrame, m: Int = 4, ksub: Int = 16, iters: Int = 1,
-              idCol: String = "vec_id", vecCol: String = "embedding")
+  def pqTrain(corpus: DataFrame, m: Int = 4, ksub: Int = 16, iters: Int = 1)
   : Array[Array[Array[Double]]] = {
     require(m > 0 && ksub > 0, s"need positive sizing, got m=$m ksub=$ksub")
     // dim reads off the seed rows — the separate `select(size(vec)).head()`
     // job it replaces cost one full scheduler round trip per train call
     // (guide §1.2: fewer passes; the seeds collect was already paying for
     // the scan)
-    val seeds = corpus.orderBy(col(idCol)).limit(ksub).select(col(vecCol)).collect()
+    val seeds = corpus.orderBy(col(IdCol)).limit(ksub).select(col(VecCol)).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
     require(seeds.nonEmpty, "pqTrain needs a non-empty corpus")
     val dim = seeds.head.length
@@ -338,8 +330,8 @@ object Similarity {
       // 16-code argmin (and its 16 dot kernels) once per generated row —
       // the no-CSE trap, measured 24 s vs 1 s at sf0.1.
       val means = corpus
-        .select(col(vecCol).as("pq_v") +: (0 until m).map(s =>
-          slice(col(vecCol), s * dsub + 1, dsub).as(s"pq_sub_$s")): _*)
+        .select(col(VecCol).as("pq_v") +: (0 until m).map(s =>
+          slice(col(VecCol), s * dsub + 1, dsub).as(s"pq_sub_$s")): _*)
         .select(col("pq_v"), array((0 until m).map(s =>
           nearestCode(col(s"pq_sub_$s"), books(s))): _*).as("asg"))
         .select(col("asg"), posexplode(col("pq_v")).as(Seq("pos", "x")))
@@ -376,15 +368,14 @@ object Similarity {
     * ANN memory trick. Pure row-local argmins against literal codebooks:
     * no shuffle, no join, whole output integer-deterministic (distance
     * ties break to the lowest code). */
-  def pqEncode(corpus: DataFrame, codebooks: Array[Array[Array[Double]]],
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def pqEncode(corpus: DataFrame, codebooks: Array[Array[Array[Double]]]): DataFrame = {
     val m = codebooks.length
     require(m > 0 && codebooks.forall(_.nonEmpty), "codebooks must be non-empty")
     val dsub = codebooks(0)(0).length
     corpus
-      .select(col(idCol) +: (0 until m).map(s =>
-        slice(col(vecCol), s * dsub + 1, dsub).as(s"pq_sub_$s")): _*)
-      .select(col(idCol) +: (0 until m).map(s =>
+      .select(col(IdCol) +: (0 until m).map(s =>
+        slice(col(VecCol), s * dsub + 1, dsub).as(s"pq_sub_$s")): _*)
+      .select(col(IdCol) +: (0 until m).map(s =>
         nearestCode(col(s"pq_sub_$s"), codebooks(s))
           .cast("long").as(s"code_$s")): _*)
   }
@@ -407,18 +398,17 @@ object Similarity {
     * engine-replayable. Approximate by construction (quantization error);
     * the spec pins output = exact top-k by distance-to-reconstruction. */
   def pqTopK(queries: DataFrame, codes: DataFrame,
-             codebooks: Array[Array[Array[Double]]], k: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+             codebooks: Array[Array[Array[Double]]], k: Int): DataFrame = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
     val q = queries
-      .select(col(idCol).as("query_id") +: (0 until m).map(s =>
-        slice(col(vecCol), s * dsub + 1, dsub).as(s"q_sub_$s")): _*)
+      .select(col(IdCol).as("query_id") +: (0 until m).map(s =>
+        slice(col(VecCol), s * dsub + 1, dsub).as(s"q_sub_$s")): _*)
       .select(col("query_id") +:
         (0 until m).map(s => col(s"q_sub_$s")) ++:
         (0 until m).map(s => graft.functions.VectorFunctions
           .vectorDot(col(s"q_sub_$s"), col(s"q_sub_$s")).as(s"q_nrm_$s")): _*)
-    val c = codes.withColumnRenamed(idCol, "neighbor_id")
+    val c = codes.withColumnRenamed(IdCol, "neighbor_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = broadcast(q).crossJoin(c)
       .where(col("query_id") =!= col("neighbor_id"))
@@ -443,9 +433,8 @@ object Similarity {
     * distributed pass — posexplode to (dim, value) then a map-side-
     * combined min/max per dim, so the corpus×dim explosion collapses to
     * partitions×dim rows before the (tiny) shuffle. */
-  def sqTrain(corpus: DataFrame,
-              vecCol: String = "embedding"): (Array[Double], Array[Double]) = {
-    val mm = corpus.select(posexplode(col(vecCol)).as(Seq("sq_i", "sq_x")))
+  def sqTrain(corpus: DataFrame): (Array[Double], Array[Double]) = {
+    val mm = corpus.select(posexplode(col(VecCol)).as(Seq("sq_i", "sq_x")))
       .groupBy("sq_i")
       .agg(min(col("sq_x").cast("double")).as("mn"),
         max(col("sq_x").cast("double")).as("mx"))
@@ -460,14 +449,13 @@ object Similarity {
     * encode, constant dimensions (mx == mn) code 0. Pure row-local
     * expressions over dim-sized literal ranges: no shuffle, no join,
     * integer-deterministic. */
-  def sqEncode(corpus: DataFrame, mins: Array[Double], maxs: Array[Double],
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def sqEncode(corpus: DataFrame, mins: Array[Double], maxs: Array[Double]): DataFrame = {
     require(mins.length == maxs.length && mins.nonEmpty,
       s"mins/maxs must be equal-length and non-empty, got ${mins.length}/${maxs.length}")
     val mn = typedLit(mins.toSeq)
     val mx = typedLit(maxs.toSeq)
-    corpus.select(col(idCol),
-      transform(col(vecCol), (x, i) => {
+    corpus.select(col(IdCol),
+      transform(col(VecCol), (x, i) => {
         val lo = element_at(mn, i + 1); val hi = element_at(mx, i + 1)
         when(hi > lo,
           least(greatest(round((x.cast("double") - lo) * 255.0 / (hi - lo))
@@ -492,8 +480,7 @@ object Similarity {
     * matters the index belongs in the stored/probed tiers anyway, and the
     * PARQUET/storage side keeps the 4× (codes travel, doubles don't). */
   def sqTopK(queries: DataFrame, codes: DataFrame,
-             mins: Array[Double], maxs: Array[Double], k: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+             mins: Array[Double], maxs: Array[Double], k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(mins.length == maxs.length && mins.nonEmpty,
       s"mins/maxs must be equal-length and non-empty, got ${mins.length}/${maxs.length}")
@@ -502,8 +489,8 @@ object Similarity {
     val mn = typedLit(mins.toSeq)
     val step = typedLit(maxs.zip(mins).map { case (hi, lo) =>
       if (hi > lo) (hi - lo) / 255.0 else 0.0 }.toSeq)
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("sq_qv"))
+    val q = queries.select(col(IdCol).as("query_id"),
+      col(VecCol).as("sq_qv"))
     val c = codes
       // null code arrays (a null corpus vector encodes to null) must be
       // excluded BEFORE the ranking: the distance sort is ASCENDING and
@@ -511,7 +498,7 @@ object Similarity {
       // top-k slots (the brute/cosine tier is safe by accident — its sort
       // is descending, nulls last)
       .where(col("sq_code").isNotNull)
-      .select(col(idCol).as("neighbor_id"),
+      .select(col(IdCol).as("neighbor_id"),
         transform(col("sq_code"), (cd, i) =>
           element_at(mn, i + 1) + element_at(step, i + 1) * cd).as("sq_dec"))
       .withColumn("sq_cn",
@@ -538,7 +525,7 @@ object Similarity {
     * max_sim < tau; rows with a null max (a null or zero-norm corpus
     * vector, or an empty/null-only/zero-norm-only suite — a pair with no
     * defined angle judges nothing) survive with max_sim null (callers
-    * who want strict hygiene filter nulls). `idCol` must be NON-NULL and
+    * who want strict hygiene filter nulls). `vec_id` must be NON-NULL and
     * UNIQUE — enforced by a fail-fast (a null id would silently dodge the
     * gate's join-back; duplicates would share one max).
     *
@@ -551,9 +538,7 @@ object Similarity {
     * (suite rows probe the index, hit ids anti-join away), approximate
     * where this gate is exact, with the recall-for-scale trade measured
     * in SimilaritySpec and SCALE.md. */
-  def semanticDecontaminate(corpus: DataFrame, suite: DataFrame, tau: Double,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
+  def semanticDecontaminate(corpus: DataFrame, suite: DataFrame, tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
     val reserved = Seq("sd_id", "sd_cv", "sd_sv", "max_sim")
       .filter(corpus.columns.contains)
@@ -566,17 +551,17 @@ object Similarity {
     // is unknowable downstream). One id-column aggregate — negligible
     // next to the |corpus|×|suite| scoring pass this gate runs anyway.
     val idRow = corpus.agg(count(lit(1)).as("n"),
-      count(col(idCol)).as("nn"), countDistinct(col(idCol)).as("nd")).head()
+      count(col(IdCol)).as("nn"), countDistinct(col(IdCol)).as("nd")).head()
     val (nAll, nNonNull, nDistinct) =
       (idRow.getLong(0), idRow.getLong(1), idRow.getLong(2))
     require(nNonNull == nAll,
-      s"semanticDecontaminate needs non-null $idCol: ${nAll - nNonNull} " +
+      s"semanticDecontaminate needs non-null $IdCol: ${nAll - nNonNull} " +
         "null ids would silently survive the gate regardless of similarity")
     require(nDistinct == nNonNull,
-      s"semanticDecontaminate needs unique $idCol: ${nNonNull - nDistinct} " +
+      s"semanticDecontaminate needs unique $IdCol: ${nNonNull - nDistinct} " +
         "duplicate ids would collapse to one shared max_sim")
-    val sv = broadcast(suite.where(col(vecCol).isNotNull)
-      .select(col(vecCol).as("sd_sv")))
+    val sv = broadcast(suite.where(col(VecCol).isNotNull)
+      .select(col(VecCol).as("sd_sv")))
     // NaN cosines (a zero-norm vector on either side: 0/0) must be
     // excluded BEFORE the max — Spark's max treats NaN as greater than
     // everything, so one zero-norm suite row would otherwise poison every
@@ -584,15 +569,15 @@ object Similarity {
     // and silently drops the ENTIRE corpus. A NaN pair judges nothing: a
     // corpus row whose every pair is NaN falls out of the max relation
     // and survives with null max_sim, exactly like the null-vector case.
-    val mx = corpus.select(col(idCol).as("sd_id"), col(vecCol).as("sd_cv"))
+    val mx = corpus.select(col(IdCol).as("sd_id"), col(VecCol).as("sd_cv"))
       .crossJoin(sv)
       .withColumn("sd_cos", round(cosine(col("sd_cv"), col("sd_sv")), 6))
       .where(!isnan(col("sd_cos")))
       .groupBy("sd_id")
       .agg(max(col("sd_cos")).as("max_sim"))
-    corpus.join(mx, corpus(idCol) === mx("sd_id"), "left")
+    corpus.join(mx, corpus(IdCol) === mx("sd_id"), "left")
       .where(col("max_sim") < tau || col("max_sim").isNull)
-      .select(corpus(idCol), col("max_sim"))
+      .select(corpus(IdCol), col("max_sim"))
   }
 
   /** Shared ADC distance: Σ_s (|q_s|² + |c_{code_s}|² − 2·q_s·c_{code_s}),
@@ -622,12 +607,11 @@ object Similarity {
     * distance ties the lowest neighbor id. */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                 coarse: Array[Array[Double]],
-                codebooks: Array[Array[Array[Double]]], nprobe: Int = 2,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val idx = ivfPqEncode(corpus, coarse, codebooks, idCol, vecCol)
+                codebooks: Array[Array[Array[Double]]], nprobe: Int = 2): DataFrame = {
+    val idx = ivfPqEncode(corpus, coarse, codebooks)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     adcScoreClustered(
-      prepProbedQueries(queries, coarse, codebooks, nprobe, idCol, vecCol),
+      prepProbedQueries(queries, coarse, codebooks, nprobe),
       idx, codebooks, k)
   }
 
@@ -638,15 +622,14 @@ object Similarity {
     * flat/rerank tier of a stored index (see [[ivfPqIndexWrite]]). */
   def ivfPqEncode(corpus: DataFrame, coarse: Array[Array[Double]],
                   codebooks: Array[Array[Array[Double]]],
-                  idCol: String = "vec_id", vecCol: String = "embedding",
                   keepVec: Boolean = false): DataFrame = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
-    val keep = if (keepVec) Seq(col(vecCol).as("embedding")) else Nil
+    val keep = if (keepVec) Seq(col(VecCol).as("embedding")) else Nil
     corpus
-      .select(col(idCol).as("neighbor_id") +:
-        nearestCentroid(col(vecCol), coarse).as("cluster") +:
-        ((0 until m).map(s => slice(col(vecCol), s * dsub + 1, dsub).as(s"pq_sub_$s")) ++ keep): _*)
+      .select(col(IdCol).as("neighbor_id") +:
+        nearestCentroid(col(VecCol), coarse).as("cluster") +:
+        ((0 until m).map(s => slice(col(VecCol), s * dsub + 1, dsub).as(s"pq_sub_$s")) ++ keep): _*)
       .select(col("neighbor_id") +: col("cluster") +: ((0 until m).map(s =>
         nearestCode(col(s"pq_sub_$s"), codebooks(s)).cast("long").as(s"code_$s")) ++
         keep.map(_ => col("embedding"))): _*)
@@ -655,12 +638,11 @@ object Similarity {
   /** Query side of the clustered ADC search: subvectors + their norms
     * (computed once per query row) + the probe explode. */
   private def prepProbedQueries(queries: DataFrame, coarse: Array[Array[Double]],
-                                codebooks: Array[Array[Array[Double]]], nprobe: Int,
-                                idCol: String, vecCol: String): DataFrame = {
+                                codebooks: Array[Array[Array[Double]]], nprobe: Int): DataFrame = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
     queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .select(col(IdCol).as("query_id"), col(VecCol).as("qv"))
       // subvectors and norms become attributes BEFORE the probe explode;
       // sharing a select with the generator would hoist them above the
       // Generate and re-evaluate them once per probe row (×nprobe)
@@ -712,13 +694,12 @@ object Similarity {
     * min/max stat on the id column — which turns a pushed id-shortlist
     * filter ([[ivfPqTopKRefined]]'s vector fetch) into genuine row-group
     * skipping, the columnar analog of a point lookup. */
-  private def clusteredLayout(encoded: DataFrame, k: Int,
-                              idCol: String = "neighbor_id"): DataFrame = {
+  private def clusteredLayout(encoded: DataFrame, k: Int): DataFrame = {
     val w = encoded.sparkSession.sessionState.conf.numShufflePartitions
     val f = math.max(1, w / math.max(1, k))
     encoded.repartition(k * f, col("cluster"),
-      pmod(xxhash64(col(idCol)), lit(f.toLong)))
-      .sortWithinPartitions(col("cluster"), col(idCol))
+      pmod(xxhash64(col("neighbor_id")), lit(f.toLong)))
+      .sortWithinPartitions(col("cluster"), col("neighbor_id"))
   }
 
   /** MATERIALIZE the IVF+PQ index: write [[ivfPqEncode]]'s relation as
@@ -728,23 +709,19 @@ object Similarity {
     * directory per coarse cluster holding (neighbor_id, code_0…code_{m-1})
     * at m bytes of code per vector; rewritten atomically (overwrite).
     *
-    * `withVectors = true` (the default) also stores the raw vector as an
-    * `embedding` column — the FAISS-IVFFlat shape, which lets the SAME
-    * clustered layout serve every tier by COLUMN pruning on top of the
-    * partition pruning: the ADC probe ([[ivfPqTopKIndexed]]) reads only
+    * It also stores the raw vector as an `embedding` column — the
+    * FAISS-IVFFlat shape, which lets the SAME clustered layout serve every
+    * tier by COLUMN pruning on top of the partition pruning: the ADC probe ([[ivfPqTopKIndexed]]) reads only
     * the code columns (spec-asserted: its scan's ReadSchema excludes
     * `embedding`), the exact-cosine probe ([[ivfTopKIndexed]]) and
     * [[semanticDedupIndexed]] read the vector and ignore the codes, and an
     * exact rerank over ADC candidates has the vectors in place. Parquet is
-    * columnar, so the unread columns cost disk, never probe I/O; a
-    * code-only deployment sets `withVectors = false`. */
+    * columnar, so the unread columns cost disk, never probe I/O. */
   def ivfPqIndexWrite(corpus: DataFrame, path: String,
                       coarse: Array[Array[Double]],
-                      codebooks: Array[Array[Array[Double]]],
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      withVectors: Boolean = true): Unit =
+                      codebooks: Array[Array[Array[Double]]]): Unit =
     clusteredLayout(
-      ivfPqEncode(corpus, coarse, codebooks, idCol, vecCol, keepVec = withVectors),
+      ivfPqEncode(corpus, coarse, codebooks, keepVec = true),
       coarse.length)
       .write.mode("overwrite").partitionBy("cluster").parquet(path)
 
@@ -858,10 +835,9 @@ object Similarity {
     * the in-memory path (spec-asserted). */
   def ivfPqTopKIndexed(queries: DataFrame, index: DataFrame, k: Int,
                        coarse: Array[Array[Double]],
-                       codebooks: Array[Array[Array[Double]]], nprobe: Int = 2,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                       codebooks: Array[Array[Array[Double]]], nprobe: Int = 2): DataFrame = {
     val (q, _, codes) = probedCodes(queries, index, coarse, codebooks, nprobe,
-      allow = None, idCol, vecCol)
+      allow = None)
     adcScoreClustered(q, codes, codebooks, k)
   }
 
@@ -889,11 +865,9 @@ object Similarity {
   def ivfPqTopKIndexedFiltered(queries: DataFrame, index: DataFrame, k: Int,
                                coarse: Array[Array[Double]],
                                codebooks: Array[Array[Array[Double]]],
-                               allow: DataFrame, nprobe: Int = 2,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding"): DataFrame = {
+                               allow: DataFrame, nprobe: Int = 2): DataFrame = {
     val (q, _, codes) = probedCodes(queries, index, coarse, codebooks, nprobe,
-      allow = Some(allow), idCol, vecCol)
+      allow = Some(allow))
     adcScoreClustered(q, codes, codebooks, k)
   }
 
@@ -904,14 +878,13 @@ object Similarity {
   private def probedCodes(queries: DataFrame, index: DataFrame,
                           coarse: Array[Array[Double]],
                           codebooks: Array[Array[Array[Double]]], nprobe: Int,
-                          allow: Option[DataFrame], idCol: String,
-                          vecCol: String): (DataFrame, Array[Int], DataFrame) = {
-    val q = prepProbedQueries(queries, coarse, codebooks, nprobe, idCol, vecCol)
+                          allow: Option[DataFrame]): (DataFrame, Array[Int], DataFrame) = {
+    val q = prepProbedQueries(queries, coarse, codebooks, nprobe)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probed = q.select(col("cluster")).distinct()
       .collect().map(_.getInt(0)).sorted
-    // project to exactly the ADC columns BEFORE scoring: an index written
-    // withVectors must not pay vector I/O on the code path — the parquet
+    // project to exactly the ADC columns BEFORE scoring: an index that
+    // stores vectors must not pay vector I/O on the code path — the parquet
     // scan's ReadSchema excludes `embedding` (spec-asserted)
     val codes = pruneToProbed(index, probed)
       .select(col("neighbor_id") +: col("cluster") +:
@@ -919,7 +892,7 @@ object Similarity {
     // pre-filter semantics: the allow cut lands beneath the ADC ranking, so
     // every slot the scorer fills is an ALLOWED candidate
     (q, probed, allow.fold(codes)(a => codes.join(
-      a.select(col(idCol).as("neighbor_id")).distinct(), Seq("neighbor_id"), "left_semi")))
+      a.select(col(IdCol).as("neighbor_id")).distinct(), Seq("neighbor_id"), "left_semi")))
   }
 
   /** Pushed-id fetch cap for [[ivfPqTopKRefined]]: beyond this many
@@ -962,10 +935,9 @@ object Similarity {
   def ivfPqTopKRefined(queries: DataFrame, index: DataFrame, k: Int,
                        coarse: Array[Array[Double]],
                        codebooks: Array[Array[Array[Double]]], nprobe: Int = 2,
-                       rerank: Int = 4,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+                       rerank: Int = 4): DataFrame =
     refinedImpl(queries, index, k, coarse, codebooks, nprobe, rerank,
-      allow = None, idCol, vecCol)
+      allow = None)
 
   /** FILTERED refine tier — [[ivfPqTopKRefinedFiltered]] composes
     * [[ivfPqTopKIndexedFiltered]]'s pre-filter semantics with
@@ -989,24 +961,21 @@ object Similarity {
                                coarse: Array[Array[Double]],
                                codebooks: Array[Array[Array[Double]]],
                                allow: DataFrame, nprobe: Int = 2,
-                               rerank: Int = 4,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding"): DataFrame =
+                               rerank: Int = 4): DataFrame =
     refinedImpl(queries, index, k, coarse, codebooks, nprobe, rerank,
-      allow = Some(allow), idCol, vecCol)
+      allow = Some(allow))
 
   private def refinedImpl(queries: DataFrame, index: DataFrame, k: Int,
                           coarse: Array[Array[Double]],
                           codebooks: Array[Array[Array[Double]]], nprobe: Int,
-                          rerank: Int, allow: Option[DataFrame],
-                          idCol: String, vecCol: String): DataFrame = {
+                          rerank: Int, allow: Option[DataFrame]): DataFrame = {
     require(rerank >= 1, s"need rerank ≥ 1, got $rerank")
     require(index.columns.contains("embedding"),
-      "ivfPqTopKRefined needs an index written withVectors = true (no embedding column found)")
+      "ivfPqTopKRefined needs an index with its embedding column (none found)")
     // the allow cut lands beneath the shortlist, so every shortlist slot is
     // an ALLOWED candidate
     val (q, probed, codes) = probedCodes(queries, index, coarse, codebooks,
-      nprobe, allow, idCol, vecCol)
+      nprobe, allow)
     val shortlist = adcScoreClustered(q, codes, codebooks, rerank * k)
       .select(col("query_id"), col("neighbor_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1021,7 +990,7 @@ object Similarity {
         vectors0.where(col("neighbor_id")
           .isin(ids.map(java.lang.Long.valueOf).toIndexedSeq: _*))
       else vectors0
-    val qvs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val qvs = queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv"))
     // the broadcast hint holds only while the shortlist honors its
     // answer-sized contract (≤ |queries|·rerank·k rows). Covering-knob
     // compositions (q103's oracle config: 2²⁰ hits per suite row) make it
@@ -1054,7 +1023,7 @@ object Similarity {
     * the corpus's clustered index as QUERIES ([[ivfPqTopKRefined]] —
     * exact cosine over the ADC shortlist) and every corpus id hit at
     * rounded cosine ≥ tau is anti-joined away. Returns the SURVIVING
-    * corpus ids (one `idCol` column — the indexed tier judges only
+    * corpus ids (one `vec_id` column — the indexed tier judges only
     * probed candidates, so a per-survivor max_sim would be a lie; the
     * exact gate reports it, this one doesn't).
     *
@@ -1081,23 +1050,21 @@ object Similarity {
                                    coarse: Array[Array[Double]],
                                    codebooks: Array[Array[Array[Double]]],
                                    tau: Double, nprobe: Int = 2,
-                                   rerank: Int = 4, hitsPerSuiteRow: Int = 64,
-                                   idCol: String = "vec_id",
-                                   vecCol: String = "embedding"): DataFrame = {
+                                   rerank: Int = 4, hitsPerSuiteRow: Int = 64): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
     require(hitsPerSuiteRow >= 1,
       s"need hitsPerSuiteRow ≥ 1, got $hitsPerSuiteRow")
-    requireNonNullIds(corpus, idCol, "corpus", "semanticDecontaminateIndexed")
-    requireNonNullIds(suite, idCol, "suite", "semanticDecontaminateIndexed")
+    requireNonNullIds(corpus, "corpus", "semanticDecontaminateIndexed")
+    requireNonNullIds(suite, "suite", "semanticDecontaminateIndexed")
     // NaN must be excluded EXPLICITLY: Spark orders NaN above every
     // number, so `NaN >= tau` is TRUE and a zero-norm vector (0/0 cosine)
     // on either side would FALSELY drop the corpus row — the same
     // poisoning trap the exact gate excludes before its max.
     val hits = ivfPqTopKRefined(suite, index, hitsPerSuiteRow, coarse,
-        codebooks, nprobe, rerank, idCol, vecCol)
+        codebooks, nprobe, rerank)
       .where(!isnan(col("cosine")) && col("cosine") >= tau) // exact gate's rounded-≥ boundary
-      .select(col("neighbor_id").as(idCol)).distinct()
-    corpus.join(hits, Seq(idCol), "left_anti").select(col(idCol))
+      .select(col("neighbor_id").as(IdCol)).distinct()
+    corpus.join(hits, Seq(IdCol), "left_anti").select(col(IdCol))
   }
 
   /** The indexed gates' twin of [[semanticDecontaminate]]'s null-id
@@ -1110,11 +1077,11 @@ object Similarity {
     * (Duplicate ids are NOT rejected here: the indexed gates return a
     * survivor id RELATION, where duplicates drop or survive together —
     * there is no per-id max to collapse.) */
-  private def requireNonNullIds(df: DataFrame, idCol: String, side: String,
+  private def requireNonNullIds(df: DataFrame, side: String,
                                 gate: String): Unit = {
-    val r = df.agg(count(lit(1)).as("n"), count(col(idCol)).as("nn")).head()
+    val r = df.agg(count(lit(1)).as("n"), count(col(IdCol)).as("nn")).head()
     require(r.getLong(0) == r.getLong(1),
-      s"$gate needs non-null $side $idCol: ${r.getLong(0) - r.getLong(1)} " +
+      s"$gate needs non-null $side $IdCol: ${r.getLong(0) - r.getLong(1)} " +
         "null ids would silently dodge the gate")
   }
 
@@ -1136,22 +1103,20 @@ object Similarity {
     * once per corpus cut — paying vector I/O on nprobe/k of the corpus
     * to delete the multiplicity failure mode is the right default; the
     * shortlist variant remains for suite sweeps so frequent that code
-    * I/O dominates. Same id contract as the shortlist variant; needs an
-    * index written `withVectors = true`. */
+    * I/O dominates. Same id contract as the shortlist variant; needs the
+    * index's `embedding` column. */
   def semanticDecontaminateIndexedRadius(corpus: DataFrame, suite: DataFrame,
                                          index: DataFrame,
                                          coarse: Array[Array[Double]],
-                                         tau: Double, nprobe: Int = 2,
-                                         idCol: String = "vec_id",
-                                         vecCol: String = "embedding"): DataFrame = {
+                                         tau: Double, nprobe: Int = 2): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
     require(index.columns.contains("embedding"),
-      "semanticDecontaminateIndexedRadius needs an index written " +
-        "withVectors = true (no embedding column found)")
-    requireNonNullIds(corpus, idCol, "corpus", "semanticDecontaminateIndexedRadius")
-    requireNonNullIds(suite, idCol, "suite", "semanticDecontaminateIndexedRadius")
-    val q = suite.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probeCentroids(col(vecCol), coarse, nprobe)).as("probe"))
+      "semanticDecontaminateIndexedRadius needs an index with its " +
+        "embedding column (none found)")
+    requireNonNullIds(corpus, "corpus", "semanticDecontaminateIndexedRadius")
+    requireNonNullIds(suite, "suite", "semanticDecontaminateIndexedRadius")
+    val q = suite.select(col(IdCol).as("query_id"), col(VecCol).as("qv"),
+        explode(probeCentroids(col(VecCol), coarse, nprobe)).as("probe"))
       .select(col("query_id"), col("qv"), col("probe").as("cluster"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probed = q.select(col("cluster")).distinct()
@@ -1164,8 +1129,8 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("sd_cos", round(cosine(col("qv"), col("nv")), 6))
       .where(!isnan(col("sd_cos")) && col("sd_cos") >= tau)
-      .select(col("neighbor_id").as(idCol)).distinct()
-    corpus.join(hits, Seq(idCol), "left_anti").select(col(idCol))
+      .select(col("neighbor_id").as(IdCol)).distinct()
+    corpus.join(hits, Seq(IdCol), "left_anti").select(col(IdCol))
   }
 
   /** Restrict a stored clustered index to the probed clusters with a
@@ -1190,8 +1155,8 @@ object Similarity {
       .withColumn("cluster", col("cluster").cast("int"))
   }
 
-  /** EXACT-cosine IVF top-k over a MATERIALIZED index (written
-    * `withVectors = true`): the cluster-assignment pass — the expensive
+  /** EXACT-cosine IVF top-k over a MATERIALIZED index (its `embedding`
+    * column): the cluster-assignment pass — the expensive
     * full-corpus argmax that [[ivfTopK]] recomputes per query batch — was
     * paid ONCE at index-build time; a probe here reads only the probed
     * cluster directories (static partition pruning, like
@@ -1202,12 +1167,11 @@ object Similarity {
     * the original corpus (spec-asserted — assignment is deterministic, so
     * the stored clusters ARE ivfTopK's clusters). */
   def ivfTopKIndexed(queries: DataFrame, index: DataFrame, k: Int,
-                     centroids: Array[Array[Double]], nprobe: Int = 2,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                     centroids: Array[Array[Double]], nprobe: Int = 2): DataFrame = {
     require(index.columns.contains("embedding"),
-      "ivfTopKIndexed needs an index written withVectors = true (no embedding column found)")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probeCentroids(col(vecCol), centroids, nprobe)).as("probe"))
+      "ivfTopKIndexed needs an index with its embedding column (none found)")
+    val q = queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv"),
+        explode(probeCentroids(col(VecCol), centroids, nprobe)).as("probe"))
       .select(col("query_id"), col("qv"), col("probe").as("cluster"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probed = q.select(col("cluster")).distinct()
@@ -1232,8 +1196,8 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rk").cast("long").as("rk"))
   }
 
-  /** [[semanticDedup]] over a MATERIALIZED index (written
-    * `withVectors = true`): the coarse cluster assignment — at 100 TB the
+  /** [[semanticDedup]] over a MATERIALIZED index (its `embedding`
+    * column): the coarse cluster assignment — at 100 TB the
     * expensive full-corpus pass, and the only part of SemDeDup that
     * touches the quantizer — comes from the stored layout instead of being
     * recomputed per run, which is the amortization the SemDeDup paper
@@ -1244,16 +1208,15 @@ object Similarity {
     * row-for-row (spec-asserted). No partition pruning here — dedup is a
     * full-corpus pass by definition — but the scan reads only
     * (neighbor_id, embedding, cluster), never the PQ codes. */
-  def semanticDedupIndexed(index: DataFrame, threshold: Double,
-                           idCol: String = "vec_id"): DataFrame = {
+  def semanticDedupIndexed(index: DataFrame, threshold: Double): DataFrame = {
     require(index.columns.contains("embedding"),
-      "semanticDedupIndexed needs an index written withVectors = true (no embedding column found)")
+      "semanticDedupIndexed needs an index with its embedding column (none found)")
     val assigned = index
-      .select(col("neighbor_id").as(idCol), col("embedding"),
+      .select(col("neighbor_id").as(IdCol), col("embedding"),
         col("cluster").cast("int").as("cluster"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val l = assigned.select(col("cluster"), col(idCol).as("lo_id"), col("embedding").as("lv"))
-    val r = assigned.select(col("cluster"), col(idCol).as("hi_id"), col("embedding").as("rv"))
+    val l = assigned.select(col("cluster"), col(IdCol).as("lo_id"), col("embedding").as("lv"))
+    val r = assigned.select(col("cluster"), col(IdCol).as("hi_id"), col("embedding").as("rv"))
     // NaN ≥ threshold is TRUE under Spark's NaN-above-everything ordering,
     // so without the isnan cut a zero-norm vector (0/0 cosine vs every
     // cluster-mate) would falsely mark all its higher-id mates as dups —
@@ -1262,10 +1225,13 @@ object Similarity {
     val dropped = l.join(r,
         l("cluster") === r("cluster") && col("lo_id") < col("hi_id")
           && !isnan(sdiCos) && sdiCos >= threshold)
-      .select(col("hi_id").as(idCol))
-    assigned.join(dropped, Seq(idCol), "left_anti")
-      .select(col(idCol), col("cluster"))
+      .select(col("hi_id").as(IdCol))
+    assigned.join(dropped, Seq(IdCol), "left_anti")
+      .select(col(IdCol), col("cluster"))
   }
+
+  /** The block count B of [[cosineSelfJoin]]'s tiling. */
+  private val TileBlocks = 8
 
   /** EXACT all-pairs cosine self-join above a threshold, as a tiled
     * equi-join — the scale-safe form of the O(n²) comparison.
@@ -1287,17 +1253,17 @@ object Similarity {
     * spreads uniformly over the cluster, peak task memory is two blocks
     * (choose B so n/B rows fit an executor — the classic O(n·B) replication
     * / O(n√n) communication all-pairs scheme), and the cosine kernel runs
-    * as a codegen'd join filter. Output is bit-identical to the naive plan. */
-  def cosineSelfJoin(corpus: DataFrame, threshold: Double, blocks: Int = 8,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    * as a codegen'd join filter. Output is bit-identical to the naive plan.
+    * B is `TileBlocks` (8). */
+  def cosineSelfJoin(corpus: DataFrame, threshold: Double): DataFrame = {
     val spark = corpus.sparkSession
-    val blocked = corpus.select(col(idCol), col(vecCol),
-      pmod(xxhash64(col(idCol)), lit(blocks.toLong)).as("g"))
+    val blocked = corpus.select(col(IdCol), col(VecCol),
+      pmod(xxhash64(col(IdCol)), lit(TileBlocks.toLong)).as("g"))
     // B² ids unrolled from ONE range (a range×range cross join would itself
     // plan a nested loop and muddy the "no BNLJ anywhere" contract)
-    val tiles = spark.range(blocks.toLong * blocks)
-      .select((col("id") / blocks).cast("long").as("bl"),
-        pmod(col("id"), lit(blocks.toLong)).as("br"))
+    val tiles = spark.range(TileBlocks.toLong * TileBlocks)
+      .select((col("id") / TileBlocks).cast("long").as("bl"),
+        pmod(col("id"), lit(TileBlocks.toLong)).as("br"))
       .where(col("bl") <= col("br"))
     // the tile join is COMPUTE-dense per byte (each tile pairs two whole
     // blocks through the cosine kernel), so AQE's byte-based partition
@@ -1311,11 +1277,11 @@ object Similarity {
     // parallelism, never narrows at scale).
     val tileWidth = ExchangeWidth.forScan(corpus,
       TextAnalysis.ScanStreamTargetBytesPerPartition)
-    val l = blocked.select(col(idCol).as("left_id"), col(vecCol).as("va"),
+    val l = blocked.select(col(IdCol).as("left_id"), col(VecCol).as("va"),
         col("g").as("bl"))
       .join(broadcast(tiles), Seq("bl"))
       .repartition(tileWidth, col("bl"), col("br"))
-    val r = blocked.select(col(idCol).as("right_id"), col(vecCol).as("vb"),
+    val r = blocked.select(col(IdCol).as("right_id"), col(VecCol).as("vb"),
         col("g").as("br"))
       .join(broadcast(tiles), Seq("br"))
       .repartition(tileWidth, col("bl"), col("br"))
@@ -1353,26 +1319,25 @@ object Similarity {
     * SortMergeJoin — never a cartesian). The cosine is rounded to 6 dp
     * before the compare, the repo's cross-engine convention. */
   def semanticDedup(corpus: DataFrame, centroids: Array[Array[Double]],
-                    threshold: Double,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                    threshold: Double): DataFrame = {
     // persisted: feeds both join sides AND the final anti-join (Catalyst
     // re-derives unpersisted subtrees per side); released by
     // GraftSession.releaseCaches
     val assigned = corpus
-      .select(col(idCol), col(vecCol),
-        nearestCentroid(col(vecCol), centroids).as("cluster"))
+      .select(col(IdCol), col(VecCol),
+        nearestCentroid(col(VecCol), centroids).as("cluster"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val l = assigned.select(col("cluster"), col(idCol).as("lo_id"), col(vecCol).as("lv"))
-    val r = assigned.select(col("cluster"), col(idCol).as("hi_id"), col(vecCol).as("rv"))
+    val l = assigned.select(col("cluster"), col(IdCol).as("lo_id"), col(VecCol).as("lv"))
+    val r = assigned.select(col("cluster"), col(IdCol).as("hi_id"), col(VecCol).as("rv"))
     // !isnan: see [[semanticDedupIndexed]] — a zero-norm vector must not
     // NaN-match every cluster-mate into the dropped set
     val sdCos = round(cosine(col("lv"), col("rv")), 6)
     val dropped = l.join(r,
         l("cluster") === r("cluster") && col("lo_id") < col("hi_id")
           && !isnan(sdCos) && sdCos >= threshold)
-      .select(col("hi_id").as(idCol))
-    assigned.join(dropped, Seq(idCol), "left_anti")
-      .select(col(idCol), col("cluster"))
+      .select(col("hi_id").as(IdCol))
+    assigned.join(dropped, Seq(IdCol), "left_anti")
+      .select(col(IdCol), col("cluster"))
   }
 
   /** Symmetric per-vector int8 quantization — the storage/bandwidth step an
@@ -1385,17 +1350,16 @@ object Similarity {
     * in every engine, unlike round()'s half-even/half-up dialects. The
     * all-zero vector (scale 0) quantizes to all-zero q. Pure per-row
     * expressions, no shuffle; output is n·dim narrow rows. */
-  def quantizeInt8(df: DataFrame, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val amax = array_max(transform(col(vecCol), x => abs(x.cast("double"))))
+  def quantizeInt8(df: DataFrame): DataFrame = {
+    val amax = array_max(transform(col(VecCol), x => abs(x.cast("double"))))
     // two-step projection: the Θ(dim) scale → attribute, THEN the explode —
     // a generator in the same select is hoisted below the other expressions
     // (ExtractGenerator), which would re-run the array_max scan once per
     // EXPLODED element, Θ(dim²)/vector (the [[pqTrain]] no-CSE trap)
-    df.select(col(idCol), (amax / 127.0).as("scale"), col(vecCol).as("qi_v"))
-      .select(col(idCol), col("scale"),
+    df.select(col(IdCol), (amax / 127.0).as("scale"), col(VecCol).as("qi_v"))
+      .select(col(IdCol), col("scale"),
         posexplode(col("qi_v")).as(Seq("pos", "x")))
-      .select(col(idCol), col("pos").cast("long").as("pos"),
+      .select(col(IdCol), col("pos").cast("long").as("pos"),
         when(col("scale") === 0.0, lit(0L))
           .otherwise(floor(col("x").cast("double") / col("scale") + 0.5).cast("long"))
           .as("q"),
@@ -1410,9 +1374,7 @@ object Similarity {
     * knob replicates only the SMALL query side (×Σ C(nbits,j), j≤probeHamming),
     * never the corpus. */
   def srpBucketTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
-                    nbits: Int = 8, probeHamming: Int = 0,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
+                    nbits: Int = 8, probeHamming: Int = 0): DataFrame = {
     require(nbits >= 1 && nbits <= 62, s"nbits must be in [1, 62], got $nbits")
     require(probeHamming >= 0 && probeHamming <= nbits,
       s"probeHamming must be in [0, $nbits], got $probeHamming")
@@ -1423,14 +1385,14 @@ object Similarity {
     val masks: Seq[Long] = (0 to probeHamming).flatMap(j =>
       (0 until nbits).combinations(j)
         .map(_.foldLeft(0L)((m, b) => m | (1L << b))).toSeq)
-    val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      srpBucket(col(vecCol), dim, nbits).as("b0"))
+    val q0 = queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv"),
+      srpBucket(col(VecCol), dim, nbits).as("b0"))
     val q =
       if (probeHamming == 0) q0.withColumnRenamed("b0", "bucket")
       else q0.select(col("query_id"), col("qv"),
         explode(array(masks.map(m => col("b0").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
-      srpBucket(col(vecCol), dim, nbits).as("bucket"))
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("nv"),
+      srpBucket(col(VecCol), dim, nbits).as("bucket"))
     val scored = q.join(c, Seq("bucket"))
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", round(cosine(col("qv"), col("nv")), 6))

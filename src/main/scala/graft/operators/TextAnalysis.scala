@@ -171,8 +171,7 @@ object TextAnalysis {
     * same single corpus gram pass as the hit detection. */
   def bloomDecontaminate(corpus: org.apache.spark.sql.DataFrame,
                          benchmark: org.apache.spark.sql.DataFrame,
-                         id: String, textCol: String, n: Int = 4,
-                         bitsPerKey: Int = 12, k: Int = 6)
+                         id: String, textCol: String, n: Int = 4)
   : org.apache.spark.sql.DataFrame = {
     def grams(df: org.apache.spark.sql.DataFrame) =
       df.select(col(id), tokens(col(textCol)).as("bd_tok"))
@@ -181,7 +180,7 @@ object TextAnalysis {
     // reference side is small by construction (eval suites); driver build
     val keys = grams(benchmark).select(col("g")).distinct()
       .collect().map(_.getLong(0))
-    val bloom = Bloom.build(keys, bitsPerKey, k)
+    val bloom = Bloom.build(keys)
     val cg = grams(corpus).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val benchSet = corpus.sparkSession.createDataFrame(
       corpus.sparkSession.sparkContext.parallelize(keys.toSeq.map(org.apache.spark.sql.Row(_)), 1),
@@ -228,10 +227,13 @@ object TextAnalysis {
     * division; the per-term score sum is a FIXED-ORDER expression (term 0
     * first), not an aggregate — so an oracle replaying the same arithmetic
     * order matches bit-for-bit, with round(…,6) squashing only ln() ulp
-    * noise. Ties at the cut break on doc id. */
+    * noise. Ties at the cut break on doc id. The saturation and length
+    * parameters are the standard k1 = 1.2, b = 0.75. */
   def bm25TopK(df: org.apache.spark.sql.DataFrame, id: String, textCol: String,
-               terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
+               terms: Seq[String],
                topK: Int = 20): org.apache.spark.sql.DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
     import org.apache.spark.sql.expressions.Window
     require(terms.nonEmpty, "terms must be non-empty")
     require(terms.distinct.size == terms.size, s"duplicate query terms: $terms")
@@ -356,10 +358,7 @@ object TextAnalysis {
     * the averaged NLL squashes fold-order ulp noise per the repo
     * convention. */
   def kneserNeyLogProb(df: org.apache.spark.sql.DataFrame, id: String,
-                       textCol: String,
-                       discount: Double = 0.75): org.apache.spark.sql.DataFrame = {
-    require(discount > 0 && discount < 1,
-      s"KN discount must be in (0,1), got $discount")
+                       textCol: String): org.apache.spark.sql.DataFrame = {
     val tok = df.select(col(id).as("kn_id"), tokens(col(textCol)).as("tk"))
     // codegen'd posexplode + get(tk, pos+1) bigram build — same rewrite
     // (and rationale) as [[bigramLogProb]]'s
@@ -375,7 +374,7 @@ object TextAnalysis {
       .agg(sum(col("c")).as("ctx"), count(lit(1)).as("n1f"))
     val back = cbg.groupBy("w2").agg(count(lit(1)).as("n1b"))
     val types = cbg.count() // total distinct bigram types, one scalar action
-    val d = lit(discount)
+    val d = lit(0.75)
     val p = (col("c").cast("double") - d) / col("ctx") +
       d * col("n1f").cast("double") / col("ctx") *
         (col("n1b").cast("double") / lit(types.toDouble))
@@ -1091,20 +1090,22 @@ object TextAnalysis {
     * basis for winnowing-style fingerprints. A left fold over md5-hashed
     * tokens mod p = 2^31−1: acc·base + h stays under 2^52, so the arithmetic
     * is exact (no wrapping) and any engine reproduces it bit-for-bit. */
-  def rollingHash(text: Column, base: Long = 1000003L): Column = {
+  def rollingHash(text: Column): Column = {
+    val base = 1000003L
     val p = lit(2147483647L) // 2^31 - 1
     aggregate(tokens(text), lit(0L),
       (acc, t) => pmod(acc * base + pmod(md5Long(t), p), p))
   }
 
-  /** Winnowing document fingerprints (Schleimer et al., SIGMOD'03 variant):
-    * k-gram hashes via posexplode + window-lead (codegen'd, the k-gram
-    * string exists only inside the hash call), then keep each hash that is
-    * the minimum of the w-window ending at its position — a deterministic
-    * cover of every w-window's minimum, so any match of ≥ w+k-1 consecutive
-    * tokens between two docs shares a fingerprint. Returns (id, fp) rows,
-    * distinct per doc. Gram hash is the cross-engine [[md5Long]], so a SQL
-    * oracle reproduces the fingerprints exactly.
+  /** Winnowing document fingerprints (Schleimer et al., SIGMOD'03
+    * variant, k = 3, w = 4): k-gram hashes via posexplode + window-lead
+    * (codegen'd, the k-gram string exists only inside the hash call), then
+    * keep each hash that is the minimum of the w-window ending at its
+    * position — a deterministic cover of every w-window's minimum, so any
+    * match of ≥ w+k-1 consecutive tokens between two docs shares a
+    * fingerprint. Returns (id, fp) rows, distinct per doc. Gram hash is the
+    * cross-engine [[md5Long]], so a SQL oracle reproduces the fingerprints
+    * exactly.
     *
     * Scale shape: one exchange on the doc id + a per-doc sort (the window);
     * output is O(n/w) of the k-gram stream — the standard plagiarism/near-
@@ -1121,17 +1122,18 @@ object TextAnalysis {
     * one exchange total, spec-asserted, never narrower than the session
     * conf. */
   def winnowedFingerprints(df: org.apache.spark.sql.DataFrame, id: String,
-                           tokensCol: String, k: Int = 3, w: Int = 4)
-  : org.apache.spark.sql.DataFrame =
-    winnowedFingerprintsAt(df, id, tokensCol, k, w,
+                           tokensCol: String): org.apache.spark.sql.DataFrame =
+    winnowedFingerprintsAt(df, id, tokensCol,
       ExchangeWidth.forScan(df, ScanStreamTargetBytesPerPartition))
 
   /** [[winnowedFingerprints]] with the doc-grain exchange at an explicit
     * `width` (test seam: a widened plan at spec scale). */
   private[operators] def winnowedFingerprintsAt(df: org.apache.spark.sql.DataFrame,
-      id: String, tokensCol: String, k: Int, w: Int,
+      id: String, tokensCol: String,
       width: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val k = 3 // gram length
+    val w = 4 // window length
     // gram build on the codegen'd posexplode + get(tk, pos+j) path (see
     // [[tfidfCosinePairsTokens]]): drops the k−1 lead window functions the
     // old shape computed over the sorted stream, and moves the widening

@@ -20,9 +20,9 @@ class DedupSpec extends SparkSpec {
   private lazy val words = docs.select(col("doc_id"),
     split(col("text"), " ").as("words"))
 
-  private def minHash(threshold: Double, k: Int = 16, bands: Int = 4) =
+  private def minHash(threshold: Double) =
     Dedup.minHashDedupPortable(words, "doc_id", "words", shingleN = 3,
-      threshold = threshold, k = k, bands = bands)
+      threshold = threshold)
 
   test("minhash LSH over shingles: recall ≥90% of exact Jaccard ≥0.8 pairs") {
     // ground truth: brute-force shingle Jaccard over ALL pairs (unblocked —
@@ -64,11 +64,10 @@ class DedupSpec extends SparkSpec {
       s"simhash avg ${simStats.getDouble(0)} vs baseline $baseline — no signal")
   }
 
-  test("simhash Manku tables: wider keys bound candidates, same pairs (completeness)") {
+  test("simhash Manku tables: every pair within hamming 3 is a candidate (completeness)") {
     // plant an adversarial corpus for the 16-bit-chunk scheme: EVERY
-    // signature shares low chunk 0x1234, so blocks=4 makes all C(40,2)
-    // pairs candidates; upper 48 bits are random, so with blocks=6
-    // (3-block ≈32-bit keys) only genuinely close pairs collide
+    // signature shares low chunk 0x1234, so all C(40,2) pairs are
+    // candidates; upper 48 bits are random
     val rnd = new scala.util.Random(7)
     val sigs = (0 until 20).flatMap { i =>
       val a = (rnd.nextLong() & ~0xFFFFL) | 0x1234L
@@ -82,20 +81,17 @@ class DedupSpec extends SparkSpec {
       if il < ir && java.lang.Long.bitCount(sl ^ sr) <= 3
     } yield (il, ir)).toSet
     assert(truth.size >= 20, "planted partners must be in the truth set")
-    def pairsFor(blocks: Int) = Dedup.simHashCandidates(df, 3, blocks)
+    val pairs = Dedup.simHashCandidates(df, 3)
       .withColumn("hamming", bit_count(col("lsh").bitwiseXOR(col("rsh"))))
       .where(col("hamming") <= 3)
       .select("left_id", "right_id").as[(Long, Long)].collect().toSet
-    // pigeonhole completeness holds for both parameterizations
-    assert(pairsFor(4) === truth)
-    assert(pairsFor(6) === truth)
-    // ...but the wider keys collapse the candidate volume
-    val c4 = Dedup.simHashCandidates(df, 3, 4).count()
-    val c6 = Dedup.simHashCandidates(df, 3, 6).count()
-    assert(c4 === 40L * 39 / 2, "shared chunk makes every pair a blocks=4 candidate")
-    assert(c6 * 10 < c4, s"blocks=6 candidates ($c6) not ≪ blocks=4 ($c4)")
+    // pigeonhole completeness
+    assert(pairs === truth)
+    // each candidate pair surfaces once, on its first agreeing table
+    assert(Dedup.simHashCandidates(df, 3).count() === 40L * 39 / 2,
+      "shared chunk makes every pair a candidate")
     // the pigeonhole bound is structural, not a silent recall loss
-    intercept[IllegalArgumentException] { Dedup.simHashCandidates(df, 4, 4) }
+    intercept[IllegalArgumentException] { Dedup.simHashCandidates(df, 4) }
   }
 
   test("connected components never mutates the caller session's shuffle width") {
@@ -132,20 +128,6 @@ class DedupSpec extends SparkSpec {
     labels.createOrReplaceTempView("cc_rebind_check")
     assert(spark.sql("SELECT count(*) FROM cc_rebind_check").head().getLong(0) === 20L)
     spark.catalog.dropTempView("cc_rebind_check")
-  }
-
-  test("minhash with a single band (bands=1) is legal and exact-verified") {
-    // bands = 1 is legal (one k-row band); k must split evenly into bands
-    val pairs = minHash(0.8, k = 16, bands = 1)
-      .select("left_id", "right_id").as[(Long, Long)].collect().toSet
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "sh", "all", 0.8)
-      .select("left_id", "right_id").as[(Long, Long)].collect().toSet
-    // one 16-row band is maximally precise, minimally sensitive: whatever it
-    // returns must still be verified truth pairs
-    assert(pairs.subsetOf(exact))
-    intercept[IllegalArgumentException] {
-      minHash(0.8, k = 16, bands = 5)
-    }
   }
 
   test("τ=0 emits zero-overlap pairs even when the vocab is bitmap-eligible") {
@@ -440,28 +422,6 @@ class DedupSpec extends SparkSpec {
     assert(fast.nonEmpty && (500L to 560L).forall(fast(_) == 500L))
   }
 
-  test("connected components with reliable checkpointing matches localCheckpoint") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("left_id", "right_id")
-    // flag without a checkpoint dir must fail loudly, not die mid-loop
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      intercept[IllegalArgumentException] {
-        Dedup.connectedComponents(pairs, reliable = true)
-      }
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      // maxDriverEdges = 0 forces the distributed loop — the path reliable
-      // checkpointing exists for
-      val durable = Dedup.connectedComponents(pairs, reliable = true,
-          maxDriverEdges = 0L)
-        .as[(Long, Long)].collect().toMap
-      assert(durable === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("canonicalIds covers singletons and real near-dup clusters") {
     val pairs = minHash(0.8)
     val canon = Dedup.canonicalIds(docs.select("doc_id"), "doc_id", pairs)
@@ -492,7 +452,7 @@ class DedupSpec extends SparkSpec {
     // occGate = 0 forces the collapse branch (the public entry would take
     // the plain branch at spec scale); both must match the full-pair labels
     val cascade = Dedup.canonicalIdsCascadeAt(toks, "doc_id", "tok", "lang",
-        0.95, reliable = false, occGate = 0)
+        0.95, occGate = 0)
       .as[(Long, Long)].collect().toSet
     assert(cascade === plain)
     val public = Dedup.canonicalIdsCascade(toks, "doc_id", "tok", "lang", 0.95)
@@ -503,7 +463,7 @@ class DedupSpec extends SparkSpec {
       (3L, Seq.empty[String], "en"), (4L, Seq.empty[String], "en"), // no merge
       (5L, Seq("x"), "en")).toDF("doc_id", "tok", "lang")
     val got = Dedup.canonicalIdsCascadeAt(fix, "doc_id", "tok", "lang",
-        0.9, reliable = false, occGate = 0)
+        0.9, occGate = 0)
       .as[(Long, Long)].collect().toSet
     assert(got === Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L), (5L, 5L)))
   }

@@ -10,13 +10,13 @@ class QualityModelSpec extends SparkSpec {
     (Md5LongKernel.hash(tok.getBytes("UTF-8")) % dims).toInt
 
   test("hashedLinearScore matches a hand-computed sigmoid on a fixture") {
-    val w = QualityModel.fixedWeights(8)
+    val w = QualityModel.fixedWeights()
     val df = Seq((1L, "ab cd ab"), (2L, "xyz")).toDF("id", "text")
     val got = QualityModel.hashedLinearScore(df, "text", w, bias = 0.25)
       .select($"id", $"model_score", $"keep").as[(Long, Double, Boolean)]
       .collect().map { case (k, v, kp) => k -> ((v, kp)) }.toMap
     def expected(toks: Seq[String]): Double = {
-      val z = 0.25 + toks.map(t => w(bucket(t, 8))).sum / toks.length
+      val z = 0.25 + toks.map(t => w(bucket(t, w.length))).sum / toks.length
       val p = 1.0 / (1.0 + math.exp(-z))
       BigDecimal(p).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
@@ -29,7 +29,7 @@ class QualityModelSpec extends SparkSpec {
   test("hashedLinearScore: null text scores null and is never kept-true") {
     val df = Seq((1L, Option("ab")), (2L, Option.empty[String])).toDF("id", "text")
     val rows = QualityModel.hashedLinearScore(df, "text",
-      QualityModel.fixedWeights(8), bias = 0.0).collect()
+      QualityModel.fixedWeights(), bias = 0.0).collect()
     val byId = rows.map(r => r.getLong(0) -> r).toMap
     assert(!byId(1L).isNullAt(1))
     assert(byId(2L).isNullAt(1), "null text must score null")
@@ -40,7 +40,7 @@ class QualityModelSpec extends SparkSpec {
   test("hashedLinearScore rejects output-name collisions") {
     val df = Seq((1L, "ab", 0.5)).toDF("id", "text", "model_score")
     val e = intercept[IllegalArgumentException] {
-      QualityModel.hashedLinearScore(df, "text", QualityModel.fixedWeights(8), 0.0)
+      QualityModel.hashedLinearScore(df, "text", QualityModel.fixedWeights(), 0.0)
     }
     assert(e.getMessage.contains("model_score"))
   }

@@ -630,8 +630,10 @@ class SamplingSpec extends SparkSpec {
     wh.foreach { case (_, v) =>
       assert(BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble === v)
     }
+    val tooMany = spark.range(Sampling.MaxStrata + 1L)
+      .select(col("id").cast("string").as("lang"))
     val e = intercept[IllegalArgumentException] {
-      Sampling.temperatureWeights(docs, col("lang"), alpha = 0.5, maxStrata = 2)
+      Sampling.temperatureWeights(tooMany, col("lang"), alpha = 0.5)
     }
     assert(e.getMessage.contains("cardinality"))
     intercept[IllegalArgumentException] {
@@ -684,9 +686,11 @@ class SamplingSpec extends SparkSpec {
       Sampling.unimaxWeights(df, col("s"), col("n"), budgetFactor = 1.0,
         epochCap = -1.0)
     }
+    val tooMany = spark.range(Sampling.MaxStrata + 1L)
+      .select(col("id").cast("string").as("s"), lit(1L).as("n"))
     val e = intercept[IllegalArgumentException] {
-      Sampling.unimaxWeights(df, col("s"), col("n"), budgetFactor = 1.0,
-        epochCap = 2.0, maxStrata = 2)
+      Sampling.unimaxWeights(tooMany, col("s"), col("n"), budgetFactor = 1.0,
+        epochCap = 2.0)
     }
     assert(e.getMessage.contains("cardinality"))
     val neg = intercept[IllegalArgumentException] {
@@ -795,6 +799,28 @@ class SamplingSpec extends SparkSpec {
     assert(e.getMessage.contains("ws_esk"))
   }
 
+  /** Independent reference for [[Sampling.systematicResample]] over
+    * (doc_id, n_chars): one flat BigInt cumsum on the driver. Returns the
+    * draws per id and the competing rows in line order. */
+  private def flatResample(docs: org.apache.spark.sql.DataFrame, n: Long,
+                           seed: String): (Map[Long, Long], Seq[(Long, BigInt)]) = {
+    val rows = docs.select(col("doc_id"), col("n_chars")).as[(Long, Long)].collect()
+      .filter(_._2 > 0)
+      .map { case (id, w) =>
+        val h = graft.functions.Md5LongKernel.hash((seed + id).getBytes("UTF-8"))
+        (id, BigInt(w), h)
+      }.sortBy { case (id, _, h) => (h, id.toString) }
+    val W = rows.map(_._2).sum
+    def g(x: BigInt) = (x + W) / (W * 2)
+    var cum = BigInt(0)
+    val draws = rows.flatMap { case (id, w, _) =>
+      val prev = cum; cum += w
+      val d = g(cum * 2 * n) - g(prev * 2 * n)
+      if (d >= 1) Some(id -> d.toLong) else None
+    }.toMap
+    (draws, rows.map(r => r._1 -> r._2).toSeq)
+  }
+
   test("systematicResample replays a driver-side flat reference exactly; " +
     "Σdraws = n and every count within 1 of expectation") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -803,25 +829,12 @@ class SamplingSpec extends SparkSpec {
     val got = Sampling.systematicResample(docs, col("doc_id"), col("n_chars"),
       n = n, seed = "sr1")
       .select(col("doc_id"), col("draws")).as[(Long, Long)].collect().toMap
-    // independent reference: one flat BigInt cumsum on the driver
-    val rows = docs.as[(Long, Long)].collect()
-      .filter(_._2 > 0)
-      .map { case (id, w) =>
-        val h = graft.functions.Md5LongKernel.hash(("sr1" + id).getBytes("UTF-8"))
-        (id, BigInt(w), h)
-      }.sortBy { case (id, _, h) => (h, id.toString) }
+    val (expected, rows) = flatResample(docs, n, "sr1")
     val W = rows.map(_._2).sum
-    def g(x: BigInt) = (x + W) / (W * 2)
-    var cum = BigInt(0)
-    val expected = rows.flatMap { case (id, w, _) =>
-      val prev = cum; cum += w
-      val d = g(cum * 2 * n) - g(prev * 2 * n)
-      if (d >= 1) Some(id -> d.toLong) else None
-    }.toMap
     assert(got === expected)
     assert(got.values.sum === n, "systematic resampling must emit exactly n draws")
     // minimum-variance property: draws_i ∈ {⌊n·w/W⌋, ⌈n·w/W⌉}
-    val byId = rows.map(r => r._1 -> r._2).toMap
+    val byId = rows.toMap
     got.foreach { case (id, d) =>
       val exp = BigDecimal(n) * BigDecimal(byId(id)) / BigDecimal(W)
       assert(BigDecimal(d) > exp - 1 && BigDecimal(d) < exp + 1,
@@ -833,14 +846,15 @@ class SamplingSpec extends SparkSpec {
     "seed freshens the draw") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    def run(bits: Int, parts: Int, seed: String = "sA") =
+    def run(parts: Int, seed: String = "sA") =
       Sampling.systematicResample(docs.repartition(parts), col("doc_id"),
-        col("n_chars"), n = 300L, seed = seed, bucketBits = bits)
+        col("n_chars"), n = 300L, seed = seed)
         .select(col("doc_id"), col("draws")).as[(Long, Long)].collect().toMap
-    val a = run(8, 4)
-    assert(a === run(1, 4), "1 bucket (flat) must equal the 256-bucket split")
-    assert(a === run(8, 23), "the draw must not depend on partition layout")
-    assert(a !== run(8, 4, "sB"), "a fresh seed must give a fresh draw")
+    val a = run(4)
+    assert(a === flatResample(docs, 300L, "sA")._1,
+      "the 256-bucket split must equal the flat prefix sum")
+    assert(a === run(23), "the draw must not depend on partition layout")
+    assert(a !== run(4, "sB"), "a fresh seed must give a fresh draw")
     // output schema: input columns + draws, scratch dropped
     val out = Sampling.systematicResample(docs, col("doc_id"), col("n_chars"), 10L)
     assert(out.columns === (docs.columns :+ "draws"))
@@ -905,9 +919,6 @@ class SamplingSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] {
       Sampling.systematicResample(df, col("id"), col("w"), n = 2000000000L)
-    }
-    intercept[IllegalArgumentException] {
-      Sampling.systematicResample(df, col("id"), col("w"), n = 1L, bucketBits = 21)
     }
     intercept[IllegalArgumentException] { // nothing to draw from
       Sampling.systematicResample(df.where(col("id") > 1), col("id"), col("w"), 5L)

@@ -127,10 +127,10 @@ class SimilaritySpec extends SparkSpec {
       val selected = idxScan.get.selectedPartitions.partitionCount
       assert(selected === 1,
         s"one query at nprobe=1 must read exactly one of ${clusterDirs.length} cluster partitions, read $selected")
-      // the index stores the raw vectors (withVectors default), but the ADC
-      // probe must never read them: column pruning on top of partition pruning
+      // the index stores the raw vectors, but the ADC probe must never
+      // read them: column pruning on top of partition pruning
       assert(index.columns.contains("embedding"),
-        "withVectors=true index must carry the embedding column")
+        "the index must carry the embedding column")
       assert(!idxScan.get.requiredSchema.fieldNames.contains("embedding"),
         s"the ADC probe must column-prune the stored vectors, read ${idxScan.get.requiredSchema.fieldNames.mkString(",")}")
       // full probe over the loaded index ≡ the in-memory IVF+PQ path
@@ -369,13 +369,10 @@ class SimilaritySpec extends SparkSpec {
       assert(fetchScan.get.partitionFilters.nonEmpty,
         "the fetch scan must keep the probed-cluster partition filter")
       // codes-only index: the refine tier needs the stored vectors
-      val bare = java.nio.file.Files.createTempDirectory("refine_bare").toString
-      try {
-        Similarity.ivfPqIndexWrite(e, bare, coarse, books, withVectors = false)
-        intercept[IllegalArgumentException] {
-          Similarity.ivfPqTopKRefined(q, spark.read.parquet(bare), 3, coarse, books)
-        }
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(bare))
+      intercept[IllegalArgumentException] {
+        Similarity.ivfPqTopKRefined(q, spark.read.parquet(dir).drop("embedding"),
+          3, coarse, books)
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       graft.GraftSession.releaseCaches(spark, blocking = true)
@@ -396,15 +393,11 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Int)].collect().sortBy(_._1)
       assert(viaIndex.toSeq === inMemory.toSeq,
         "stored-index SemDeDup must keep exactly the in-memory survivors")
-      // an index written without vectors is rejected with a clear error
-      val codesOnly = java.nio.file.Files.createTempDirectory("codes_only").toString
-      try {
-        Similarity.ivfPqIndexWrite(e, codesOnly, coarse, books, withVectors = false)
-        val ex = intercept[IllegalArgumentException] {
-          Similarity.semanticDedupIndexed(spark.read.parquet(codesOnly), 0.35)
-        }
-        assert(ex.getMessage.contains("withVectors"))
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(codesOnly))
+      // an index without its vectors is rejected with a clear error
+      val ex = intercept[IllegalArgumentException] {
+        Similarity.semanticDedupIndexed(spark.read.parquet(dir).drop("embedding"), 0.35)
+      }
+      assert(ex.getMessage.contains("embedding column"))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       graft.GraftSession.releaseCaches(spark, blocking = true)
@@ -617,7 +610,7 @@ class SimilaritySpec extends SparkSpec {
   private lazy val emb = spark.read.parquet(s"$sf/embeddings.parquet").cache()
 
   test("tiled cosine self-join: equi-join plan, output identical to the naive θ-join") {
-    val tiled = Similarity.cosineSelfJoin(emb, threshold = 0.3, blocks = 4)
+    val tiled = Similarity.cosineSelfJoin(emb, threshold = 0.3)
     // the scale contract: no nested-loop/cartesian anywhere in the plan
     val plan = tiled.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
@@ -1157,7 +1150,7 @@ class SimilaritySpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
     // the exact pair join: only the real pair, never a NaN pair
-    val pairs = Similarity.cosineSelfJoin(corpus, threshold = 0.9, blocks = 2)
+    val pairs = Similarity.cosineSelfJoin(corpus, threshold = 0.9)
       .as[(Long, Long, Double)].collect().toSet
     assert(pairs.map(p => (p._1, p._2)) === Set((1L, 2L)))
     graft.GraftSession.releaseCaches(spark, blocking = true)

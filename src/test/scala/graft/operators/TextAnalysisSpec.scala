@@ -495,7 +495,7 @@ class TextAnalysisSpec extends SparkSpec {
     // one, at the requested width, and the same fingerprint set
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("tok"))
-    val wideDf = TextAnalysis.winnowedFingerprintsAt(docs, "doc_id", "tok", 3, 4,
+    val wideDf = TextAnalysis.winnowedFingerprintsAt(docs, "doc_id", "tok",
       width = 64)
     val wide = shufflesOf(wideDf)
     assert(wide.length === 1,
@@ -504,7 +504,7 @@ class TextAnalysisSpec extends SparkSpec {
       s"widened exchange must keep the requested width 64, got " +
         wide.head.outputPartitioning.numPartitions)
     // width below the session conf is never narrowed: identical plan shape
-    val narrow = shufflesOf(TextAnalysis.winnowedFingerprintsAt(docs, "doc_id", "tok", 3, 4,
+    val narrow = shufflesOf(TextAnalysis.winnowedFingerprintsAt(docs, "doc_id", "tok",
       width = 2))
     assert(narrow.head.outputPartitioning.numPartitions ===
       spark.conf.get("spark.sql.shuffle.partitions").toInt,

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class PlanDumpSpec extends AnyFunSuite {
 
-  test("mask replaces the five run-dependent tokens and keeps the rest of the plan") {
+  test("mask replaces the seven run-dependent token forms and keeps the rest of the plan") {
     val raw =
       "(3) Project [codegen id : 2]\n" +
       "Output [2]: [doc_id#12L, tok#407]\n" +

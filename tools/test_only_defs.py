@@ -1,25 +1,40 @@
 #!/usr/bin/env python3
 """List the src/main defs that only the specs call, then the src/main files
-that no entry point reaches.
+that no entry point reaches, then the defaulted operator parameters that no
+product caller passes.
 
-A def counts when some src/test file names it but no src/main file other
-than its own and no perfbench/src file does. Comments are stripped before
-matching; names are matched as whole identifiers, so a def that shares its
-name with an unrelated method (`run`) is judged by every use of the name.
-Three rules keep a bare-identifier match from standing in for a call: an
-unqualified `private def` is skipped (no spec can call it), so is a def
-declared inside another def's body (a local def, told apart by brace
-nesting on the comment- and string-stripped text; a spec calling the
-collections' `.find` is not a call of a local `find`), and a spec's names
-exclude the ones that spec declares itself with `val`, `var` or `def` (its
-local `rows` is not a call of a src/main `rows`). Defs of an object nested
-in an object stay listed.
+A def counts when some src/test file names it and no product code reaches
+it. Product code reaches a def when a src/main file other than its own or a
+perfbench/src file names it, or when a reached def of its own file names it
+outside the def's own body; a `main` def and a name used outside every def
+body (an object-level `val`) are reached, and reach is iterated to a
+fixpoint, so `Tables.parallel` counts as reached through the `*Par` loaders
+the queries call. Comments are stripped before matching; names are matched
+as whole identifiers, so a def that shares its name with an unrelated
+method (`run`) is judged by every use of the name. Three rules keep a
+bare-identifier match from standing in for a call: an unqualified
+`private def` is not listed (no spec can call it), nor is a def declared
+inside another def's body (a local def, told apart by brace nesting on the
+comment- and string-stripped text; a spec calling the collections' `.find`
+is not a call of a local `find`), and a spec's names exclude the ones that
+spec declares itself with `val`, `var` or `def` (its local `rows` is not a
+call of a src/main `rows`). Defs of an object nested in an object stay
+listed.
 
 The def list misses a module whose only caller is itself unreached, so a
 second section walks whole files. The roots are the files with a `def main`
 or `extends App` and the files whose top-level object/class/trait name
 perfbench/src uses; a file is reached when a reached file names one of its
 top-level names, iterated to a fixpoint. Every unreached file is listed.
+
+The third section lists each defaulted parameter of a graft/operators or
+graft/functions def that no product call passes, by position or by name.
+Product calls are the ones in src/main and perfbench/src; the specs do not
+count. A call names the def unqualified or through an object of the def's
+file. A call that passes a defaulted parameter of its own enclosing def on
+unchanged (`idCol` into `idCol`) passes a value only when that enclosing
+parameter is itself passed (a required one counts as passed when a call
+gives it a value that is not such a forward), iterated to a fixpoint.
 
 This is a report for deciding what code has no product caller, not a
 gate: it always exits 0.
@@ -40,7 +55,11 @@ DECL = re.compile(r"\b(?:val|var|def)\s+([A-Za-z_][A-Za-z0-9_]*)")
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 TOP = re.compile(r"^(?:(?:(?:private|protected)(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*"
                  r"(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
+OBJECT = re.compile(r"\bobject\s+([A-Za-z_][A-Za-z0-9_]*)")
 ROOT = re.compile(r"\bdef\s+main\s*\(|\bextends\s+App\b")
+NAMED = re.compile(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*=(?![=>])")
+PARAM = re.compile(r"\s*(?:implicit\s+)?(?:val\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*:")
+OPERATOR_DIRS = (os.path.join("graft", "operators"), os.path.join("graft", "functions"))
 
 
 def sources(root):
@@ -55,61 +74,210 @@ def sources(root):
     return out
 
 
-def callable_defs(text):
-    """Names of the non-private defs in `text` that no other def's body holds.
+class Def:
+    def __init__(self, name, start, header, private, local):
+        self.name, self.start, self.header = name, start, header
+        self.private, self.local, self.end = private, local, None
+
+
+def defs_of(blank):
+    """Every def in `blank` (comment- and string-blanked text), with its span.
 
     A `{` opened at a depth whose latest declaration is a `def` starts a def
     body (braced body, or a block inside a braceless one); a def is local
-    when any enclosing brace is such a body. String literals are blanked
-    first so their braces do not count."""
-    blank = COMMENT.sub(lambda m: " " * len(m.group(0)), text)
-    local = set()
-    frames, latest = [], {}
+    when any enclosing brace is such a body. A def's span ends at the next
+    declaration of its own depth or at the brace that closes that depth."""
+    heads = {m.start(0) + len(m.group(1)): m for m in DEF.finditer(blank)}
+    out, frames, latest, open_ = [], [], {}, {}
     for m in SCOPE.finditer(blank):
         tok, depth = m.group(0), len(frames)
         if tok == "{":
             frames.append(latest.get(depth) == "def")
-        elif tok == "}":
+            continue
+        if depth in open_:
+            open_.pop(depth).end = m.start()
+        if tok == "}":
             if frames:
                 frames.pop()
             latest.pop(depth, None)
+            continue
+        if tok == "def" and m.start() in heads:
+            h = heads[m.start()]
+            d = Def(h.group(2), m.start(), h.end(), bool(PRIVATE.search(h.group(1))), any(frames))
+            out.append(d)
+            open_[depth] = d
+        latest[depth] = tok
+    for d in open_.values():
+        d.end = len(blank)
+    return out
+
+
+def blanked(text):
+    return COMMENT.sub(lambda m: " " * len(m.group(0)), text)
+
+
+def groups(blank, i):
+    """The consecutive bracket groups `[..]` / `(..)` starting at i, as
+    (opener, [top-level comma-split parts]) pairs."""
+    out = []
+    while True:
+        j = i
+        while j < len(blank) and blank[j] in " \t\n":
+            j += 1
+        if j >= len(blank) or blank[j] not in "([":
+            return out
+        depth, parts, cur = 0, [], j + 1
+        for k in range(j, len(blank)):
+            c = blank[k]
+            if c in "([{":
+                depth += 1
+            elif c in ")]}":
+                depth -= 1
+                if depth == 0:
+                    parts.append(blank[cur:k])
+                    break
+            elif c == "," and depth == 1:
+                parts.append(blank[cur:k])
+                cur = k + 1
         else:
-            if tok == "def" and any(frames):
-                local.add(m.start())
-            latest[depth] = tok
-    return {m.group(2) for m in DEF.finditer(blank)
-            if not PRIVATE.search(m.group(1))
-            and m.start() + len(m.group(1)) not in local}
+            return out
+        out.append((blank[j], [p for p in parts if p.strip()]))
+        i = k + 1
+
+
+def enclosing(defs, pos):
+    """The innermost def whose span holds pos, or None."""
+    best = None
+    for d in defs:
+        if d.start <= pos < d.end and (best is None or d.start > best.start):
+            best = d
+    return best
+
+
+def unpassed_defaults(repo, main_src, bench_src):
+    """[(path, def, param)] for each defaulted operator parameter no product
+    call passes."""
+    blanks = {p: blanked(t) for p, t in list(main_src.items()) + list(bench_src.items())}
+    defs = {p: defs_of(b) for p, b in blanks.items()}
+    objects = {p: set(OBJECT.findall(b)) for p, b in blanks.items()}
+    params = {}   # (path, def start) -> [(list index, position, name, defaulted)]
+    by_name = {}  # def name -> [(path, def)]
+    for p in main_src:
+        if not any(s in p for s in OPERATOR_DIRS):
+            continue
+        for d in defs[p]:
+            lists = [g for o, g in groups(blanks[p], d.header) if o == "("]
+            ps = [(i, j, PARAM.match(a).group(1), "=" in re.sub(r"=>|==|!=|<=|>=", "", a))
+                  for i, g in enumerate(lists) for j, a in enumerate(g) if PARAM.match(a)]
+            if ps:
+                params[(p, d.start)] = ps
+                by_name.setdefault(d.name, []).append((p, d))
+    passed, forwards = set(), []
+    for q, b in blanks.items():
+        for m in re.finditer(r"(?:\b([A-Za-z_][A-Za-z0-9_]*)\s*\.\s*)?\b([A-Za-z_][A-Za-z0-9_]*)(?=\s*[(\[])", b):
+            if m.group(2) not in by_name or re.search(r"\bdef\s+$", b[:m.start(2)][-12:]):
+                continue
+            lists = [g for o, g in groups(b, m.end()) if o == "("]
+            outer = enclosing(defs[q], m.start())
+            outer_params = {x[2] for x in params.get((q, outer.start), [])} if outer else set()
+            for p, d in by_name[m.group(2)]:
+                if m.group(1) and m.group(1) not in objects[p]:
+                    continue
+                for i, j, name, _ in params[(p, d.start)]:
+                    if i >= len(lists):
+                        continue
+                    args = lists[i]
+                    named = {}
+                    positional = len(args)
+                    for k, a in enumerate(args):
+                        n = NAMED.match(a)
+                        if n:
+                            positional = min(positional, k)
+                            named[n.group(1)] = a[n.end():]
+                    if j < positional:
+                        arg = args[j]
+                    elif name in named:
+                        arg = named[name]
+                    else:
+                        continue
+                    key = (p, d.start, name)
+                    if arg.strip() in outer_params:
+                        forwards.append(((q, outer.start, arg.strip()), key))
+                    else:
+                        passed.add(key)
+    grew = True
+    while grew:
+        grew = False
+        for src, dst in forwards:
+            if src in passed and dst not in passed:
+                passed.add(dst)
+                grew = True
+    return sorted((os.path.relpath(p, repo), d.name, name)
+                  for ds in by_name.values() for p, d in ds
+                  for _, _, name, defaulted in params[(p, d.start)]
+                  if defaulted and (p, d.start, name) not in passed)
+
+
+def reached_defs(live_src, main_src, bench):
+    """{(path, name)} for the defs product code reaches in the reached files
+    `live_src` (see the module doc)."""
+    others = {p: set().union(*(set(IDENT.findall(t)) for q, t in main_src.items() if q != p))
+              for p in live_src}
+    reached = set()
+    for p, t in live_src.items():
+        blank = blanked(t)
+        spans = [d for d in defs_of(blank) if not d.local]
+        names = {d.name for d in spans}
+        uses = [(m.start(), m.group(0)) for m in IDENT.finditer(blank) if m.group(0) in names]
+        live = {d.name for d in spans if d.name == "main"
+                or (not d.private and (d.name in others[p] or d.name in bench))}
+        live |= {n for pos, n in uses if not any(d.start <= pos < d.end for d in spans)}
+        frontier = set(live)
+        while frontier:
+            found = {n for d in spans if d.name in frontier
+                     for pos, n in uses if d.start <= pos < d.end and n != d.name}
+            frontier = found - live
+            live |= frontier
+        reached |= {(p, n) for n in live}
+    return reached
 
 
 def main(argv):
     repo = argv[0] if argv else "."
     main_src = sources(os.path.join(repo, "src", "main"))
+    bench_src = sources(os.path.join(repo, "perfbench", "src"))
     names = {p: set(IDENT.findall(t)) for p, t in main_src.items()}
     tested = set().union(*(set(IDENT.findall(t)) - set(DECL.findall(t)) for t in
                            sources(os.path.join(repo, "src", "test")).values()))
-    bench = set().union(*(IDENT.findall(t) for t in
-                          sources(os.path.join(repo, "perfbench", "src")).values()))
-    hits = sorted((os.path.relpath(p, repo), d)
-                  for p, t in main_src.items()
-                  for d in callable_defs(t)
-                  if d in tested and d not in bench
-                  and not any(d in ns for q, ns in names.items() if q != p))
+    bench = set().union(*(IDENT.findall(t) for t in bench_src.values()))
+
+    tops = {p: set(TOP.findall(t)) for p, t in main_src.items()}
+    files = {p for p, t in main_src.items() if ROOT.search(t) or tops[p] & bench}
+    frontier = set(files)
+    while frontier:
+        used = set().union(*(names[p] for p in frontier))
+        frontier = {p for p in main_src if p not in files and tops[p] & used}
+        files |= frontier
+
+    reached = reached_defs({p: t for p, t in main_src.items() if p in files}, main_src, bench)
+    hits = sorted({(os.path.relpath(p, repo), d.name)
+                   for p, t in main_src.items()
+                   for d in defs_of(blanked(t))
+                   if not d.private and not d.local
+                   and d.name in tested and (p, d.name) not in reached})
     for path, d in hits:
         print(f"{path}: {d}")
     print(f"{len(hits)} test-only defs")
 
-    tops = {p: set(TOP.findall(t)) for p, t in main_src.items()}
-    reached = {p for p, t in main_src.items() if ROOT.search(t) or tops[p] & bench}
-    frontier = set(reached)
-    while frontier:
-        used = set().union(*(names[p] for p in frontier))
-        frontier = {p for p in main_src if p not in reached and tops[p] & used}
-        reached |= frontier
-    unreached = sorted(os.path.relpath(p, repo) for p in main_src if p not in reached)
+    unreached = sorted(os.path.relpath(p, repo) for p in main_src if p not in files)
     for path in unreached:
         print(path)
     print(f"{len(unreached)} src/main files no entry point reaches")
+
+    unpassed = unpassed_defaults(repo, main_src, bench_src)
+    for path, d, name in unpassed:
+        print(f"{path}: {d}.{name}")
+    print(f"{len(unpassed)} defaulted operator parameters no product call passes")
 
 
 if __name__ == "__main__":
