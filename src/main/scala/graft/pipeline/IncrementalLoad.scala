@@ -26,18 +26,23 @@ object IncrementalLoad {
     * persist and no count job ahead of the write. Both counts are
     * `Dataset.observe` metrics on the write's own plan. With a
     * `partitionCol`, rows are hash-clustered on it first, so each load
-    * writes one file per partition value it touches; the exchange's width
-    * is AQE's, sized from the shuffled bytes.
+    * writes one file per partition value it touches. That exchange's width
+    * is the session's shuffle width, given explicitly so that AQE does not
+    * coalesce it: the writer's cost is per file, not per byte (a daily load
+    * opens ~56 date files from 175 rows), and a coalesced exchange would
+    * open them all from one task. Hashing still sends each value to exactly
+    * one task, at any width, and a task that gets no rows writes no file.
     *
     * Where the observers sit matters. AQE replaces a materialized shuffle
     * stage that produced no rows with an empty relation, and every
     * `CollectMetrics` under it drops out of the final plan, so its
     * Observation reports no metric at all. The incoming observer therefore
-    * sits under the clustering exchange, whose input IS the incoming rows,
-    * and the anti-join runs after it (an all-duplicate rerun then still
-    * reports its incoming rows, under a broadcast or a sort-merge
-    * anti-join). An observer can thus only go missing when what it counts
-    * is provably empty, so a missing metric reads 0.
+    * sits directly on the incoming rows, and the anti-join runs after it
+    * (Catalyst pushes the anti-join below the clustering exchange, never
+    * below the observer), so an all-duplicate rerun still reports its
+    * incoming rows, under a broadcast or a sort-merge anti-join. An
+    * observer can thus only go missing when what it counts is provably
+    * empty, so a missing metric reads 0.
     *
     * An empty load adds no file to an existing partitioned table (the
     * dynamic-partition writer opens files per row; an unpartitioned table
@@ -49,7 +54,8 @@ object IncrementalLoad {
     val existed = spark.catalog.tableExists(table)
     val (seen, kept) = (Observation(), Observation())
     val observed = incoming.observe(seen, count(lit(1)).as("rows"))
-    val clustered = partitionCol.fold(observed)(c => observed.repartition(col(c)))
+    val width = spark.sessionState.conf.numShufflePartitions
+    val clustered = partitionCol.fold(observed)(c => observed.repartition(width, col(c)))
     val fresh = if (existed) newRows(clustered, spark.table(table), key) else clustered
     val writer = fresh.observe(kept, count(lit(1)).as("rows"))
       .write.mode("append").format("parquet")
@@ -81,7 +87,6 @@ object IncrementalLoad {
       case DoubleType | FloatType => "DOUBLE PRECISION"
       case BooleanType => "BOOLEAN"
       case TimestampType | TimestampNTZType => "TIMESTAMP"
-      case _: StringType => "VARCHAR(256)"
       case _ => "VARCHAR(256)"
     }
     val cols = (schema.fields ++ partitionKeys)

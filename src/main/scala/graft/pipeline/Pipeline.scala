@@ -7,6 +7,12 @@ import org.apache.spark.sql.SparkSession
   * Spark plan: the stages are lazy frames composed into the load's write,
   * with no materialized boundary between them.
   *
+  * At the paper's scale a load's cost is per file, not per byte: a daily
+  * load appends a few hundred rows over dozens of date partitions, so the
+  * load writes its date files from every shuffle partition
+  * ([[IncrementalLoad.load]]) and the table's listings run on the driver
+  * (`GraftSession.builder`).
+  *
   * Differences from the reference, by design (SURVEY §8.7): the
   * clear-then-rewrite-then-crawl sequence (S8/S9) becomes one atomic
   * `saveAsTable(overwrite)`; the crawler poll loop disappears because
