@@ -26,8 +26,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * more to `SPARK_GRAFT_BENCH_DEEPRUNS` (default 7), so the min comes
   * from a deeper sample exactly where the mode-swing risk is.
   *
-  * The first warm-up pass at sf0.001 compiles every whole-stage-codegen
-  * class before anything is timed. Failed runs never enter a stat or the
+  * The first warm-up pass at sf0.001 compiles the suite's generated classes
+  * before anything is timed: 1,387 entries of Spark's codegen cache at
+  * local[4]. [[GraftSession]] sizes that cache to 4096 entries, so the
+  * timed runs find them there; at Spark's default of 100 the LRU had
+  * evicted most of them again before their query's first timed run. A
+  * timed run may still compile the classes of a plan that AQE shapes
+  * differently at the timed SF than at sf0.001. Failed runs never enter a stat or the
   * total; they surface in `failed_runs` (query → #failures) and
   * `n_failed_queries` (queries with zero successful runs, absent from
   * `queries`/total).

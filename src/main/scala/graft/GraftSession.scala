@@ -43,6 +43,28 @@ object GraftSession {
       // (366) now lists on the driver; a table past 1024 partitions (the
       // cluster case) goes back to the distributed listing job.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+      // Spark's LRU cache of compiled generated classes (whole-stage
+      // iterators, projections, predicates). An entry is one class source
+      // per class loader; the driver and the executor threads each hold one.
+      // Measured at local[4], one pass fills 268 entries for the seven
+      // corpus-operator queries (q24 q41 q60 q62 q72 q90 q113), 28 for a
+      // cashback load and its rerun on the golden fixture, and 1,387 for
+      // all 134 queries at sf0.001 (1,400 after three passes). At Spark's
+      // default of 100 the LRU evicts classes each pass needs again, and
+      // Janino recompiles ~290 of them on every corpus pass. 4096 holds the
+      // whole suite with ~3x headroom, so a long-lived session compiles each
+      // class once. The conf is static and JVM-wide: Spark sizes the cache
+      // once, from the session active when the first class in the JVM is
+      // compiled, so it takes effect only when a session built here is the
+      // first to generate code in the JVM.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Whole-stage classes are named after their codegen stage id, which AQE
+      // assigns in stage finish order, so the same pipeline came back under
+      // a new name and compiled again on later passes (2-26 compiles per
+      // corpus pass with the cache above). Without the id its source does not
+      // change between calls; the id stays in the plan's `*(n)` markers, and
+      // stack traces name the class `GeneratedIterator`.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
 
   def defaultCpus: Int =

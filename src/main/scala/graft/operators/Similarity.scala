@@ -1,8 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Vector-similarity operators over `array<float>` embedding columns.
   *
@@ -29,6 +32,16 @@ object Similarity {
   private val IdCol = "vec_id"
   private val VecCol = "embedding"
   private val LabelCol = "label"
+
+  /** The types `typedLit` infers for `Seq[Double]` and `Seq[Seq[Double]]`.
+    * [[arrayLit]] states them instead, because `typedLit` runs Scala
+    * runtime reflection on every call and the PQ tiers build one literal
+    * per code (16 codes × 4 subspaces per encode). */
+  private val Doubles = ArrayType(DoubleType, containsNull = false)
+  private val DoubleRows = ArrayType(Doubles, containsNull = true)
+
+  private def arrayLit(value: Seq[Any], dataType: DataType): Column =
+    ColumnBridge.column(Literal.create(value, dataType))
 
   def dot(a: Column, b: Column): Column = VectorFunctions.vectorDot(a, b)
 
@@ -260,7 +273,7 @@ object Similarity {
   private[graft] def nearestCentroidLiteral(vec: Column,
                                             centroids: Array[Array[Double]]): Column =
     array_max(array(centroids.zipWithIndex.map { case (c, i) =>
-      struct(graft.functions.VectorFunctions.vectorCosine(vec, typedLit(c.toSeq)).as("cos"),
+      struct(graft.functions.VectorFunctions.vectorCosine(vec, arrayLit(c.toSeq, Doubles)).as("cos"),
         lit(i).as("cluster"))
     }: _*)).getField("cluster")
 
@@ -274,7 +287,7 @@ object Similarity {
   private[graft] def probeCentroidsLiteral(vec: Column, centroids: Array[Array[Double]],
                                            nprobe: Int): Column =
     transform(slice(reverse(array_sort(array(centroids.zipWithIndex.map { case (c, i) =>
-      struct(graft.functions.VectorFunctions.vectorCosine(vec, typedLit(c.toSeq)).as("cos"),
+      struct(graft.functions.VectorFunctions.vectorCosine(vec, arrayLit(c.toSeq, Doubles)).as("cos"),
         lit(i).as("cluster"))
     }: _*))), 1, nprobe), s => s.getField("cluster"))
 
@@ -358,7 +371,7 @@ object Similarity {
     * inline slice — the slice would be re-evaluated per code. */
   private def nearestCode(sub: Column, codes: Array[Array[Double]]): Column =
     array_min(array(codes.zipWithIndex.map { case (c, j) =>
-      val dot = graft.functions.VectorFunctions.vectorDot(sub, typedLit(c.toSeq))
+      val dot = graft.functions.VectorFunctions.vectorDot(sub, arrayLit(c.toSeq, Doubles))
       struct((lit(c.map(x => x * x).sum) - lit(2.0) * dot).as("d"),
         lit(j).as("code"))
     }: _*)).getField("code")
@@ -452,8 +465,8 @@ object Similarity {
   def sqEncode(corpus: DataFrame, mins: Array[Double], maxs: Array[Double]): DataFrame = {
     require(mins.length == maxs.length && mins.nonEmpty,
       s"mins/maxs must be equal-length and non-empty, got ${mins.length}/${maxs.length}")
-    val mn = typedLit(mins.toSeq)
-    val mx = typedLit(maxs.toSeq)
+    val mn = arrayLit(mins.toSeq, Doubles)
+    val mx = arrayLit(maxs.toSeq, Doubles)
     corpus.select(col(IdCol),
       transform(col(VecCol), (x, i) => {
         val lo = element_at(mn, i + 1); val hi = element_at(mx, i + 1)
@@ -486,9 +499,9 @@ object Similarity {
       s"mins/maxs must be equal-length and non-empty, got ${mins.length}/${maxs.length}")
     require(codes.columns.contains("sq_code"),
       s"codes must carry sq_code (from sqEncode), got ${codes.columns.mkString(", ")}")
-    val mn = typedLit(mins.toSeq)
-    val step = typedLit(maxs.zip(mins).map { case (hi, lo) =>
-      if (hi > lo) (hi - lo) / 255.0 else 0.0 }.toSeq)
+    val mn = arrayLit(mins.toSeq, Doubles)
+    val step = arrayLit(maxs.zip(mins).map { case (hi, lo) =>
+      if (hi > lo) (hi - lo) / 255.0 else 0.0 }.toSeq, Doubles)
     val q = queries.select(col(IdCol).as("query_id"),
       col(VecCol).as("sq_qv"))
     val c = codes
@@ -585,8 +598,8 @@ object Similarity {
     * query side and code_s columns on the corpus side. */
   private def adcDist(codebooks: Array[Array[Array[Double]]]): Column =
     codebooks.indices.map { s =>
-      val cents = typedLit(codebooks(s).map(_.toSeq).toSeq)
-      val cNorms = typedLit(codebooks(s).map(c => c.map(x => x * x).sum).toSeq)
+      val cents = arrayLit(codebooks(s).map(_.toSeq).toSeq, DoubleRows)
+      val cNorms = arrayLit(codebooks(s).map(c => c.map(x => x * x).sum).toSeq, Doubles)
       val cent = element_at(cents, col(s"code_$s").cast("int") + 1)
       col(s"q_nrm_$s") +
         element_at(cNorms, col(s"code_$s").cast("int") + 1) -

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.queries.Queries
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -18,7 +19,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - the spilling nodes ranked by bytes, so an aggregate spill number is
   *     attributed to the operator that paid it (a sort-merge join's input
   *     sorts, an aggregate's hash-map overflow and a too-narrow exchange
-  *     each want a different fix).
+  *     each want a different fix);
+  *   - how many generated classes the run compiled with Janino (`compiled=`,
+  *     next to the job count): 0 once the session's codegen cache holds the
+  *     query's classes, so a non-zero count on a later rep is codegen cost.
   * Node ids (`#id`) match across the last two sections.
   *
   * Usage: runMain graft.tools.Profile <query> [sfDir] [reps]
@@ -74,9 +78,11 @@ object Profile {
       Thread.sleep(1500)
       jobs.synchronized(jobs.clear())
       plans.synchronized(plans.clear())
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       graft.Bench.materialize(fn(spark, dir))
       val total = (System.nanoTime() - t0) / 1e9
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       Thread.sleep(1500)
       println(f"== $name rep$rep total=$total%.3f calib=$c0%.3f")
 
@@ -85,7 +91,7 @@ object Profile {
       jobSnap.sortBy(_._1).foreach { case (id, dt, d) =>
         println(f"  job$id%-4d $dt%7.3f  $d")
       }
-      println(f"  jobs=${jobSnap.length} jobSum=${jobSnap.map(_._2).sum}%.3f")
+      println(f"  jobs=${jobSnap.length} compiled=$compiled jobSum=${jobSnap.map(_._2).sum}%.3f")
 
       val spills = collection.mutable.ArrayBuffer.empty[(String, Long)]
       plans.synchronized(plans.toSeq).foreach { case (tag, root) =>
