@@ -2,40 +2,20 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-/** Distributed BPE tokenizer training — the merge-table learner
-  * (Sennrich et al. 2016 "Neural Machine Translation of Rare Words with
-  * Subword Units"), the step a training-data pipeline runs BEFORE it can
-  * count tokens the way the model will see them.
+/** BPE tokenizer relations (Sennrich et al. 2016 "Neural Machine
+  * Translation of Rare Words with Subword Units") over a corpus: a merge
+  * round's pair counts, and encoding under a FIXED merge table.
   *
-  * The scale insight BPE training rides: after ONE corpus pass collapses
-  * the text to (distinct word, count), every merge round touches only the
+  * The scale insight: ONE corpus pass collapses the text to (distinct
+  * word, count) ([[wordCounts]]), and the pair relations touch only that
   * VOCABULARY relation — at 100 TB the corpus has billions of documents
   * but the distinct-word table is orders of magnitude smaller, and counts
-  * carry the corpus weight. Per round:
-  *
-  *   1. adjacent-pair counts: a row-local zip of each word's current
-  *      symbol array with its own tail, exploded and summed with map-side
-  *      combine (shuffle width = distinct pairs, not occurrences);
-  *   2. the arg-max pair under the TOTAL order (count DESC, left ASC,
-  *      right ASC) — classic BPE breaks ties arbitrarily; a deterministic
-  *      tie-break makes the merge table a pure function of the corpus;
-  *   3. merge application: a row-local left fold over each word's symbol
-  *      array (greedy left-to-right, the reference BPE semantics — "aaa"
-  *      under (a,a) becomes [aa, a]).
-  *
-  * Each round's vocab is persisted and materialized before the previous
-  * is released, so the fold lineage never re-computes — and every
-  * `checkpointEvery` rounds (default 8) the vocab is `localCheckpoint`ed
-  * so the PLAN stays bounded too: a persist does not truncate the
-  * analyzed tree, each round nests one more fold layer onto it, and the
-  * unbounded schedule was measured (round 19) to OOM the driver near
-  * merge ~200 — while per-round analyzer cost is SUPERLINEAR in the
-  * depth between checkpoints (~5 s/round at cadence 32 vs ~0.3 s/round
-  * at cadence 8 on the sf0.01 vocab, measured), hence the short default.
-  * BpeTrainSpec crosses the cadence boundary against the reference
-  * trainer.
+  * carry the corpus weight. [[pairCounts]] ranks a round's candidate
+  * merges by raw count (q107, byte-seeded in q115), [[wordPieceScores]]
+  * by likelihood ratio (q123); the ranking's total order (count DESC,
+  * left ASC, right ASC) makes a merge choice a pure function of the
+  * corpus.
   *
   * [[bpeEncode]] applies a FIXED merge list to a corpus row-locally (no
   * shuffle) through a flat replace-chain kernel — one linear string
@@ -63,9 +43,8 @@ import org.apache.spark.storage.StorageLevel
   * Oracle strategy (q107): merge ROUND 1's pair counts over the initial
   * character segmentation are plain SQL (adjacent character bigrams
   * weighted by word count) — the distributed-risk stage (the corpus pass
-  * + the pair shuffle) is hash-gated at every SF, while the driver loop
-  * (vocab-local, engine-independent) is pinned by BpeTrainSpec against an
-  * independent single-threaded reference implementation on real data. */
+  * + the pair shuffle) is hash-gated at every SF. The encode queries use
+  * the frozen table [[fixedMerges]], which the oracle embeds verbatim. */
 object BpeTrain {
 
   /** ONE corpus pass: whitespace words → (word, count), map-side combined.
@@ -89,13 +68,13 @@ object BpeTrain {
     * code points too, so oracle parity holds for ALL of Unicode, astral
     * planes included — spec-pinned against the DuckDB replay's output on
     * astral text. A byte-level seed remains the production choice for
-    * multilingual corpora and is what `byteSeed = true` does: each UTF-8 byte seeds
-    * as an uppercase hex PAIR ("h" → "68"), so symbols stay ASCII-alnum
-    * (the ()-delimited oracle replay and the q107-style pair-count SQL
-    * both remain expressible — DuckDB's `hex(encode(w))` replays the
-    * identical segmentation) and any byte sequence round-trips exactly
-    * (`unhex(concat(tokens))` — spec-asserted on non-ASCII and astral
-    * fixtures). */
+    * multilingual corpora and is what `byteSeed = true` does (q115): each
+    * UTF-8 byte seeds as an uppercase hex PAIR ("h" → "68"), so symbols
+    * stay ASCII-alnum (the ()-delimited oracle replay and the q107-style
+    * pair-count SQL both remain expressible — DuckDB's `hex(encode(w))`
+    * replays the identical segmentation) and any byte sequence
+    * round-trips exactly through [[decodeByteTokens]] (spec-asserted on
+    * non-ASCII and astral fixtures). */
   def initVocab(wc: DataFrame, byteSeed: Boolean = false): DataFrame =
     if (!byteSeed)
       wc.withColumn("syms", filter(split(col("w"), ""), s => length(s) > 0))
@@ -154,7 +133,7 @@ object BpeTrain {
   }
 
   /** Greedy left-to-right application of one merge to a symbol array —
-    * the row-local fold shared by training and encoding. */
+    * the row-local fold of [[bpeEncode]]'s fallback kernel. */
   private def mergeFold(syms: Column, l: String, r: String): Column =
     aggregate(syms, array().cast("array<string>"),
       (acc, s) =>
@@ -162,70 +141,18 @@ object BpeTrain {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
           .otherwise(concat(acc, array(s))))
 
-  /** One merge round applied to the vocabulary. */
-  def applyMerge(vocab: DataFrame, l: String, r: String): DataFrame =
-    vocab.withColumn("syms", mergeFold(col("syms"), l, r))
-
-  /** Train `merges` BPE merges over the corpus. Returns the ordered merge
-    * table — a pure function of the corpus under the deterministic
-    * tie-break. Stops early (shorter result) when no adjacent pair
-    * remains. */
-  def bpeTrain(df: DataFrame, textCol: String, merges: Int,
-               byteSeed: Boolean = false,
-               checkpointEvery: Int = 8): Seq[(String, String)] = {
-    require(merges > 0, s"need a positive merge count, got $merges")
-    require(checkpointEvery > 0,
-      s"need a positive checkpoint cadence, got $checkpointEvery")
-    var vocab = initVocab(wordCounts(df, textCol), byteSeed)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    vocab.count()
-    val out = Seq.newBuilder[(String, String)]
-    var m = 0
-    var exhausted = false
-    try {
-      while (m < merges && !exhausted) {
-        val top = pairCounts(vocab)
-          .orderBy(desc("cnt"), asc("l"), asc("r"))
-          .limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val (l, r) = (top(0).getString(0), top(0).getString(1))
-          out += ((l, r))
-          // lineage/plan rail: each round nests one more fold layer onto
-          // the vocab PLAN, and the persist does not truncate it — the
-          // analyzer re-walks the whole tree every round, so an unbounded
-          // schedule is quadratic driver CPU and (measured, round 19) an
-          // OutOfMemoryError near merge ~200. localCheckpoint every
-          // `checkpointEvery` rounds swaps the plan for the materialized
-          // rows (LogicalRDD), bounding tree depth; eager, so it also
-          // serves as the round's materialization.
-          val grown = applyMerge(vocab, l, r)
-          val next =
-            if ((m + 1) % checkpointEvery == 0) grown.localCheckpoint(true)
-            else {
-              val p = grown.persist(StorageLevel.MEMORY_AND_DISK)
-              p.count()
-              p
-            }
-          vocab.unpersist()
-          vocab = next
-          m += 1
-        }
-      }
-    } finally vocab.unpersist()
-    out.result()
-  }
-
   /** Published fixed merge table for the oracle-gated encode query
     * (q110): a tokenizer's merge list is a MODEL ARTIFACT — trained
     * once, then shipped frozen to every pipeline that must count tokens
-    * the way the model will see them. This one was produced by
-    * [[bpeTrain]] (16 merges, deterministic tie-break) over the sf0.01
-    * driver corpus and then frozen, so the engine and the DuckDB oracle
-    * embed the IDENTICAL literal table; [[bpeEncode]] is defined for any
-    * corpus under any fixed table, and BpeTrainSpec pins train→encode
-    * consistency on live data separately. Symbols are ASCII-alnum — free
-    * of the `(`/`)` delimiters the oracle's replay encoding uses. */
+    * the way the model will see them. This one was produced by a
+    * distributed BPE trainer (16 merges, tie-break count DESC, l ASC,
+    * r ASC) over the sf0.01 documents table and then frozen, so the engine
+    * and the DuckDB oracle embed the IDENTICAL literal table. No query
+    * ran that trainer, and it was deleted after the table was frozen;
+    * commit 703ab57 is the last to carry it, in this file.
+    * [[bpeEncode]] is defined for any corpus under any fixed table.
+    * Symbols are ASCII-alnum — free of the `(`/`)` delimiters the
+    * oracle's replay encoding uses. */
   def fixedMerges(): Seq[(String, String)] = Seq(
     "e" -> "r", "i" -> "n", "o" -> "w", "o" -> "r", "s" -> "t",
     "m" -> "er", "a" -> "t", "l" -> "u", "a" -> "r", "p" -> "ar",
@@ -330,27 +257,18 @@ object BpeTrain {
     * dispatch needed — the kernel never rewrites the string, so
     * delimiter codepoints are ordinary symbols, and it seeds Unicode
     * code points exactly as [[initVocab]]'s measured contract, astral
-    * planes included).
-    *
-    * `byteSeed = true` seeds each word's UTF-8 bytes as uppercase hex
-    * pairs instead ([[initVocab]]'s byte-level contract) — the table
-    * must then come from a byte-seeded [[bpeTrain]]. */
+    * planes included). */
   def bpeEncodeRank(df: DataFrame, textCol: String,
-                    merges: Seq[(String, String)],
-                    byteSeed: Boolean = false): DataFrame = {
+                    merges: Seq[(String, String)]): DataFrame = {
     val clash = Seq("bpe_tokens", "bpe_len").filter(df.columns.contains)
     require(clash.isEmpty,
       s"input columns collide with output names: ${clash.mkString(", ")}")
     merges.foreach { case (l, r) =>
       require(!(l + r).exists(_ == ' '),
         s"merge symbols must not contain spaces: ($l,$r)")
-      if (byteSeed)
-        require((l + r).matches("(?:[0-9A-F]{2})+"),
-          s"byte-seeded merge symbols must be uppercase hex pairs: ($l,$r)")
     }
     df.withColumn("bpe_tokens",
-        graft.functions.BpeRankEncodeFunction.bpeRankEncode(
-          col(textCol), merges, byteSeed))
+        graft.functions.BpeRankEncodeFunction.bpeRankEncode(col(textCol), merges))
       .withColumn("bpe_len",
         when(col("bpe_tokens").isNull, lit(null).cast("long"))
           .otherwise(size(col("bpe_tokens")).cast("long")))

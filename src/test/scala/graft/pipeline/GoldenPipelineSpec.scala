@@ -24,7 +24,7 @@ class GoldenPipelineSpec extends SparkSpec {
   private lazy val cashback = {
     val rewards = Ingest.normalizeRewards(Ingest.csvAllStrings(spark, rewardsCsv))
     val tx = Ingest.normalizeTransactions(Ingest.csvAllStrings(spark, transactionsCsv))
-    CashbackTransform.transform(rewards, tx).cache()
+    CashbackTransform.transform(rewards, tx)
   }
 
   test("row count preserved by left join: 60 rewards in, 60 cashback rows out") {
@@ -421,12 +421,10 @@ class GoldenPipelineSpec extends SparkSpec {
     // reward_id exchange as a stage of its own (one more job), which the
     // broadcast join then reads locally. While the table scan waited on its
     // listing job, it always finished last, and both loads read 9.
-    // The initial load reads the same golden CSVs as this spec's cached
-    // `cashback` transform, so once an earlier test has filled that cache,
-    // Spark's cache manager substitutes it for the load's join and the load
-    // runs 5 jobs; run alone, with the cache empty, it ran 6. Releasing the
-    // session's caches first counts the load's own plan, alone or after
-    // other tests.
+    // Spark's cache manager substitutes any cached plan that matches part of
+    // the load's plan (a cached golden transform cut the initial load to 5
+    // jobs), and every suite of the run shares this session, so the caches
+    // are released first and the count is the load's own plan.
     GraftSession.releaseCaches(spark, blocking = true)
     val sc = spark.sparkContext
     val tag = "graft.test.pipelineJobs"

@@ -4,22 +4,30 @@ that no entry point reaches, then the defaulted operator parameters that no
 product caller passes.
 
 A def counts when some src/test file names it and no product code reaches
-it. Product code reaches a def when a src/main file other than its own or a
-perfbench/src file names it, or when a reached def of its own file names it
-outside the def's own body; a `main` def and a name used outside every def
-body (an object-level `val`) are reached, and reach is iterated to a
-fixpoint, so `Tables.parallel` counts as reached through the `*Par` loaders
-the queries call. Comments are stripped before matching; names are matched
-as whole identifiers, so a def that shares its name with an unrelated
-method (`run`) is judged by every use of the name. Three rules keep a
+it. Reach is a fixpoint at def grain across files. The roots are the `main`
+defs, the names perfbench/src uses, and the names used at the top level of
+a reached file (outside every def body, import lines aside: an object-level
+`val`, a class's constructor). A name used inside a reached def's body
+reaches the defs of that name in other files and, in its own file, every
+def of that name but the one it occurs in; the reached def's body is then
+walked in turn. `override` defs are roots too (a framework calls them),
+and naming a file's top-level object or class reaches that file's `apply`.
+So `Tables.parallel` counts as reached through the `*Par` loaders the
+queries call, and a def that only test-only defs call is test-only too.
+Comments are stripped before matching. The def-level walk blanks string
+literals too (a column named "jaccard" is not a call of `jaccard`); the
+file walk and the spec names keep them (generated code can name a class
+in a string). Names are matched as whole identifiers, so a def that
+shares its name with an unrelated method (`run`) is judged by every use
+of the name. Three rules keep a
 bare-identifier match from standing in for a call: an unqualified
-`private def` is not listed (no spec can call it), nor is a def declared
-inside another def's body (a local def, told apart by brace nesting on the
-comment- and string-stripped text; a spec calling the collections' `.find`
-is not a call of a local `find`), and a spec's names exclude the ones that
-spec declares itself with `val`, `var` or `def` (its local `rows` is not a
-call of a src/main `rows`). Defs of an object nested in an object stay
-listed.
+`private def` is not listed (no spec can call it) and is reached only from
+its own file, nor is a def declared inside another def's body (a local
+def, told apart by brace nesting on the comment- and string-stripped text;
+a spec calling the collections' `.find` is not a call of a local `find`),
+and a spec's names exclude the ones that spec declares itself with `val`,
+`var` or `def` (its local `rows` is not a call of a src/main `rows`). Defs
+of an object nested in an object stay listed.
 
 The def list misses a module whose only caller is itself unreached, so a
 second section walks whole files. The roots are the files with a `def main`
@@ -75,9 +83,10 @@ def sources(root):
 
 
 class Def:
-    def __init__(self, name, start, header, private, local):
+    def __init__(self, name, start, header, mods, local):
         self.name, self.start, self.header = name, start, header
-        self.private, self.local, self.end = private, local, None
+        self.private, self.override = bool(PRIVATE.search(mods)), "override" in mods
+        self.local, self.end = local, None
 
 
 def defs_of(blank):
@@ -103,7 +112,7 @@ def defs_of(blank):
             continue
         if tok == "def" and m.start() in heads:
             h = heads[m.start()]
-            d = Def(h.group(2), m.start(), h.end(), bool(PRIVATE.search(h.group(1))), any(frames))
+            d = Def(h.group(2), m.start(), h.end(), h.group(1), any(frames))
             out.append(d)
             open_[depth] = d
         latest[depth] = tok
@@ -218,27 +227,49 @@ def unpassed_defaults(repo, main_src, bench_src):
                   if defaulted and (p, d.start, name) not in passed)
 
 
-def reached_defs(live_src, main_src, bench):
+def reached_defs(live_src, bench):
     """{(path, name)} for the defs product code reaches in the reached files
     `live_src` (see the module doc)."""
-    others = {p: set().union(*(set(IDENT.findall(t)) for q, t in main_src.items() if q != p))
-              for p in live_src}
-    reached = set()
-    for p, t in live_src.items():
-        blank = blanked(t)
-        spans = [d for d in defs_of(blank) if not d.local]
-        names = {d.name for d in spans}
-        uses = [(m.start(), m.group(0)) for m in IDENT.finditer(blank) if m.group(0) in names]
-        live = {d.name for d in spans if d.name == "main"
-                or (not d.private and (d.name in others[p] or d.name in bench))}
-        live |= {n for pos, n in uses if not any(d.start <= pos < d.end for d in spans)}
-        frontier = set(live)
-        while frontier:
-            found = {n for d in spans if d.name in frontier
-                     for pos, n in uses if d.start <= pos < d.end and n != d.name}
-            frontier = found - live
-            live |= frontier
-        reached |= {(p, n) for n in live}
+    blanks = {p: blanked(t) for p, t in live_src.items()}
+    spans = {p: [d for d in defs_of(b) if not d.local] for p, b in blanks.items()}
+    by_name, applies = {}, {}
+    for p, ds in spans.items():
+        for d in ds:
+            by_name.setdefault(d.name, []).append((p, d))
+        if any(d.name == "apply" for d in ds):
+            for n in TOP.findall(blanks[p]):
+                applies.setdefault(n, []).append(p)
+    reached, work = set(), []
+
+    def reach(p, n):
+        if (p, n) not in reached:
+            reached.add((p, n))
+            work.append((p, n))
+
+    def occur(q, n, owner):
+        """Name `n` occurs in file `q`, inside def `owner` (None: top level)."""
+        for p, d in by_name.get(n, ()):
+            if (p == q and n != owner) or (p != q and not d.private):
+                reach(p, n)
+        for p in applies.get(n, ()):
+            reach(p, "apply")
+
+    for n in bench | {"main"}:
+        occur(None, n, None)
+    for q, b in blanks.items():
+        top = list(b)
+        for d in spans[q]:
+            top[d.start:d.end] = " " * (d.end - d.start)
+            if d.override:
+                reach(q, d.name)
+        for n in IDENT.findall(re.sub(r"(?m)^\s*import\b.*$", "", "".join(top))):
+            occur(q, n, None)
+    while work:
+        p, n = work.pop()
+        for d in spans[p]:
+            if d.name == n:
+                for m in IDENT.findall(blanks[p][d.header:d.end]):
+                    occur(p, m, n)
     return reached
 
 
@@ -259,7 +290,7 @@ def main(argv):
         frontier = {p for p in main_src if p not in files and tops[p] & used}
         files |= frontier
 
-    reached = reached_defs({p: t for p, t in main_src.items() if p in files}, main_src, bench)
+    reached = reached_defs({p: t for p, t in main_src.items() if p in files}, bench)
     hits = sorted({(os.path.relpath(p, repo), d.name)
                    for p, t in main_src.items()
                    for d in defs_of(blanked(t))
